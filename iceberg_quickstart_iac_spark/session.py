@@ -15,6 +15,22 @@ import os
 from pyspark.sql import SparkSession
 
 
+def _default_driver_memory() -> str:
+    """Half the machine's memory (``MemTotal`` in ``/proc/meminfo``), at
+    least 1 GiB: the local-mode driver JVM runs every task, so it gets a
+    real share, but never more than the machine has. 4 GiB where
+    ``/proc/meminfo`` is unreadable (not Linux)."""
+    try:
+        with open("/proc/meminfo") as fh:
+            for line in fh:
+                if line.startswith("MemTotal:"):
+                    total_mb = int(line.split()[1]) // 1024
+                    return f"{max(1024, total_mb // 2)}m"
+    except (OSError, ValueError, IndexError):
+        pass
+    return "4g"
+
+
 def get_spark(
     app_name: str = "iceberg_quickstart_iac_spark",
     master: str | None = None,
@@ -24,8 +40,9 @@ def get_spark(
     """Build (or fetch) the tuned SparkSession.
 
     Honors ``SPARK_GRAFT_CPUS`` for local parallelism per the driver
-    contract; any already-active session is returned as-is (Spark is a
-    process singleton).
+    contract and ``SPARK_DRIVER_MEMORY`` for the driver heap (default:
+    half the machine's memory); any already-active session is returned
+    as-is (Spark is a process singleton).
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(os.cpu_count() or 4)
     master = master or f"local[{cpus}]"
@@ -41,7 +58,10 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "48g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_DRIVER_MEMORY") or _default_driver_memory(),
+        )
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # default 100 kicks the sketch aggregations (64 minhash minima / 64

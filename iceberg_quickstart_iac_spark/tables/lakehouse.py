@@ -532,13 +532,18 @@ class Lakehouse:
         path scans the statement for catalog table names (and their
         ``__snapshots``/``__files``/… metadata views — those register
         only when actually named, so footer-stat builds are never paid
-        unreferenced), registers the hits once with ``follow_head=True``
-        (commits through this process auto-refresh the views), and
-        memoizes per view name — repeat statements against the same
-        tables re-register nothing. The memo also pins each table's head
-        SEQUENCE via a filename-only probe, so a commit made by ANOTHER
-        process re-registers on the next statement: this path can never
-        serve a stale head.
+        unreferenced), registers the hits once with ``follow_head=True``,
+        and memoizes per view name — repeat statements against the same
+        tables re-register nothing. The memo pins each table's head
+        SEQUENCE via a filename-only probe (one directory listing per
+        referenced table per statement). When the head moved, the
+        follow-head registry decides: a commit made in THIS process was
+        already re-registered by its commit-time refresh, which records
+        the head it resolved, so a registration at the probed head counts
+        as current and each commit is registered exactly once. A commit
+        made by ANOTHER process never fires that refresh, so its head
+        matches no registration and the next statement re-registers: this
+        path can never serve a stale head.
 
         Name matching is identifier-token based: a table whose name only
         appears inside a string literal registers harmlessly; a table
@@ -619,7 +624,7 @@ class Lakehouse:
             statement = self._rewrite_scope_refs(statement, suffix)
         tokens = set(re.findall(r"[A-Za-z_][A-Za-z0-9_]*", statement))
 
-        def ensure_registered() -> None:
+        def ensure_registered(force: bool = False) -> None:
             for name in self.list_tables():
                 view = name + suffix
                 wants_md = any(view + s in tokens for s in self._MD_SUFFIXES)
@@ -649,6 +654,15 @@ class Lakehouse:
                 # as a debugging breadcrumb
                 want = (_scope, str(access_level), with_md, head)
                 if prev == want:
+                    continue
+                if (
+                    head is not None
+                    and not force
+                    and t.follows_head_at(spark, view, head, access_level, with_md)
+                ):
+                    # a commit made in this process: its commit-time
+                    # refresh already re-resolved the view at this head
+                    self._sql_registry[view] = want
                     continue
                 if head is None:
                     # created-but-never-committed: serve the DECLARED
@@ -748,7 +762,7 @@ class Lakehouse:
                 ):
                     self._sql_registry.pop(name, None)
             ensure_views()
-            ensure_registered()
+            ensure_registered(force=True)
             return spark.sql(statement)
 
     def sql_script(self, spark, script: str, access_level: str = "admin"):

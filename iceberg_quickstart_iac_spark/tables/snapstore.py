@@ -52,6 +52,7 @@ from pathlib import Path
 from urllib.parse import quote, unquote
 
 from datetime import date, datetime, timezone
+from decimal import Decimal
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -335,6 +336,34 @@ def _head_reg_key(root: Path) -> str:
         return str(root)
 
 
+def _row_group_stats(group) -> dict[str, tuple]:
+    """``{column: (min, max)}`` from one parquet row group's footer
+    statistics — the one reader both file skipping and ``__files`` use.
+
+    Spark writes ``decimal(p<=18, s)`` as INT32/INT64, and pyarrow cannot
+    convert those statistics (``statistics.min`` raises "Cannot extract
+    statistics for type"): they decode from the raw integers with the
+    column's logical scale. A column whose stats still cannot be read is
+    left out, which keeps the file wherever it is filtered on."""
+    out: dict[str, tuple] = {}
+    for ci in range(group.num_columns):
+        col = group.column(ci)
+        st = col.statistics
+        if st is None or not st.has_min_max:
+            continue
+        try:
+            out[col.path_in_schema] = (st.min, st.max)
+        except NotImplementedError:  # pyarrow's ArrowNotImplementedError
+            logical = json.loads(st.logical_type.to_json())
+            if logical.get("Type") == "Decimal" and isinstance(st.min_raw, int):
+                scale = -int(logical["scale"])
+                out[col.path_in_schema] = (
+                    Decimal(st.min_raw).scaleb(scale),
+                    Decimal(st.max_raw).scaleb(scale),
+                )
+    return out
+
+
 def _footer_stats_match(f: Path, filters: list[tuple]) -> bool:
     """Can any row group of parquet file ``f`` satisfy every conjunct in
     ``filters``? Footer statistics only — no data read. Conservative:
@@ -347,14 +376,7 @@ def _footer_stats_match(f: Path, filters: list[tuple]) -> bool:
     except Exception:
         return True
     for rg in range(md.num_row_groups):
-        group = md.row_group(rg)
-        stats: dict[str, tuple] = {}
-        for ci in range(group.num_columns):
-            col = group.column(ci)
-            st = col.statistics
-            if st is not None and st.has_min_max:
-                stats[col.path_in_schema] = (st.min, st.max)
-        if _range_matches(stats, filters):
+        if _range_matches(_row_group_stats(md.row_group(rg)), filters):
             return True  # one viable row group keeps the whole file
     return md.num_row_groups == 0
 
@@ -372,19 +394,14 @@ def _footer_bounds(f: Path) -> dict[str, list]:
         return {}
     out: dict[str, list] = {}
     for rg in range(md.num_row_groups):
-        group = md.row_group(rg)
-        for ci in range(group.num_columns):
-            st = group.column(ci).statistics
-            if st is None or not st.has_min_max:
-                continue
-            name = group.column(ci).path_in_schema
+        for name, (lo, hi) in _row_group_stats(md.row_group(rg)).items():
             if name in out:
                 try:
-                    out[name] = [min(out[name][0], st.min), max(out[name][1], st.max)]
+                    out[name] = [min(out[name][0], lo), max(out[name][1], hi)]
                 except TypeError:
                     out.pop(name, None)
             else:
-                out[name] = [st.min, st.max]
+                out[name] = [lo, hi]
     return out
 
 
@@ -415,6 +432,34 @@ def _range_matches(stats: dict[str, tuple], filters: list[tuple]) -> bool:
         if not ok:
             return False
     return True
+
+
+#: per-row columns of the merge-on-read plan (see :meth:`SnapTable.read`):
+#: the intro sequence of the data dir a row's file belongs to, and of the
+#: delete dir an equality-delete key came from
+_DATA_SEQ = "__sg_data_seq"
+_DEL_SEQ = "__sg_del_seq"
+
+
+def _seq_by_path(top_seqs: dict[str, int]):
+    """Column: the sequence of the top-level dir (``data/<dir>/…``) the
+    current row's file sits in, from ``_metadata.file_path``; -1 for a
+    dir missing from ``top_seqs``. Must be applied to the file scan
+    itself. The segment after the last ``/data/`` is the dir name: dir
+    names are engine-generated hex, and partition dir names below it are
+    ``__p_…=…`` with ``/`` escaped, so URL-encoding cannot disturb it."""
+    from pyspark.sql import functions as F
+
+    seqs = set(top_seqs.values())
+    if len(seqs) == 1:
+        return F.lit(seqs.pop()).cast("long")
+    top = F.substring_index(
+        F.substring_index(F.col("_metadata.file_path"), "/data/", -1), "/", 1
+    )
+    lookup = F.create_map(
+        *[x for t, s in sorted(top_seqs.items()) for x in (F.lit(t), F.lit(s))]
+    )
+    return F.coalesce(lookup[top], F.lit(-1)).cast("long")
 
 
 def _list_data_files(base: Path) -> list[Path]:
@@ -1033,6 +1078,37 @@ class SnapTable:
     #: attribute MoR debt to partitions from metadata alone (no scan)
     _DEBT_SIDECAR = "_partition_debt.json"
 
+    #: sidecar holding a delete dir's written Spark schema (JSON), so
+    #: reads pass it instead of inferring it in a Spark job
+    _KEY_SCHEMA = "_key_schema.json"
+
+    def _write_delete_keys(
+        self, keys: DataFrame, debt: dict[str, int] | None
+    ) -> str:
+        """Write ``keys`` (identifier-column tuples) as one new
+        equality-delete dir and return its name. Sidecars next to the data
+        (underscore prefixes keep Spark's parquet scan from reading them):
+
+        - ``_key_ids.json``: the key columns' name→field-id mapping AT
+          WRITE TIME. Delete files are keyed by field id like data files:
+          a later evolve_rename_column on an identifier field must not
+          break the read-time anti-join — reads resolve these ids back to
+          the then-current declared names (see :meth:`_read_delete_keys`);
+        - ``_key_schema.json``: the written schema;
+        - ``_partition_debt.json`` when ``debt`` is given (see
+          :meth:`_partition_debt`)."""
+        dir_name = f"mordel-{uuid.uuid4().hex}"
+        out = self.data_dir / dir_name
+        keys.write.parquet(str(out))
+        col_ids = self._column_ids()
+        (out / "_key_ids.json").write_text(
+            json.dumps({c: col_ids.get(c) for c in keys.columns})
+        )
+        (out / self._KEY_SCHEMA).write_text(keys.schema.json())
+        if debt is not None:
+            (out / self._DEBT_SIDECAR).write_text(json.dumps(debt))
+        return dir_name
+
     def _partition_debt(self, doomed: DataFrame) -> tuple[int, dict[str, int]]:
         """Per-partition-leaf count of the rows a MoR delete defers.
 
@@ -1085,26 +1161,12 @@ class SnapTable:
         matched = (
             current.filter(f"({condition}) <=> TRUE").select(*ids).dropDuplicates()
         )
-        dir_name = f"mordel-{uuid.uuid4().hex}"
-        matched.write.parquet(str(self.data_dir / dir_name))
-        # Sidecar: the key columns' name→field-id mapping AT WRITE TIME
-        # (underscore prefix keeps Spark's parquet scan from reading it).
-        # Delete files are keyed by field id like data files: a later
-        # evolve_rename_column on an identifier field must not break the
-        # read-time anti-join — reads resolve these ids back to the
-        # then-current declared names (see _read_delete_keys).
-        col_ids = self._column_ids()
-        (self.data_dir / dir_name / "_key_ids.json").write_text(
-            json.dumps({c: col_ids.get(c) for c in ids})
-        )
         # key-granular row count: every row carrying a matched key dies —
         # counted per partition leaf so the debt sidecar is free
         deleted, debt = self._partition_debt(
             current.join(matched, list(ids), "left_semi")
         )
-        (self.data_dir / dir_name / self._DEBT_SIDECAR).write_text(
-            json.dumps(debt)
-        )
+        dir_name = self._write_delete_keys(matched, debt)
 
         def build(entries: list[dict]) -> dict:
             prev = entries[-1] if entries else None
@@ -1319,7 +1381,7 @@ class SnapTable:
                         F.expr(clause["exprs"][col])
                         if col in clause["exprs"]
                         else F.lit(None)
-                    ).cast(types.get(col, "string"))
+                    ).cast(_declared_spark_type(types[col]))
                     pred = F.col("__sg_verdict") == label
                     expr = F.when(pred, val) if expr is None else expr.when(pred, val)
                 base = F.col(f"t.{col}")
@@ -1495,11 +1557,16 @@ class SnapTable:
         reference's engine comparison credits for CDC workloads
         (``docs/deep-dive.md:83``): ONE commit carrying (a) an
         equality-delete file with every changed key and (b) a data file
-        with the new images of upserted rows. Write cost is O(changes),
-        never O(table) — no full-outer join, no table rewrite. Reads
-        resolve by sequence scoping: the delete file erases OLD images
-        only (strictly lower commit sequence), so the same commit's new
-        images survive; :meth:`compact` folds everything down.
+        with the new images of upserted rows. The WRITE is O(changes) —
+        no full-outer join, no table rewrite. The exact row accounting is
+        not: counting the current images the delete file erases (per
+        partition leaf, for the snapshot's ``row_count`` and the
+        maintenance debt sidecar) runs the MoR read plan once over the
+        live table's key and partition columns, semi-joined to the
+        changed keys. Reads resolve by sequence scoping: the delete file
+        erases OLD images only (strictly lower commit sequence), so the
+        same commit's new images survive; :meth:`compact` folds
+        everything down.
         """
         from pyspark.sql import functions as F
 
@@ -1517,15 +1584,7 @@ class SnapTable:
             removed, debt = self._partition_debt(
                 self.read(spark).join(touched, key_cols, "left_semi")
             )
-            del_dir = f"mordel-{uuid.uuid4().hex}"
-            touched.write.parquet(str(self.data_dir / del_dir))
-            col_ids = self._column_ids()
-            (self.data_dir / del_dir / "_key_ids.json").write_text(
-                json.dumps({c: col_ids.get(c) for c in key_cols})
-            )
-            (self.data_dir / del_dir / self._DEBT_SIDECAR).write_text(
-                json.dumps(debt)
-            )
+            del_dir = self._write_delete_keys(touched, debt)
             up_dir, up_rows, up_files = self._write_data(upserts)
         finally:
             changes.unpersist()
@@ -1916,7 +1975,8 @@ class SnapTable:
                 out.append(F.col(source).cast(typ).alias(name))
             else:
                 out.append(F.lit(None).cast(typ).alias(name))
-        return df.select(*out)
+        # the MoR read plan's sequence tag rides through the projection
+        return df.select(*out, *[c for c in (_DATA_SEQ,) if c in df.columns])
 
     def _leaf_dirs(
         self,
@@ -2106,35 +2166,49 @@ class SnapTable:
             # then compact materializes to zero files): DELETE FROM t;
             # SELECT * must serve 0 typed rows, not an error
             return self._apply_row_filters(self._empty_declared(spark), filters)
-        # merge-on-read: equality-delete files (Iceberg v2) are applied at
-        # read time as an anti-join on the key columns — each snapshot
-        # carries exactly the delete files committed up to it, so time
-        # travel before a MoR delete still serves the deleted rows.
-        # SEQUENCE SCOPING (Iceberg's rule): a delete file applies only to
-        # data files with a STRICTLY LOWER commit sequence — a MoR upsert
-        # commits its delete keys and replacement rows together, and the
-        # delete must not erase its own replacements.
-        ddirs = snap.get("delete_dirs") or []
+        return self._read_mor(
+            spark, snap["data_dirs"], snap.get("delete_dirs") or [], filters
+        )
+
+    def _read_mor(
+        self,
+        spark: SparkSession,
+        dirs: list[str],
+        ddirs: list[str],
+        filters: list[tuple] | None,
+        leaves: dict[str, list[str]] | None = None,
+    ) -> DataFrame:
+        """The merge-on-read plan: data ``dirs`` with the equality-delete
+        files ``ddirs`` (Iceberg v2) applied. Each snapshot carries exactly
+        the delete files committed up to it, so time travel before a MoR
+        delete still serves the deleted rows.
+
+        SEQUENCE SCOPING (Iceberg's rule): a delete file applies only to
+        data files with a STRICTLY LOWER commit sequence — a MoR upsert
+        commits its delete keys and replacement rows together, and the
+        delete must not erase its own replacements. The plan is one scan
+        per write epoch whose rows carry their dir's intro sequence, one
+        scan of the delete keys carrying theirs, and ONE anti-join on
+        ``keys equal AND del_seq > data_seq`` — flat in the number of
+        delete files. Delete files no data dir sits below are dropped
+        before planning; with none left the plan is the plain scan."""
+        from pyspark.sql import functions as F
+
+        intro = self._dir_intro_seqs() if ddirs else {}
+        floor = min((intro.get(d, -1) for d in dirs), default=-1)
+        ddirs = [dd for dd in ddirs if intro.get(dd, -1) > floor]
         if not ddirs:
-            return self._read_dirs(spark, snap["data_dirs"], filters)
-        intro = self._dir_intro_seqs()
-        groups: dict[frozenset, list[str]] = {}
-        for d in snap["data_dirs"]:
-            applicable = frozenset(
-                dd for dd in ddirs if intro.get(dd, -1) > intro.get(d, -1)
-            )
-            groups.setdefault(applicable, []).append(d)
-        parts = []
-        for applicable, dirs_ in groups.items():
-            df = self._read_dirs(spark, dirs_, filters)
-            if applicable:
-                keys = self._read_delete_keys(spark, sorted(applicable))
-                df = df.join(keys, on=list(keys.columns), how="left_anti")
-            parts.append(df)
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
-        return out
+            return self._read_dirs(spark, dirs, filters, leaves=leaves)
+        data = self._read_dirs(spark, dirs, filters, seqs=intro, leaves=leaves)
+        keys = self._read_delete_keys(spark, ddirs, seqs=intro)
+        kcols = [c for c in keys.columns if c != _DEL_SEQ]
+        keys = keys.select(
+            *[F.col(c).alias(f"__sg_key{i}") for i, c in enumerate(kcols)], _DEL_SEQ
+        )
+        cond = F.col(_DEL_SEQ) > F.col(_DATA_SEQ)
+        for i, c in enumerate(kcols):
+            cond = cond & (F.col(c) == F.col(f"__sg_key{i}"))
+        return data.join(keys, cond, "left_anti").drop(_DATA_SEQ)
 
     def register(
         self,
@@ -2193,8 +2267,10 @@ class SnapTable:
         and the refresh hook fires only for commits made through this
         process's table handles — for multi-process serving use
         ``Lakehouse.sql``, which head-probes the commit log per statement
-        (one directory listing) and re-registers on any unseen commit,
-        whoever made it. Returns the base view name.
+        (one directory listing) and re-registers on any commit no
+        follow-head refresh has registered yet (the registry records the
+        head each view was resolved at), whoever made it. Returns the base
+        view name.
 
         Audit granularity: the underlying ``table_read`` plus a
         ``table_registered`` event log at REGISTRATION time; subsequent
@@ -2222,6 +2298,9 @@ class SnapTable:
                 "cannot combine with snapshot_id/as_of_ms/tag pinning"
             )
         base = name or self.meta["name"]
+        # probed BEFORE the read: a commit landing in between makes the
+        # recorded head older than the one served, never newer
+        head = self.head_sequence() if follow_head else None
         df = self.read(
             spark, snapshot_id=snapshot_id, as_of_ms=as_of_ms, tag=tag
         )
@@ -2265,6 +2344,9 @@ class SnapTable:
                 "access_level": access_level,
                 "row_policies": dict(row_policies or {}),
                 "metadata_tables": metadata_tables,
+                # the head sequence the view was resolved at, so the
+                # lazy front door can tell an already-current view
+                "head": head,
             }
         log_audit_event(
             "table_registered",
@@ -2278,6 +2360,33 @@ class SnapTable:
             },
         )
         return base
+
+    def follows_head_at(
+        self,
+        spark: SparkSession,
+        name: str,
+        head: int,
+        access_level: str,
+        metadata_tables: bool,
+    ) -> bool:
+        """Whether view ``name`` is a follow-head registration of this
+        table handle, made in ``spark`` with these settings and no row
+        policies, resolved at head sequence ``head`` — i.e. it already
+        serves that head. The commit-time refresh keeps this true after
+        every commit made in this process, so the lazy SQL front door
+        registers each such commit once, not twice."""
+        spec = _HEAD_REGISTRATIONS.get(_head_reg_key(self.root), {}).get(name)
+        return (
+            spec is not None
+            and spec.get("kind") != "changes"
+            and spec.get("head") == head
+            and spec["spark"] is spark
+            and getattr(spec["table"], "branch_name", None)
+            == getattr(self, "branch_name", None)
+            and str(spec["access_level"]) == str(access_level)
+            and not spec["row_policies"]
+            and spec["metadata_tables"] == metadata_tables
+        )
 
     def register_changes(
         self,
@@ -2409,7 +2518,12 @@ class SnapTable:
                     stacklevel=2,
                 )
 
-    def _read_delete_keys(self, spark: SparkSession, ddirs: list[str]) -> DataFrame:
+    def _read_delete_keys(
+        self,
+        spark: SparkSession,
+        ddirs: list[str],
+        seqs: dict[str, int] | None = None,
+    ) -> DataFrame:
         """Load equality-delete key tuples from ``ddirs``, with every key
         column resolved BY FIELD ID to its CURRENT declared name — the
         same id-first resolution data files get in :meth:`_read_dirs`.
@@ -2417,17 +2531,28 @@ class SnapTable:
         at write time); without it, a rename of an identifier field after
         a MoR delete would break every subsequent read (the anti-join
         would look for the old column name). Dirs sharing one rename map
-        are scanned together, so the common no-rename case stays a single
-        parquet scan regardless of delete-file count."""
+        and written schema are scanned together, so the common no-rename
+        case stays a single parquet scan regardless of delete-file count.
+        The scan is given the schema recorded in ``_key_schema.json`` and
+        runs no inference job; delete dirs written before that sidecar
+        existed are inferred.
+
+        ``seqs`` (dir → intro sequence) tags every key with its own delete
+        dir's sequence in a ``__sg_del_seq`` column, for the sequence-scoped
+        anti-join in :meth:`_read_mor`. Keys are not deduplicated: a key
+        repeated across delete files only repeats an anti-join match."""
         from pyspark.sql import functions as F
+        from pyspark.sql import types as T
 
         id_to_name = {
             c["id"]: c["name"]
             for c in self.meta.get("columns", [])
             if c.get("id") is not None
         }
-        groups: dict[tuple, tuple[dict | None, list[str]]] = {}
+        groups: dict[tuple, tuple[dict | None, str | None, list[str]]] = {}
         for dd in ddirs:
+            schema_file = self.data_dir / dd / self._KEY_SCHEMA
+            schema = schema_file.read_text() if schema_file.exists() else None
             sidecar = self.data_dir / dd / "_key_ids.json"
             renames: dict[str, str] | None = None
             if sidecar.exists():
@@ -2442,19 +2567,24 @@ class SnapTable:
                         )
                     renames[written] = current
             key = tuple(sorted(renames.items())) if renames is not None else ("__legacy__",)
-            groups.setdefault(key, (renames, []))[1].append(str(self.data_dir / dd))
+            groups.setdefault((key, schema), (renames, schema, []))[2].append(dd)
         parts = []
-        for renames, paths in groups.values():
-            df = spark.read.parquet(*paths)
-            if renames:
-                df = df.select(
-                    *[F.col(c).alias(renames.get(c, c)) for c in df.columns]
+        for renames, schema, dds in groups.values():
+            reader = spark.read
+            if schema is not None:
+                # the schema the keys were written with: no inference job
+                reader = reader.schema(T.StructType.fromJson(json.loads(schema)))
+            df = reader.parquet(*[str(self.data_dir / dd) for dd in dds])
+            cols = [F.col(c).alias((renames or {}).get(c, c)) for c in df.columns]
+            if seqs is not None:
+                cols.append(
+                    _seq_by_path({dd: seqs.get(dd, -1) for dd in dds}).alias(_DEL_SEQ)
                 )
-            parts.append(df)
+            parts.append(df.select(*cols))
         out = parts[0]
         for p in parts[1:]:
             out = out.unionByName(p)
-        return out.dropDuplicates()
+        return out
 
     def _written_name(self, name: str, written_ids: dict | None) -> str | None:
         """The file-column name serving declared column ``name`` in a dir
@@ -2493,7 +2623,12 @@ class SnapTable:
         return out
 
     def _read_dirs(
-        self, spark: SparkSession, dirs: list[str], filters: list[tuple] | None
+        self,
+        spark: SparkSession,
+        dirs: list[str],
+        filters: list[tuple] | None,
+        seqs: dict[str, int] | None = None,
+        leaves: dict[str, list[str]] | None = None,
     ) -> DataFrame:
         """Scan ``dirs``, grouped by the write epoch (field ids + declared
         types + partition spec) they were written under — almost always one
@@ -2503,17 +2638,36 @@ class SnapTable:
         filtered, and the result is field-id-projected (and cast) to the
         declared schema before ``unionByName`` across epochs. Separate
         type epochs keep a widened column (int files + long files) out of a
-        single ``mergeSchema`` scan, which Spark cannot merge."""
+        single scan, whose one schema could not serve both.
+
+        ``seqs`` (dir → intro sequence) adds a ``__sg_data_seq`` column
+        holding the intro sequence of the ``dirs`` entry each row's file
+        belongs to, for :meth:`_read_mor`'s sequence-scoped anti-join.
+        ``leaves`` (dir → leaf paths) scans exactly those leaves of a dir
+        instead of pruning it by ``filters`` (partition-scoped compaction
+        picks its own leaves)."""
+        from pyspark.sql import functions as F
+
+        def top(d: str) -> str:
+            return d.split("/", 1)[0]
+
+        # rows are tagged by their top-level dir; kept-leaf subpath entries
+        # of one dir inherit its sequence, so they share a tag — a dir
+        # whose entries disagree is scanned entry by entry instead
+        top_seqs: dict[str, set[int]] = {}
+        for d in dirs if seqs is not None else ():
+            top_seqs.setdefault(top(d), set()).add(seqs.get(d, -1))
         dir_epochs = self._dir_epochs()
-        groups: dict[str, tuple[dict | None, list[Path]]] = {}
+        groups: dict[tuple, tuple[dict | None, list[str]]] = {}
         for d in dirs:
             epoch = dir_epochs.get(d)
             key = (
                 json.dumps(epoch, sort_keys=True) if epoch is not None else "__legacy__"
             )
-            groups.setdefault(key, (epoch, []))[1].append(self.data_dir / d)
+            apart = d if len(top_seqs.get(top(d), ())) > 1 else None
+            groups.setdefault((key, apart), (epoch, []))[1].append(d)
         parts: list[DataFrame] = []
-        for epoch, roots in groups.values():
+        for epoch, gdirs in groups.values():
             ids = epoch["column_ids"] if epoch is not None else None
             spec = epoch.get("partition_spec") if epoch is not None else None
             gfilters = filters or []
@@ -2523,7 +2677,12 @@ class SnapTable:
                     # a filtered column absent from this epoch's files reads
                     # as NULL — no comparison predicate can hold, skip
                     continue
-            paths = self._leaf_dirs(roots, gfilters, spec)
+            if leaves is not None:
+                paths = [p for d in gdirs for p in leaves[d]]
+            else:
+                paths = self._leaf_dirs(
+                    [self.data_dir / d for d in gdirs], gfilters, spec
+                )
             # a zero-row write on a PARTITIONED table lands a dir with no
             # data files at all (partitionBy emits nothing, not even a
             # schema-only file — TRUNCATE and full CoW DELETE both hit
@@ -2572,27 +2731,55 @@ class SnapTable:
                     continue
                 if len(kept) < len(files):
                     scan = kept
-            # mergeSchema only where merging can differ from one footer:
-            # within a non-legacy epoch group every file was written under
-            # the SAME declared types (the write path casts before writing
-            # — see _write_data), so schema inference from one footer is
-            # exact and skips the all-footers merge job Spark otherwise
-            # runs per read — a fixed driver cost on EVERY table read
-            # (r14, guide §1.2 per-task work; lifecycles pay it 5-10x per
-            # query). Legacy dirs (schema enforcement disabled) keep the
-            # merge: their files carry no epoch guarantee.
-            merge = "true" if epoch is None else "false"
-            df = spark.read.option("mergeSchema", merge).format(fmt).load(scan)
+            df = self._scan_epoch(spark, epoch, fmt, scan)
             if gfilters and any(col not in df.columns for col, _, _ in gfilters):
                 continue
+            if seqs is not None:
+                df = df.withColumn(
+                    _DATA_SEQ, _seq_by_path({top(d): seqs.get(d, -1) for d in gdirs})
+                )
             df = self._apply_row_filters(df, gfilters)
             parts.append(self._project_declared(df, ids))
         if not parts:
-            return self._apply_row_filters(self._empty_declared(spark), filters)
+            out = self._apply_row_filters(self._empty_declared(spark), filters)
+            if seqs is not None:
+                out = out.withColumn(_DATA_SEQ, F.lit(-1).cast("long"))
+            return out
         out = parts[0]
         for p in parts[1:]:
             out = out.unionByName(p)
         return out
+
+    @staticmethod
+    def _scan_epoch(
+        spark: SparkSession, epoch: dict | None, fmt: str, paths: list[str]
+    ) -> DataFrame:
+        """One file scan of ``paths``, all written under ``epoch``.
+
+        The write path casts every file to exactly the epoch's declared
+        types (:meth:`_write_data`), so the epoch's ``column_ids`` and
+        ``column_types`` ARE the files' schema: passing it explicitly skips
+        the schema-inference job Spark otherwise runs on every load (it
+        reads a footer in a job even with ``mergeSchema=false``). Legacy
+        dirs written without an epoch carry no such guarantee and keep
+        ``mergeSchema`` inference, the only way to read them; so do epochs
+        stamped before ``column_types`` existed (one-footer inference)."""
+        from pyspark.sql import types as T
+
+        reader = spark.read.format(fmt)
+        ids = (epoch or {}).get("column_ids") or {}
+        types = (epoch or {}).get("column_types") or {}
+        if ids and set(ids) <= set(types):
+            reader = reader.schema(
+                T.StructType(
+                    [T.StructField(n, _declared_spark_type(types[n])) for n in ids]
+                )
+            )
+        else:
+            reader = reader.option(
+                "mergeSchema", "true" if epoch is None else "false"
+            )
+        return reader.load(paths)
 
     def snapshots(self, spark: SparkSession) -> DataFrame:
         """The snapshot-metadata table (M1), like Iceberg's ``t.snapshots``."""
@@ -3327,36 +3514,15 @@ class SnapTable:
             # reports what the rewrite touched (nothing)
             return {**current, "rewritten_files": 0, "added_files": 0}
 
-        # rewrite the matched leaves, per source dir so each slice gets its
-        # own epoch projection and exactly the delete files applicable to it
-        parts: list[DataFrame] = []
-        matched_files = 0
-        for d, leaves in rewrite.items():
-            epoch = dir_epochs.get(d)
-            ids = epoch["column_ids"] if epoch is not None else None
-            fmt = (epoch or {}).get("write_format") or "parquet"
-            matched_files += sum(
-                len(_list_data_files(Path(l))) for l in leaves
-            )
-            df = (
-                # one source dir = one write epoch: every leaf file shares
-                # the same written schema, one-footer inference is exact
-                # (same rationale as _read_dirs, r14)
-                spark.read.option("mergeSchema", "false" if epoch is not None else "true")
-                .format(fmt)
-                .load([str(l) for l in leaves])
-            )
-            df = self._project_declared(df, ids)
-            applicable = sorted(
-                dd for dd in ddirs if intro.get(dd, -1) > intro.get(d, -1)
-            )
-            if applicable:
-                keys = self._read_delete_keys(spark, applicable)
-                df = df.join(keys, on=list(keys.columns), how="left_anti")
-            parts.append(df)
-        slice_df = parts[0]
-        for p in parts[1:]:
-            slice_df = slice_df.unionByName(p)
+        # rewrite the matched leaves through the MoR read plan: each
+        # source dir's leaves are scanned under its own write epoch and
+        # anti-joined against exactly the delete files applicable to it
+        matched_files = sum(
+            len(_list_data_files(Path(l)))
+            for leaves in rewrite.values()
+            for l in leaves
+        )
+        slice_df = self._read_mor(spark, list(rewrite), ddirs, None, leaves=rewrite)
         # the range-distributed write samples its input before shuffling,
         # which would re-execute the scan + delete anti-join — persist so
         # the slice materializes once (unpersisted right after the write;
@@ -3536,18 +3702,11 @@ class SnapTable:
         new_ddirs: list[str] = []
         overrides: dict[str, int] = {}
         merged = 0
-        col_ids = self._column_ids()
         for cut in sorted(groups):
             dds = groups[cut]
             if len(dds) == 1:
                 new_ddirs.append(dds[0])
                 continue
-            keys = self._read_delete_keys(spark, sorted(dds))
-            new_dir = f"mordel-{uuid.uuid4().hex}"
-            keys.write.parquet(str(self.data_dir / new_dir))
-            (self.data_dir / new_dir / "_key_ids.json").write_text(
-                json.dumps({c: col_ids.get(c) for c in keys.columns})
-            )
             # merged partition-debt attribution survives only when EVERY
             # source carried one (a missing map means unknown partitions —
             # the merged file must stay unattributable, not falsely scoped)
@@ -3556,14 +3715,16 @@ class SnapTable:
                 for dd in dds
                 if (sc := self.data_dir / dd / self._DEBT_SIDECAR).exists()
             ]
+            merged_debt: dict[str, int] | None = None
             if len(src_debts) == len(dds):
-                merged_debt: dict[str, int] = {}
+                merged_debt = {}
                 for m in src_debts:
                     for leaf, n in m.items():
                         merged_debt[leaf] = merged_debt.get(leaf, 0) + n
-                (self.data_dir / new_dir / self._DEBT_SIDECAR).write_text(
-                    json.dumps(merged_debt)
-                )
+            new_dir = self._write_delete_keys(
+                self._read_delete_keys(spark, sorted(dds)).dropDuplicates(),
+                merged_debt,
+            )
             new_ddirs.append(new_dir)
             overrides[new_dir] = min(intro[dd] for dd in dds)
             merged += 1
