@@ -17,14 +17,12 @@ prunes final projections the row count doesn't need — a window or aggregate
 VALUE column feeding no filter is optimized away, so for a handful of
 pure-projection entries this measures the pruned plan, not every output
 byte (the driver's correctness gate separately executes every query with a
-full value collect). This action is kept DELIBERATELY: BENCH_r1..r11 and
-the recorded baselines were all taken under it, so switching actions would
-re-baseline 148 queries mid-series. Scaling claims use scale_sweep.py,
-which since round 12 materializes through the noop sink (every column
-computed) precisely because pruning let a skewed-key window sweep measure
-the scan instead of the operator.
+full value collect). This action is kept DELIBERATELY: the recorded
+baselines were all taken under it, so switching actions would re-baseline
+148 queries mid-series. This runner is not a source of performance claims:
+those come from ``perfbench/`` (see ``perfbench/README.md``).
 
-Since round 13 (VERDICT r12 Next #6) every run ALSO records a noop-sink
+Since round 13 every run ALSO records a noop-sink
 sweep — ``noop_value`` in the JSON line, per-query in bench_detail.json —
 so the honest every-column-computed total is a standing series beside the
 count series and a regression in pruned-away compute can never hide. The

@@ -195,7 +195,7 @@ def load_ivfpq_index(
 #: table is a literal in the expression) while gemm pays a fixed Arrow
 #: batch-transfer cost per call — measured crossover sits well under 8
 #: queries on local[32] (single query: fold ~0.7 s vs gemm ~1.2 s; at 50
-#: queries gemm is ~7x faster; SCALE_SWEEP_r06 annserve)
+#: queries gemm is ~7x faster, on the round-6 ANN serving sweep)
 _GEMM_MIN_QUERIES = 8
 
 

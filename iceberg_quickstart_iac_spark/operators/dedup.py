@@ -407,10 +407,13 @@ def admit_batch(
     on source ascending). The batch's signatures are computed ONCE
     (checkpointed) and reused for scoring and the append.
 
-    Scale: work is linear in the batch (the store side prunes to the
-    batch's broadcast bucket footprint — measured α 0.12 at 10× store,
-    SCALE_SWEEP_r08); the append is one map-only write of |admitted|
-    rows."""
+    Scale: work is linear in the STORE, not the batch — every admission
+    re-bands every stored signature before the semi-join to the batch's
+    broadcast bucket footprint. Measured for a 200-doc batch: 5.2 s
+    against a 2k-row store, 16 s against 202k, 148 s against 2M (about
+    65 ms per 1k store rows). The append is one map-only write of
+    |admitted| rows. ``perfbench/``'s ``corpus_admission`` workload times
+    it against a 2k-row store."""
     spark = new_docs.sparkSession
     props = store.meta.get("properties", {})
     num_perm = int(props.get("minhash_num_perm", 64))

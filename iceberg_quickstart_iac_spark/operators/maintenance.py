@@ -1,13 +1,15 @@
 """MoR maintenance policy: compact when read amplification crosses a
 threshold (SURVEY §2.10 maintenance composition).
 
-Merge-on-read keeps writes O(changes) by deferring delete application to
-read time; the price is one extra anti-join input per accumulated delete
-file. The measured slope (PERFORMANCE.md, morread sweep) is mild in file
-COUNT but linear in total deferred KEYS, so the policy bounds both:
+Merge-on-read defers delete application to read time. A read scans the
+keys of every outstanding delete file together (one scan unless a rename
+of a key column splits them) and applies them in one anti-join, so its
+plan does not grow with the delete-file count; its cost grows with the
+total deferred KEYS (the anti-join's build side). The policy bounds
+both:
 
-- ``max_delete_files`` — the per-read planning/scan overhead knob (each
-  delete file is one more tiny scan grouped into the anti-join);
+- ``max_delete_files`` — the per-read driver overhead knob (each delete
+  file adds a directory to the delete-key scan and two sidecar reads);
 - ``max_delete_ratio`` — deferred keys / live rows, the knob that bounds
   the anti-join's build side relative to the table.
 

@@ -47,7 +47,7 @@ def range_join(
     ``bucket_s`` >= the typical interval length: the interval side
     replicates once per overlapped bucket.
 
-    DENSITY-BOUND CONTRACT (r13 sweep, SCALE_SWEEP_r13 pair_hotkey):
+    DENSITY-BOUND CONTRACT (measured on a hot-pair key-density axis):
     output (and candidate) pairs per (keys…, bucket) cell are
     Ω(points_in_cell × intervals_in_cell) and the whole cell lands on ONE
     shuffle task — a single dense key measured α 1.22 (2.15 s → 63.5 s,

@@ -106,133 +106,34 @@ def _resolved_oracles() -> dict[str, str]:
     return out
 
 
-#: Names surfaced FIRST by :func:`queries` — the driver's correctness gate
-#: certifies the first 50 registered entries per round, so the queries most
-#: in need of a fresh driver row lead the catalog. The head below is NOT
-#: hand-maintained prose: it is generated by ``python gate_plan.py --round
-#: {N}`` from the CORRECTNESS_r*.json history and ASSERTED by
-#: tests/test_gate_plan.py (never-certified lead, then every query whose
-#: newest green row is >= 3 rounds old, then free touched slots; overflow
-#: must be named in :data:`_GATE_SPILL`). Everything past slot 50 follows in
-#: source order and keeps its DuckDB oracle replayed by
-#: tests/test_oracle_parity.py — the gate governs only DRIVER certification
-#: freshness, never whether a query is verified.
-
-#: the round this gate plan was computed FOR (tests/test_gate_plan.py
-#: recomputes the due set from CORRECTNESS rounds strictly before it)
-_GATE_ROUND = 14
-
-#: overflow names when the due set exceeds 50 (capacity policy item 2);
-#: r14 needs none: 1 never + 48 r11-stale = 49 due, 1 free touched slot.
-#: (The r13 VERDICT's prose predicted "51 due > 50, one spill" from
-#: hand-arithmetic — the generator shows two of the 50 r11 entries were
-#: re-certified via r13's touched slots, so the due set fits. Run
-#: ``python gate_plan.py --round 14``; the generator is the authority.)
-_GATE_SPILL: list[str] = []
-
-#: queries ADDED while _GATE_ROUND's plan was already in force — the
-#: rotation contract sends them PAST the gate (the pytest oracle replay
-#: covers them meanwhile) and they MUST lead the next round's head as
-#: never-certified. tests/test_gate_plan.py exempts exactly these names
-#: from the current due set and asserts they stay out of the first 50;
-#: when _GATE_ROUND bumps, clear this list and regenerate the head.
-_QUEUED_ADDITIONS: list[str] = []
-
 #: retired from the driver catalog to pytest-oracle-only coverage
-#: (capacity policy item 3; recorded in COVERAGE.md before retirement).
-#: r12: `bm25_doc_search` — a single-query special case fully subsumed by
-#: `bm25_batch_search` (same retrieval.py scoring path, r11 driver row);
-#: judge approved the retirement in VERDICT r11 ("no veto").
-#: r13: `event_peak_hour_value` — its OWN dense-key sweep measured alpha
-#: 1.80 (519 s at 16x bot density, SCALE_SWEEP_r12): an event-grain
-#: per-key RANGE frame cannot be salted, so the entry fails the
-#: catalog's 100 TB bar by measurement. Retired per VERDICT r12 Next #2
-#: (preferred option) with `event_peak_minute_rollup` as the scale-safe
-#: successor (same trailing-hour-peak semantics at minute grain, alpha
-#: -0.16 on the same sweep, 274x faster at 16x). The oracle still
-#: replays exact-value via include_retired=True and the one-exchange
-#: plan shape stays pinned in tests/test_plans.py.
+#: (recorded in COVERAGE.md before retirement).
+#: `bm25_doc_search` — a single-query special case fully subsumed by
+#: `bm25_batch_search` (same retrieval.py scoring path).
+#: `event_peak_hour_value` — its own dense-key sweep measured alpha 1.80
+#: (519 s at 16x bot density): an event-grain per-key RANGE frame cannot
+#: be salted, so the entry fails the catalog's 100 TB bar by measurement.
+#: `event_peak_minute_rollup` is the scale-safe successor (same
+#: trailing-hour-peak semantics at minute grain, alpha -0.16 on the same
+#: sweep, 274x faster at 16x). The oracle still replays exact-value via
+#: include_retired=True and the one-exchange plan shape stays pinned in
+#: tests/test_plans.py.
 _RETIRED: frozenset[str] = frozenset({"bm25_doc_search", "event_peak_hour_value"})
 
-_GATE_PRIORITY: list[str] = [
-    # --- round-14 gate (generated by gate_plan.py --round 14) ---
-    # never certified: the round-13 addition (oracle-replayed by pytest
-    # since r13; first driver row lands this round)
-    "event_followup_pairs_rollup",
-    # the 48 r11-certified queries (age 3 at r14), sorted by name.
-    "ann_index_lifecycle",
-    "bm25_batch_search",
-    "cohort_retention",
-    "corpus_filter_funnel",
-    "customer_running_totals",
-    "customer_spend_quartiles",
-    "customers_without_big_orders",
-    "deterministic_corpus_shuffle",
-    "doc_benchmark_contamination",
-    "doc_bigram_novelty",
-    "doc_bpe_token_stats",
-    "doc_chunks",
-    "doc_hash_split",
-    "doc_pii_redaction",
-    "doc_repetition_signals",
-    "drift_sensor_cycle",
-    "embedding_ann_ivf",
-    "embedding_int8_audit",
-    "embedding_label_centroids",
-    "embedding_lsh_topk",
-    "enrich_orders_by_segment",
-    "event_time_hierarchy_rollup",
-    "funnel_click_to_purchase",
-    "inter_source_overlap",
-    "k_anonymity_audit",
-    "latest_event_per_user",
-    "latest_order_per_customer",
-    "media_pcm_stats",
-    "mor_maintenance_lifecycle",
-    "multimodal_media_stats",
-    "near_dup_doc_clusters",  # r14 re-certifies the DISTRIBUTED CC path (VERDICT r13 Next #4)
-    "orc_table_lifecycle",
-    "pivot_segment_status",
-    "q10_returned_item_customers",
-    "q13_customer_order_histogram",
-    "q14_promo_revenue_pct",
-    "q18_large_orders",
-    "q7_nation_volume",
-    "q8_market_share",
-    "rollup_order_status",
-    "scd2_chain_from_orders",
-    "semantic_dedup_cells_gemm",
-    "sql_call_maintenance_lifecycle",
-    "sql_view_registry_lifecycle",
-    "temperature_mixture_sample",
-    "training_shard_stats",
-    "user_sessions",
-    "weighted_doc_sample",
-    # 1 free touched slot (50 - 49): the entry whose code round 14
-    # touches — the ADVICE r13 #3 fix (persist the 6-row agg so the
-    # audited sketch value IS the reported one)
-    "sketch_accuracy_audit",  # r13; agg persisted before broadcast derivation
-    # --- past the 50-slot gate ---
-    # r15 due set per gate_plan.py --round 15 (run it; don't hand-copy).
-]
 
-
-def _gate_ordered(d: dict, include_retired: bool) -> dict:
-    if not include_retired:
-        d = {n: v for n, v in d.items() if n not in _RETIRED}
-    head = {n: d[n] for n in _GATE_PRIORITY if n in d}
-    return {**head, **{n: v for n, v in d.items() if n not in head}}
+def _catalog(d: dict, include_retired: bool) -> dict:
+    return {n: v for n, v in d.items() if include_retired or n not in _RETIRED}
 
 
 def queries(include_retired: bool = False) -> dict[str, QueryFn]:
     """The driver catalog. Retired entries (pytest-oracle-only coverage,
     :data:`_RETIRED`) are excluded unless ``include_retired`` — the oracle
     parity suite passes True so retirement never weakens verification."""
-    return _gate_ordered(_REGISTRY, include_retired)
+    return _catalog(_REGISTRY, include_retired)
 
 
 def oracle_sql(include_retired: bool = False) -> dict[str, str]:
-    return _gate_ordered(_resolved_oracles(), include_retired)
+    return _catalog(_resolved_oracles(), include_retired)
 
 
 def dsum(col: F.Column | str, alias: str) -> F.Column:
@@ -2414,15 +2315,15 @@ def event_minute_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
 # single user's events — bounded by construction FOR HUMAN KEYS; a
 # bot/spam key breaks that bound and this event-grain frame then goes
 # near-quadratic on one task (measured alpha 1.80 on the dense-key
-# sweep, SCALE_SWEEP_r12). Dense-key workloads must use the
+# sweep, 519 s at 16x bot density). Dense-key workloads must use the
 # `event_peak_minute_rollup` form below — grain reduction before the
 # window; a trailing frame cannot be salted.
 #
 # RETIRED r13 (in `_RETIRED`, pytest-oracle-only since): the alpha-1.80
 # measurement means this plan does NOT meet the catalog's 100 TB bar on
 # adversarial key densities, and the minute-rollup successor covers the
-# same trailing-hour-peak semantics scale-safely (VERDICT r12 Next #2,
-# preferred option; ledger in COVERAGE.md). Kept registered: the oracle
+# same trailing-hour-peak semantics scale-safely (ledger in
+# COVERAGE.md). Kept registered: the oracle
 # replays exact-value each suite run and the event-grain form remains
 # available to callers who KNOW their key densities are human-bounded.
 # ---------------------------------------------------------------------------
@@ -2479,8 +2380,8 @@ def event_peak_hour_value(spark: SparkSession, sf_dir: str) -> DataFrame:
 # window's exchange on user_id then moves only minute-grain rows. A
 # trailing frame cannot be salted (frame continuity breaks), so grain
 # reduction IS the skew recipe. Decimal-exact sums both stages per the
-# float policy. Swept on the dense-user axis in scale_sweep.py
-# (`--suite window`).
+# float policy. Measured on the dense-user axis: alpha -0.16, 274x faster
+# than the event-grain form at 16x bot density.
 # ---------------------------------------------------------------------------
 
 
@@ -4987,8 +4888,8 @@ def event_followup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     DENSITY-BOUND CONTRACT (r14, from this entry's OWN r13 sweep): the
     bucketed range join enumerates Ω(pairs) per dense (user, hour-bucket)
     cell on a single shuffle task — measured α 1.22 (2.15 s → 63.5 s,
-    29.5× time for 8.5× data) at 16× bot-key density, SCALE_SWEEP_r13
-    pair_hotkey. BOUND: this entry is for human-key densities (bounded
+    29.5× time for 8.5× data) at 16× bot-key density on the hot-pair
+    axis. BOUND: this entry is for human-key densities (bounded
     events per user per hour), where the candidate volume is linear and
     the join is the cheaper plan on benign data (~0.8 s vs 1.54 s at
     sf0.1). Dense/bot-key workloads must use the join-free exact
@@ -6691,7 +6592,7 @@ def semantic_dedup_cells_gemm(spark: SparkSession, sf_dir: str) -> DataFrame:
     cannot leak into the hash, and the drop DECISIONS provably match the
     fold's (threshold sits away from float boundaries; equivalence also
     pinned by test_semantic_dedup_gemm_matches_fold). This gives the
-    alpha-0.40 scale path (PERFORMANCE.md r4 sweep) its own driver
+    alpha-0.40 scale path (measured on the round-4 scale sweep) its own driver
     certification instead of certifying only the interpreted fold."""
     from iceberg_quickstart_iac_spark.operators.similarity import (
         ivf_index,
@@ -7862,8 +7763,8 @@ def orc_table_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# MoR maintenance lifecycle (SURVEY §2.10 maintenance + the morread
-# sweep's compact-cadence dial, SCALE_SWEEP_r06.json): accumulate three
+# MoR maintenance lifecycle (SURVEY §2.10 maintenance + the MoR
+# read-amplification compact-cadence dial): accumulate three
 # equality-delete files, audit the deferred-delete debt from metadata
 # (delete-file count + deferred keys), then let the policy
 # (operators/maintenance.py::maintain_mor) trip its file threshold and
@@ -9174,10 +9075,9 @@ def curation_stages(raw: DataFrame) -> DataFrame:
     """The composed curation pipeline over any (doc_id, source, text)
     corpus: exact dedup → near-dup canonical keep → quality gate →
     per-source survival rollup. Split out from the catalog entry (which
-    caps its input for oracle-replay cost) so scale_sweep.py can run the
-    SAME composition unblocked at factor× corpora (VERDICT r12 Next #3 —
-    the localCheckpoint feeding 4 consumers is exactly what changes
-    behavior at 100 TB and was previously unswept)."""
+    caps its input for oracle-replay cost) so the SAME composition can
+    run unblocked at factor× corpora — the localCheckpoint feeding 4
+    consumers is exactly what changes behavior at 100 TB."""
     from iceberg_quickstart_iac_spark.operators.dedup import (
         canonical_per_cluster,
         lsh_screened_pairs,
@@ -9350,8 +9250,7 @@ def gdpr_erasure_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame:
 # production serving shape (per-query literal pivots don't scale to a
 # query LOG). Top-5 per query through a per-query window (partial
 # WindowGroupLimit). Same bit-exact arithmetic as bm25_doc_search.
-# Oracle-replayed by pytest each round; queued for its first driver row
-# in the round-11 gate lead.
+# Oracle-replayed by pytest.
 # ---------------------------------------------------------------------------
 
 

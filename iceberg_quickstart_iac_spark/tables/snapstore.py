@@ -1894,9 +1894,19 @@ class SnapTable:
     def _dir_epochs(self) -> dict[str, dict | None]:
         """Data dir → the write-epoch metadata it was WRITTEN under
         (the first log entry referencing the dir; None for legacy entries
-        without ``column_ids``)."""
+        without ``column_ids``).
+
+        Once :meth:`expire_snapshots` drops that entry, the first surviving
+        reference can be a later epoch — after a rename it names the column
+        by its new name and the dir's values would read as NULL — so expiry
+        persists each live dir's epoch in ``table.json`` (``dir_epochs``)
+        and that record wins. A log without sequence gaps never expired an
+        entry and skips the ``table.json`` read."""
+        entries = self._entries()
         seen: dict[str, dict | None] = {}
-        for e in self._entries():
+        if entries and len(entries) != entries[-1]["sequence"] + 1:
+            seen.update(self.meta.get("dir_epochs") or {})
+        for e in entries:
             ids = e.get("column_ids")
             epoch = None
             if ids is not None:
@@ -4004,6 +4014,11 @@ class SnapTable:
             tomb = set(meta.get("expired_sequences") or [])
             tomb.update(e["sequence"] for e in drop)
             meta["expired_sequences"] = sorted(tomb)
+            # the entries that dated each dir's write epoch may be among
+            # the dropped: keep the epochs of the dirs that stay live
+            meta["dir_epochs"] = {
+                d: ep for d, ep in self._dir_epochs().items() if d in referenced
+            }
             self._write_meta(meta)
         for e in drop:
             (self.log_dir / f"{e['sequence']:012d}.json").unlink(missing_ok=True)

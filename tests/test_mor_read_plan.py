@@ -117,20 +117,44 @@ def test_read_plan_runs_no_schema_inference_job(spark, tmp_path):
     assert _state(spark, t) == model
 
 
-def test_widened_column_reads_after_expiring_its_intro_entry(spark, tmp_path):
-    """Once expiry drops the entry that wrote a dir, the dir is read under
-    the next surviving entry's epoch — here the widened type. The typed
-    scan widens the old float file; one-footer inference failed on it."""
+def _read_after_expiring_intro(spark, root, evolve, second):
+    """Append ``(1, 1.5)`` under a float ``v``, ``evolve`` the table,
+    append ``second``, expire everything but the head, then read."""
     t = SnapTable.create(
-        tmp_path / "widen",
-        {"name": "widen", "namespace": "lakehouse",
-         "columns": [{"name": "k", "type": "long"}, {"name": "x", "type": "float"}]},
+        root,
+        {"name": root.name, "namespace": "lakehouse",
+         "columns": [{"name": "k", "type": "long"}, {"name": "v", "type": "float"}]},
     )
-    t.append(spark.createDataFrame([(1, 1.5)], "k LONG, x FLOAT"))
-    t.evolve_widen_column("x", "double")
-    t.append(spark.createDataFrame([(2, 2.25)], "k LONG, x DOUBLE"))
+    t.append(spark.createDataFrame([(1, 1.5)], "k LONG, v FLOAT"))
+    schema = evolve(t)
+    t.append(spark.createDataFrame([second], schema))
     t.expire_snapshots(older_than_ms=2**52)
-    assert sorted((r.k, r.x) for r in t.read(spark).collect()) == [(1, 1.5), (2, 2.25)]
+    return sorted(tuple(r) for r in t.read(spark).collect())
+
+
+def test_widened_column_reads_after_expiring_its_intro_entry(spark, tmp_path):
+    """Expiry drops the entry that wrote the float file; the dir keeps the
+    epoch it was written under and its values widen on read."""
+    def widen(t):
+        t.evolve_widen_column("v", "double")
+        return "k LONG, v DOUBLE"
+
+    assert _read_after_expiring_intro(spark, tmp_path / "widen", widen, (2, 2.25)) == [
+        (1, 1.5), (2, 2.25)
+    ]
+
+
+def test_renamed_column_reads_after_expiring_its_intro_entry(spark, tmp_path):
+    """Expiry drops the entry that wrote the pre-rename file; the dir keeps
+    the epoch it was written under, so the renamed column still resolves
+    to the old file column by field id instead of reading NULL."""
+    def rename(t):
+        t.evolve_rename_column("v", "w")
+        return "k LONG, w FLOAT"
+
+    assert _read_after_expiring_intro(spark, tmp_path / "rename", rename, (2, 2.25)) == [
+        (1, 1.5), (2, 2.25)
+    ]
 
 
 def test_mor_reads_survive_scoped_compact_then_expire(spark, tmp_path):
