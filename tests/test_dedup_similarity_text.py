@@ -1202,6 +1202,170 @@ def test_signature_store_admit_append_admit(spark, tmp_path):
     assert store.last_txn_version("lc") == 2
 
 
+def _admission_fixture():
+    """A 30-doc store and a 13-doc batch holding planted exact copies, near
+    rewrites of store docs, an in-batch exact pair, an in-batch near pair
+    and novel docs — every outcome an admission can report."""
+    import random
+
+    rng = random.Random(11)
+    letters = "abcdefghijklmnopqrstuvwxyz"
+    vocab = [
+        "".join(rng.choice(letters) for _ in range(rng.randint(3, 8)))
+        for _ in range(400)
+    ]
+
+    def doc():
+        return " ".join(rng.choice(vocab) for _ in range(40))
+
+    def rewrite(text, share):
+        words = text.split()
+        for i in rng.sample(range(len(words)), int(len(words) * share)):
+            words[i] = rng.choice(vocab)
+        return " ".join(words)
+
+    store = [(i, doc()) for i in range(1, 31)]
+    text = dict(store)
+    novel, pair_base = doc(), doc()
+    batch = [
+        (101, text[3]),                      # exact copy of store doc 3
+        (102, text[8]),                      # exact copy of store doc 8
+        (103, rewrite(text[5], 0.1)),        # near rewrite of store doc 5
+        (104, rewrite(text[13], 0.1)),       # near rewrite of store doc 13
+        (105, rewrite(text[21], 0.2)),       # looser rewrite of store doc 21
+        (106, novel),
+        (107, pair_base),
+        (108, rewrite(pair_base, 0.1)),      # in-batch near dup of 107
+        (109, novel),                        # in-batch exact dup of 106
+        (110, rewrite(text[5], 0.05)),       # near store doc 5 AND batch 103
+        (111, doc()),
+        (112, doc()),
+        (113, text[3]),                      # 1.0 against store 3 AND batch 101
+    ]
+    return store, batch
+
+
+def _seeded_store(spark, root, rows):
+    from iceberg_quickstart_iac_spark.operators.dedup import (
+        create_signature_store,
+        minhash_signatures,
+    )
+
+    corpus = spark.createDataFrame(rows, "doc_id LONG, text STRING")
+    store = create_signature_store(root, "doc_id")
+    store.append(
+        minhash_signatures(corpus, "doc_id", "text").select("doc_id", "minhash"),
+        txn=("seed", 0),
+    )
+    return store
+
+
+def test_admission_matches_are_pinned(spark, tmp_path):
+    """Admission equivalence: the exact ``matches`` rows (estimates
+    included) and admitted ids of an admission with store and in-batch
+    candidates, through ``incremental_near_dup`` (also with a bucket cap
+    of 1, so every shared bucket takes the representative path) and
+    ``admit_batch``; a replay of the same txn returns the same rows and
+    appends nothing."""
+    from iceberg_quickstart_iac_spark.operators.dedup import (
+        admit_batch,
+        incremental_near_dup,
+    )
+
+    store_rows, batch_rows = _admission_fixture()
+    batch = spark.createDataFrame(batch_rows, "doc_id LONG, text STRING")
+    store = _seeded_store(spark, tmp_path / "sig", store_rows)
+
+    def rows(df):
+        return sorted(tuple(r) for r in df.collect())
+
+    expect = [
+        (101, 3, 1.0, "store"),
+        (102, 8, 1.0, "store"),
+        (103, 5, 0.6875, "store"),
+        (104, 13, 0.875, "store"),
+        (105, 21, 0.578125, "store"),
+        (108, 107, 0.734375, "batch"),
+        (109, 106, 1.0, "batch"),
+        (110, 5, 0.828125, "store"),
+        (113, 3, 1.0, "store"),
+    ]
+    store_sigs = store.read(spark)
+    for cap in (1000, 1):
+        got = incremental_near_dup(
+            batch, store_sigs, "doc_id", "text", max_bucket_df=cap
+        )
+        assert rows(got) == expect, cap
+
+    first = admit_batch(store, batch, "doc_id", "text", txn=("eq", 1))
+    assert rows(first["matches"]) == expect
+    assert sorted(r.doc_id for r in first["admitted"].collect()) == [
+        106, 107, 111, 112
+    ]
+    assert first["commit"]["row_count"] == 34
+    replay = admit_batch(store, batch, "doc_id", "text", txn=("eq", 1))
+    assert rows(replay["matches"]) == expect
+    assert replay["commit"]["row_count"] == 34
+
+
+def test_store_rows_sharing_an_id_are_scored_per_band_hit(spark):
+    """A store that holds one id twice: each stored signature row is its
+    own LSH candidate, scored only when it shares a band with the new
+    doc. Id 7's first row shares band 0 but agrees on 4/64 positions;
+    its second agrees on 48/64 but differs in every band, so it is never
+    a candidate and the doc is admitted. Id 9's rows both share a band,
+    and the better one (an exact copy) wins."""
+    from iceberg_quickstart_iac_spark.operators.dedup import (
+        incremental_near_dup,
+        minhash_signatures,
+    )
+
+    new = spark.createDataFrame(
+        [(500, "a near duplicate that the store holds under one id twice")],
+        "doc_id LONG, text STRING",
+    )
+    sig = minhash_signatures(new, "doc_id", "text").first().minhash
+    band_0_only = sig[:4] + [~x for x in sig[4:]]
+    no_band = [~x if p % 4 == 0 else x for p, x in enumerate(sig)]
+    half = sig[:32] + [~x for x in sig[32:]]
+
+    def matches(store_rows):
+        store = spark.createDataFrame(store_rows, "doc_id LONG, minhash ARRAY<LONG>")
+        out = incremental_near_dup(new, store, "doc_id", "text")
+        return [tuple(r) for r in out.collect()]
+
+    assert matches([(7, band_0_only), (7, no_band)]) == []
+    assert matches([(9, half), (9, sig)]) == [(500, 9, 1.0, "store")]
+
+
+def test_admission_scans_the_store_once(spark, tmp_path, monkeypatch):
+    """The executed plan of an admission's matches reads the store's data
+    in one scan (banding, the probe and candidate signatures all ride
+    it), and no per-element ``element_at`` kernel is left in it."""
+    from iceberg_quickstart_iac_spark.operators import dedup
+
+    store_rows, batch_rows = _admission_fixture()
+    store = _seeded_store(spark, tmp_path / "sig", store_rows[:20])
+    more = spark.createDataFrame(store_rows[20:], "doc_id LONG, text STRING")
+    store.append(
+        dedup.minhash_signatures(more, "doc_id", "text").select("doc_id", "minhash")
+    )
+    real, captured = dedup._near_dup_matches, []
+
+    def spy(*args, **kwargs):
+        captured.append(real(*args, **kwargs))
+        return captured[-1]
+
+    monkeypatch.setattr(dedup, "_near_dup_matches", spy)
+    batch = spark.createDataFrame(batch_rows, "doc_id LONG, text STRING")
+    dedup.admit_batch(store, batch, "doc_id", "text")
+    plan = captured[0]._jdf.queryExecution().executedPlan()
+    final = plan.finalPhysicalPlan() if plan.nodeName() == "AdaptiveSparkPlan" else plan
+    text = final.toString()
+    assert text.count("FileScan parquet") == 1, text
+    assert "element_at(" not in text, text
+
+
 def test_expr_string_forms_match_column_api(spark):
     """_band_bucket_array/_agreement_fraction build their expression trees
     from ONE parsed SQL string (driver-cost fix, round 9); this pins that
