@@ -113,7 +113,7 @@ def main() -> None:
     timings = {name: round(min(ts), 3) for name, ts in samples.items()}
     # per-query dispersion: min is the reported signal, median/max let a
     # reader separate ambient box load (uniform median inflation) from a
-    # real regression (the min itself moved) — VERDICT r6 #2b
+    # real regression (the min itself moved)
     dispersion = {
         name: {
             "min": round(min(ts), 3),

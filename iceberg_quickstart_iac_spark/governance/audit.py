@@ -108,11 +108,16 @@ class AuditTableSink:
         self._flush_every = flush_every
 
     def _table(self):
-        from iceberg_quickstart_iac_spark.tables.snapstore import SnapTable
+        from iceberg_quickstart_iac_spark.tables.snapstore import (
+            SnapTable,
+            TableNotFoundError,
+        )
 
         try:
             return SnapTable.load(self._root)
-        except Exception:
+        except TableNotFoundError:
+            # only a missing table is created: any other load failure (a
+            # newer format_version) must not be answered by overwriting it
             return SnapTable.create(
                 self._root,
                 {

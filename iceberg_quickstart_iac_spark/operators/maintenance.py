@@ -87,8 +87,7 @@ def mor_partition_debt(table: SnapTable) -> dict:
     debt_rows = 0
     debt_suffixes = list(leaves)
     for d in snap["data_dirs"]:
-        epoch = dir_epochs.get(d)
-        spec = epoch.get("partition_spec") if epoch is not None else None
+        spec = dir_epochs[d]["partition_spec"]
         for leaf in table._leaf_dirs([table.data_dir / d], [], spec):
             files = sorted(Path(leaf).rglob("*.parquet"))
             n = _footer_row_count(files) if files else 0

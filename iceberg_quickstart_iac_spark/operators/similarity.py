@@ -67,7 +67,7 @@ def cosine_topk(
     the final task sorts k·P rows, never |corpus|. An explicit two-level
     window (pre-prune on (query, spark_partition_id)) was measured and
     REJECTED: it plans a second exchange for the same pruning the
-    optimizer already does map-side (VERDICT r8 next #3 — resolved by
+    optimizer already does map-side (resolved by
     pinning the optimizer behavior rather than hand-rolling it).
     """
     # norms hoisted to one column per row/query (vs per pair): same value,
@@ -315,7 +315,7 @@ def ivf_index(
     import pandas as pd
     from pyspark.sql.functions import pandas_udf
 
-    # Deterministic fit sample (ADVICE r2: a bare limit() takes whichever
+    # Deterministic fit sample (a bare limit() takes whichever
     # partitions answer first — biased on clustered layouts, unstable
     # between runs). Both forms are distributed partial top-k sorts.
     # ``sample_vectors`` short-circuits the collect so a caller fitting

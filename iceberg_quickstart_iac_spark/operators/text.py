@@ -107,7 +107,7 @@ def language_id(col: Column | str, tokens: Column | None = None) -> Column:
 #: The phone pattern allows only SINGLE-character separators between digit
 #: groups, so a match can never bridge a sentence boundary ("in 2024. 555
 #: 123 4567" redacts only the number, not the year and everything between —
-#: ADVICE r2). Known, accepted collision: dash-separated dates
+#: the earlier pattern's flaw). Known, accepted collision: dash-separated dates
 #: (2024-01-02) are phone-shaped and get redacted.
 PII_PATTERNS = [
     ("email", r"[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}"),

@@ -444,7 +444,7 @@ def quality_checks_events(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Declarative SodaCL checks (SURVEY §2.4 + VERDICT r2 missing #2): the YAML
+# Declarative SodaCL checks (SURVEY §2.4): the YAML
 # check document is the source of truth — parsed by quality.parse_sodacl
 # (the reference executes the same files via a Soda subprocess,
 # quality/runner.py:37-50), compiled to ONE single-pass aggregation, and
@@ -961,11 +961,11 @@ def incremental_near_dup_admission(spark: SparkSession, sf_dir: str) -> DataFram
 
 
 # ---------------------------------------------------------------------------
-# Persisted signature-store admission LIFECYCLE (round 9; VERDICT r8 next
-# #2 — operators/dedup.py::admit_batch): the production loop around
+# Persisted signature-store admission LIFECYCLE (round 9;
+# operators/dedup.py::admit_batch): the production loop around
 # incremental_near_dup made first-class. Wave 1 admits a batch against an
 # EMPTY store and appends the admitted docs' signatures (txn-stamped);
-# wave 2 (trimmed to a SCORE-ONLY probe, VERDICT r9 next #3 — the
+# wave 2 (trimmed to a SCORE-ONLY probe — the
 # store-only-catch property needs one append, not two full turns) plants
 # exact copies of wave-1 admissions — including one whose text exists
 # NOWHERE in the corpus, so it can only be caught if the wave-1 append
@@ -1975,7 +1975,7 @@ def embedding_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 # MinHash/LSH near-duplicate detection (SURVEY §2.13 X2), production shape:
 # a three-stage funnel whose verified output is engine-portable, so the
 # DuckDB oracle replays the exact all-pairs Jaccard join (was rows-only in
-# r2: the old output exposed xxhash-dependent estimates; VERDICT r2 #6).
+# r2: the old output exposed xxhash-dependent estimates).
 #
 #   1. LSH banding, bands=21 x r=3 over 63 minhashes: P(miss | j>=0.7)
 #      = (1-0.7^3)^21 ~ 1.5e-4 per pair, while unrelated pairs (j~0.1)
@@ -2097,7 +2097,7 @@ def near_dup_minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 # reachability CTE (the pair set is the engine-portable verified one, so
 # both engines see the same graph).
 #
-# r14 (VERDICT r13 Next #4): this entry now FORCES the distributed path
+# r14: this entry now FORCES the distributed path
 # (`driver_edge_threshold=0`) — the min-label propagation a real 100 TB
 # dedup runs when the edge set exceeds the driver bound. Until r13 only
 # the driver-side union-find fast path ever had a driver row; the oracle
@@ -2366,7 +2366,7 @@ def event_peak_hour_value(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Skew-hardened trailing-window variant (round 12; VERDICT r11 #5): the
+# Skew-hardened trailing-window variant (round 12): the
 # RANGE window above is one task per user — correct, but a bot/spam key
 # with 10× everyone's event density makes that ONE task the straggler.
 # The standard mitigation is grain reduction BEFORE the window: pre-
@@ -2965,7 +2965,7 @@ def brand_size_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 # is ALWAYS a candidate (no probabilistic caveat); the md5 verify then
 # removes any hash-coincidence pair. The verified output — duplicate pairs
 # by normalized content — is exactly replayable in DuckDB. (Was rows-only
-# in r2: raw hamming distances are xxhash-dependent; VERDICT r2 #6.)
+# in r2: raw hamming distances are xxhash-dependent.)
 @query(
     "simhash_near_pairs_block2k",
     oracle=r"""
@@ -3039,8 +3039,8 @@ def ngram_jaccard_dups_block1k(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Hidden-partition pruning as a driver-visible query (VERDICT r2 missing #1;
-# reference promise: docs/table-template-reference.md:133-168 — "only reads
+# Hidden-partition pruning as a driver-visible query (reference
+# promise: docs/table-template-reference.md:133-168 — "only reads
 # files in the hour=10 folder"). Builds a day-partitioned snapshot table
 # from the events testdata, reads it with a 2-day ts predicate, and emits
 # WHAT THE PHYSICAL LAYOUT DID: total day-partition dirs written, day dirs
@@ -4919,7 +4919,7 @@ def event_followup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Skew-hardened follow-up pair rollup (round 13; VERDICT r12 Next #4).
+# Skew-hardened follow-up pair rollup (round 13).
 #
 # `event_followup_pairs` above joins events to events through the bucketed
 # range join — correct, but the number of CANDIDATE PAIRS for one key is
@@ -5034,7 +5034,7 @@ def followup_pair_rollup(
     # long `div` is exact and hb·H + r == t holds for EVERY timestamp —
     # including pre-1970 (negative t, where a truncating cast is not
     # floor) and far-future values past 2^53 µs (where double division
-    # can bump the quotient across an integer; ADVICE r13 #1).
+    # can bump the quotient across an integer).
     t = F.unix_micros(F.col(ts))
     base = (
         ev.select(
@@ -6637,7 +6637,7 @@ def semantic_dedup_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     # method='fold': element-order cosine folds the DuckDB oracle replays
     # bit-exactly. The production path is semantic_dedup(method='gemm') —
     # one numpy GEMM per cell via applyInPandas; the 10x scale sweep
-    # measured fold at alpha~1.5 vs gemm's linear (PERFORMANCE.md r4).
+    # measured fold at alpha~1.5 vs gemm's linear (round 4).
     return (
         semantic_dedup(
             tagged.filter(F.col("vec_id") < 2000), threshold=0.4, method="fold"
@@ -6954,7 +6954,7 @@ def cdc_changelog_apply_mor(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The SAME sequenced changelog applied MERGE-ON-READ
     (`apply_changelog(mode='mor')`: one commit = delete keys + new
     images, sequence-scoped — O(batch) write cost, the Hudi-MoR upsert
-    shape; CoW-vs-MoR divergence measured in PERFORMANCE.md). End state
+    shape; the CoW-vs-MoR cost divergence was measured in round 5). End state
     is identical by design, so both modes share one oracle — the
     equivalence IS the certification."""
     return _cdc_changelog_demo(spark, sf_dir, mode="mor")
@@ -8232,7 +8232,7 @@ def changelog_sql_view(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Follow-head changelog view (round 9; VERDICT r8 next #7 —
+# Follow-head changelog view (round 9;
 # snapstore.py::register_changes(follow_head=True)): the live-CDC-feed
 # shape, Delta CDF's readChangeFeed + startingVersion. The view is
 # registered ONCE after the anchor snapshot; two later commits (an
@@ -8767,7 +8767,7 @@ def sql_ctas_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame:
 # what got removed. The r10 form re-ran the full shingle/LSH funnel to
 # get its clusters — the SAME cost center `near_dup_doc_clusters` and
 # `corpus_curation_pipeline` already certify, paid a third time (~4 s of
-# bench for zero new verification; VERDICT r10 "what's wrong" #2). The
+# bench for zero new verification). The
 # r11 form builds PLANTED chain clusters instead (doc_id % 97 groups,
 # consecutive-member edges), which still forces real transitive closure
 # through near_dup_clusters (a ~20-hop chain per group — min-label must
@@ -9532,7 +9532,7 @@ def sketch_accuracy_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_type", "user_id", "value"
     )
     agg = _sketch_audit_agg(events)
-    # Pin the 6-row aggregate before BOTH consumers (r14, ADVICE r13 #3):
+    # Pin the 6-row aggregate before BOTH consumers (r14):
     # percentile_approx's sketch merge is completion-order sensitive, so
     # re-executing this lineage for the broadcast rank side could audit a
     # p50_approx that differs from the one the final projection reports.

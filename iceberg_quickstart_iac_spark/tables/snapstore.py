@@ -468,6 +468,24 @@ def _list_data_files(base: Path) -> list[Path]:
     return sorted(list(base.rglob("*.parquet")) + list(base.rglob("*.orc")))
 
 
+def _write_atomic(path: Path, text: str) -> None:
+    """Write ``text`` to ``path`` through a temp file and ``os.replace``: a
+    concurrent reader sees the old file or the new one, never a torn one."""
+    tmp = path.parent / f".tmp-{uuid.uuid4().hex}"  # never matches the log glob
+    tmp.write_text(text)
+    os.replace(tmp, path)
+
+
+def _epoch_of(entry: dict) -> dict:
+    """The write epoch a log entry carries (see :meth:`SnapTable._write_epoch`)."""
+    return {k: entry[k] for k in ("column_ids", "column_types", "partition_spec", "write_format")}
+
+
+#: the on-disk layout this engine reads and writes (``table.json``
+#: ``format_version``); :meth:`SnapTable.load` upgrades an older table once
+_FORMAT_VERSION = 1
+
+
 class SnapTable:
     """One snapshot-log table rooted at ``root`` (…/namespace/name)."""
 
@@ -493,6 +511,7 @@ class SnapTable:
         for i, c in enumerate(columns):
             c.setdefault("id", i + 1)
         meta = {
+            "format_version": _FORMAT_VERSION,
             "name": (template or {}).get("name", table.root.name),
             "namespace": (template or {}).get("namespace", "default"),
             "columns": columns,
@@ -503,6 +522,7 @@ class SnapTable:
             # merge-on-read equality deletes are keyed on
             "identifier_fields": (template or {}).get("identifier_fields", []) or [],
             "properties": {**((template or {}).get("properties") or {}), **(properties or {})},
+            "expired_sequences": [],  # see expire_snapshots, verify_integrity
         }
         # partition/sort columns must exist in the declared schema —
         # Iceberg rejects an unknown source column at DDL time; accepting
@@ -543,6 +563,8 @@ class SnapTable:
 
     @classmethod
     def load(cls, root: str | Path) -> SnapTable:
+        """Open the table at ``root``; one from before ``format_version``
+        (read as 0) is upgraded first (:meth:`_upgrade`), a newer one raises."""
         table = cls(root)
         if not (table.root / "table.json").exists():
             raise TableNotFoundError(
@@ -550,7 +572,159 @@ class SnapTable:
                 "SnapTable.create(root, template) (the reference's "
                 "equivalent: run `terraform apply`)."
             )
+        meta = table.meta
+        version = meta.get("format_version", 0)
+        if version > _FORMAT_VERSION:
+            raise ValueError(
+                f"Table at '{root}' has format_version {version}; this engine "
+                f"reads format_version {_FORMAT_VERSION} — open it with a newer one"
+            )
+        if version < _FORMAT_VERSION:
+            table._upgrade(meta)
         return table
+
+    def _upgrade(self, meta: dict) -> None:
+        """Write every format-1 record (ARCHITECTURE.md, "On-disk format")
+        a table from before ``format_version`` is missing, once: the only
+        reader of older layouts. Spark-free, from metadata and file
+        footers, through :func:`_write_atomic` with ``table.json`` last, so
+        an interrupted or concurrent upgrade reruns to the same bytes. A
+        record that cannot be derived without a guess raises."""
+
+        def fail(d: str, record: str, why: str):
+            raise ValueError(
+                f"Cannot upgrade table {meta.get('namespace')}.{meta.get('name')} "
+                f"at '{self.root}' to format_version {_FORMAT_VERSION}: "
+                f"{record} of dir {d} {why}"
+            )
+
+        def footer_schema(files: list[Path]):
+            """The Spark schema parquet ``files`` were written with: the one
+            Spark records in the footer, else the Arrow schema; None when
+            there is no file or they disagree."""
+            import pyarrow.parquet as pq
+            from pyspark.sql import types as T
+            from pyspark.sql.pandas.types import from_arrow_schema
+
+            found = {}
+            for f in files:
+                arrow = pq.read_schema(str(f))
+                spark = (arrow.metadata or {}).get(b"org.apache.spark.sql.parquet.row.metadata")
+                schema = (
+                    T.StructType.fromJson(json.loads(spark)) if spark else from_arrow_schema(arrow)
+                )
+                found[tuple((c.name, c.dataType.simpleString()) for c in schema.fields)] = schema
+            return found.popitem()[1] if len(found) == 1 else None
+
+        ref_paths = sorted(self.root.glob(f"{self._BRANCHES}/*/branch.json"))
+        refs = {p: json.loads(p.read_text()) for p in ref_paths}
+        by_name = {c["name"]: c["id"] for c in meta["columns"] if c.get("id") is not None}
+        next_id = max([meta.get("next_field_id") or 1, *(i + 1 for i in by_name.values()),
+                       *(r.get("next_field_id") or 1 for r in refs.values())])
+        branch_cols = [c for r in refs.values() for c in r["base_columns"] + r.get("columns", [])]
+        for c in meta["columns"] + branch_cols:
+            if c.get("id") is None:  # pre-id columns are known by name
+                c["id"] = by_name.setdefault(c["name"], next_id)
+                next_id = max(next_id, c["id"] + 1)
+        for m in [meta, *(r for r in refs.values() if "columns" in r)]:
+            m["next_field_id"] = next_id
+        spec = meta.get("partition_spec") or []
+        start = self._write_epoch(meta)
+
+        def complete(e: dict, new: list[str], prev: dict, cols: list[dict]) -> dict:
+            """Fill ``e``'s missing write-epoch fields from the footers of
+            the ``new`` dirs it introduced, else from ``prev``."""
+            files = [f for d in new for f in _list_data_files(self.data_dir / d)]
+            if e.get("partition_spec") is None:
+                e["partition_spec"] = spec  # what reads assumed for none
+            if e.get("write_format") is None:
+                e["write_format"] = files[0].suffix[1:] if files else prev["write_format"]
+            ids, types = e.get("column_ids") or {}, e.get("column_types") or {}
+            if "column_ids" in e and None not in ids.values() and set(ids) <= set(types):
+                return _epoch_of(e)
+            if not files:
+                e["column_ids"], e["column_types"] = prev["column_ids"], prev["column_types"]
+                return _epoch_of(e)
+            schema = footer_schema(files)
+            if schema is None:
+                fail(new[0], "column_types", "holds files of different schemas")
+            by_id = {c["id"]: c for c in cols}
+            e["column_ids"], e["column_types"] = {}, {}
+            for f in schema.fields:
+                col = by_id.get(ids.get(f.name) or by_name.get(f.name))
+                if col is None:
+                    continue  # no declared column reads it
+                found = f.dataType.simpleString()
+                # the declared type, or one it was safely widened from
+                names = [col["type"], *sorted(a for a, b in self._SAFE_PROMOTIONS if b == col["type"])]
+                typ = [n for n in names if _declared_spark_type(n).simpleString() == found]
+                if not typ:
+                    fail(new[0], "column_types", f"holds {f.name!r} as {found}, "
+                         f"which declared type {col['type']!r} cannot read")
+                e["column_ids"][f.name], e["column_types"][f.name] = col["id"], typ[0]
+            return _epoch_of(e)
+
+        def walk(entries: list[dict], cols: list[dict], log_dir: Path, own_from: int = 0):
+            """Complete one log view (oldest first) in place, rewriting the
+            changed entries from ``own_from`` on in ``log_dir``."""
+            first_seq, persisted, prev = {}, {}, start
+            for i, e in enumerate(entries):
+                before = json.dumps(e, sort_keys=True)
+                prev = complete(e, [d for d in e["data_dirs"] if d not in first_seq], prev, cols)
+                for d in self._entry_dirs(e):
+                    first_seq.setdefault(d, e["sequence"])
+                persisted = e.get("dir_sequences") or persisted
+                e["dir_sequences"] = {
+                    **persisted,
+                    **{d: min(s, persisted.get(d, s)) for d, s in first_seq.items()},
+                }
+                if i >= own_from and json.dumps(e, sort_keys=True) != before:
+                    _write_atomic(log_dir / f"{e['sequence']:012d}.json", json.dumps(e))
+
+        main = self._read_log(self.log_dir)
+        walk(main, meta["columns"], self.log_dir)
+        logs = list(main)
+        for path, ref in refs.items():
+            if json.dumps(ref, indent=2) != path.read_text():
+                _write_atomic(path, json.dumps(ref, indent=2))
+            own = self._read_log(path.parent / "_log")
+            view = [dict(e) for e in main if e["sequence"] <= ref["fork_sequence"]]
+            walk(view + own, ref.get("columns", meta["columns"]), path.parent / "_log", len(view))
+            logs += own
+        for dd in sorted({d for e in logs for d in e.get("delete_dirs") or []}):
+            base = self.data_dir / dd
+            if not base.is_dir():
+                continue  # verify_integrity reports the missing dir
+            if not (base / self._KEY_SCHEMA).exists():
+                schema = footer_schema(_list_data_files(base))
+                if schema is None:
+                    fail(dd, self._KEY_SCHEMA, "holds no single parquet footer schema")
+                _write_atomic(base / self._KEY_SCHEMA, schema.json())  # as written
+            path = base / "_key_ids.json"
+            fields = json.loads((base / self._KEY_SCHEMA).read_text())["fields"]
+            key_ids = dict.fromkeys(f["name"] for f in fields)
+            if path.exists():
+                key_ids = json.loads(path.read_text())
+            filled = {c: by_name.get(c) if i is None else i for c, i in key_ids.items()}
+            if None in filled.values():
+                fail(dd, "_key_ids.json", "names a key column no declared column has")
+            if filled != key_ids:
+                _write_atomic(path, json.dumps(filled))
+        seqs = {e["sequence"] for e in main}
+        if len(seqs) != max(seqs, default=-1) + 1:
+            # expired: a dir expiry did not record is dated by its first
+            # surviving reference (the upgraded log), one recorded without
+            # an epoch by its own footers
+            meta["dir_epochs"] = {
+                d: complete(dict(ep or {}), [d], start, meta["columns"])
+                for d, ep in self._dir_epochs().items()
+            }
+        meta.setdefault(
+            "expired_sequences", [s for s in range(max(seqs, default=0)) if s not in seqs]
+        )
+        meta["format_version"] = _FORMAT_VERSION
+        if "format_version" not in self.meta:  # else a concurrent upgrade won
+            self._write_meta(meta)
 
     @property
     def meta(self) -> dict:
@@ -579,46 +753,9 @@ class SnapTable:
         return self._read_log(self.log_dir)
 
     def _write_meta(self, meta: dict) -> None:
-        # temp + atomic rename: concurrent readers (commit retries, verify,
-        # reads in other processes) must never observe a torn table.json
-        tmp = self.root / f".tmp-meta-{uuid.uuid4().hex}"
-        tmp.write_text(json.dumps(meta, indent=2))
-        os.replace(tmp, self.root / "table.json")
-
-    def _seed_expired_sequences(self) -> None:
-        """Upgrade shim: tables whose snapshots were expired BEFORE the
-        tombstone feature existed have legitimate log gaps with no
-        ``expired_sequences`` record — without this they'd flip from
-        healthy to corrupt under :meth:`verify_integrity` on upgrade. The
-        first commit or expire under this version stamps the key, seeding
-        every pre-existing main-log gap as a tombstone (they were
-        unattributable anyway); from then on a NEW unexplained gap is a
-        real lost entry and fails fsck. Writes the MAIN table.json
-        directly: tombstones only ever explain main-log gaps, and a
-        branch's copy-on-evolve ``_write_meta`` would drop the key.
-
-        Runs on every :meth:`_commit`, so it must be race-safe: N writer
-        processes all seed on their first commit against a pre-upgrade
-        table while readers re-read ``table.json`` (commit retries,
-        verify, reads). The rewrite goes through a temp file +
-        ``os.replace`` (atomic on POSIX) so a concurrent reader never
-        sees a torn file, and a per-handle flag skips the read entirely
-        once this handle has observed the key."""
-        if getattr(self, "_expired_seqs_seeded", False):
-            return
-        main_path = self.root / "table.json"
-        meta = json.loads(main_path.read_text())
-        if "expired_sequences" in meta:
-            self._expired_seqs_seeded = True
-            return
-        seqs = {e["sequence"] for e in self._read_log(self.root / "_log")}
-        meta["expired_sequences"] = (
-            [s for s in range(max(seqs)) if s not in seqs] if seqs else []
-        )
-        tmp = self.root / f".tmp-meta-{uuid.uuid4().hex}"
-        tmp.write_text(json.dumps(meta, indent=2))
-        os.replace(tmp, main_path)
-        self._expired_seqs_seeded = True
+        # concurrent readers (commit retries, verify, reads in other
+        # processes) must never observe a torn table.json
+        _write_atomic(self.root / "table.json", json.dumps(meta, indent=2))
 
     def current_snapshot(self) -> dict | None:
         entries = self._entries()
@@ -646,7 +783,6 @@ class SnapTable:
         """
         if retries is None:
             retries = int(self.meta.get("properties", {}).get("commit_num_retries", 3))
-        self._seed_expired_sequences()
         # no .json suffix: temp files must never match the log glob
         tmp = self.log_dir / f".tmp-{uuid.uuid4().hex}"
         for attempt in range(retries + 1):
@@ -660,28 +796,10 @@ class SnapTable:
                 "parent_id": parent,
                 "committed_at_ms": _now_ms(),
             }
-            # Persist each directory's INTRO sequence in the entry itself
-            # (Iceberg's per-file data_sequence_number, at dir granularity).
-            # Inferring it from surviving log entries breaks after
-            # expire_snapshots drops the entry that introduced a data dir:
-            # the dir's inferred intro collapses to a later sequence, the
-            # MoR strictly-lower applicability test fails, and equality-
-            # deleted rows resurrect. The map is cumulative (copied from
-            # the parent entry) and pruned to dirs still referenced by any
-            # surviving entry so it cannot grow past the live dir set.
-            parent_map = entries[-1].get("dir_sequences") if entries else {}
-            if parent_map is None:
-                # legacy log: the parent entry predates the persisted map.
-                # Seed every already-referenced dir from the log-scan intro
-                # sequences — starting from {} would setdefault long-existing
-                # data AND delete dirs to THIS commit's sequence, destroying
-                # the strictly-greater ordering MoR delete applicability
-                # relies on (deleted rows would resurrect).
-                parent_map = {}
-                for e in entries:
-                    for d in self._entry_dirs(e):
-                        parent_map.setdefault(d, e["sequence"])
-            dir_seqs = dict(parent_map)
+            # each dir's INTRO sequence (Iceberg's data_sequence_number, at
+            # dir granularity; see _dir_intro_seqs): the parent's map plus
+            # this commit's dirs, pruned to dirs a surviving entry references
+            dir_seqs = dict(entries[-1]["dir_sequences"] if entries else {})
             # dir_sequence_overrides: an operation may pin a NEW dir to an
             # inherited sequence — delete-file compaction merges N delete
             # files into one that must keep the group's applicability
@@ -757,11 +875,11 @@ class SnapTable:
         from pyspark.sql import functions as F
 
         # Normalize declared columns to their DECLARED Spark types before
-        # writing: the read path groups dirs by declared-type epoch and
-        # scans each group as ONE mergeSchema load, which requires every
-        # file in the epoch to be physically merge-compatible (a caller
-        # passing tz-µs timestamps next to an earlier ntz-ns write would
-        # otherwise poison the group with CANNOT_MERGE_SCHEMAS).
+        # writing: the read path groups dirs by write epoch and scans each
+        # group with the epoch's declared types as the file schema, which
+        # requires every file in the epoch to carry exactly those types (a
+        # caller passing tz-µs timestamps next to an earlier ntz-ns write
+        # would otherwise poison the group).
         declared_types = {
             c["name"]: c["type"] for c in self.meta.get("columns", [])
         }
@@ -1102,7 +1220,7 @@ class SnapTable:
         keys.write.parquet(str(out))
         col_ids = self._column_ids()
         (out / "_key_ids.json").write_text(
-            json.dumps({c: col_ids.get(c) for c in keys.columns})
+            json.dumps({c: col_ids[c] for c in keys.columns})
         )
         (out / self._KEY_SCHEMA).write_text(keys.schema.json())
         if debt is not None:
@@ -1178,11 +1296,7 @@ class SnapTable:
                 ) + [dir_name],
                 "row_count": (prev["row_count"] if prev else 0) - deleted,
                 "file_count": prev["file_count"] if prev else 0,
-                **{
-                    k: prev[k]
-                    for k in ("column_ids", "column_types", "partition_spec", "write_format")
-                    if prev and k in prev
-                },
+                **(_epoch_of(prev) if prev else self._write_epoch()),
             }
 
         entry = self._commit(build)
@@ -1645,11 +1759,7 @@ class SnapTable:
                 # restore the WRITE EPOCH of the target so epoch-grouped
                 # reads treat the re-referenced dirs under their original
                 # schema/spec, not the current one
-                **{
-                    k: target[k]
-                    for k in ("column_ids", "column_types", "partition_spec", "write_format")
-                    if k in target
-                },
+                **_epoch_of(target),
             }
         )
         log_audit_event(
@@ -1759,14 +1869,7 @@ class SnapTable:
                 # the delta dirs were written under the TARGET's epoch:
                 # carry its schema/spec stamps so epoch-grouped reads
                 # project them correctly (same contract as merge rebase)
-                **{
-                    k: target[k]
-                    for k in (
-                        "column_ids", "column_types", "partition_spec",
-                        "write_format",
-                    )
-                    if k in target
-                },
+                **_epoch_of(target),
             }
 
         entry = self._commit(build)
@@ -1812,30 +1915,16 @@ class SnapTable:
         INTRODUCED it — the commit-sequence ordering Iceberg scopes
         delete-file applicability by.
 
-        Source of truth is the persisted ``dir_sequences`` map stamped on
-        every commit entry: a log scan alone mis-dates a dir once
+        It is the head entry's ``dir_sequences`` map: every commit stamps
+        the full map (its parent's plus the dirs it introduces, pruned to
+        dirs some entry still references), so it covers every snapshot a
+        read can select. A log scan would mis-date a dir once
         ``expire_snapshots`` drops its introducing entry (the dir then
         first appears at a surviving carry-forward entry, which can sit
         AFTER a MoR delete commit and un-apply it — resurrecting deleted
-        rows). The scan remains only as the fallback for entries committed
-        before the map existed."""
-        seen: dict[str, int] = {}
+        rows)."""
         entries = self._entries()
-        for e in entries:
-            for d in self._entry_dirs(e):
-                seen.setdefault(d, e["sequence"])
-        for e in reversed(entries):
-            persisted = e.get("dir_sequences")
-            if persisted is not None:
-                # A dir's intro is by definition <= the first surviving
-                # entry that references it, so min(scan, persisted) is
-                # always the true intro: persisted wins after expire
-                # collapses the scan date forward, while the scan heals a
-                # map that was ever (mis)seeded with a too-late sequence.
-                for d, s in persisted.items():
-                    seen[d] = min(seen.get(d, s), s)
-                break
-        return seen
+        return dict(entries[-1]["dir_sequences"]) if entries else {}
 
     @staticmethod
     def _entry_dirs(e: dict) -> list[str]:
@@ -1860,12 +1949,12 @@ class SnapTable:
             return eligible[-1]
         return entries[-1]
 
-    def _column_ids(self) -> dict[str, int | None]:
-        """Declared column name → field id (None on legacy tables created
-        before field ids existed)."""
-        return {c["name"]: c.get("id") for c in self.meta.get("columns", [])}
+    def _column_ids(self, meta: dict | None = None) -> dict[str, int]:
+        """Declared column name → field id (every declared column has
+        one)."""
+        return {c["name"]: c["id"] for c in (meta or self.meta).get("columns", [])}
 
-    def _write_epoch(self) -> dict:
+    def _write_epoch(self, meta: dict | None = None) -> dict:
         """The write-time metadata stamped on every commit entry, so reads
         can reconstruct how each data directory was PHYSICALLY written long
         after the declared schema/layout has evolved:
@@ -1874,16 +1963,15 @@ class SnapTable:
           drop+re-add safety);
         - ``column_types``: name → declared type at write time — a widened
           column (int→long) leaves pre-widen files as int; grouping reads
-          by type epoch keeps Spark's parquet schema merge from seeing
-          int and long for one column in one scan (CANNOT_MERGE_SCHEMAS)
+          by type epoch gives each scan the one schema its files carry
           and lets each epoch cast up to the declared type independently;
         - ``partition_spec``: the layout this directory was written under —
           partition-spec evolution means new writes use the new layout
           while old dirs keep (and are pruned by) their own.
         """
-        meta = self.meta
+        meta = meta or self.meta
         return {
-            "column_ids": {c["name"]: c.get("id") for c in meta.get("columns", [])},
+            "column_ids": self._column_ids(meta),
             "column_types": {c["name"]: c["type"] for c in meta.get("columns", [])},
             "partition_spec": meta.get("partition_spec") or [],
             # the file format the dir was physically written in — reads
@@ -1891,10 +1979,9 @@ class SnapTable:
             "write_format": meta.get("properties", {}).get("write_format", "parquet"),
         }
 
-    def _dir_epochs(self) -> dict[str, dict | None]:
-        """Data dir → the write-epoch metadata it was WRITTEN under
-        (the first log entry referencing the dir; None for legacy entries
-        without ``column_ids``).
+    def _dir_epochs(self) -> dict[str, dict]:
+        """Data dir → the write epoch (:func:`_epoch_of`) it was WRITTEN
+        under: that of the first log entry referencing the dir.
 
         Once :meth:`expire_snapshots` drops that entry, the first surviving
         reference can be a later epoch — after a rename it names the column
@@ -1903,40 +1990,23 @@ class SnapTable:
         and that record wins. A log without sequence gaps never expired an
         entry and skips the ``table.json`` read."""
         entries = self._entries()
-        seen: dict[str, dict | None] = {}
+        seen: dict[str, dict] = {}
         if entries and len(entries) != entries[-1]["sequence"] + 1:
-            seen.update(self.meta.get("dir_epochs") or {})
+            seen.update(self.meta.get("dir_epochs", {}))
         for e in entries:
-            ids = e.get("column_ids")
-            epoch = None
-            if ids is not None:
-                epoch = {
-                    "column_ids": ids,
-                    "column_types": e.get("column_types"),
-                    "partition_spec": e.get("partition_spec"),
-                    "write_format": e.get("write_format"),
-                }
             # dir_epoch_overrides: a partition-scoped compact keeps the
             # unmatched leaves of a split dir as subpath references; those
             # files were written under the SOURCE dir's epoch, not the
             # compact commit's — the override pins it (processed before
             # data_dirs so it wins for the entry that introduces them)
             for d, ep in (e.get("dir_epoch_overrides") or {}).items():
-                if d not in seen:
-                    seen[d] = ep
+                seen.setdefault(d, ep)
+            epoch = _epoch_of(e)
             for d in e["data_dirs"]:
-                if d not in seen:
-                    seen[d] = epoch
-        # defensive fallback: a subpath with no surviving override inherits
-        # its containing dir's epoch when that is still known
-        for d, ep in list(seen.items()):
-            if ep is None and "/" in d:
-                top = d.split("/", 1)[0]
-                if seen.get(top) is not None:
-                    seen[d] = seen[top]
+                seen.setdefault(d, epoch)
         return seen
 
-    def _project_declared(self, df: DataFrame, written_ids: dict | None) -> DataFrame:
+    def _project_declared(self, df: DataFrame, written_ids: dict) -> DataFrame:
         """Project a frame of raw data files to the declared table schema:
         declared names, declared order, cast to declared types.
 
@@ -1958,33 +2028,16 @@ class SnapTable:
         out = []
         for c in declared:
             typ = _declared_spark_type(c["type"])
-            name = c["name"]
-            source = None
-            if written_ids is None:
-                source = name if name in df.columns else None
-            elif c.get("id") is not None:
-                # id-first resolution: the declared field reads from WHATEVER
-                # file column carries its id — this is what makes RENAME safe
-                # (old files keep serving the renamed column) while a
-                # dropped-then-re-added name (fresh id) correctly reads NULL
-                for fname, fid in written_ids.items():
-                    if fid == c["id"] and fname in df.columns:
-                        source = fname
-                        break
-                if (
-                    source is None
-                    and name in df.columns
-                    and written_ids.get(name, "∅") is None
-                ):
-                    source = name  # legacy files written before field ids
-            else:
-                # legacy declared column (no id): name-based
-                if name in df.columns and name in written_ids:
-                    source = name
-            if source is not None:
-                out.append(F.col(source).cast(typ).alias(name))
-            else:
-                out.append(F.lit(None).cast(typ).alias(name))
+            # the declared field reads from WHATEVER file column carries its
+            # id — this is what makes RENAME safe (old files keep serving
+            # the renamed column) while a dropped-then-re-added name (fresh
+            # id) correctly reads NULL
+            source = next(
+                (f for f, fid in written_ids.items() if fid == c["id"] and f in df.columns),
+                None,
+            )
+            value = F.col(source) if source is not None else F.lit(None)
+            out.append(value.cast(typ).alias(c["name"]))
         # the MoR read plan's sequence tag rides through the projection
         return df.select(*out, *[c for c in (_DATA_SEQ,) if c in df.columns])
 
@@ -2158,10 +2211,10 @@ class SnapTable:
         re-apply as row filters for exact semantics.
 
         After a schema evolution (:meth:`evolve_add_column`), directories
-        written before the evolution lack the new columns; ``mergeSchema``
-        unions the file schemas and the unconditional declared-schema
-        projection fills the gaps with typed NULLs — Iceberg's read-time
-        schema resolution.
+        written before the evolution lack the new columns; each write
+        epoch is scanned with its own recorded schema and the
+        unconditional declared-schema projection fills the gaps with typed
+        NULLs — Iceberg's read-time schema resolution.
         """
         if tag is not None:
             if snapshot_id is not None or as_of_ms is not None:
@@ -2544,8 +2597,7 @@ class SnapTable:
         and written schema are scanned together, so the common no-rename
         case stays a single parquet scan regardless of delete-file count.
         The scan is given the schema recorded in ``_key_schema.json`` and
-        runs no inference job; delete dirs written before that sidecar
-        existed are inferred.
+        runs no inference job.
 
         ``seqs`` (dir → intro sequence) tags every key with its own delete
         dir's sequence in a ``__sg_del_seq`` column, for the sequence-scoped
@@ -2554,38 +2606,30 @@ class SnapTable:
         from pyspark.sql import functions as F
         from pyspark.sql import types as T
 
-        id_to_name = {
-            c["id"]: c["name"]
-            for c in self.meta.get("columns", [])
-            if c.get("id") is not None
-        }
-        groups: dict[tuple, tuple[dict | None, str | None, list[str]]] = {}
+        id_to_name = {fid: name for name, fid in self._column_ids().items()}
+        groups: dict[tuple, tuple[dict, str, list[str]]] = {}
         for dd in ddirs:
-            schema_file = self.data_dir / dd / self._KEY_SCHEMA
-            schema = schema_file.read_text() if schema_file.exists() else None
-            sidecar = self.data_dir / dd / "_key_ids.json"
-            renames: dict[str, str] | None = None
-            if sidecar.exists():
-                renames = {}
-                for written, fid in json.loads(sidecar.read_text()).items():
-                    current = id_to_name.get(fid) if fid is not None else written
-                    if current is None:
-                        raise ValueError(
-                            f"MoR delete file {dd} on {self.fq_name} is keyed "
-                            f"on field id {fid} ({written!r} at write time), "
-                            "which is no longer a declared column"
-                        )
-                    renames[written] = current
-            key = tuple(sorted(renames.items())) if renames is not None else ("__legacy__",)
+            schema = (self.data_dir / dd / self._KEY_SCHEMA).read_text()
+            renames: dict[str, str] = {}
+            for written, fid in json.loads(
+                (self.data_dir / dd / "_key_ids.json").read_text()
+            ).items():
+                if fid not in id_to_name:
+                    raise ValueError(
+                        f"MoR delete file {dd} on {self.fq_name} is keyed "
+                        f"on field id {fid} ({written!r} at write time), "
+                        "which is no longer a declared column"
+                    )
+                renames[written] = id_to_name[fid]
+            key = tuple(sorted(renames.items()))
             groups.setdefault((key, schema), (renames, schema, []))[2].append(dd)
         parts = []
         for renames, schema, dds in groups.values():
-            reader = spark.read
-            if schema is not None:
-                # the schema the keys were written with: no inference job
-                reader = reader.schema(T.StructType.fromJson(json.loads(schema)))
-            df = reader.parquet(*[str(self.data_dir / dd) for dd in dds])
-            cols = [F.col(c).alias((renames or {}).get(c, c)) for c in df.columns]
+            # the schema the keys were written with: no inference job
+            df = spark.read.schema(T.StructType.fromJson(json.loads(schema))).parquet(
+                *[str(self.data_dir / dd) for dd in dds]
+            )
+            cols = [F.col(c).alias(renames.get(c, c)) for c in df.columns]
             if seqs is not None:
                 cols.append(
                     _seq_by_path({dd: seqs.get(dd, -1) for dd in dds}).alias(_DEL_SEQ)
@@ -2596,37 +2640,21 @@ class SnapTable:
             out = out.unionByName(p)
         return out
 
-    def _written_name(self, name: str, written_ids: dict | None) -> str | None:
-        """The file-column name serving declared column ``name`` in a dir
-        epoch written under ``written_ids`` — field-id resolution, the same
-        rules as :meth:`_project_declared` (rename-safe; a dropped-then-
-        re-added name resolves to None against pre-drop files). None means
-        the column has no source in that epoch (reads as NULL)."""
-        declared = next(
-            (c for c in self.meta.get("columns", []) if c["name"] == name), None
-        )
-        if written_ids is None or declared is None:
-            return name
-        if declared.get("id") is not None:
-            for fname, fid in written_ids.items():
-                if fid == declared["id"]:
-                    return fname
-            if written_ids.get(name, "∅") is None:
-                return name  # legacy files written before field ids
-            return None
-        return name if name in written_ids else None
-
     def _translate_filters(
-        self, filters: list[tuple], written_ids: dict | None
+        self, filters: list[tuple], written_ids: dict
     ) -> list[tuple] | None:
         """Rewrite filter column names into one dir epoch's WRITTEN names
-        (a filter on a renamed column must compare against the old file
-        column in pre-rename dirs). None = some filtered column does not
-        exist in this epoch — it reads as typed NULL, no comparison can
-        hold, the whole epoch is prunable."""
+        by field id, the rules of :meth:`_project_declared` (a filter on a
+        renamed column must compare against the old file column in
+        pre-rename dirs; a name the table does not declare passes through).
+        None = some filtered column does not exist in this epoch — it reads
+        as typed NULL, no comparison can hold, the whole epoch is prunable."""
+        ids = self._column_ids()
         out = []
         for col, op, value in filters:
-            wname = self._written_name(col, written_ids)
+            wname = col if col not in ids else next(
+                (f for f, i in written_ids.items() if i == ids[col]), None
+            )
             if wname is None:
                 return None
             out.append((wname, op, value))
@@ -2668,18 +2696,15 @@ class SnapTable:
         for d in dirs if seqs is not None else ():
             top_seqs.setdefault(top(d), set()).add(seqs.get(d, -1))
         dir_epochs = self._dir_epochs()
-        groups: dict[tuple, tuple[dict | None, list[str]]] = {}
+        groups: dict[tuple, tuple[dict, list[str]]] = {}
         for d in dirs:
-            epoch = dir_epochs.get(d)
-            key = (
-                json.dumps(epoch, sort_keys=True) if epoch is not None else "__legacy__"
-            )
+            epoch = dir_epochs[d]
             apart = d if len(top_seqs.get(top(d), ())) > 1 else None
-            groups.setdefault((key, apart), (epoch, []))[1].append(d)
+            key = (json.dumps(epoch, sort_keys=True), apart)
+            groups.setdefault(key, (epoch, []))[1].append(d)
         parts: list[DataFrame] = []
         for epoch, gdirs in groups.values():
-            ids = epoch["column_ids"] if epoch is not None else None
-            spec = epoch.get("partition_spec") if epoch is not None else None
+            ids = epoch["column_ids"]
             gfilters = filters or []
             if filters:
                 gfilters = self._translate_filters(filters, ids)
@@ -2691,7 +2716,7 @@ class SnapTable:
                 paths = [p for d in gdirs for p in leaves[d]]
             else:
                 paths = self._leaf_dirs(
-                    [self.data_dir / d for d in gdirs], gfilters, spec
+                    [self.data_dir / d for d in gdirs], gfilters, epoch["partition_spec"]
                 )
             # a zero-row write on a PARTITIONED table lands a dir with no
             # data files at all (partitionBy emits nothing, not even a
@@ -2702,7 +2727,7 @@ class SnapTable:
             paths = [p for p in paths if _list_data_files(Path(p))]
             if not paths:
                 continue
-            fmt = (epoch or {}).get("write_format") or "parquet"
+            fmt = epoch["write_format"]
             scan: list[str] = list(paths)
             if gfilters and fmt == "orc":
                 # ORC gets NO file-level min/max skipping: pyarrow.orc
@@ -2741,7 +2766,7 @@ class SnapTable:
                     continue
                 if len(kept) < len(files):
                     scan = kept
-            df = self._scan_epoch(spark, epoch, fmt, scan)
+            df = self._scan_epoch(spark, epoch, scan)
             if gfilters and any(col not in df.columns for col, _, _ in gfilters):
                 continue
             if seqs is not None:
@@ -2761,35 +2786,27 @@ class SnapTable:
         return out
 
     @staticmethod
-    def _scan_epoch(
-        spark: SparkSession, epoch: dict | None, fmt: str, paths: list[str]
-    ) -> DataFrame:
+    def _scan_epoch(spark: SparkSession, epoch: dict, paths: list[str]) -> DataFrame:
         """One file scan of ``paths``, all written under ``epoch``.
 
         The write path casts every file to exactly the epoch's declared
         types (:meth:`_write_data`), so the epoch's ``column_ids`` and
         ``column_types`` ARE the files' schema: passing it explicitly skips
         the schema-inference job Spark otherwise runs on every load (it
-        reads a footer in a job even with ``mergeSchema=false``). Legacy
-        dirs written without an epoch carry no such guarantee and keep
-        ``mergeSchema`` inference, the only way to read them; so do epochs
-        stamped before ``column_types`` existed (one-footer inference)."""
+        reads a footer in a job even with ``mergeSchema=false``). A table
+        that declares no columns records no schema, and its files are
+        inferred from one footer."""
         from pyspark.sql import types as T
 
-        reader = spark.read.format(fmt)
-        ids = (epoch or {}).get("column_ids") or {}
-        types = (epoch or {}).get("column_types") or {}
-        if ids and set(ids) <= set(types):
-            reader = reader.schema(
-                T.StructType(
-                    [T.StructField(n, _declared_spark_type(types[n])) for n in ids]
-                )
+        reader = spark.read.format(epoch["write_format"])
+        types = epoch["column_types"]
+        if not epoch["column_ids"]:
+            return reader.option("mergeSchema", "false").load(paths)
+        return reader.schema(
+            T.StructType(
+                [T.StructField(n, _declared_spark_type(types[n])) for n in epoch["column_ids"]]
             )
-        else:
-            reader = reader.option(
-                "mergeSchema", "true" if epoch is None else "false"
-            )
-        return reader.load(paths)
+        ).load(paths)
 
     def snapshots(self, spark: SparkSession) -> DataFrame:
         """The snapshot-metadata table (M1), like Iceberg's ``t.snapshots``."""
@@ -3016,7 +3033,7 @@ class SnapTable:
         cols = meta.get("columns", [])
         if any(c["name"] == name for c in cols):
             raise ValueError(f"Column {name!r} already exists on {self.fq_name}")
-        fid = meta.get("next_field_id", max((c.get("id") or 0) for c in cols) + 1 if cols else 1)
+        fid = meta["next_field_id"]
         cols.append({"name": name, "type": col_type, "doc": doc, "id": fid})
         meta["columns"] = cols
         meta["next_field_id"] = fid + 1
@@ -3487,9 +3504,8 @@ class SnapTable:
         kept_subpaths: dict[str, list[str]] = {}  # dir -> kept rel subpaths
         for d in current["data_dirs"]:
             root = self.data_dir / d
-            epoch = dir_epochs.get(d)
-            spec = epoch.get("partition_spec") if epoch is not None else None
-            all_leaves = self._leaf_dirs([root], [], spec)
+            epoch = dir_epochs[d]
+            all_leaves = self._leaf_dirs([root], [], epoch["partition_spec"])
             if partition_leaves is not None:
                 matched = [
                     leaf
@@ -3500,13 +3516,11 @@ class SnapTable:
                     )
                 ]
             else:
-                gf = partition_filter
-                if epoch is not None:
-                    gf = self._translate_filters(
-                        partition_filter, epoch["column_ids"]
-                    )
+                gf = self._translate_filters(partition_filter, epoch["column_ids"])
                 matched = (
-                    self._leaf_dirs([root], gf, spec) if gf is not None else []
+                    self._leaf_dirs([root], gf, epoch["partition_spec"])
+                    if gf is not None
+                    else []
                 )
             if not matched:
                 kept_suffixes[d] = [self._leaf_suffix(d, l) for l in all_leaves]
@@ -3606,10 +3620,7 @@ class SnapTable:
             for sp in sps
         }
         epoch_overrides = {
-            sp: dir_epochs.get(d)
-            for d, sps in kept_subpaths.items()
-            for sp in sps
-            if dir_epochs.get(d) is not None
+            sp: dir_epochs[d] for d, sps in kept_subpaths.items() for sp in sps
         }
 
         def build(entries: list[dict]) -> dict:
@@ -3757,11 +3768,7 @@ class SnapTable:
                 "row_count": cur["row_count"],
                 "file_count": cur["file_count"],
                 "dir_sequence_overrides": overrides,
-                **{
-                    k: cur[k]
-                    for k in ("column_ids", "column_types", "partition_spec", "write_format")
-                    if k in cur
-                },
+                **_epoch_of(cur),
             }
 
         entry = self._commit(build)
@@ -3868,15 +3875,7 @@ class SnapTable:
             report["log_errors"].append("no snapshots")
             report["ok"] = False
             return report
-        meta = self.meta
-        expired_seqs = set(meta.get("expired_sequences") or [])
-        # A table whose meta lacks the expired_sequences key entirely
-        # predates the tombstone feature (or was restored from such a
-        # version and never written since — the first commit/expire seeds
-        # it): its gaps were made by the old expire_snapshots, which left
-        # no record, so they grandfather as retention gaps rather than
-        # flipping a healthy table to corrupt on upgrade.
-        tombstones_seeded = "expired_sequences" in meta
+        expired_seqs = set(self.meta["expired_sequences"])
         for prev, e in zip(entries, entries[1:]):
             if e["sequence"] == prev["sequence"] + 1:
                 # adjacent survivors: the parent chain must hold exactly
@@ -3895,7 +3894,7 @@ class SnapTable:
                     for s in range(prev["sequence"] + 1, e["sequence"])
                     if s not in expired_seqs
                 ]
-                if unexplained and tombstones_seeded:
+                if unexplained:
                     report["log_errors"].append(
                         f"sequences {unexplained} missing from the log with "
                         "no expire_snapshots tombstone (lost entries?)"
@@ -3976,7 +3975,6 @@ class SnapTable:
                 )
             older_than_ms = _now_ms() - max_age_ms
 
-        self._seed_expired_sequences()
         entries = self._entries()
         if not entries:
             return 0
@@ -4011,7 +4009,7 @@ class SnapTable:
             # verify() can tell legitimate retention gaps from log entries
             # lost to a partial restore (which have no tombstone).
             meta = self.meta
-            tomb = set(meta.get("expired_sequences") or [])
+            tomb = set(meta["expired_sequences"])
             tomb.update(e["sequence"] for e in drop)
             meta["expired_sequences"] = sorted(tomb)
             # the entries that dated each dir's write epoch may be among
@@ -4296,9 +4294,7 @@ class SnapTable:
                         ),
                         "row_count": (current["row_count"] if current else 0) + _dr,
                         "file_count": (current["file_count"] if current else 0) + _df,
-                        "column_ids": _e.get("column_ids"),
-                        "column_types": _e.get("column_types"),
-                        "partition_spec": _e.get("partition_spec"),
+                        **_epoch_of(_e),
                     }
 
                 last = self._commit(build)

@@ -1,8 +1,8 @@
-"""Independent planted-truth test for the IVF coarse-quantizer fit
-(VERDICT r3 next-round #10): the generated IVF/SemDeDup oracles refit
-centroids with the same numpy path the engine uses, so a fit bug would be
-mirrored on both sides — this test checks the fit against ground truth the
-fit code never sees (the planted generating means)."""
+"""Independent planted-truth test for the IVF coarse-quantizer fit: the
+generated IVF/SemDeDup oracles refit centroids with the same numpy path
+the engine uses, so a fit bug would be mirrored on both sides — this test
+checks the fit against ground truth the fit code never sees (the planted
+generating means)."""
 
 from __future__ import annotations
 

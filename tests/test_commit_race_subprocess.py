@@ -1,4 +1,4 @@
-"""Multi-PROCESS optimistic-commit race (round 8; VERDICT r7 next #5).
+"""Multi-PROCESS optimistic-commit race (round 8).
 
 The in-process race test (tests/test_tables.py::
 test_concurrent_commits_both_land) exercises the seq-claim under the GIL;
@@ -41,10 +41,10 @@ WORKER = textwrap.dedent(
     from iceberg_quickstart_iac_spark.tables import SnapTable
 
     root, wid, n_commits = sys.argv[1], int(sys.argv[2]), int(sys.argv[3])
-    t = SnapTable.load(root)
     go = Path(root) / "_go"
     while not go.exists():
         time.sleep(0.001)
+    t = SnapTable.load(root)
     for i in range(n_commits):
         d = uuid.uuid4().hex
         out = t.data_dir / d
@@ -125,13 +125,13 @@ def test_subprocess_writers_race_cleanly(tmp_path):
 
 
 def test_subprocess_writers_race_through_seeding(tmp_path):
-    """Pre-upgrade table (no ``expired_sequences`` key): every worker's
-    FIRST commit runs ``_seed_expired_sequences`` — a table.json rewrite —
-    while its rivals concurrently READ table.json (meta for retry counts,
-    write epochs, commit re-bases). The rewrite goes through temp-file +
-    ``os.replace``, so no reader can ever observe a torn file; with a
-    plain ``write_text`` this melee aborts otherwise-valid commits with
-    JSONDecodeError."""
+    """Pre-upgrade table (no ``expired_sequences`` or ``format_version``
+    key): every worker's ``load`` after the go barrier runs the upgrade —
+    a table.json rewrite — while its rivals concurrently commit and READ
+    table.json (meta for retry counts, write epochs, commit re-bases). The
+    rewrite goes through temp-file + ``os.replace``, so no reader can ever
+    observe a torn file; with a plain ``write_text`` this melee aborts
+    otherwise-valid commits with JSONDecodeError."""
     import json
 
     n_workers, n_commits = 4, 6
@@ -148,6 +148,7 @@ def test_subprocess_writers_race_through_seeding(tmp_path):
     meta_path = root / "table.json"
     meta = json.loads(meta_path.read_text())
     meta.pop("expired_sequences", None)
+    meta.pop("format_version")
     meta_path.write_text(json.dumps(meta, indent=2))
 
     script = tmp_path / "worker.py"
@@ -170,7 +171,7 @@ def test_subprocess_writers_race_through_seeding(tmp_path):
     entries = t._entries()
     assert len(entries) == total
     assert [e["sequence"] for e in entries] == list(range(total))
-    # the shim stamped the key (an intact, parseable table.json) and a
+    # the upgrade stamped the key (an intact, parseable table.json) and a
     # fresh table has no pre-existing gaps to grandfather
     meta = json.loads(meta_path.read_text())
     assert meta["expired_sequences"] == []

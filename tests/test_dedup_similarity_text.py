@@ -105,7 +105,7 @@ def test_simhash_near_dups_close(planted_docs):
 
 def test_lsh_bucket_cap_bounds_pairs(spark):
     """A planted 5k-duplicate cluster (the scenario dedup exists for) must
-    complete with O(m) star pairs per bucket, not m^2/2 — VERDICT r2 #3."""
+    complete with O(m) star pairs per bucket, not m^2/2."""
     m = 5000
     rows = [(i, [7] * 64) for i in range(m)] + [
         (10_000 + i, [i * 1000 + j for j in range(64)]) for i in range(5)
@@ -393,7 +393,7 @@ def test_redact_pii_planted(spark):
     assert "555" not in out[2].red  # phone digits scrubbed
     assert out[3].red == "no pii here at all"
     # single-char separator bound: the match cannot span the sentence
-    # boundary — year survives, phone goes (ADVICE r2)
+    # boundary — year survives, phone goes
     assert out[4].red == "founded in 2024. [PII] is the line"
 
 
@@ -1150,7 +1150,7 @@ def test_bmp_negative_width_is_malformed_not_garbage():
 
 
 def test_signature_store_admit_append_admit(spark, tmp_path):
-    """The production near-dup admission loop (VERDICT r8 next #2):
+    """The production near-dup admission loop:
     wave-1 admits against an empty store and appends the admitted docs'
     signatures; wave-2 must catch a copy of a wave-1 admission FROM THE
     UPDATED STORE; a crash-replayed wave (same txn) must skip the append

@@ -1,6 +1,6 @@
 """Environment-profile tests (docs/multi-environment.md parity): the same
 pipeline code runs against dev/staging/prod with env-keyed warehouse roots,
-per-tier access defaults, and alerting posture — VERDICT r3 next-round #9."""
+per-tier access defaults, and alerting posture."""
 
 from __future__ import annotations
 

@@ -171,7 +171,7 @@ def test_maintain_all_sweeps_catalog(spark, lake, tmp_path):
 def test_catalog_merge_converges_when_main_moves_between_validate_and_merge(
     spark, lake, monkeypatch
 ):
-    """The exact window VERDICT r5/r6 flagged: validation passes, then a
+    """The exact race window: validation passes, then a
     main writer commits BEFORE the merge loop reaches the table and the
     first merge attempt loses its commit race. The retry must re-base and
     converge with both the racer's row and the branch rows on main."""

@@ -1,6 +1,5 @@
 """Plan-regression tests: the physical plans we designed for, asserted so a
-refactor can't silently trade them away (PERFORMANCE.md is the prose
-version). All assertions are on explain output — no query executes except
+refactor can't silently trade them away. All assertions are on explain output — no query executes except
 the few whose construction is eager (IVF fit, table lifecycle)."""
 
 from __future__ import annotations
@@ -159,7 +158,7 @@ def test_ntile_has_no_unpartitioned_window(spark, sf_dir_small):
 
 def test_generated_oracle_degradation_records_reason(monkeypatch):
     """When the gate parquet is unreachable, generated oracles degrade to
-    rows-only AND the reason is recorded (VERDICT r3: a silent swallow made
+    rows-only AND the reason is recorded (a silent swallow made
     a future rows-only regression undiagnosable). With real data present,
     the oracle resolves and the skip record clears."""
     from iceberg_quickstart_iac_spark.plans.queries import _ORACLE_SKIPPED, oracle_sql
@@ -242,7 +241,7 @@ def test_shard_position_window_is_per_shard_not_global(spark, sf_dir_small):
 
 def test_cosine_topk_fold_shuffles_only_k_per_partition(spark, sf_dir_small):
     """The fold cosine_topk's rank<=k window must plan a PARTIAL
-    WindowGroupLimit BEFORE the exchange (VERDICT r8 next #3): Spark's
+    WindowGroupLimit BEFORE the exchange: Spark's
     rank-limit rewrite prunes each input partition to k rows per query
     map-side, so only k*P rows per query shuffle and the final task sorts
     k*P rows, never |corpus|. An explicit two-level window was measured
@@ -353,7 +352,7 @@ def test_sketch_audit_has_no_unbounded_percentile_buffer(spark, sf_dir_small):
     `percentile` aggregate buffered every group value in executor memory —
     the aggregate lineage must contain ONLY the bounded-state
     percentile_approx sketch. Since r14 that lineage is checkpointed
-    (ADVICE r13 #3: one sketch value feeds both the rank re-scan and the
+    (one sketch value feeds both the rank re-scan and the
     output row), which truncates the FINAL plan — so the sketch is pinned
     on the shared agg helper the query materializes, and the final plan is
     pinned on the checkpoint scan + broadcast rank re-scan shape."""

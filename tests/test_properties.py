@@ -625,7 +625,7 @@ def test_media_parsers_never_crash_on_prefixed_garbage(payload):
 @settings(max_examples=300, deadline=None)
 def test_jpeg_marker_scan_never_crashes_on_garbage(payload):
     """The JPEG SOF scan runs on UNTRUSTED crawl bytes inside executor
-    batches (round 9, VERDICT r8 next #6): raw garbage AND valid-magic
+    batches (round 9): raw garbage AND valid-magic
     prefixed garbage must both yield (w, h) or None — never an exception,
     never a non-terminating scan."""
     from iceberg_quickstart_iac_spark.operators.multimodal import (
@@ -736,7 +736,7 @@ def test_alias_rewrite_never_touches_string_literals(payload):
     assert out == f"s.col = {lit} AND s.other > 1"
 
 
-# -- whole-statement SQL front-door fuzz (round 10; VERDICT r9 next #6) ------
+# -- whole-statement SQL front-door fuzz (round 10) ------------------------
 
 _SQL_PAYLOAD = st.text(
     alphabet=st.characters(min_codepoint=32, max_codepoint=126),
@@ -976,7 +976,7 @@ def test_create_view_comment_literal_never_confuses_as_split(
 def test_cherrypick_never_duplicates_under_random_interleavings(
     spark, tmp_path
 ):
-    """Model check for cherry-pick safety (ADVICE r10 #2): random
+    """Model check for cherry-pick safety: random
     interleavings of append / compact / rollback_to / cherrypick must
     NEVER duplicate a key — a cherry-pick of an append whose delta a
     later rewrite absorbed has to resolve through the lineage walk to a
@@ -1095,7 +1095,7 @@ def test_cherrypick_expired_parent_under_random_interleavings(spark, tmp_path):
 
 
 def test_cherrypick_partial_overlap_footer_exact_delta(spark, tmp_path):
-    """Pin the partial-coverage arithmetic specifically (VERDICT r11 #4):
+    """Pin the partial-coverage arithmetic specifically:
     cherry-pick an append whose delta spans TWO top-level dir segments,
     one reached through rewrite lineage (compact absorbed it), one not.
     snapstore.py computes delta_rows/delta_files from the UNREACHED dirs'

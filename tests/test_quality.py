@@ -112,7 +112,7 @@ def test_quality_on_real_events(spark, sf_dir):
 
 
 def test_freshness_on_empty_table_fails(spark):
-    """ADVICE r1: MAX(ts) NULL (zero rows) must FAIL freshness, not read as age 0."""
+    """MAX(ts) NULL (zero rows) must FAIL freshness, not read as age 0."""
     from iceberg_quickstart_iac_spark.operators.quality import Check, run_checks
 
     empty = spark.createDataFrame([], "event_id LONG, event_timestamp TIMESTAMP")
@@ -125,7 +125,7 @@ def test_freshness_on_empty_table_fails(spark):
     assert "no rows" in report.results[0].detail
 
 
-# --- SodaCL YAML parser (VERDICT r2 missing #2) -----------------------------
+# --- SodaCL YAML parser ----------------------------------------------------
 
 REF_SODA = "/root/reference/dagster/lakehouse/quality/soda_checks"
 

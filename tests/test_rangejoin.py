@@ -269,7 +269,7 @@ def test_followup_rollup_property_vs_naive(spark, events):
 
 
 def test_followup_rollup_pre_epoch_and_far_future(spark):
-    """hb*H + r == t must hold for EVERY timestamp (ADVICE r13 #1): a
+    """hb*H + r == t must hold for EVERY timestamp: a
     truncating cast is not floor for pre-1970 (negative µs) values, and
     double division can misround past 2^53 µs (~year 2255). The r14
     pmod + exact long `div` decomposition is verified against the naive
@@ -294,7 +294,7 @@ def test_followup_rollup_pre_epoch_and_far_future(spark):
 def test_followup_rollup_rejects_null_types(spark):
     """NULL type values raise loudly: the naive-join semantics this
     helper reproduces WOULD pair null-typed rows, so silently dropping
-    them (or crashing in the driver sort) would diverge (ADVICE r13 #2)."""
+    them (or crashing in the driver sort) would diverge."""
     import pytest
 
     from iceberg_quickstart_iac_spark.plans.queries import followup_pair_rollup
@@ -312,8 +312,8 @@ def test_followup_rollup_rejects_null_types(spark):
 
 def test_followup_rollup_rejects_high_type_cardinality(spark):
     """The distinct-type collect is limit-bounded and guarded: beyond
-    max_types the helper raises instead of building an O(rows·T) plan
-    (VERDICT r13 What's wrong #2); at the bound it still runs."""
+    max_types the helper raises instead of building an O(rows·T) plan;
+    at the bound it still runs."""
     import pytest
 
     from iceberg_quickstart_iac_spark.plans.queries import followup_pair_rollup

@@ -187,7 +187,7 @@ def test_asof_matches_pandas_merge_asof(spark, sf_dir_small):
 
 
 def test_multi_row_batch_per_key_applies_only_latest(spark, dim):
-    """ADVICE r1 (medium): a batch with several rows for one natural key must
+    """A batch with several rows for one natural key must
     not fan out the open-row join — only the latest row per key applies, and
     exactly one is_current version survives."""
     updates = spark.createDataFrame(

@@ -217,7 +217,7 @@ def test_create_rejects_partition_or_sort_on_unknown_column(spark, lake):
 
 
 def test_ctas_partitioned_with_properties_and_nullability(spark, lake):
-    """Partitioned CTAS (VERDICT r10 #3): PARTITIONED BY + TBLPROPERTIES
+    """Partitioned CTAS: PARTITIONED BY + TBLPROPERTIES
     parse on the CTAS path, the write lands hidden-partition dirs, and
     inferred schemas carry source nullability (COUNT(*) → required)."""
     spark.createDataFrame(

@@ -106,7 +106,7 @@ def test_append_accumulates(spark, table, events_df):
     assert table.read(spark).count() == 6
     assert table.current_snapshot()["row_count"] == 6
     # file_count is cumulative like row_count (Iceberg snapshot summaries
-    # track total files) — ADVICE r1
+    # track total files)
     assert e2["file_count"] == e1["file_count"] * 2 > 0
 
 
@@ -473,7 +473,7 @@ def test_compact_preserves_partition_layout(spark, part_table):
     )
 
 
-# --- field-id schema evolution (ADVICE r2: no resurrection) -----------------
+# --- field-id schema evolution (no resurrection) ---------------------------
 
 
 def test_drop_then_readd_reads_null_not_old_values(spark, table, events_df):
@@ -500,7 +500,7 @@ def test_incremental_read_applies_declared_projection(spark, table, events_df):
     table.evolve_add_column("source", "string")
     inc = table.read_incremental(spark, s0["snapshot_id"])
     # appends predating the evolution carry the new column as typed NULLs —
-    # incremental consumers see the same schema as full reads (ADVICE r2)
+    # incremental consumers see the same schema as full reads
     assert inc.columns == ["event_id", "event_type", "source"]
     assert [r.source for r in inc.collect()] == [None, None, None]
     table.evolve_drop_column("source")
@@ -730,7 +730,7 @@ def test_rename_on_branch_is_isolated(spark, table, events_df):
 
 
 def test_widen_then_append_then_read(spark, tmp_path):
-    """ADVICE r3 (high): a post-widen append must not break reads — int
+    """A post-widen append must not break reads — int
     files and long files for one column cannot share a mergeSchema scan
     (CANNOT_MERGE_SCHEMAS); type epochs scan them separately and cast up."""
     t = SnapTable.create(
@@ -762,7 +762,7 @@ def test_widen_then_append_then_read(spark, tmp_path):
 
 
 def test_rename_updates_partition_spec_and_sort_order(spark, tmp_path):
-    """ADVICE r3 (medium): renaming a column referenced by partition_spec /
+    """Renaming a column referenced by partition_spec /
     sort_order must keep partitioning + sorting on subsequent writes."""
     t = SnapTable.create(
         tmp_path / "rn",
@@ -880,7 +880,7 @@ def test_partition_spec_evolution(spark, tmp_path):
 
 
 def test_merge_race_mid_loop_falls_back_to_replay(spark, table, events_df, monkeypatch):
-    """ADVICE r3 (medium): a commit race in the middle of a fast-forward
+    """A commit race in the middle of a fast-forward
     merge must rebase the unmerged remainder (appends commute), not raise
     after a partial publish; the schema override lands only after every
     branch commit has."""
@@ -929,7 +929,7 @@ def test_merge_race_mid_loop_falls_back_to_replay(spark, table, events_df, monke
 
 
 def test_inflight_tmp_commit_files_ignored(spark, table, events_df):
-    """ADVICE r3 (low): an in-flight temp commit file must never be read as
+    """An in-flight temp commit file must never be read as
     a committed snapshot (pathlib glob matches dot-prefixed names)."""
     table.append(events_df)
     (table.log_dir / ".tmp-deadbeef.json").write_text("{not json at all")
@@ -1828,26 +1828,31 @@ def test_files_table_reports_column_bounds(spark, tmp_path):
     assert row["record_count"] == 10
 
 
-# -- round-7 ADVICE regression fixes -----------------------------------------
+# -- round-7 regression fixes -----------------------------------------------
 
 
 def test_legacy_log_commit_does_not_resurrect_mor_deletes(spark, mor_table):
     """A table whose log predates the persisted dir_sequences map must not
-    have its first new-code commit re-date every existing dir to the new
-    sequence — that would make the equality-delete files non-applicable
-    (no longer strictly greater than the data dirs they cover) and
-    resurrect deleted rows."""
+    have its first commit after ``load`` re-date every existing dir to the
+    new sequence — that would make the equality-delete files
+    non-applicable (no longer strictly greater than the data dirs they
+    cover) and resurrect deleted rows. ``load`` upgrades the log first."""
     import json as _json
 
     t = mor_table
     t.delete_where(spark, "g = 'a'", mode="mor")
     assert sorted(r.k for r in t.read(spark).collect()) == [1, 3, 5, 7, 9]
-    # simulate a legacy log: strip the persisted map from every entry
+    # simulate a legacy log: strip the persisted map from every entry and
+    # the format version from table.json
     for p in sorted(t.log_dir.glob("[0-9]*.json")):
         e = _json.loads(p.read_text())
         e.pop("dir_sequences", None)
         p.write_text(_json.dumps(e))
-    # first new-code commit on the legacy log
+    meta = _json.loads((t.root / "table.json").read_text())
+    meta.pop("format_version")
+    (t.root / "table.json").write_text(_json.dumps(meta, indent=2))
+    t = SnapTable.load(t.root)
+    # first commit after the upgrade
     t.append(spark.createDataFrame([(100, "c", 100.0)], "k LONG, g STRING, v DOUBLE"))
     got = sorted(r.k for r in t.read(spark).collect())
     assert got == [1, 3, 5, 7, 9, 100], got
@@ -1880,9 +1885,8 @@ def test_verify_integrity_fails_on_untombstoned_log_gap(spark, tmp_path):
 def test_verify_integrity_grandfathers_pre_tombstone_gaps(spark, tmp_path):
     """A table whose snapshots were expired by a version PREDATING the
     expired_sequences tombstone has legitimate gaps with no record — it
-    must not flip from healthy to corrupt on upgrade. The first commit
-    after upgrade seeds the tombstones, after which NEW unexplained gaps
-    fail fsck again."""
+    must not flip from healthy to corrupt on upgrade. ``load`` seeds the
+    tombstones, after which NEW unexplained gaps fail fsck again."""
     import json as _json
 
     t = SnapTable.create(
@@ -1897,15 +1901,15 @@ def test_verify_integrity_grandfathers_pre_tombstone_gaps(spark, tmp_path):
     (t.log_dir / "000000000001.json").unlink()
     meta = _json.loads((t.root / "table.json").read_text())
     meta.pop("expired_sequences", None)
+    meta.pop("format_version")
     (t.root / "table.json").write_text(_json.dumps(meta, indent=2))
     # the upgrade topology: the pre-tombstone state is LOADED by the new
-    # version, not mutated under a live handle (the seeding shim caches a
-    # per-handle seen-flag so every commit doesn't re-read table.json)
+    # version, which upgrades it once, seeding the tombstones
     t = SnapTable.load(tmp_path / "legacy")
     report = t.verify_integrity()
     assert report["ok"], report
     assert report["retention_gaps"] == [(0, 2)]
-    # the first commit under the new version seeds the tombstones…
+    # …and they hold after the first commit under the new version…
     t.append(spark.createDataFrame([(99,)], "k LONG"))
     assert _json.loads((t.root / "table.json").read_text())[
         "expired_sequences"
