@@ -10,8 +10,17 @@ both:
 
 - ``max_delete_files`` — the per-read driver overhead knob (each delete
   file adds a directory to the delete-key scan and two sidecar reads);
-- ``max_delete_ratio`` — deferred keys / live rows, the knob that bounds
-  the anti-join's build side relative to the table.
+- ``max_delete_ratio`` — deferred keys / data-file rows (the snapshot's
+  ``row_count``, Iceberg's ``total-records``, which still counts the
+  images the deferred deletes erase), the knob that bounds the
+  anti-join's build side relative to the table.
+
+Both dials read metadata only. Where the deferred deletes' debt lies —
+which partition leaves hold the rows they erase — is not recorded at
+write time (that would scan the table on every merge-on-read write); it
+is computed by one query over the table's key and partition columns when
+the ratio dial plans a partition-scoped compaction, which rewrites data
+anyway.
 
 This is the same dial Iceberg exposes as
 ``rewrite_data_files``/``rewrite_position_delete_files`` maintenance jobs
@@ -31,8 +40,8 @@ from iceberg_quickstart_iac_spark.tables.snapstore import SnapTable, _footer_row
 
 def mor_read_amplification(table: SnapTable) -> dict:
     """Metadata-only audit of the current snapshot's deferred-delete
-    debt: delete-file count, total deferred keys, and the keys/rows
-    ratio. O(delete files) footer reads, no data scan."""
+    debt: delete-file count, total deferred keys, and the ratio of keys to
+    data-file rows. O(delete files) footer reads, no data scan."""
     snap = table.current_snapshot()
     if snap is None:
         return {"delete_files": 0, "deferred_keys": 0, "ratio": 0.0}
@@ -50,38 +59,32 @@ def mor_read_amplification(table: SnapTable) -> dict:
     }
 
 
-def mor_partition_debt(table: SnapTable) -> dict:
+def mor_partition_debt(table: SnapTable, spark: SparkSession | None = None) -> dict:
     """Attribute the current snapshot's deferred-delete debt to partition
-    leaves from the delete files' write-time sidecars — metadata only, no
-    scan. Returns::
+    leaves: one query joining the data files' keys and partition columns
+    to the delete keys (:meth:`~..tables.snapstore.SnapTable._delete_debt`,
+    shared with the scoped compaction it plans). Returns::
 
-        {"attributed": bool,          # every delete file carries a sidecar
-         "leaves": {suffix: keys},    # debt per partition-leaf suffix
+        {"attributed": True,          # the debt is computed, never unknown
+         "leaves": {suffix: rows},    # erased data-file rows per leaf
          "debt_row_share": float}     # physical-row share of debt leaves
 
     ``debt_row_share`` is the fraction of the table's PHYSICAL rows living
     in partitions that carry any debt (parquet footer counts, O(files)) —
     the dial that decides whether a partition-scoped rewrite is cheaper
-    than a full compact. ``attributed=False`` (a delete file predates the
-    sidecar) forces the caller onto the full-compact path: unknown
-    attribution must never scope a rewrite."""
-    import json
+    than a full compact. ``spark`` defaults to the active session."""
     from pathlib import Path
 
     snap = table.current_snapshot()
     if snap is None:
         return {"attributed": True, "leaves": {}, "debt_row_share": 0.0}
     leaves: dict[str, int] = {}
-    attributed = True
-    for dd in snap.get("delete_dirs") or []:
-        sidecar = table.data_dir / dd / table._DEBT_SIDECAR
-        if not sidecar.exists():
-            attributed = False
-            continue
-        for leaf, n in json.loads(sidecar.read_text()).items():
+    debt = table._delete_debt(spark or SparkSession.getActiveSession(), snap)
+    for per_leaf in debt.values():
+        for leaf, n in per_leaf.items():
             leaves[leaf] = leaves.get(leaf, 0) + n
     if not leaves:
-        return {"attributed": attributed, "leaves": {}, "debt_row_share": 0.0}
+        return {"attributed": True, "leaves": {}, "debt_row_share": 0.0}
     dir_epochs = table._dir_epochs()
     total_rows = 0
     debt_rows = 0
@@ -96,7 +99,7 @@ def mor_partition_debt(table: SnapTable) -> dict:
             if any(table._suffixes_intersect(suffix, s) for s in debt_suffixes):
                 debt_rows += n
     share = debt_rows / total_rows if total_rows else 1.0
-    return {"attributed": attributed, "leaves": leaves, "debt_row_share": share}
+    return {"attributed": True, "leaves": leaves, "debt_row_share": share}
 
 
 def maintain_mor(
@@ -109,14 +112,14 @@ def maintain_mor(
     """Two-tier MoR maintenance, the Iceberg/Hudi compactor split:
 
     - deferred-KEY ratio over ``max_delete_ratio`` → materialize the
-      deletes. When the sidecar attribution shows the debt concentrated
-      in partitions holding at most ``partition_scope_max_share`` of the
-      table's physical rows, that is a PARTITION-SCOPED
-      :meth:`~..tables.snapstore.SnapTable.compact` — O(hot partitions),
-      the Iceberg ``rewrite_data_files(filter)`` maintenance shape —
-      falling back to the full O(table) compact only if the scoped
-      rewrite could not restore a healthy ratio (keys matching no
-      attributed partition) or attribution is unavailable;
+      deletes. When :func:`mor_partition_debt` shows the debt
+      concentrated in partitions holding at most
+      ``partition_scope_max_share`` of the table's physical rows, that is
+      a PARTITION-SCOPED :meth:`~..tables.snapstore.SnapTable.compact` —
+      O(hot partitions), the Iceberg ``rewrite_data_files(filter)``
+      maintenance shape — falling back to the full O(table) compact only
+      if the scoped rewrite could not restore a healthy ratio (keys
+      matching no data row);
     - delete-FILE count over ``max_delete_files`` with the ratio still
       healthy → :meth:`~..tables.snapstore.SnapTable.rewrite_delete_files`
       (merge the files; O(delete keys)); falls through to a full compact
@@ -148,12 +151,8 @@ def maintain_mor(
     if audit["delete_files"] == 0:
         return {**audit, "compacted": False, "action": "none"}
     if audit["ratio"] >= max_delete_ratio:
-        prof = mor_partition_debt(table)
-        if (
-            prof["attributed"]
-            and prof["leaves"]
-            and prof["debt_row_share"] <= partition_scope_max_share
-        ):
+        prof = mor_partition_debt(table, spark)
+        if prof["leaves"] and prof["debt_row_share"] <= partition_scope_max_share:
             entry = table.compact(
                 spark, partition_leaves=sorted(prof["leaves"])
             )

@@ -229,7 +229,7 @@ def _declared_spark_type(type_str: str):
     (e.g. IVM rollup sums), so it maps to DecimalType here — while the
     TEMPLATE loader keeps the reference's decimal→string demotion
     (pinned parity, ``templates/loader.py``). Everything else delegates
-    to the loader mapping."""
+    to the loader mapping, which raises on an unknown type name."""
     from pyspark.sql import types as T
 
     from iceberg_quickstart_iac_spark.templates.loader import iceberg_type_to_spark
@@ -238,8 +238,8 @@ def _declared_spark_type(type_str: str):
     if m:
         return T.DecimalType(int(m.group(1)), int(m.group(2)))
     # Iceberg list type (`list<int>`; `array<int>` accepted as an alias):
-    # needed for real columns like embeddings and PQ code arrays — the
-    # loader's unknown→string demotion would destroy them on projection
+    # needed for real columns like embeddings and PQ code arrays, which
+    # the loader does not map
     m = re.match(r"^(?:list|array)<(.+)>$", type_str.strip().lower())
     if m:
         return T.ArrayType(_declared_spark_type(m.group(1)))
@@ -483,7 +483,7 @@ def _epoch_of(entry: dict) -> dict:
 
 #: the on-disk layout this engine reads and writes (``table.json``
 #: ``format_version``); :meth:`SnapTable.load` upgrades an older table once
-_FORMAT_VERSION = 1
+_FORMAT_VERSION = 2
 
 
 class SnapTable:
@@ -493,6 +493,9 @@ class SnapTable:
         self.root = Path(root)
         self.log_dir = self.root / "_log"
         self.data_dir = self.root / "data"
+        #: (snapshot id, :meth:`_delete_debt` of it): maintenance plans a
+        #: scoped compaction and runs it from one debt query
+        self._debt_memo: tuple[str, dict] | None = None
 
     # -- lifecycle ---------------------------------------------------------
 
@@ -563,8 +566,9 @@ class SnapTable:
 
     @classmethod
     def load(cls, root: str | Path) -> SnapTable:
-        """Open the table at ``root``; one from before ``format_version``
-        (read as 0) is upgraded first (:meth:`_upgrade`), a newer one raises."""
+        """Open the table at ``root``; one of an older ``format_version``
+        (none read as 0) is upgraded first (:meth:`_upgrade`), a newer one
+        raises."""
         table = cls(root)
         if not (table.root / "table.json").exists():
             raise TableNotFoundError(
@@ -584,9 +588,12 @@ class SnapTable:
         return table
 
     def _upgrade(self, meta: dict) -> None:
-        """Write every format-1 record (ARCHITECTURE.md, "On-disk format")
-        a table from before ``format_version`` is missing, once: the only
-        reader of older layouts. Spark-free, from metadata and file
+        """Write every format-2 record (ARCHITECTURE.md, "On-disk format")
+        an older table is missing or holds in an older shape, once: the
+        only reader of older layouts. Format 1 counted a merge-on-read
+        snapshot's live rows in ``row_count``; format 2 counts its data
+        files' rows, so every entry's ``row_count`` is recomputed from the
+        footers of its data dirs. Spark-free, from metadata and file
         footers, through :func:`_write_atomic` with ``table.json`` last, so
         an interrupted or concurrent upgrade reruns to the same bytes. A
         record that cannot be derived without a guess raises."""
@@ -630,6 +637,15 @@ class SnapTable:
             m["next_field_id"] = next_id
         spec = meta.get("partition_spec") or []
         start = self._write_epoch(meta)
+        dir_rows: dict[str, int | None] = {}
+
+        def footer_rows(d: str) -> int | None:
+            """Rows in the files of data dir ``d``; None when it is missing
+            (verify_integrity reports it)."""
+            if d not in dir_rows:
+                base = self.data_dir / d
+                dir_rows[d] = _footer_row_count(_list_data_files(base)) if base.is_dir() else None
+            return dir_rows[d]
 
         def complete(e: dict, new: list[str], prev: dict, cols: list[dict]) -> dict:
             """Fill ``e``'s missing write-epoch fields from the footers of
@@ -671,6 +687,9 @@ class SnapTable:
             for i, e in enumerate(entries):
                 before = json.dumps(e, sort_keys=True)
                 prev = complete(e, [d for d in e["data_dirs"] if d not in first_seq], prev, cols)
+                rows = [footer_rows(d) for d in e["data_dirs"]]
+                if None not in rows:
+                    e["row_count"] = sum(rows)
                 for d in self._entry_dirs(e):
                     first_seq.setdefault(d, e["sequence"])
                 persisted = e.get("dir_sequences") or persisted
@@ -723,7 +742,7 @@ class SnapTable:
             "expired_sequences", [s for s in range(max(seqs, default=0)) if s not in seqs]
         )
         meta["format_version"] = _FORMAT_VERSION
-        if "format_version" not in self.meta:  # else a concurrent upgrade won
+        if self.meta.get("format_version", 0) < _FORMAT_VERSION:  # else a concurrent upgrade won
             self._write_meta(meta)
 
     @property
@@ -1115,8 +1134,9 @@ class SnapTable:
         every pre-delete snapshot + drop the orphaned directories — after
         it returns, no snapshot can serve the deleted rows.
 
-        Returns the commit entry with ``deleted_count`` in its audit
-        record. Copy-on-write is the 100 TB-honest default here because
+        Returns the commit entry; its audit record carries
+        ``deleted_count`` (``delete_keys`` for ``mode='mor'``).
+        Copy-on-write is the 100 TB-honest default here because
         snapstore tracks directory-granularity manifests; an engine with
         file-level manifests would rewrite only affected files
         (merge-on-read position deletes are the low-latency alternative).
@@ -1131,8 +1151,8 @@ class SnapTable:
         comparison credits to Hudi for CDC workloads): instead of
         rewriting the table, the matched rows' identifier-field tuples
         land in a tiny delete file and every read anti-joins it until
-        :meth:`compact` materializes. Write cost is O(deleted keys), not
-        O(table). Requires ``identifier_fields`` in the table template;
+        :meth:`compact` materializes. One scan of the table evaluates the
+        condition; the write is O(deleted keys), not O(table). Requires ``identifier_fields`` in the table template;
         deletes at KEY granularity (every row sharing a matched row's key
         dies — identifier fields are expected unique, Iceberg's
         identifier-field contract). ``hard=True`` is CoW-only.
@@ -1172,6 +1192,8 @@ class SnapTable:
         for e in self._entries():
             if e["snapshot_id"] == entry["parent_id"]:
                 prev_rows = e["row_count"]
+        # data-file rows the rewrite dropped: after MoR deletes these
+        # include the erased images it materialized
         deleted = (prev_rows - rows) if prev_rows is not None else None
         log_audit_event(
             "table_write",
@@ -1191,30 +1213,22 @@ class SnapTable:
             self.remove_orphan_files(grace_ms=0)
         return entry
 
-    #: sidecar mapping partition-leaf suffix → deferred-key row count,
-    #: written next to each equality-delete file so maintenance can
-    #: attribute MoR debt to partitions from metadata alone (no scan)
-    _DEBT_SIDECAR = "_partition_debt.json"
-
     #: sidecar holding a delete dir's written Spark schema (JSON), so
     #: reads pass it instead of inferring it in a Spark job
     _KEY_SCHEMA = "_key_schema.json"
 
-    def _write_delete_keys(
-        self, keys: DataFrame, debt: dict[str, int] | None
-    ) -> str:
+    def _write_delete_keys(self, keys: DataFrame) -> tuple[str, int]:
         """Write ``keys`` (identifier-column tuples) as one new
-        equality-delete dir and return its name. Sidecars next to the data
-        (underscore prefixes keep Spark's parquet scan from reading them):
+        equality-delete dir; return its name and its key count (from the
+        written footers). Sidecars next to the data (underscore prefixes
+        keep Spark's parquet scan from reading them):
 
         - ``_key_ids.json``: the key columns' name→field-id mapping AT
           WRITE TIME. Delete files are keyed by field id like data files:
           a later evolve_rename_column on an identifier field must not
           break the read-time anti-join — reads resolve these ids back to
           the then-current declared names (see :meth:`_read_delete_keys`);
-        - ``_key_schema.json``: the written schema;
-        - ``_partition_debt.json`` when ``debt`` is given (see
-          :meth:`_partition_debt`)."""
+        - ``_key_schema.json``: the written schema."""
         dir_name = f"mordel-{uuid.uuid4().hex}"
         out = self.data_dir / dir_name
         keys.write.parquet(str(out))
@@ -1223,44 +1237,13 @@ class SnapTable:
             json.dumps({c: col_ids[c] for c in keys.columns})
         )
         (out / self._KEY_SCHEMA).write_text(keys.schema.json())
-        if debt is not None:
-            (out / self._DEBT_SIDECAR).write_text(json.dumps(debt))
-        return dir_name
-
-    def _partition_debt(self, doomed: DataFrame) -> tuple[int, dict[str, int]]:
-        """Per-partition-leaf count of the rows a MoR delete defers.
-
-        Returns ``(total_rows, {leaf_suffix: count})`` where a leaf suffix
-        renders the CURRENT spec's physical levels unescaped
-        (``__p_day=2024-01-15`` / nested with ``/``; ``""`` for an
-        unpartitioned table). One small aggregate over the rows the delete
-        already had to touch — the write-time price of metadata-only
-        partition attribution at maintenance time."""
-        from pyspark.sql import functions as F
-
-        pcols = [
-            (n, p)
-            for n, p in self._partition_cols()
-            if p["column"] in doomed.columns
-        ]
-        if not pcols:
-            n = doomed.count()
-            return n, ({"": n} if n else {})
-        exprs = [
-            _partition_expr(p["column"], p["transform"]).cast("string").alias(n)
-            for n, p in pcols
-        ]
-        out = doomed.groupBy(*exprs).count().collect()
-        debt: dict[str, int] = {}
-        for r in out:
-            leaf = "/".join(
-                f"{n}={r[n] if r[n] is not None else '__HIVE_DEFAULT_PARTITION__'}"
-                for n, _ in pcols
-            )
-            debt[leaf] = debt.get(leaf, 0) + r["count"]
-        return sum(debt.values()), debt
+        return dir_name, _footer_row_count(_list_data_files(out))
 
     def _delete_where_mor(self, spark: SparkSession, condition: str) -> dict:
+        """MoR ``delete_where``: one scan of the table, for the condition,
+        writes the matched keys as an equality-delete dir; the commit
+        references it and leaves the data dirs, ``row_count`` and
+        ``file_count`` as they were."""
         ids = self.meta.get("identifier_fields")
         if not ids:
             raise ValueError(
@@ -1275,16 +1258,10 @@ class SnapTable:
                 f"delete_where(mode='mor'): identifier fields {missing} "
                 f"not table columns"
             )
-        current = self.read(spark)
         matched = (
-            current.filter(f"({condition}) <=> TRUE").select(*ids).dropDuplicates()
+            self.read(spark).filter(f"({condition}) <=> TRUE").select(*ids).dropDuplicates()
         )
-        # key-granular row count: every row carrying a matched key dies —
-        # counted per partition leaf so the debt sidecar is free
-        deleted, debt = self._partition_debt(
-            current.join(matched, list(ids), "left_semi")
-        )
-        dir_name = self._write_delete_keys(matched, debt)
+        dir_name, delete_keys = self._write_delete_keys(matched)
 
         def build(entries: list[dict]) -> dict:
             prev = entries[-1] if entries else None
@@ -1294,7 +1271,7 @@ class SnapTable:
                 "delete_dirs": (
                     list(prev.get("delete_dirs") or []) if prev else []
                 ) + [dir_name],
-                "row_count": (prev["row_count"] if prev else 0) - deleted,
+                "row_count": prev["row_count"] if prev else 0,
                 "file_count": prev["file_count"] if prev else 0,
                 **(_epoch_of(prev) if prev else self._write_epoch()),
             }
@@ -1306,7 +1283,7 @@ class SnapTable:
             details={
                 "mode": "delete_mor",
                 "condition": condition,
-                "deleted_count": deleted,
+                "delete_keys": delete_keys,
             },
         )
         return entry
@@ -1671,37 +1648,28 @@ class SnapTable:
         reference's engine comparison credits for CDC workloads
         (``docs/deep-dive.md:83``): ONE commit carrying (a) an
         equality-delete file with every changed key and (b) a data file
-        with the new images of upserted rows. The WRITE is O(changes) —
-        no full-outer join, no table rewrite. The exact row accounting is
-        not: counting the current images the delete file erases (per
-        partition leaf, for the snapshot's ``row_count`` and the
-        maintenance debt sidecar) runs the MoR read plan once over the
-        live table's key and partition columns, semi-joined to the
-        changed keys. Reads resolve by sequence scoping: the delete file
-        erases OLD images only (strictly lower commit sequence), so the
-        same commit's new images survive; :meth:`compact` folds
-        everything down.
+        with the new images of upserted rows. O(changes): it writes the
+        batch's keys and new images and never reads the table —
+        ``row_count`` grows by the new images (it counts data-file rows,
+        Iceberg's ``total-records``), and ``merge_stats.delete_keys`` is
+        the delete file's footer count. Reads resolve by sequence scoping:
+        the delete file erases OLD images only (strictly lower commit
+        sequence), so the same commit's new images survive;
+        :meth:`compact` folds everything down.
         """
-        from pyspark.sql import functions as F
-
         skipped = self._txn_already_applied(txn)
         if skipped is not None:
             return skipped
         declared = [c["name"] for c in self.meta.get("columns", [])]
-        changes = changes.persist()
-        try:
-            upserts = changes.filter(f"{op_col} <> 'D'").select(*declared)
-            touched = changes.select(*key_cols).dropDuplicates()
-            # rows the delete file will erase (current images of touched
-            # keys) — counted per partition leaf: the snapshot's row
-            # accounting and the maintenance debt sidecar from one pass
-            removed, debt = self._partition_debt(
-                self.read(spark).join(touched, key_cols, "left_semi")
-            )
-            del_dir = self._write_delete_keys(touched, debt)
-            up_dir, up_rows, up_files = self._write_data(upserts)
-        finally:
-            changes.unpersist()
+        # two small scans of the batch cost less than caching it, which
+        # AQE materializes in a job of its own; every evaluation yields
+        # the same key set, and the images come from one of them
+        del_dir, delete_keys = self._write_delete_keys(
+            changes.select(*key_cols).dropDuplicates()
+        )
+        up_dir, up_rows, up_files = self._write_data(
+            changes.filter(f"{op_col} <> 'D'").select(*declared)
+        )
 
         def build(entries: list[dict]) -> dict:
             prev = entries[-1] if entries else None
@@ -1711,11 +1679,11 @@ class SnapTable:
                 "delete_dirs": (
                     list(prev.get("delete_dirs") or []) if prev else []
                 ) + [del_dir],
-                "row_count": (prev["row_count"] if prev else 0) - removed + up_rows,
+                "row_count": (prev["row_count"] if prev else 0) + up_rows,
                 "file_count": (prev["file_count"] if prev else 0) + up_files,
                 "merge_stats": {
                     "upserted": up_rows,
-                    "erased_images": removed,
+                    "delete_keys": delete_keys,
                     "mode": "mor",
                 },
                 **self._write_epoch(),
@@ -1729,7 +1697,7 @@ class SnapTable:
             details={
                 "mode": "merge_mor",
                 "upserted": up_rows,
-                "erased_images": removed,
+                "delete_keys": delete_keys,
             },
         )
         return entry
@@ -2255,14 +2223,22 @@ class SnapTable:
         ``keys equal AND del_seq > data_seq`` — flat in the number of
         delete files. Delete files no data dir sits below are dropped
         before planning; with none left the plan is the plain scan."""
-        from pyspark.sql import functions as F
-
         intro = self._dir_intro_seqs() if ddirs else {}
         floor = min((intro.get(d, -1) for d in dirs), default=-1)
         ddirs = [dd for dd in ddirs if intro.get(dd, -1) > floor]
         if not ddirs:
             return self._read_dirs(spark, dirs, filters, leaves=leaves)
         data = self._read_dirs(spark, dirs, filters, seqs=intro, leaves=leaves)
+        keys, _, cond = self._scoped_delete_keys(spark, ddirs, intro)
+        return data.join(keys, cond, "left_anti").drop(_DATA_SEQ)
+
+    def _scoped_delete_keys(self, spark: SparkSession, ddirs: list[str], intro: dict[str, int]):
+        """The delete keys of ``ddirs`` as the build side of a
+        sequence-scoped join with data rows tagged ``__sg_data_seq``:
+        ``(keys, key column names, join condition)`` — keys equal AND the
+        key's delete sequence above the row's data sequence."""
+        from pyspark.sql import functions as F
+
         keys = self._read_delete_keys(spark, ddirs, seqs=intro)
         kcols = [c for c in keys.columns if c != _DEL_SEQ]
         keys = keys.select(
@@ -2271,7 +2247,7 @@ class SnapTable:
         cond = F.col(_DEL_SEQ) > F.col(_DATA_SEQ)
         for i, c in enumerate(kcols):
             cond = cond & (F.col(c) == F.col(f"__sg_key{i}"))
-        return data.join(keys, cond, "left_anti").drop(_DATA_SEQ)
+        return keys, kcols, cond
 
     def register(
         self,
@@ -2809,7 +2785,11 @@ class SnapTable:
         ).load(paths)
 
     def snapshots(self, spark: SparkSession) -> DataFrame:
-        """The snapshot-metadata table (M1), like Iceberg's ``t.snapshots``."""
+        """The snapshot-metadata table (M1), like Iceberg's ``t.snapshots``.
+        Built from the log alone, no data read. ``row_count`` is the rows
+        in the snapshot's data files (Iceberg's ``total-records``): with
+        outstanding merge-on-read deletes it includes the erased images,
+        and the live count is ``read(spark, snapshot_id=…).count()``."""
         entries = self._entries()
         return spark.createDataFrame(
             [
@@ -3066,9 +3046,6 @@ class SnapTable:
     #: so every already-written value remains exactly representable
     _SAFE_PROMOTIONS = {
         ("int", "long"),
-        ("int", "bigint"),
-        ("integer", "long"),
-        ("integer", "bigint"),
         ("float", "double"),
     }
 
@@ -3372,7 +3349,7 @@ class SnapTable:
         as direct subpath references pinned to the source dir's commit
         sequence and write epoch, so MoR delete applicability and
         schema-evolution projection are unchanged for them. Delete files
-        whose entire (sidecar-attributed) debt lived in rewritten
+        whose whole debt (:meth:`_delete_debt`) lies in rewritten
         partitions are retired from the new snapshot.
         """
         if partition_filter is not None or partition_leaves is not None:
@@ -3477,6 +3454,48 @@ class SnapTable:
                 return False  # same level, different value — disjoint
         return True  # one is a directory-prefix of the other
 
+    def _delete_debt(self, spark: SparkSession, snap: dict) -> dict[str, dict[str, int]]:
+        """Each delete dir of ``snap`` → {partition-leaf suffix: rows of
+        ``snap``'s data files it erases}. One query: the data files' keys
+        and partition columns joined to the delete keys under the
+        sequence-scoping rule of :meth:`_read_mor`, grouped by (delete
+        sequence, leaf). It scans the table's key and partition columns,
+        so it runs only when a partition-scoped compaction is planned
+        (maintenance, :meth:`_compact_partitions`), once per snapshot and
+        handle. A leaf suffix renders the CURRENT spec's physical levels
+        unescaped (``__p_day=2024-01-15``, nested with ``/``; ``""`` for an
+        unpartitioned table)."""
+        if self._debt_memo is not None and self._debt_memo[0] == snap["snapshot_id"]:
+            return self._debt_memo[1]
+        ddirs = list(snap.get("delete_dirs") or [])
+        debt: dict[str, dict[str, int]] = {dd: {} for dd in ddirs}
+        if ddirs and snap["data_dirs"]:
+            intro = self._dir_intro_seqs()
+            keys, kcols, cond = self._scoped_delete_keys(spark, ddirs, intro)
+            data = self._read_dirs(spark, snap["data_dirs"], None, seqs=intro)
+            pcols = [(n, p) for n, p in self._partition_cols() if p["column"] in data.columns]
+            data = data.select(
+                *kcols,
+                _DATA_SEQ,
+                *[_partition_expr(p["column"], p["transform"]).cast("string").alias(n)
+                  for n, p in pcols],
+            )
+            counts = data.join(keys, cond).groupBy(_DEL_SEQ, *[n for n, _ in pcols]).count()
+            # delete dirs sharing a sequence share its debt: over-attributing
+            # only keeps a delete file alive
+            by_seq: dict[int, list[str]] = {}
+            for dd in ddirs:
+                by_seq.setdefault(intro.get(dd, -1), []).append(dd)
+            for r in counts.collect():
+                leaf = "/".join(
+                    f"{n}={r[n] if r[n] is not None else '__HIVE_DEFAULT_PARTITION__'}"
+                    for n, _ in pcols
+                )
+                for dd in by_seq.get(r[_DEL_SEQ], []):
+                    debt[dd][leaf] = debt[dd].get(leaf, 0) + r["count"]
+        self._debt_memo = (snap["snapshot_id"], debt)
+        return debt
+
     def _compact_partitions(
         self,
         spark: SparkSession,
@@ -3541,11 +3560,10 @@ class SnapTable:
         # rewrite the matched leaves through the MoR read plan: each
         # source dir's leaves are scanned under its own write epoch and
         # anti-joined against exactly the delete files applicable to it
-        matched_files = sum(
-            len(_list_data_files(Path(l)))
-            for leaves in rewrite.values()
-            for l in leaves
-        )
+        old_files = [
+            f for leaves in rewrite.values() for l in leaves for f in _list_data_files(Path(l))
+        ]
+        matched_files, matched_rows = len(old_files), _footer_row_count(old_files)
         slice_df = self._read_mor(spark, list(rewrite), ddirs, None, leaves=rewrite)
         # the range-distributed write samples its input before shuffling,
         # which would re-execute the scan + delete anti-join — persist so
@@ -3588,17 +3606,13 @@ class SnapTable:
             new_dir = None
             new_files = 0
 
-        # a delete file can be retired when every partition its sidecar
-        # attributes debt to was rewritten in EVERY data dir it applies to
-        # (a suffix is uncovered in a dir iff a SURVIVING leaf of that dir
-        # can intersect it); files without a sidecar are kept — unknown
-        # attribution must never retire a delete
+        # a delete file can be retired when every partition it has debt in
+        # was rewritten in EVERY data dir it applies to (a suffix is
+        # uncovered in a dir iff a SURVIVING leaf of that dir can
+        # intersect it)
+        debt = self._delete_debt(spark, current)
         retired: set[str] = set()
         for dd in ddirs:
-            sidecar = self.data_dir / dd / self._DEBT_SIDECAR
-            if not sidecar.exists():
-                continue
-            debt = json.loads(sidecar.read_text())
             applies_to = [
                 d
                 for d in current["data_dirs"]
@@ -3609,7 +3623,7 @@ class SnapTable:
                     self._suffixes_intersect(s, k)
                     for k in kept_suffixes.get(d, [])
                 )
-                for s in debt
+                for s in debt[dd]
                 for d in applies_to
             ):
                 retired.add(dd)
@@ -3659,9 +3673,9 @@ class SnapTable:
                 # subpath references, so they need no lineage entry)
                 **({"absorbed_dirs": absorbed} if absorbed else {}),
                 "delete_dirs": [dd for dd in ddirs if dd not in retired],
-                # visible rows are unchanged: the rewrite only materializes
-                # deletes that were already applied logically
-                "row_count": cur["row_count"],
+                # visible rows are unchanged; the data files lose the
+                # erased images the rewrite materialized
+                "row_count": cur["row_count"] - matched_rows + new_rows,
                 "file_count": cur["file_count"] - matched_files + new_files,
                 "dir_sequence_overrides": overrides,
                 "dir_epoch_overrides": epoch_overrides,
@@ -3728,23 +3742,8 @@ class SnapTable:
             if len(dds) == 1:
                 new_ddirs.append(dds[0])
                 continue
-            # merged partition-debt attribution survives only when EVERY
-            # source carried one (a missing map means unknown partitions —
-            # the merged file must stay unattributable, not falsely scoped)
-            src_debts = [
-                json.loads(sc.read_text())
-                for dd in dds
-                if (sc := self.data_dir / dd / self._DEBT_SIDECAR).exists()
-            ]
-            merged_debt: dict[str, int] | None = None
-            if len(src_debts) == len(dds):
-                merged_debt = {}
-                for m in src_debts:
-                    for leaf, n in m.items():
-                        merged_debt[leaf] = merged_debt.get(leaf, 0) + n
-            new_dir = self._write_delete_keys(
-                self._read_delete_keys(spark, sorted(dds)).dropDuplicates(),
-                merged_debt,
+            new_dir, _ = self._write_delete_keys(
+                self._read_delete_keys(spark, sorted(dds)).dropDuplicates()
             )
             new_ddirs.append(new_dir)
             overrides[new_dir] = min(intro[dd] for dd in dds)
@@ -3843,7 +3842,8 @@ class SnapTable:
         - every referenced data directory exists and holds ≥1 parquet file
           (a missing dir = data loss the log doesn't know about — exactly
           what a partial S3 restore produces);
-        - footer row counts sum to the entry's ``row_count``;
+        - footer row counts sum to the entry's ``row_count`` exactly (it
+          counts data-file rows, merge-on-read snapshots included);
         - physical file count matches ``file_count``;
         - the commit log itself is well-formed: wherever two surviving
           entries have CONSECUTIVE sequences, the later one's parent must
@@ -3921,16 +3921,7 @@ class SnapTable:
             if not (self.data_dir / d).is_dir():
                 report["missing_dirs"].append(d)
         if not report["missing_dirs"] and not report["empty_dirs"]:
-            if snap.get("delete_dirs"):
-                # MoR snapshot: footers count PRE-delete rows; the exact
-                # visible count would need a data scan (anti-join), which
-                # fsck deliberately never does — verify the bound only
-                if total_rows < snap["row_count"]:
-                    report["row_count_mismatch"] = {
-                        "expected_at_most": total_rows,
-                        "actual": snap["row_count"],
-                    }
-            elif total_rows != snap["row_count"]:
+            if total_rows != snap["row_count"]:
                 report["row_count_mismatch"] = {
                     "expected": snap["row_count"], "actual": total_rows,
                 }

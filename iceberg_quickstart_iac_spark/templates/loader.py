@@ -6,8 +6,8 @@ Behavioral parity with the reference loader
 - every ``*.yaml`` in the template dir is loaded, keyed by file stem;
 - empty YAML raises ``ValueError``; a template missing any of
   ``{name, columns, partition_spec}`` raises ``ValueError`` naming them;
-- unknown types (including ``decimal(p,s)``) fall back to string
-  (reference line 68 and test ``tests/test_table_loader.py:126-128``);
+- ``decimal(p,s)`` demotes to string (reference line 68 and test
+  ``tests/test_table_loader.py:126-128``);
 - ``time`` demotes to string — Spark has no time-of-day type, matching the
   reference's own Athena/Glue demotion (``aws/modules/athena/locals.tf:9``);
 - ``uuid`` maps to string (as in the reference's Arrow mapping).
@@ -16,12 +16,16 @@ Differences (Spark-native, intentional):
 
 - output is ``pyspark.sql.types.StructType``, with ``required: true``
   becoming ``nullable=False``;
+- any other unknown type name (``map<string,int>``, ``struct<a:int>``, a
+  typo) raises ``ValueError`` naming it, where the reference falls back to
+  string: a column declared as a map must not silently hold strings;
 - no ``lru_cache`` keyed on nothing — caching is per-directory and
   explicit, so tests can load alternate template dirs freely.
 """
 
 from __future__ import annotations
 
+import re
 from pathlib import Path
 
 import yaml
@@ -80,9 +84,21 @@ def get_template(name: str, templates_dir: Path | str | None = None) -> dict:
     return templates[name]
 
 
+_DECIMAL = re.compile(r"^decimal\(\s*\d+\s*,\s*\d+\s*\)$")
+
+
 def iceberg_type_to_spark(iceberg_type: str) -> T.DataType:
-    """Map an Iceberg primitive type string to a Spark type (unknown → string)."""
-    return _TYPE_MAP.get(iceberg_type, T.StringType())
+    """Map an Iceberg primitive type string to a Spark type;
+    ``decimal(p,s)`` demotes to string (reference parity), any other
+    unknown name raises ``ValueError``."""
+    if iceberg_type in _TYPE_MAP:
+        return _TYPE_MAP[iceberg_type]
+    if _DECIMAL.match(iceberg_type.strip().lower()):
+        return T.StringType()
+    raise ValueError(
+        f"Unknown Iceberg type {iceberg_type!r}: expected one of "
+        f"{sorted(_TYPE_MAP)} or decimal(p,s)"
+    )
 
 
 def spark_schema(template: dict) -> T.StructType:

@@ -1,9 +1,10 @@
-"""On-disk ``format_version``: ``SnapTable.load`` upgrades a table written
-before format 1 once, Spark-free, and reads and commits then see one
-layout. Each older layout is built the way the legacy tests build theirs,
-by stripping a record a format-1 writer stamps; the upgrade must restore
-exactly what the writer wrote, read the same rows and pass
-``verify_integrity``."""
+"""On-disk ``format_version``: ``SnapTable.load`` upgrades an older table
+once, Spark-free, and reads and commits then see one layout. A layout from
+before format 1 is built by stripping a record the writer stamps; a
+format-1 table by putting back the live ``row_count`` format 1 recorded
+for merge-on-read snapshots, where format 2 records data-file rows. The
+upgrade must restore exactly what the writer writes, read the same rows
+and pass ``verify_integrity``."""
 
 from __future__ import annotations
 
@@ -13,6 +14,7 @@ import os
 import pytest
 
 from iceberg_quickstart_iac_spark.tables import SnapTable
+from iceberg_quickstart_iac_spark.tables.snapstore import _footer_row_count, _list_data_files
 
 SCHEMA = "k LONG, g STRING, v DOUBLE"
 
@@ -181,9 +183,72 @@ def test_load_runs_no_spark_job(spark, tmp_path):
 
 def test_newer_format_version_raises(tmp_path):
     t = SnapTable.create(tmp_path / "new", {"name": "new", "columns": []})
-    _edit(t.root / "table.json", lambda m: m.update(format_version=2))
-    with pytest.raises(ValueError, match="format_version 2.*format_version 1"):
+    _edit(t.root / "table.json", lambda m: m.update(format_version=3))
+    with pytest.raises(ValueError, match="format_version 3.*format_version 2"):
         SnapTable.load(t.root)
+
+
+def _footer_rows(t, e) -> int:
+    return sum(_footer_row_count(_list_data_files(t.data_dir / d)) for d in e["data_dirs"])
+
+
+def _format1_table(spark, root):
+    """A format-2 table with merge-on-read, branch and partition-compaction
+    history, turned into the format-1 table the same commits wrote: each
+    entry's ``row_count`` is its snapshot's live row count. Returns the
+    table and each snapshot's rows, main's and the branch's."""
+    def changes(rows):
+        return spark.createDataFrame(rows, SCHEMA + ", op STRING")
+
+    t = _table(spark, root)
+    t.apply_changelog(spark, changes([(5, "a", 5.5, "U"), (6, None, None, "D")]),
+                      ["k"], mode="mor")
+    b = t.create_branch("b")
+    b.apply_changelog(spark, changes([(7, "c", 7.5, "U"), (8, None, None, "D")]),
+                      ["k"], mode="mor")
+    b.delete_where(spark, "k = 9", mode="mor")
+    t.compact(spark, partition_filter=[("g", "=", "a")])
+    t.delete_where(spark, "k = 9", mode="mor")
+    views = {t.log_dir: t, b.log_dir: b}
+    reads = {}
+    for log_dir, view in views.items():
+        for p in sorted(log_dir.glob("[0-9]*.json")):
+            sid = json.loads(p.read_text())["snapshot_id"]
+            reads[sid] = sorted(tuple(r) for r in view.read(spark, snapshot_id=sid).collect())
+            _edit(p, lambda e: e.update(row_count=len(reads[sid])))
+    _edit(t.root / "table.json", lambda m: m.update(format_version=1))
+    return t, reads
+
+
+def test_load_recounts_row_count_of_a_format_1_table(spark, tmp_path):
+    t, reads = _format1_table(spark, tmp_path / "f1")
+    b_log = t.branch("b").log_dir
+    assert any(
+        e["row_count"] != _footer_rows(t, e)
+        for e in t._entries() + SnapTable._read_log(b_log)
+    )
+    tracker = spark.sparkContext.statusTracker()
+    spark.sparkContext.setJobGroup("format-1-upgrade", "load only")
+    try:
+        t = SnapTable.load(t.root)
+        assert list(tracker.getJobIdsForGroup("format-1-upgrade")) == []
+    finally:
+        spark.sparkContext.setLocalProperty("spark.jobGroup.id", None)
+    assert t.meta["format_version"] == 2
+    b = t.branch("b")
+    for view, entries in ((t, t._entries()), (b, SnapTable._read_log(b_log))):
+        for e in entries:
+            assert e["row_count"] == _footer_rows(t, e), e["operation"]
+            assert sorted(
+                tuple(r) for r in view.read(spark, snapshot_id=e["snapshot_id"]).collect()
+            ) == reads[e["snapshot_id"]]
+            assert view.verify_integrity(e["snapshot_id"])["ok"]
+    # a second load writes nothing
+    files = [t.root / "table.json", *sorted(t.log_dir.glob("[0-9]*.json")),
+             *sorted(b_log.glob("[0-9]*.json"))]
+    stamp = [(p.read_bytes(), os.stat(p).st_mtime_ns) for p in files]
+    SnapTable.load(t.root)
+    assert [(p.read_bytes(), os.stat(p).st_mtime_ns) for p in files] == stamp
 
 
 def test_underivable_record_raises_naming_dir_and_record(spark, tmp_path):

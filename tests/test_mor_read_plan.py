@@ -1,7 +1,8 @@
 """The merge-on-read read plan and the paths around it: one scan per
 write epoch, typed from the log, and one sequence-scoped anti-join
 whatever the number of outstanding delete files, reads that stay correct
-through partition-scoped compaction and snapshot expiry, one view
+through partition-scoped compaction and snapshot expiry, O(changes)
+merge-on-read writes whose ``row_count`` counts data-file rows, one view
 registration per commit through the lazy SQL front door, footer
 statistics on decimal columns, and copy-on-write merges on
 ``timestamptz`` columns."""
@@ -15,6 +16,7 @@ import pytest
 
 from iceberg_quickstart_iac_spark.tables import SnapTable
 from iceberg_quickstart_iac_spark.tables.lakehouse import Lakehouse
+from iceberg_quickstart_iac_spark.tables.snapstore import _footer_row_count, _list_data_files
 
 
 def _mor_table(spark, root, partitioned=False):
@@ -56,6 +58,14 @@ def _apply(spark, t, model, changes):
 
 def _state(spark, t):
     return {r.k: (r.g, r.v) for r in t.read(spark).collect()}
+
+
+def _data_file_rows(t, snap=None):
+    """Rows in the data files of ``snap`` (default the head), from footers."""
+    snap = snap or t.current_snapshot()
+    return sum(
+        _footer_row_count(_list_data_files(t.data_dir / d)) for d in snap["data_dirs"]
+    )
 
 
 def _plan_shape(df):
@@ -179,13 +189,17 @@ def test_mor_reads_survive_scoped_compact_then_expire(spark, tmp_path):
     t.expire_snapshots(older_than_ms=2**52)
     assert _state(spark, t) == model
     assert t.verify_integrity()["ok"]
-    # the row accounting stayed exact through it all
-    assert t.current_snapshot()["row_count"] == len(model)
+    # the row accounting stayed exact through it all: reads serve the
+    # model, row_count counts the data files' rows
+    assert t.read(spark).count() == len(model)
+    assert t.current_snapshot()["row_count"] == _data_file_rows(t)
 
 
 def test_mor_accounting_matches_reads(spark, tmp_path):
-    """``row_count`` after MoR applies and deletes equals the rows a read
-    serves — the accounting runs through the same read plan."""
+    """After MoR applies and deletes a read serves the model, and
+    ``row_count`` is the rows in the snapshot's data files (Iceberg's
+    ``total-records``): the deleted images still sit in them until a
+    compaction, and the writes never count the live table."""
     t, model = _mor_table(spark, tmp_path / "acct", partitioned=True)
     _apply(spark, t, model, [(5, "c", 5.5, "U"), (6, None, None, "D"),
                              (99, "a", 9.9, "I")])
@@ -193,7 +207,127 @@ def test_mor_accounting_matches_reads(spark, tmp_path):
     t.delete_where(spark, "g = 'c'", mode="mor")
     model = {k: r for k, r in model.items() if r[0] != "c"}
     assert _state(spark, t) == model
-    assert t.current_snapshot()["row_count"] == len(model)
+    assert t.read(spark).count() == len(model)
+    # 30 base rows + 2 images from the first apply + 1 from the second
+    assert t.current_snapshot()["row_count"] == _data_file_rows(t) == 33
+    assert t.verify_integrity()["ok"]
+    # a compaction materializes the deletes: both counts meet again
+    t.compact(spark)
+    assert t.current_snapshot()["row_count"] == _data_file_rows(t) == len(model)
+    assert _state(spark, t) == model
+
+
+def test_mor_writes_report_delete_keys(spark, tmp_path):
+    """The MoR apply and delete report the keys they wrote (delete-file
+    footers), not a count of the images those keys erase."""
+    t, model = _mor_table(spark, tmp_path / "keys")
+    e = t.apply_changelog(
+        spark,
+        spark.createDataFrame(
+            [(1, "b", 1.5, "U"), (2, None, None, "D"), (77, "a", 7.0, "I")],
+            "k LONG, g STRING, v DOUBLE, op STRING",
+        ),
+        ["k"], mode="mor",
+    )
+    assert e["merge_stats"] == {"upserted": 2, "delete_keys": 3, "mode": "mor"}
+    assert e["row_count"] == 32
+    e = t.delete_where(spark, "k < 10", mode="mor")
+    assert e["row_count"] == 32 and t.read(spark).count() == 21
+
+
+def test_mor_apply_never_reads_the_target(spark, tmp_path, monkeypatch):
+    """A MoR changelog apply is O(changes): it writes the batch's keys and
+    new images and reads nothing of the table it applies to."""
+    t, model = _mor_table(spark, tmp_path / "noread")
+    real_read = SnapTable.read
+
+    def guarded_read(self, *args, **kwargs):
+        if self.root == t.root:
+            raise AssertionError("apply_changelog(mode='mor') read its target")
+        return real_read(self, *args, **kwargs)
+
+    monkeypatch.setattr(SnapTable, "read", guarded_read)
+    _apply(spark, t, model, [(3, "a", 3.5, "U"), (4, None, None, "D"),
+                             (50, "c", 5.0, "I")])
+    monkeypatch.setattr(SnapTable, "read", real_read)
+    assert _state(spark, t) == model
+
+
+def test_mor_delete_scans_the_table_once(spark, tmp_path, monkeypatch):
+    """A MoR delete reads the table once, to evaluate its condition."""
+    from pyspark.sql import functions as F
+
+    t, _ = _mor_table(spark, tmp_path / "once")
+    scanned = spark.sparkContext.accumulator(0)
+
+    def seen(_):
+        scanned.add(1)
+        return True
+
+    count_rows = F.udf(seen, "boolean").asNondeterministic()
+    real_read = SnapTable.read
+
+    def counting_read(self, *args, **kwargs):
+        return real_read(self, *args, **kwargs).filter(count_rows(F.col("k")))
+
+    monkeypatch.setattr(SnapTable, "read", counting_read)
+    t.delete_where(spark, "g = 'a'", mode="mor")
+    monkeypatch.setattr(SnapTable, "read", real_read)
+    assert scanned.value == 30
+    assert sorted(r.k for r in t.read(spark).collect()) == [
+        i for i in range(30) if i % 3
+    ]
+
+
+def test_mor_apply_race_keeps_row_count(spark, tmp_path):
+    """Two handles each apply a changelog deleting keys 0–4; the second
+    commits just before the first handle's ``_commit``. The raced table
+    records what a race-free replay of the same two commits records,
+    reads the same rows, and passes ``verify_integrity``."""
+    deletes = [(k, None, None, "D") for k in range(5)]
+
+    def changes():
+        return spark.createDataFrame(deletes, "k LONG, g STRING, v DOUBLE, op STRING")
+
+    raced, model = _mor_table(spark, tmp_path / "raced")
+    other = SnapTable.load(raced.root)
+    real_commit = raced._commit
+
+    def commit_after_other(build_entry, *args, **kwargs):
+        other.apply_changelog(spark, changes(), ["k"], mode="mor")
+        return real_commit(build_entry, *args, **kwargs)
+
+    raced._commit = commit_after_other
+    raced.apply_changelog(spark, changes(), ["k"], mode="mor")
+    replay, _ = _mor_table(spark, tmp_path / "replay")
+    for _ in range(2):
+        replay.apply_changelog(spark, changes(), ["k"], mode="mor")
+
+    assert [e["row_count"] for e in raced._entries()] == [
+        e["row_count"] for e in replay._entries()
+    ]
+    assert _state(spark, raced) == _state(spark, replay) == {
+        k: r for k, r in model.items() if k >= 5
+    }
+    assert raced.verify_integrity()["ok"]
+
+
+def test_verify_integrity_detects_lowered_mor_row_count(spark, tmp_path):
+    """A merge-on-read entry's ``row_count`` is checked exactly against
+    its footers: a count lowered by one is reported, not just a raised
+    one."""
+    import json
+
+    t, model = _mor_table(spark, tmp_path / "tamper")
+    _apply(spark, t, model, [(1, "b", 1.5, "U"), (2, None, None, "D")])
+    assert t.verify_integrity()["ok"]
+    path = t.log_dir / f"{t.current_snapshot()['sequence']:012d}.json"
+    entry = json.loads(path.read_text())
+    entry["row_count"] -= 1
+    path.write_text(json.dumps(entry))
+    report = t.verify_integrity()
+    assert not report["ok"]
+    assert report["row_count_mismatch"] == {"expected": 30, "actual": 31}
 
 
 def test_sql_registers_own_commits_once(spark, tmp_path, monkeypatch):

@@ -4,6 +4,10 @@ the few whose construction is eager (IVF fit, table lifecycle)."""
 
 from __future__ import annotations
 
+from pathlib import Path
+
+import pytest
+
 from iceberg_quickstart_iac_spark.plans.queries import queries
 
 
@@ -374,3 +378,30 @@ def test_sketch_audit_has_no_unbounded_percentile_buffer(spark, sf_dir_small):
     # the checkpointed 6-row agg feeds the final join as a lineage-free
     # scan — the guarantee that the audited sketch value IS the emitted one
     assert "ExistingRDD" in p, p
+
+
+def test_catalog_stores_resolve_in_the_session_tempdir(
+    spark, sf_dir_small, session_tempdir, monkeypatch
+):
+    """The fit-once/load-many catalog tables (signature store, IVF-PQ
+    index) resolve under this test session's own temp root, so a store an
+    earlier run left in the system temp dir is never loaded."""
+    from iceberg_quickstart_iac_spark.operators import ann_index, dedup
+
+    system, own = session_tempdir
+    roots = []
+
+    class Loaded(Exception):
+        pass
+
+    def capture(spark_, df, root, *args, **kwargs):
+        roots.append(Path(root))
+        raise Loaded
+
+    monkeypatch.setattr(dedup, "load_or_build_signature_store", capture)
+    monkeypatch.setattr(ann_index, "load_or_build_ivfpq_index", capture)
+    for name in ("incremental_near_dup_admission", "embedding_ivfpq_topk"):
+        with pytest.raises(Loaded):
+            queries()[name](spark, sf_dir_small)
+    assert [r.parent for r in roots] == [Path(own)] * 2
+    assert Path(own) != Path(system)

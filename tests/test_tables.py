@@ -1385,12 +1385,14 @@ def test_mor_delete_no_rewrite_and_time_travel(spark, mor_table):
     t = mor_table
     pre = t._entries()[-1]
     e = t.delete_where(spark, "g = 'a'", mode="mor")
-    # no write amplification: data dirs and file count UNCHANGED
+    # no write amplification: data dirs, file count and the data files'
+    # row count UNCHANGED; the read serves the 5 survivors
     assert e["data_dirs"] == pre["data_dirs"]
     assert e["file_count"] == pre["file_count"]
-    assert e["row_count"] == 5
+    assert e["row_count"] == pre["row_count"] == 10
     assert len(e["delete_dirs"]) == 1
     assert sorted(r.k for r in t.read(spark).collect()) == [1, 3, 5, 7, 9]
+    assert t.verify_integrity()["ok"]
     # time travel BEFORE the delete still serves every row
     assert t.read(spark, snapshot_id=pre["snapshot_id"]).count() == 10
 
@@ -1446,7 +1448,7 @@ def test_mor_delete_is_key_granular(spark, tmp_path):
         [(1, "x"), (1, "y"), (2, "z")], "k LONG, v STRING"
     ))
     e = t.delete_where(spark, "v = 'x'", mode="mor")
-    assert e["row_count"] == 1  # both k=1 rows die
+    assert e["row_count"] == 3  # data-file rows; the read drops both k=1 rows
     assert [r.k for r in t.read(spark).collect()] == [2]
 
 
@@ -1651,7 +1653,8 @@ def test_maintain_mor_thresholds(spark, mor_table):
                    "compacted": False, "action": "none"}
     t.delete_where(spark, "k = 0", mode="mor")
     audit = mor_read_amplification(t)
-    assert audit == {"delete_files": 1, "deferred_keys": 1, "ratio": 1 / 9}
+    # keys over data-file rows: the erased image still sits in them
+    assert audit == {"delete_files": 1, "deferred_keys": 1, "ratio": 1 / 10}
     # below the file threshold AND below a loose ratio: still a no-op
     out = maintain_mor(spark, t, max_delete_files=4, max_delete_ratio=0.5)
     assert not out["compacted"] and out["action"] == "none"

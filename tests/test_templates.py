@@ -5,6 +5,8 @@ reference delegates to Terraform."""
 
 from __future__ import annotations
 
+import re
+
 import pytest
 from pyspark.sql import types as T
 
@@ -19,6 +21,7 @@ from iceberg_quickstart_iac_spark.templates import (
     spark_schema,
     write_order_ddl,
 )
+from iceberg_quickstart_iac_spark.tables.snapstore import _declared_spark_type
 from iceberg_quickstart_iac_spark.templates.ddl import partition_transform_sql
 
 
@@ -53,11 +56,24 @@ def test_type_mapping(iceberg, spark):
     assert iceberg_type_to_spark(iceberg) == spark
 
 
-def test_unknown_type_falls_back_to_string():
+def test_decimal_demotes_to_string():
     # decimal is mentioned in the reference's doc string but demoted by its
-    # loader (table_loader.py:68) — we keep that contract.
+    # loader (table_loader.py:68) — we keep that contract; snapstore's own
+    # declared-type resolution keeps exact decimals.
     assert iceberg_type_to_spark("decimal(10,2)") == T.StringType()
-    assert iceberg_type_to_spark("wat") == T.StringType()
+    assert _declared_spark_type("decimal(10,2)") == T.DecimalType(10, 2)
+
+
+@pytest.mark.parametrize("name", ["map<string,int>", "struct<a:int>", "wat", "list<wat>"])
+def test_unknown_type_raises_naming_it(name):
+    """A column declared as a map or struct must not silently hold
+    strings: both mappers refuse a name they cannot map, and name it."""
+    inner = name[5:-1] if name.startswith("list<") else name
+    with pytest.raises(ValueError, match=re.escape(repr(inner))):
+        _declared_spark_type(name)
+    if inner == name:
+        with pytest.raises(ValueError, match=re.escape(repr(name))):
+            iceberg_type_to_spark(name)
 
 
 def test_spark_schema_event_stream():
