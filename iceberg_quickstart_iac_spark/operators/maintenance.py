@@ -131,6 +131,12 @@ def maintain_mor(
     "compact", "compacted": bool}`` (+ the commit's snapshot id when one
     happened) — idempotent and safe on a fresh or delete-free table.
 
+    Every action is a rewrite commit against the snapshot it planned
+    from: appends and merge-on-read writes that land meanwhile are kept
+    (their delete files still apply to the rewritten rows), and a
+    concurrent rewrite of the same files raises CommitConflictError
+    with the winner's commit intact — the next run replans from it.
+
     Thresholds resolve template-first (the reference's single-source-of-
     truth philosophy): an explicit argument wins, else the table
     template's ``maintenance_max_delete_files`` /

@@ -922,9 +922,10 @@ class CatalogBranch:
     def merge(self) -> dict:
         """Publish the branch: merge every touched table into main.
 
-        Two-phase: (1) VALIDATE all touched tables are mergeable —
-        a schema conflict or a non-append rebase against a moved main
-        fails the whole publish before anything lands; (2) merge each.
+        Two-phase: (1) VALIDATE all touched tables are mergeable by the
+        rule :meth:`SnapTable.merge_branch` enforces — a schema conflict,
+        or rewrites on either side of a moved main, fails the whole
+        publish before anything lands; (2) merge each.
         The validation is a point-in-time check, so the remaining
         non-atomic window is the merge loop itself. A concurrent main
         writer racing INTO that window is RETRIED per table with
@@ -939,24 +940,9 @@ class CatalogBranch:
         problems = []
         for tname in touched:
             t = self.lakehouse.table(tname)
-            bv = t.branch(self._table_branch)
-            ref = bv._ref
-            fork = ref["fork_sequence"]
-            entries = t._entries()
-            head = entries[-1]["sequence"] if entries else -1
-            if "columns" in ref and t.meta.get("columns", []) != ref["base_columns"]:
-                problems.append(
-                    f"{tname}: branch evolved the schema but main's schema "
-                    "also changed since the fork"
-                )
-                continue
-            if head != fork:
-                branch_entries = t._read_log(bv.log_dir)
-                if any(e["operation"] != "append" for e in branch_entries):
-                    problems.append(
-                        f"{tname}: main advanced past the fork and the branch "
-                        "holds non-append commits (rewrites do not commute)"
-                    )
+            problem = t._merge_conflict(self._table_branch, t._entries())
+            if problem is not None:
+                problems.append(f"{tname}: {problem}")
         if problems:
             raise CommitConflictError(
                 f"Catalog branch {self.name!r} cannot publish — nothing was "

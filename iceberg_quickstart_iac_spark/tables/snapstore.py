@@ -48,6 +48,7 @@ import shutil
 import struct
 import time
 import uuid
+from dataclasses import dataclass, field
 from pathlib import Path
 from urllib.parse import quote, unquote
 
@@ -481,6 +482,62 @@ def _epoch_of(entry: dict) -> dict:
     return {k: entry[k] for k in ("column_ids", "column_types", "partition_spec", "write_format")}
 
 
+@dataclass
+class _Delta:
+    """What one write changes in a table's state, declared once and
+    applied by :meth:`SnapTable._commit` to whatever head the commit
+    finds (ARCHITECTURE.md, "Commits").
+
+    - ``read_at``: the snapshot the write read and rewrites part of; None
+      for a pure add (``append``, the merge-on-read writes, a cherry-pick,
+      a branch replay), which depends on nothing it read;
+    - ``add``/``remove``: data dirs, ``add_deletes``/``remove_deletes``:
+      equality-delete dirs;
+    - ``rows``/``files``: the change in the snapshot's data-file rows
+      and files (an entry counts them all, like Iceberg's snapshot
+      summary totals);
+    - ``epoch``: the write epoch (:func:`_epoch_of`) the entry carries;
+      ``extra``: further entry fields (lineage, stats, txn, overrides);
+    - ``replace``: ``add``/``add_deletes`` and ``rows``/``files`` are the
+      whole new state, whatever the head holds (``overwrite``,
+      ``rollback_to``)."""
+
+    operation: str
+    epoch: dict
+    read_at: dict | None = None
+    add: list[str] = field(default_factory=list)
+    remove: list[str] = field(default_factory=list)
+    add_deletes: list[str] = field(default_factory=list)
+    remove_deletes: list[str] = field(default_factory=list)
+    rows: int = 0
+    files: int = 0
+    replace: bool = False
+    extra: dict = field(default_factory=dict)
+
+    def apply(self, head: dict | None, table: str) -> dict:
+        """The dirs and counts of ``head`` with this delta applied. A dir
+        the delta removes that ``head`` no longer holds was removed or
+        rewritten by a commit after ``read_at``: CommitConflictError."""
+        if head is None or self.replace:
+            head = {"data_dirs": [], "delete_dirs": [], "row_count": 0, "file_count": 0}
+        data, deletes = head["data_dirs"], head.get("delete_dirs") or []
+        gone = [d for d in self.remove if d not in data]
+        gone += [d for d in self.remove_deletes if d not in deletes]
+        if gone:
+            raise CommitConflictError(
+                f"{self.operation} on {table} conflicts: {sorted(gone)}, read at "
+                f"snapshot {(self.read_at or {}).get('snapshot_id')}, were "
+                "rewritten by a concurrent commit — re-run"
+            )
+        return {
+            "data_dirs": [d for d in data if d not in self.remove] + self.add,
+            "delete_dirs": [d for d in deletes if d not in self.remove_deletes]
+            + self.add_deletes,
+            "row_count": head["row_count"] + self.rows,
+            "file_count": head["file_count"] + self.files,
+        }
+
+
 #: the on-disk layout this engine reads and writes (``table.json``
 #: ``format_version``); :meth:`SnapTable.load` upgrades an older table once
 _FORMAT_VERSION = 2
@@ -790,40 +847,56 @@ class SnapTable:
         seqs = [int(p.stem) for p in self.log_dir.glob(self._LOG_GLOB)]
         return max(seqs) if seqs else None
 
-    def _commit(self, build_entry, retries: int | None = None) -> dict:
-        """Atomic commit: write temp file, link into the next sequence slot.
+    def _commit(self, delta: _Delta, retries: int | None = None) -> dict:
+        """Atomic commit of one write's ``delta``: write a temp file, link
+        it into the next sequence slot.
 
-        ``build_entry(entries)`` produces the operation fields from the
-        *latest* log state — recomputed on every attempt so a losing racer
-        re-bases on the winner's snapshot (no lost updates). The slot is
-        claimed with ``os.link`` (fails with EEXIST if another writer won) —
-        optimistic concurrency with bounded retry
-        (``commit_num_retries`` parity).
+        Every attempt applies the delta to the head it finds
+        (:meth:`_Delta.apply`), so commits that landed after the snapshot
+        the write read (``delta.read_at``) keep their dirs and counts: no
+        lost updates. The one conflict rule: a dir the delta removes that
+        is no longer live at the head was rewritten by a concurrent
+        commit, so the commit raises CommitConflictError and leaves that
+        head as it is. Data dirs a rewrite writes from what it read take
+        ``read_at``'s sequence through ``dir_sequence_overrides`` (Iceberg's
+        ``RewriteFiles`` data-sequence rule), so a delete committed after
+        ``read_at`` still applies to them. A ``replace`` delta
+        (``overwrite``, ``rollback_to``) is the whole new state: it checks
+        and keeps nothing of the head. The slot is claimed with
+        ``os.link`` (EEXIST when another writer won it): optimistic
+        concurrency with bounded retry (``commit_num_retries`` parity).
         """
         if retries is None:
             retries = int(self.meta.get("properties", {}).get("commit_num_retries", 3))
+        # an operation may pin a NEW dir to an inherited sequence: a
+        # rewrite's output to the snapshot it read, a merged delete file
+        # to its group's newest source, a kept leaf to its source dir
+        overrides = {
+            **{d: delta.read_at["sequence"] for d in (delta.add if delta.read_at else [])},
+            **(delta.extra.get("dir_sequence_overrides") or {}),
+        }
+        extra = {**delta.extra, **({"dir_sequence_overrides": overrides} if overrides else {})}
+        name = self.fq_name
         # no .json suffix: temp files must never match the log glob
         tmp = self.log_dir / f".tmp-{uuid.uuid4().hex}"
         for attempt in range(retries + 1):
             entries = self._entries()
-            seq = entries[-1]["sequence"] + 1 if entries else 0
-            parent = entries[-1]["snapshot_id"] if entries else None
+            head = entries[-1] if entries else None
+            seq = head["sequence"] + 1 if head else 0
             full = {
-                **build_entry(entries),
+                **extra,
+                "operation": delta.operation,
+                **delta.apply(head, name),
+                **delta.epoch,
                 "sequence": seq,
                 "snapshot_id": uuid.uuid4().hex[:16],
-                "parent_id": parent,
+                "parent_id": head["snapshot_id"] if head else None,
                 "committed_at_ms": _now_ms(),
             }
             # each dir's INTRO sequence (Iceberg's data_sequence_number, at
             # dir granularity; see _dir_intro_seqs): the parent's map plus
             # this commit's dirs, pruned to dirs a surviving entry references
-            dir_seqs = dict(entries[-1]["dir_sequences"] if entries else {})
-            # dir_sequence_overrides: an operation may pin a NEW dir to an
-            # inherited sequence — delete-file compaction merges N delete
-            # files into one that must keep the group's applicability
-            # cutoff, not the rewrite commit's own sequence
-            overrides = full.get("dir_sequence_overrides") or {}
+            dir_seqs = dict(head["dir_sequences"] if head else {})
             for d in self._entry_dirs(full):
                 dir_seqs.setdefault(d, overrides.get(d, seq))
             live = {d for e in entries for d in self._entry_dirs(e)}
@@ -840,10 +913,35 @@ class SnapTable:
                 if attempt == retries:
                     tmp.unlink(missing_ok=True)
                     raise CommitConflictError(
-                        f"Commit to {self.fq_name} lost {retries + 1} races (sequence {seq})"
+                        f"Commit to {name} lost {retries + 1} races (sequence {seq})"
                     ) from None
                 time.sleep(min(0.05 * 2**attempt, 1.0) * (1 + random.random()))
         raise AssertionError("unreachable")
+
+    def _read_head(self, spark: SparkSession) -> tuple[dict, DataFrame]:
+        """The head snapshot and a read of exactly it: a rewrite's
+        ``read_at`` and its input, which no concurrent commit can split."""
+        snap = self._snapshot_for(None, None)
+        return snap, self.read(spark, snapshot_id=snap["snapshot_id"])
+
+    def _commit_rewrite(
+        self,
+        operation: str,
+        read_at: dict,
+        written: tuple[str, int, int],
+        extra: dict | None = None,
+    ) -> dict:
+        """Commit ``written`` (:meth:`_write_data`'s dir, rows, files),
+        rewritten from every live row of ``read_at``, in place of
+        ``read_at``'s data and delete files."""
+        dir_name, rows, files = written
+        return self._commit(_Delta(
+            operation, self._write_epoch(), read_at=read_at,
+            add=[dir_name], remove=list(read_at["data_dirs"]),
+            remove_deletes=list(read_at.get("delete_dirs") or []),
+            rows=rows - read_at["row_count"], files=files - read_at["file_count"],
+            extra=extra or {},
+        ))
 
     # -- writes ------------------------------------------------------------
 
@@ -1028,16 +1126,10 @@ class SnapTable:
         entry (atomically with the data), e.g. an IVM watermark."""
         self._check_columns(df)
         dir_name, rows, files = self._write_data(df)
-        entry = self._commit(
-            lambda entries: {
-                **(entry_extra or {}),
-                "operation": "overwrite",
-                "data_dirs": [dir_name],
-                "row_count": rows,
-                "file_count": files,
-                **self._write_epoch(),
-            }
-        )
+        entry = self._commit(_Delta(
+            "overwrite", self._write_epoch(), add=[dir_name], rows=rows, files=files,
+            replace=True, extra=entry_extra or {},
+        ))
         log_audit_event("table_write", self.fq_name, details={"row_count": rows, "mode": "overwrite"})
         return entry
 
@@ -1090,28 +1182,12 @@ class SnapTable:
             return skipped
         self._check_columns(df)
         dir_name, rows, files = self._write_data(df)
-
-        def build(entries: list[dict]) -> dict:
-            current = entries[-1] if entries else None
-            dirs = (current["data_dirs"] if current else []) + [dir_name]
-            prev_rows = current["row_count"] if current else 0
-            prev_files = current["file_count"] if current else 0
-            return {
-                "operation": "append",
-                "data_dirs": dirs,
-                # an append is a pure add: any live equality-delete files
-                # carry forward (they scope to STRICTLY LOWER sequences, so
-                # they can never erase the rows appended here)
-                "delete_dirs": list(current.get("delete_dirs") or []) if current else [],
-                # cumulative like row_count — Iceberg snapshot summaries track
-                # TOTAL files in the snapshot, not just the new manifest's
-                "row_count": prev_rows + rows,
-                "file_count": prev_files + files,
-                **self._write_epoch(),
-                **self._txn_meta(txn),
-            }
-
-        entry = self._commit(build)
+        # a pure add: live equality-delete files carry forward (they scope
+        # to STRICTLY LOWER sequences, so they never erase these rows)
+        entry = self._commit(_Delta(
+            "append", self._write_epoch(), add=[dir_name], rows=rows, files=files,
+            extra=self._txn_meta(txn),
+        ))
         log_audit_event("table_write", self.fq_name, details={"row_count": rows, "mode": "append"})
         return entry
 
@@ -1156,6 +1232,13 @@ class SnapTable:
         deletes at KEY granularity (every row sharing a matched row's key
         dies — identifier fields are expected unique, Iceberg's
         identifier-field contract). ``hard=True`` is CoW-only.
+
+        Races (ARCHITECTURE.md, "Commits"): both forms keep rows appended
+        after the delete read the table, matching or not. The copy-on-write
+        form rewrites what it read, so a merge-on-read delete committed
+        meanwhile still applies to its output, and a concurrent rewrite of
+        the same files (a compaction, another copy-on-write DML) makes the
+        second to commit raise CommitConflictError.
         """
         if mode not in ("cow", "mor"):
             raise ValueError(f"delete_where: mode must be 'cow' or 'mor', got {mode!r}")
@@ -1173,28 +1256,16 @@ class SnapTable:
                     "delete leaves the bytes in the data files by design"
                 )
             return self._delete_where_mor(spark, condition)
-        current = self.read(spark)
+        snap, current = self._read_head(spark)
         # SQL DELETE removes rows where the predicate is TRUE — rows where
         # it evaluates NULL (e.g. `region = 'us'` on a NULL region) are
         # KEPT. A bare NOT(cond) filter would silently drop them.
         kept = current.filter(f"NOT (({condition}) <=> TRUE)")
-        dir_name, rows, files = self._write_data(kept)
-        entry = self._commit(
-            lambda entries: {
-                "operation": "delete",
-                "data_dirs": [dir_name],
-                "row_count": rows,
-                "file_count": files,
-                **self._write_epoch(),
-            }
-        )
-        prev_rows = None
-        for e in self._entries():
-            if e["snapshot_id"] == entry["parent_id"]:
-                prev_rows = e["row_count"]
+        written = self._write_data(kept)
+        entry = self._commit_rewrite("delete", snap, written)
         # data-file rows the rewrite dropped: after MoR deletes these
         # include the erased images it materialized
-        deleted = (prev_rows - rows) if prev_rows is not None else None
+        deleted = snap["row_count"] - written[1]
         log_audit_event(
             "table_write",
             self.fq_name,
@@ -1262,21 +1333,7 @@ class SnapTable:
             self.read(spark).filter(f"({condition}) <=> TRUE").select(*ids).dropDuplicates()
         )
         dir_name, delete_keys = self._write_delete_keys(matched)
-
-        def build(entries: list[dict]) -> dict:
-            prev = entries[-1] if entries else None
-            return {
-                "operation": "delete",
-                "data_dirs": list(prev["data_dirs"]) if prev else [],
-                "delete_dirs": (
-                    list(prev.get("delete_dirs") or []) if prev else []
-                ) + [dir_name],
-                "row_count": prev["row_count"] if prev else 0,
-                "file_count": prev["file_count"] if prev else 0,
-                **(_epoch_of(prev) if prev else self._write_epoch()),
-            }
-
-        entry = self._commit(build)
+        entry = self._commit(_Delta("delete", self._write_epoch(), add_deletes=[dir_name]))
         log_audit_event(
             "table_write",
             self.fq_name,
@@ -1297,6 +1354,11 @@ class SnapTable:
         ``UPDATE`` analog, completing the DML triad next to
         :meth:`delete_where` and the SCD2 MERGE. Unmatched rows carry
         over byte-identical; old snapshots keep the pre-update state.
+
+        A race keeps rows appended after the update read the table (not
+        updated) and deletes committed meanwhile; a concurrent rewrite of
+        the same files makes the second to commit raise
+        CommitConflictError (as :meth:`delete_where`).
         """
         from pyspark.sql import functions as F
 
@@ -1304,7 +1366,7 @@ class SnapTable:
         unknown = set(set_exprs) - set(declared)
         if unknown:
             raise ValueError(f"update_where: unknown columns {sorted(unknown)}")
-        current = self.read(spark)
+        snap, current = self._read_head(spark)
         cond = F.expr(condition)
         updated = current.select(
             *[
@@ -1314,16 +1376,7 @@ class SnapTable:
                 for c in current.columns
             ]
         )
-        dir_name, rows, files = self._write_data(updated)
-        entry = self._commit(
-            lambda entries: {
-                "operation": "update",
-                "data_dirs": [dir_name],
-                "row_count": rows,
-                "file_count": files,
-                **self._write_epoch(),
-            }
-        )
+        entry = self._commit_rewrite("update", snap, self._write_data(updated))
         log_audit_event(
             "table_write",
             self.fq_name,
@@ -1375,7 +1428,10 @@ class SnapTable:
         clause verdict — no per-clause passes. Copy-on-write rewrite, same
         honesty note as :meth:`delete_where`; merge-on-read deletes are
         the low-latency alternative an engine with file-level manifests
-        would pick.
+        would pick. Races as :meth:`delete_where`'s copy-on-write form:
+        rows appended after the merge read the target are kept as they
+        are (a source key they share is not matched against them), and a
+        concurrent rewrite of the same files raises CommitConflictError.
         """
         from pyspark.sql import functions as F
 
@@ -1394,8 +1450,9 @@ class SnapTable:
             declared, when_matched, when_not_matched, when_not_matched_by_source
         )
 
+        snap, target = self._read_head(spark)
         target = (
-            self.read(spark)
+            target
             .withColumn("__sg_t_id", F.monotonically_increasing_id())
             .alias("t")
         )
@@ -1485,7 +1542,7 @@ class SnapTable:
                 & (F.col("__sg_verdict") != "skip")
             ).select(*[_out(c) for c in declared])
             self._check_columns(result)
-            dir_name, rows, files = self._write_data(result)
+            written = self._write_data(result)
         finally:
             joined.unpersist()
 
@@ -1495,18 +1552,9 @@ class SnapTable:
             "deleted": sum(n for v, n in stats.items() if v[0] == "d"),
             "unchanged": stats.get("keep", 0),
         }
-        entry = self._commit(
-            lambda entries: {
-                **(entry_extra or {}),
-                "operation": "merge",
-                "data_dirs": [dir_name],
-                "row_count": rows,
-                "file_count": files,
-                "merge_stats": merge_stats,
-                **self._write_epoch(),
-                **self._txn_meta(txn),
-            }
-        )
+        entry = self._commit_rewrite("merge", snap, written, {
+            **(entry_extra or {}), "merge_stats": merge_stats, **self._txn_meta(txn),
+        })
         log_audit_event(
             "table_write",
             self.fq_name,
@@ -1671,26 +1719,14 @@ class SnapTable:
             changes.filter(f"{op_col} <> 'D'").select(*declared)
         )
 
-        def build(entries: list[dict]) -> dict:
-            prev = entries[-1] if entries else None
-            return {
-                "operation": "merge",
-                "data_dirs": (list(prev["data_dirs"]) if prev else []) + [up_dir],
-                "delete_dirs": (
-                    list(prev.get("delete_dirs") or []) if prev else []
-                ) + [del_dir],
-                "row_count": (prev["row_count"] if prev else 0) + up_rows,
-                "file_count": (prev["file_count"] if prev else 0) + up_files,
-                "merge_stats": {
-                    "upserted": up_rows,
-                    "delete_keys": delete_keys,
-                    "mode": "mor",
-                },
-                **self._write_epoch(),
+        entry = self._commit(_Delta(
+            "merge", self._write_epoch(), add=[up_dir], add_deletes=[del_dir],
+            rows=up_rows, files=up_files,
+            extra={
+                "merge_stats": {"upserted": up_rows, "delete_keys": delete_keys, "mode": "mor"},
                 **self._txn_meta(txn),
-            }
-
-        entry = self._commit(build)
+            },
+        ))
         log_audit_event(
             "table_write",
             self.fq_name,
@@ -1712,24 +1748,19 @@ class SnapTable:
         """
         target = self._snapshot_for(snapshot_id, None)
 
-        entry = self._commit(
-            lambda entries: {
-                "operation": "rollback",
-                # the target's sequence, so `history` can reconstruct the
-                # current-ancestor chain (snapshots between the target and
-                # this commit left the head lineage — Iceberg's
-                # is_current_ancestor=false rows)
-                "rollback_of": target["sequence"],
-                "data_dirs": list(target["data_dirs"]),
-                "delete_dirs": list(target.get("delete_dirs") or []),
-                "row_count": target["row_count"],
-                "file_count": target["file_count"],
-                # restore the WRITE EPOCH of the target so epoch-grouped
-                # reads treat the re-referenced dirs under their original
-                # schema/spec, not the current one
-                **_epoch_of(target),
-            }
-        )
+        entry = self._commit(_Delta(
+            # restore the WRITE EPOCH of the target so epoch-grouped reads
+            # treat the re-referenced dirs under their original
+            # schema/spec, not the current one
+            "rollback", _epoch_of(target),
+            add=list(target["data_dirs"]), add_deletes=list(target.get("delete_dirs") or []),
+            rows=target["row_count"], files=target["file_count"], replace=True,
+            # the target's sequence, so `history` can reconstruct the
+            # current-ancestor chain (snapshots between the target and
+            # this commit left the head lineage — Iceberg's
+            # is_current_ancestor=false rows)
+            extra={"rollback_of": target["sequence"]},
+        ))
         log_audit_event(
             "table_write",
             self.fq_name,
@@ -1820,27 +1851,13 @@ class SnapTable:
         new_files_list = [
             f for d in new_dirs for f in _list_data_files(self.data_dir / d)
         ]
-        delta_rows = _footer_row_count(new_files_list)
-        delta_files = len(new_files_list)
-
-        def build(cur_entries: list[dict]) -> dict:
-            cur = cur_entries[-1] if cur_entries else None
-            return {
-                "operation": "append",
-                "data_dirs": (cur["data_dirs"] if cur else []) + new_dirs,
-                "delete_dirs": (
-                    list(cur.get("delete_dirs") or []) if cur else []
-                ),
-                "row_count": (cur["row_count"] if cur else 0) + delta_rows,
-                "file_count": (cur["file_count"] if cur else 0)
-                + delta_files,
-                # the delta dirs were written under the TARGET's epoch:
-                # carry its schema/spec stamps so epoch-grouped reads
-                # project them correctly (same contract as merge rebase)
-                **_epoch_of(target),
-            }
-
-        entry = self._commit(build)
+        # the delta dirs were written under the TARGET's epoch: carry its
+        # schema/spec stamps so epoch-grouped reads project them correctly
+        # (same contract as the branch replay)
+        entry = self._commit(_Delta(
+            "append", _epoch_of(target), add=new_dirs,
+            rows=_footer_row_count(new_files_list), files=len(new_files_list),
+        ))
         log_audit_event(
             "table_write",
             self.fq_name,
@@ -3351,6 +3368,12 @@ class SnapTable:
         schema-evolution projection are unchanged for them. Delete files
         whose whole debt (:meth:`_delete_debt`) lies in rewritten
         partitions are retired from the new snapshot.
+
+        Races (ARCHITECTURE.md, "Commits"): dirs appended after the
+        compaction read the table are kept, and delete files committed
+        meanwhile still apply to the rewritten rows. When another commit
+        rewrote a dir or delete file this compaction replaces, it raises
+        CommitConflictError and that commit's head stands; re-run it.
         """
         if partition_filter is not None or partition_leaves is not None:
             if target_files is not None:
@@ -3361,10 +3384,7 @@ class SnapTable:
             return self._compact_partitions(
                 spark, partition_filter, partition_leaves, zorder
             )
-        current = self.current_snapshot()
-        if current is None:
-            raise TableNotFoundError(f"Table {self.fq_name} has no snapshots yet")
-        df = self.read(spark)
+        current, df = self._read_head(spark)
         from pyspark.sql import functions as F
 
         if zorder:
@@ -3386,7 +3406,7 @@ class SnapTable:
                 df = df.repartitionByRange(n_files, F.col("__z"))
             # partitioned tables z-sort WITHIN each partition dir (the
             # hash repartition in _write_data keeps dir co-location)
-            dir_name, rows, files = self._write_data(
+            written = self._write_data(
                 df, order_override=[F.col("__z")], drop_cols=["__z"]
             )
         else:
@@ -3394,19 +3414,13 @@ class SnapTable:
                 df = df.coalesce(target_files)
             # through _write_data so the compacted copy keeps the declared
             # physical layout (partition dirs + within-partition sort order)
-            dir_name, rows, files = self._write_data(df)
-        entry = self._commit(
-            lambda entries: {
-                "operation": "compact",
-                "data_dirs": [dir_name],
-                "row_count": rows,
-                "file_count": files,
-                # lineage: which directories this rewrite ABSORBED — a
-                # later cherrypick_snapshot must treat an absorbed dir's
-                # rows as already present wherever this dir is referenced
-                "absorbed_dirs": {dir_name: sorted(current["data_dirs"])},
-                **self._write_epoch(),
-            }
+            written = self._write_data(df)
+        dir_name, _, files = written
+        # lineage: which directories this rewrite ABSORBED — a later
+        # cherrypick_snapshot must treat an absorbed dir's rows as already
+        # present wherever this dir is referenced
+        entry = self._commit_rewrite(
+            "compact", current, written, {"absorbed_dirs": {dir_name: sorted(current["data_dirs"])}}
         )
         log_audit_event(
             "table_write",
@@ -3510,9 +3524,7 @@ class SnapTable:
         data is untouched."""
         from pyspark.sql import functions as F
 
-        current = self.current_snapshot()
-        if current is None:
-            raise TableNotFoundError(f"Table {self.fq_name} has no snapshots yet")
+        current = self._snapshot_for(None, None)
         dir_epochs = self._dir_epochs()
         intro = self._dir_intro_seqs()
         ddirs = list(current.get("delete_dirs") or [])
@@ -3628,63 +3640,35 @@ class SnapTable:
             ):
                 retired.add(dd)
 
-        overrides = {
-            sp: intro.get(d, -1)
-            for d, sps in kept_subpaths.items()
-            for sp in sps
+        kept_dirs = [sp for d in current["data_dirs"] for sp in kept_subpaths.get(d, [])]
+        extra = {
+            # kept leaves keep their source dir's sequence and epoch
+            "dir_sequence_overrides": {
+                sp: intro.get(d, -1) for d, sps in kept_subpaths.items() for sp in sps
+            },
+            "dir_epoch_overrides": {
+                sp: dir_epochs[d] for d, sps in kept_subpaths.items() for sp in sps
+            },
         }
-        epoch_overrides = {
-            sp: dir_epochs[d] for d, sps in kept_subpaths.items() for sp in sps
-        }
-
-        def build(entries: list[dict]) -> dict:
-            cur = entries[-1]
-            if cur["data_dirs"] != current["data_dirs"] or sorted(
-                cur.get("delete_dirs") or []
-            ) != sorted(ddirs):
-                raise CommitConflictError(
-                    f"partition-scoped compact on {self.fq_name}: table "
-                    "changed concurrently — re-run"
-                )
-            new_data_dirs: list[str] = []
-            for d in cur["data_dirs"]:
-                if d not in rewrite:
-                    new_data_dirs.append(d)
-                else:
-                    new_data_dirs.extend(kept_subpaths.get(d, []))
-            if new_dir is not None:
-                new_data_dirs.append(new_dir)
-            absorbed = (
-                {
-                    new_dir: sorted(
-                        str(Path(l).relative_to(self.data_dir))
-                        for leaves in rewrite.values()
-                        for l in leaves
-                    )
-                }
-                if new_dir is not None
-                else {}
-            )
-            return {
-                "operation": "compact",
-                "data_dirs": new_data_dirs,
-                # lineage for cherrypick_snapshot: the matched leaves'
-                # rows now live in new_dir (kept leaves stay as direct
-                # subpath references, so they need no lineage entry)
-                **({"absorbed_dirs": absorbed} if absorbed else {}),
-                "delete_dirs": [dd for dd in ddirs if dd not in retired],
-                # visible rows are unchanged; the data files lose the
-                # erased images the rewrite materialized
-                "row_count": cur["row_count"] - matched_rows + new_rows,
-                "file_count": cur["file_count"] - matched_files + new_files,
-                "dir_sequence_overrides": overrides,
-                "dir_epoch_overrides": epoch_overrides,
-                # the rewritten dir was written under the CURRENT declared
-                # state (kept subpaths carry their own epoch overrides)
-                **self._write_epoch(),
-            }
-
-        entry = self._commit(build)
+        if new_dir is not None:
+            # lineage for cherrypick_snapshot: the matched leaves' rows now
+            # live in new_dir (kept leaves stay as direct subpath
+            # references, so they need no lineage entry)
+            extra["absorbed_dirs"] = {new_dir: sorted(
+                str(Path(l).relative_to(self.data_dir))
+                for leaves in rewrite.values()
+                for l in leaves
+            )}
+        # visible rows are unchanged; the data files lose the erased
+        # images the rewrite materialized. The rewritten dir is written
+        # under the CURRENT declared state (kept subpaths carry their own
+        # epoch overrides).
+        entry = self._commit(_Delta(
+            "compact", self._write_epoch(), read_at=current,
+            add=kept_dirs + ([new_dir] if new_dir is not None else []), remove=list(rewrite),
+            remove_deletes=sorted(retired),
+            rows=new_rows - matched_rows, files=new_files - matched_files, extra=extra,
+        ))
         log_audit_event(
             "table_write",
             self.fq_name,
@@ -3716,15 +3700,20 @@ class SnapTable:
         both (no data dir's intro falls between theirs). Delete dirs are
         grouped by that applicability cutpoint; each multi-file group is
         rewritten into one deduplicated key file whose intro sequence is
-        pinned to the group's minimum via ``dir_sequence_overrides`` —
-        the merged file erases exactly what its sources erased, and never
-        a row appended after them.
+        pinned to the group's newest source via ``dir_sequence_overrides``
+        — the merged file erases exactly what its sources erased, and
+        never a row appended after them. (Any sequence in the group's span
+        does that for the data dirs read; the newest also covers a
+        rewrite's output committed concurrently, pinned to a snapshot
+        inside the span, which the newer sources still apply to.)
+
+        A race with another merge-on-read write keeps it: its delete file
+        carries forward. A commit that rewrote a merged delete file
+        meanwhile makes this one raise CommitConflictError.
         """
         import bisect
 
-        snap = self.current_snapshot()
-        if snap is None:
-            raise TableNotFoundError(f"Table {self.fq_name} has no snapshots yet")
+        snap = self._snapshot_for(None, None)
         ddirs = list(snap.get("delete_dirs") or [])
         if len(ddirs) < 2:
             return snap
@@ -3734,50 +3723,27 @@ class SnapTable:
         for dd in ddirs:
             cut = bisect.bisect_left(data_seqs, intro.get(dd, -1))
             groups.setdefault(cut, []).append(dd)
-        new_ddirs: list[str] = []
+        sources = [dds for dds in groups.values() if len(dds) > 1]
+        if not sources:
+            return snap
         overrides: dict[str, int] = {}
-        merged = 0
-        for cut in sorted(groups):
-            dds = groups[cut]
-            if len(dds) == 1:
-                new_ddirs.append(dds[0])
-                continue
+        for dds in sources:
             new_dir, _ = self._write_delete_keys(
                 self._read_delete_keys(spark, sorted(dds)).dropDuplicates()
             )
-            new_ddirs.append(new_dir)
-            overrides[new_dir] = min(intro[dd] for dd in dds)
-            merged += 1
-        if not merged:
-            return snap
-
-        def build(entries: list[dict]) -> dict:
-            cur = entries[-1]
-            if sorted(cur.get("delete_dirs") or []) != sorted(ddirs):
-                # a concurrent MoR write changed the delete inventory the
-                # merge was computed from — surface, caller re-runs
-                raise CommitConflictError(
-                    f"rewrite_delete_files on {self.fq_name}: delete files "
-                    "changed concurrently — re-run"
-                )
-            return {
-                "operation": "rewrite_deletes",
-                "data_dirs": list(cur["data_dirs"]),
-                "delete_dirs": new_ddirs,
-                "row_count": cur["row_count"],
-                "file_count": cur["file_count"],
-                "dir_sequence_overrides": overrides,
-                **_epoch_of(cur),
-            }
-
-        entry = self._commit(build)
+            overrides[new_dir] = max(intro[dd] for dd in dds)
+        entry = self._commit(_Delta(
+            "rewrite_deletes", self._write_epoch(), read_at=snap,
+            add_deletes=list(overrides), remove_deletes=[dd for dds in sources for dd in dds],
+            extra={"dir_sequence_overrides": overrides},
+        ))
         log_audit_event(
             "table_write",
             self.fq_name,
             details={
                 "mode": "rewrite_deletes",
                 "delete_files_before": len(ddirs),
-                "delete_files_after": len(new_ddirs),
+                "delete_files_after": len(entry["delete_dirs"]),
             },
         )
         return entry
@@ -4231,73 +4197,76 @@ class SnapTable:
             raise ValueError(f"No branch {name!r} on {self.fq_name}")
         shutil.rmtree(broot)
 
+    def _merge_conflict(self, name: str, main_entries: list[dict]) -> str | None:
+        """Why branch ``name`` cannot merge into main at ``main_entries``
+        (main's log), or None: the one mergeability rule
+        :meth:`merge_branch` enforces and a catalog publish validates every
+        table with before it merges any. A branch schema change needs main
+        still at the fork with the schema it forked from; on a moved main
+        only appends on both sides commute (rewrites do not)."""
+        bv = _BranchView(self.root, name)
+        ref = bv._ref
+        head = main_entries[-1]["sequence"] if main_entries else -1
+        moved = head != ref["fork_sequence"]
+        if "columns" in ref and (moved or self.meta.get("columns", []) != ref["base_columns"]):
+            return (
+                "it evolved the schema but main moved or changed its schema since "
+                "the fork — manual resolution required"
+            )
+        advanced = [e for e in main_entries if e["sequence"] > ref["fork_sequence"]]
+        if moved and any(
+            e["operation"] != "append" for e in advanced + self._read_log(bv.log_dir)
+        ):
+            return "non-append commits on a diverged history (appends commute; rewrites do not)"
+        return None
+
     def merge_branch(self, name: str) -> dict:
         """Merge a branch into main.
 
         Fast-forward when main has not advanced past the fork: branch
-        commits are adopted verbatim (atomic per-slot link claims — a
-        concurrent main writer surfaces as CommitConflictError), and a
+        commits are adopted verbatim (atomic per-slot link claims), and a
         branch schema evolution is applied to the main table. When main HAS
         advanced, append-only histories on both sides rebase — each branch
-        append replays as a fresh main commit (appends commute) — while
-        overwrites/compactions or a branch schema change against a
-        moved main raise CommitConflictError (resolve by hand, exactly
-        Nessie's conflict model). After a successful merge the branch ref
-        fast-forwards to the new main head and keeps working.
+        append replays as a pure-add commit (appends commute) — while
+        rewrites or a branch schema change against a moved main raise
+        CommitConflictError (:meth:`_merge_conflict`; resolve by hand,
+        exactly Nessie's conflict model). A main writer that claims a slot
+        mid-fast-forward turns the append remainder into a replay. After a
+        successful merge the branch ref fast-forwards to the new main head
+        and keeps working.
         """
         bv = _BranchView(self.root, name)
         ref = bv._ref
         fork = ref["fork_sequence"]
         branch_entries = self._read_log(bv.log_dir)
         main_entries = self._entries()
-        head = main_entries[-1]["sequence"] if main_entries else -1
-        schema_override = "columns" in ref
+        problem = self._merge_conflict(name, main_entries)
+        if problem is not None:
+            raise CommitConflictError(f"Cannot merge branch {name!r}: {problem}")
+        at_fork = [e for e in main_entries if e["sequence"] <= fork]
 
-        def check_schema_mergeable():
-            if schema_override and self.meta.get("columns", []) != ref["base_columns"]:
-                raise CommitConflictError(
-                    f"Branch {name!r} evolved the schema but main's schema "
-                    f"also changed since the fork — manual resolution required"
-                )
-
-        def replay_appends(entries_to_replay: list[dict], prev_view: dict | None) -> dict:
-            """Re-commit each branch append's directory delta as a fresh
-            main commit via the optimistic-retry path (appends commute, so
-            a rebase is safe). The branch entry's write epoch rides along —
-            the dirs keep the schema/layout they were physically written
-            under."""
+        def replay_appends(entries_to_replay: list[dict], prev_view: dict | None) -> dict | None:
+            """Commit each branch append's dirs as a pure-add delta onto
+            whatever main holds. The branch entry's write epoch rides
+            along: the dirs keep the schema/layout they were physically
+            written under."""
             last = None
             for e in entries_to_replay:
                 prev_dirs = prev_view["data_dirs"] if prev_view else []
-                prev_rows = prev_view["row_count"] if prev_view else 0
-                prev_files = prev_view["file_count"] if prev_view else 0
-                delta_dirs = [d for d in e["data_dirs"] if d not in prev_dirs]
-                delta_rows = e["row_count"] - prev_rows
-                delta_files = e["file_count"] - prev_files
-
-                def build(entries: list[dict], _dd=delta_dirs, _dr=delta_rows, _df=delta_files, _e=e) -> dict:
-                    current = entries[-1] if entries else None
-                    return {
-                        "operation": "append",
-                        "data_dirs": (current["data_dirs"] if current else []) + _dd,
-                        "delete_dirs": (
-                            list(current.get("delete_dirs") or []) if current else []
-                        ),
-                        "row_count": (current["row_count"] if current else 0) + _dr,
-                        "file_count": (current["file_count"] if current else 0) + _df,
-                        **_epoch_of(_e),
-                    }
-
-                last = self._commit(build)
+                last = self._commit(_Delta(
+                    "append", _epoch_of(e),
+                    add=[d for d in e["data_dirs"] if d not in prev_dirs],
+                    rows=e["row_count"] - (prev_view["row_count"] if prev_view else 0),
+                    files=e["file_count"] - (prev_view["file_count"] if prev_view else 0),
+                ))
                 prev_view = e
             return last
 
-        if head == fork:
+        if main_entries[-1:] == at_fork[-1:]:  # main is still at the fork
             # fast-forward: adopt branch entries verbatim, slot by slot. The
             # schema override is deferred until every entry has landed — a
             # half-failed merge must not leave main's schema changed.
-            check_schema_mergeable()
-            last = main_entries[-1] if main_entries else None
+            last = at_fork[-1] if at_fork else None
             raced_at: int | None = None
             for i, e in enumerate(branch_entries):
                 tmp = self.log_dir / f".tmp-{uuid.uuid4().hex}"
@@ -4327,34 +4296,19 @@ class SnapTable:
                         f"branch still holds the full history for manual "
                         f"resolution"
                     )
-                if raced_at > 0:
-                    prev_view = branch_entries[raced_at - 1]
-                else:
-                    at_fork = [e for e in main_entries if e["sequence"] <= fork]
-                    prev_view = at_fork[-1] if at_fork else None
-                last = replay_appends(remaining, prev_view)
-                check_schema_mergeable()  # racer may have evolved the schema
-            if schema_override:
+                last = replay_appends(remaining, last)
+            if "columns" in ref:
+                # main's schema can change without a commit: the rule again,
+                # against main as it stood at the fork
+                problem = self._merge_conflict(name, at_fork)
+                if problem is not None:
+                    raise CommitConflictError(f"Cannot merge branch {name!r}: {problem}")
                 meta = self.meta
                 meta["columns"] = ref["columns"]
                 meta["next_field_id"] = ref["next_field_id"]
                 self._write_meta(meta)
         else:
-            if schema_override:
-                raise CommitConflictError(
-                    f"Branch {name!r} carries a schema change but main advanced "
-                    f"past the fork — manual resolution required"
-                )
-            advanced = [e for e in main_entries if e["sequence"] > fork]
-            if any(e["operation"] != "append" for e in advanced) or any(
-                e["operation"] != "append" for e in branch_entries
-            ):
-                raise CommitConflictError(
-                    f"Cannot auto-merge branch {name!r}: non-append commits on "
-                    f"a diverged history (appends commute; rewrites do not)"
-                )
-            merged = [e for e in main_entries if e["sequence"] <= fork]
-            last = replay_appends(branch_entries, merged[-1] if merged else None)
+            last = replay_appends(branch_entries, at_fork[-1] if at_fork else None)
             if last is None:
                 last = main_entries[-1]
 

@@ -9,11 +9,12 @@ drives N python subprocesses, each committing M pyarrow-written appends
 against the same table root, released together by a go-file barrier.
 
 Spark-free on purpose: the workers write parquet with pyarrow and commit
-through SnapTable._commit with the same entry shape ``append`` builds
-(data_dirs + delete_dirs carry-forward, cumulative row/file counts,
-write-epoch stamp), so the race is on the COMMIT PROTOCOL, not on Spark
-job scheduling. Retries follow the table's ``commit_num_retries``
-property — the public knob (Iceberg's ``commit.retry.num-retries``).
+through SnapTable._commit with the delta ``append`` declares (one added
+dir, its row and file counts, the write epoch) — or, for the rewrite
+workers, a rewrite delta that replaces two of their own dirs with one —
+so the race is on the COMMIT PROTOCOL, not on Spark job scheduling.
+Retries follow the table's ``commit_num_retries`` property — the public
+knob (Iceberg's ``commit.retry.num-retries``).
 """
 
 from __future__ import annotations
@@ -39,38 +40,76 @@ WORKER = textwrap.dedent(
     import pyarrow.parquet as pq
 
     from iceberg_quickstart_iac_spark.tables import SnapTable
+    from iceberg_quickstart_iac_spark.tables.snapstore import _Delta
 
     root, wid, n_commits = sys.argv[1], int(sys.argv[2]), int(sys.argv[3])
+    rewrite = sys.argv[4:] == ["rewrite"]
     go = Path(root) / "_go"
     while not go.exists():
         time.sleep(0.001)
     t = SnapTable.load(root)
-    for i in range(n_commits):
+
+
+    def write(keys):
         d = uuid.uuid4().hex
         out = t.data_dir / d
         out.mkdir(parents=True)
         pq.write_table(
-            pa.table({"k": pa.array([wid * 1000 + i], type=pa.int64())}),
+            pa.table({"k": pa.array(keys, type=pa.int64())}),
             out / "part-00000.parquet",
         )
+        return d
 
-        def build(entries, d=d):
-            cur = entries[-1] if entries else None
-            return {
-                "operation": "append",
-                "data_dirs": (cur["data_dirs"] if cur else []) + [d],
-                "delete_dirs": (
-                    list(cur.get("delete_dirs") or []) if cur else []
-                ),
-                "row_count": (cur["row_count"] if cur else 0) + 1,
-                "file_count": (cur["file_count"] if cur else 0) + 1,
-                **t._write_epoch(),
-            }
 
-        t._commit(build)
+    own = []
+    for i in range(n_commits):
+        d = write([wid * 1000 + i])
+        t._commit(_Delta("append", t._write_epoch(), add=[d], rows=1, files=1))
+        own.append(d)
+        if rewrite and len(own) == 2:
+            # merge two of this worker's own dirs into one: a rewrite delta
+            # against the snapshot it read them at, committed while the
+            # other workers append and rewrite theirs
+            read_at = t.current_snapshot()
+            keys = [
+                k for o in own
+                for k in pq.read_table(t.data_dir / o).column("k").to_pylist()
+            ]
+            merged = write(keys)
+            t._commit(_Delta(
+                "compact", t._write_epoch(), read_at=read_at,
+                add=[merged], remove=own, files=-1,
+            ))
+            own = [merged]
     print("ok", wid)
     """
 )
+
+
+def _run_workers(tmp_path, root, n_workers, n_commits, *mode):
+    script = tmp_path / "worker.py"
+    script.write_text(WORKER)
+    env = {**os.environ, "PYTHONPATH": str(REPO)}
+    procs = [
+        subprocess.Popen(
+            [sys.executable, str(script), str(root), str(w), str(n_commits), *mode],
+            env=env, cwd=str(tmp_path),
+            stdout=subprocess.PIPE, stderr=subprocess.PIPE, text=True,
+        )
+        for w in range(n_workers)
+    ]
+    (root / "_go").touch()  # release the barrier once all workers spun up
+    outs = [p.communicate(timeout=120) for p in procs]
+    for p, (out, err) in zip(procs, outs):
+        assert p.returncode == 0, (out, err)
+
+
+def _head_keys(t) -> list[int]:
+    keys = []
+    for d in t.current_snapshot()["data_dirs"]:
+        for f in (t.data_dir / d).rglob("*.parquet"):
+            keys += pq.read_table(f).column("k").to_pylist()
+    return sorted(keys)
 
 
 def test_subprocess_writers_race_cleanly(tmp_path):
@@ -86,21 +125,7 @@ def test_subprocess_writers_race_cleanly(tmp_path):
             "properties": {"commit_num_retries": 60},
         },
     )
-    script = tmp_path / "worker.py"
-    script.write_text(WORKER)
-    env = {**os.environ, "PYTHONPATH": str(REPO)}
-    procs = [
-        subprocess.Popen(
-            [sys.executable, str(script), str(root), str(w), str(n_commits)],
-            env=env, cwd=str(tmp_path),
-            stdout=subprocess.PIPE, stderr=subprocess.PIPE, text=True,
-        )
-        for w in range(n_workers)
-    ]
-    (root / "_go").touch()  # release the barrier once all workers spun up
-    outs = [p.communicate(timeout=120) for p in procs]
-    for p, (out, err) in zip(procs, outs):
-        assert p.returncode == 0, (out, err)
+    _run_workers(tmp_path, root, n_workers, n_commits)
 
     total = n_workers * n_commits
     entries = t._entries()
@@ -112,13 +137,9 @@ def test_subprocess_writers_race_cleanly(tmp_path):
     head = entries[-1]
     assert head["row_count"] == total and head["file_count"] == total
     # no lost updates: every worker's every row is in the final state
-    keys = set()
-    for d in head["data_dirs"]:
-        for f in (t.data_dir / d).rglob("*.parquet"):
-            keys.update(pq.read_table(f).column("k").to_pylist())
-    assert keys == {
+    assert _head_keys(t) == sorted(
         w * 1000 + i for w in range(n_workers) for i in range(n_commits)
-    }
+    )
     # fsck clean after the melee
     report = t.verify_integrity()
     assert report["ok"], report
@@ -151,21 +172,7 @@ def test_subprocess_writers_race_through_seeding(tmp_path):
     meta.pop("format_version")
     meta_path.write_text(json.dumps(meta, indent=2))
 
-    script = tmp_path / "worker.py"
-    script.write_text(WORKER)
-    env = {**os.environ, "PYTHONPATH": str(REPO)}
-    procs = [
-        subprocess.Popen(
-            [sys.executable, str(script), str(root), str(w), str(n_commits)],
-            env=env, cwd=str(tmp_path),
-            stdout=subprocess.PIPE, stderr=subprocess.PIPE, text=True,
-        )
-        for w in range(n_workers)
-    ]
-    (root / "_go").touch()
-    outs = [p.communicate(timeout=120) for p in procs]
-    for p, (out, err) in zip(procs, outs):
-        assert p.returncode == 0, (out, err)
+    _run_workers(tmp_path, root, n_workers, n_commits)
 
     total = n_workers * n_commits
     entries = t._entries()
@@ -175,5 +182,36 @@ def test_subprocess_writers_race_through_seeding(tmp_path):
     # fresh table has no pre-existing gaps to grandfather
     meta = json.loads(meta_path.read_text())
     assert meta["expired_sequences"] == []
+    report = t.verify_integrity()
+    assert report["ok"], report
+
+
+def test_subprocess_rewriters_race_cleanly(tmp_path):
+    """Each worker appends and, after every append past its first,
+    rewrites its two live dirs into one (a rewrite delta removing them).
+    Rewrites rebase onto the other workers' appends and rewrites, so the
+    final head holds every key exactly once in one dir per worker."""
+    n_workers, n_commits = 4, 5
+    root = tmp_path / "rewrite"
+    t = SnapTable.create(
+        root,
+        {
+            "name": "rewrite", "namespace": "lakehouse",
+            "columns": [{"name": "k", "type": "long"}],
+            "properties": {"commit_num_retries": 80},
+        },
+    )
+    _run_workers(tmp_path, root, n_workers, n_commits, "rewrite")
+
+    entries = t._entries()
+    total = n_workers * (2 * n_commits - 1)
+    assert [e["sequence"] for e in entries] == list(range(total))
+    head = entries[-1]
+    assert len(head["data_dirs"]) == n_workers
+    assert head["row_count"] == n_workers * n_commits
+    assert head["file_count"] == n_workers
+    assert _head_keys(t) == sorted(
+        w * 1000 + i for w in range(n_workers) for i in range(n_commits)
+    )
     report = t.verify_integrity()
     assert report["ok"], report

@@ -65,6 +65,20 @@ def test_catalog_branch_validation_blocks_whole_publish(spark, lake):
     assert br.table("a").read(spark).count() == 2
 
 
+def test_catalog_branch_validation_uses_merge_branch_rule(spark, lake):
+    """Publishing validates with the rule merge_branch enforces: a main
+    that moved by a rewrite (here a compaction of ``b``) blocks the whole
+    publish before ``a`` lands."""
+    br = lake.create_branch("moved")
+    for n in ("a", "b"):
+        br.table(n).append(spark.createDataFrame([(2, n)], "k LONG, v STRING"))
+    lake.table("b").compact(spark)
+    with pytest.raises(CommitConflictError, match="nothing was merged"):
+        br.merge()
+    assert sorted(r.k for r in lake.table("a").read(spark).collect()) == [1]
+    assert lake.list_branches() == ["moved"]
+
+
 def test_catalog_branch_delete_abandons_cleanly(spark, lake):
     br = lake.create_branch("wap")
     br.table("a").append(spark.createDataFrame([(9, "bad")], "k LONG, v STRING"))

@@ -293,9 +293,9 @@ def test_mor_apply_race_keeps_row_count(spark, tmp_path):
     other = SnapTable.load(raced.root)
     real_commit = raced._commit
 
-    def commit_after_other(build_entry, *args, **kwargs):
+    def commit_after_other(delta, *args, **kwargs):
         other.apply_changelog(spark, changes(), ["k"], mode="mor")
-        return real_commit(build_entry, *args, **kwargs)
+        return real_commit(delta, *args, **kwargs)
 
     raced._commit = commit_after_other
     raced.apply_changelog(spark, changes(), ["k"], mode="mor")
