@@ -8,9 +8,11 @@ pure function over ``df.schema`` so it can run from any scheduler (or a
 Structured Streaming monitor).
 
 Both sides are compared in *Spark* type space: the template compiles through
-the same ``iceberg_type_to_spark`` mapping used for DDL, so deliberate
-demotions (time/uuid → string) don't read as drift — the live table was
-created through that mapping too.
+the engine's type mapper (``templates/loader.spark_type``), the mapping
+engine tables store their columns with and DDL renders. Exact
+``decimal(p,s)`` and ``list<…>`` columns of an engine table therefore read
+as declared, and the deliberate demotions (time/uuid → string) don't read
+as drift.
 """
 
 from __future__ import annotations
@@ -25,7 +27,7 @@ from pathlib import Path
 from pyspark.sql import types as T
 
 from iceberg_quickstart_iac_spark.governance.audit import log_audit_event
-from iceberg_quickstart_iac_spark.templates.loader import iceberg_type_to_spark
+from iceberg_quickstart_iac_spark.templates.loader import spark_type
 
 
 @dataclass
@@ -55,7 +57,7 @@ class DriftReport:
 def diff_schema(live_schema: T.StructType, template: dict, audit: bool = True) -> DriftReport:
     """Compare a live StructType against a template's declared columns."""
     table = f"{template.get('namespace', 'default')}.{template['name']}"
-    expected = {c["name"]: iceberg_type_to_spark(c.get("type", "string")) for c in template["columns"]}
+    expected = {c["name"]: spark_type(c.get("type", "string")) for c in template["columns"]}
     live = {f.name: f.dataType for f in live_schema.fields}
 
     report = DriftReport(

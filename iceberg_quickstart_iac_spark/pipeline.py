@@ -38,7 +38,7 @@ from iceberg_quickstart_iac_spark.operators.quality import (
     run_checks,
 )
 from iceberg_quickstart_iac_spark.sources.readers import ALLOWED_SCHEMES, read_source
-from iceberg_quickstart_iac_spark.tables.snapstore import SnapTable
+from iceberg_quickstart_iac_spark.tables.snapstore import SnapTable, TableNotFoundError
 from iceberg_quickstart_iac_spark.templates.loader import spark_schema
 from iceberg_quickstart_iac_spark.sources.readers import project_to_schema
 
@@ -59,6 +59,17 @@ class Materialization:
     num_columns: int
     quality: QualityReport | None = None
     details: dict = field(default_factory=dict)
+
+
+def _load_or_create(warehouse_root: str | Path, template: dict) -> SnapTable:
+    """The template's table under ``warehouse_root``, created only when it
+    does not exist: any other load failure (a newer ``format_version``)
+    raises rather than being answered by overwriting the table."""
+    root = Path(warehouse_root) / template.get("namespace", "default") / template["name"]
+    try:
+        return SnapTable.load(root)
+    except TableNotFoundError:
+        return SnapTable.create(root, template)
 
 
 def materialize(
@@ -119,11 +130,7 @@ def materialize(
     if report is not None and enforce_quality and not report.passed:
         raise QualityGateError(report)
 
-    root = Path(warehouse_root) / template.get("namespace", "default") / name
-    try:
-        table = SnapTable.load(root)
-    except Exception:
-        table = SnapTable.create(root, template)
+    table = _load_or_create(warehouse_root, template)
 
     entry = table.append(df) if mode == "append" else table.overwrite(df)
 
@@ -191,11 +198,7 @@ def materialize_wap(
     else:
         df = project_to_schema(df, schema)
 
-    root = Path(warehouse_root) / template.get("namespace", "default") / name
-    try:
-        table = SnapTable.load(root)
-    except Exception:
-        table = SnapTable.create(root, template)
+    table = _load_or_create(warehouse_root, template)
 
     branch_name = f"{audit_branch_prefix}-{_uuid.uuid4().hex[:8]}"
     br = table.create_branch(branch_name)

@@ -58,6 +58,7 @@ from decimal import Decimal
 from pyspark.sql import DataFrame, SparkSession
 
 from iceberg_quickstart_iac_spark.governance.audit import log_audit_event
+from iceberg_quickstart_iac_spark.templates.loader import spark_type
 
 
 class TableNotFoundError(RuntimeError):
@@ -222,29 +223,6 @@ def _cmp_vals(a: str, b: str) -> int:
         return (fa > fb) - (fa < fb)
     except ValueError:
         return (a > b) - (a < b)
-
-
-def _declared_spark_type(type_str: str):
-    """Snapstore's declared-type resolution: ``decimal(p,s)`` is a real
-    Iceberg primitive and the engine maintains exact decimal columns
-    (e.g. IVM rollup sums), so it maps to DecimalType here — while the
-    TEMPLATE loader keeps the reference's decimal→string demotion
-    (pinned parity, ``templates/loader.py``). Everything else delegates
-    to the loader mapping, which raises on an unknown type name."""
-    from pyspark.sql import types as T
-
-    from iceberg_quickstart_iac_spark.templates.loader import iceberg_type_to_spark
-
-    m = re.match(r"^decimal\((\d+)\s*,\s*(\d+)\)$", type_str.strip().lower())
-    if m:
-        return T.DecimalType(int(m.group(1)), int(m.group(2)))
-    # Iceberg list type (`list<int>`; `array<int>` accepted as an alias):
-    # needed for real columns like embeddings and PQ code arrays, which
-    # the loader does not map
-    m = re.match(r"^(?:list|array)<(.+)>$", type_str.strip().lower())
-    if m:
-        return T.ArrayType(_declared_spark_type(m.group(1)))
-    return iceberg_type_to_spark(type_str)
 
 
 def _normalize_merge_clauses(
@@ -570,6 +548,7 @@ class SnapTable:
         columns = [dict(c) for c in (template or {}).get("columns", [])]
         for i, c in enumerate(columns):
             c.setdefault("id", i + 1)
+            spark_type(c.get("type", "string"))  # an undeclarable type raises here
         meta = {
             "format_version": _FORMAT_VERSION,
             "name": (template or {}).get("name", table.root.name),
@@ -730,7 +709,7 @@ class SnapTable:
                 found = f.dataType.simpleString()
                 # the declared type, or one it was safely widened from
                 names = [col["type"], *sorted(a for a, b in self._SAFE_PROMOTIONS if b == col["type"])]
-                typ = [n for n in names if _declared_spark_type(n).simpleString() == found]
+                typ = [n for n in names if spark_type(n).simpleString() == found]
                 if not typ:
                     fail(new[0], "column_types", f"holds {f.name!r} as {found}, "
                          f"which declared type {col['type']!r} cannot read")
@@ -883,10 +862,15 @@ class SnapTable:
             entries = self._entries()
             head = entries[-1] if entries else None
             seq = head["sequence"] + 1 if head else 0
+            try:
+                applied = delta.apply(head, name)
+            except CommitConflictError:
+                self._drop_unreferenced(delta.add + delta.add_deletes)
+                raise
             full = {
                 **extra,
                 "operation": delta.operation,
-                **delta.apply(head, name),
+                **applied,
                 **delta.epoch,
                 "sequence": seq,
                 "snapshot_id": uuid.uuid4().hex[:16],
@@ -912,11 +896,23 @@ class SnapTable:
             except FileExistsError:
                 if attempt == retries:
                     tmp.unlink(missing_ok=True)
+                    self._drop_unreferenced(delta.add + delta.add_deletes)
                     raise CommitConflictError(
                         f"Commit to {name} lost {retries + 1} races (sequence {seq})"
                     ) from None
                 time.sleep(min(0.05 * 2**attempt, 1.0) * (1 + random.random()))
         raise AssertionError("unreachable")
+
+    def _drop_unreferenced(self, dirs: list[str]) -> None:
+        """Delete the dirs among ``dirs`` that no entry references: what a
+        write that failed to commit materialized (Iceberg deletes a failed
+        commit's new files too). A kept leaf (a subpath of a live dir) and
+        a dir a cherry-pick, rollback or branch replay re-references
+        stay."""
+        whole, subs = self._referenced()
+        for d in dirs:
+            if "/" not in d and d not in whole and d not in subs:
+                shutil.rmtree(self.data_dir / d, ignore_errors=True)
 
     def _read_head(self, spark: SparkSession) -> tuple[dict, DataFrame]:
         """The head snapshot and a read of exactly it: a rewrite's
@@ -1003,7 +999,7 @@ class SnapTable:
         if declared_types:
             df = df.select(
                 *[
-                    F.col(c).cast(_declared_spark_type(declared_types[c])).alias(c)
+                    F.col(c).cast(spark_type(declared_types[c])).alias(c)
                     if c in declared_types
                     else F.col(c)
                     for c in df.columns
@@ -1529,7 +1525,7 @@ class SnapTable:
                         F.expr(clause["exprs"][col])
                         if col in clause["exprs"]
                         else F.lit(None)
-                    ).cast(_declared_spark_type(types[col]))
+                    ).cast(spark_type(types[col]))
                     pred = F.col("__sg_verdict") == label
                     expr = F.when(pred, val) if expr is None else expr.when(pred, val)
                 base = F.col(f"t.{col}")
@@ -2012,7 +2008,7 @@ class SnapTable:
 
         out = []
         for c in declared:
-            typ = _declared_spark_type(c["type"])
+            typ = spark_type(c["type"])
             # the declared field reads from WHATEVER file column carries its
             # id — this is what makes RENAME safe (old files keep serving
             # the renamed column) while a dropped-then-re-added name (fresh
@@ -2144,7 +2140,7 @@ class SnapTable:
 
         schema = T.StructType(
             [
-                T.StructField(c["name"], _declared_spark_type(c["type"]))
+                T.StructField(c["name"], spark_type(c["type"]))
                 for c in self.meta.get("columns", [])
             ]
         )
@@ -2797,7 +2793,7 @@ class SnapTable:
             return reader.option("mergeSchema", "false").load(paths)
         return reader.schema(
             T.StructType(
-                [T.StructField(n, _declared_spark_type(types[n])) for n in epoch["column_ids"]]
+                [T.StructField(n, spark_type(types[n])) for n in epoch["column_ids"]]
             )
         ).load(paths)
 
@@ -3026,6 +3022,7 @@ class SnapTable:
         pre-evolution files — and subsequent writes must carry the column
         (the write-side schema check enforces it).
         """
+        spark_type(col_type)  # an undeclarable type raises before any write
         meta = self.meta
         cols = meta.get("columns", [])
         if any(c["name"] == name for c in cols):
@@ -3765,12 +3762,7 @@ class SnapTable:
         """
         if older_than_ms is None:
             older_than_ms = _now_ms() - grace_ms
-        referenced = {d for e in self._entries() for d in self._entry_dirs(e)}
-        # branch commits reference dirs main never will — protect them
-        referenced |= {
-            d for e in self._all_branch_entries() for d in self._entry_dirs(e)
-        }
-        ref_whole, ref_subs = self._ref_index(referenced)
+        ref_whole, ref_subs = self._referenced()
         removed: list[str] = []
         for child in sorted(self.data_dir.iterdir()):
             if (
@@ -3895,11 +3887,7 @@ class SnapTable:
                 report["file_count_mismatch"] = {
                     "expected": snap["file_count"], "actual": total_files,
                 }
-        referenced = {d for e in entries for d in self._entry_dirs(e)}
-        referenced |= {
-            d for e in self._all_branch_entries() for d in self._entry_dirs(e)
-        }
-        ref_whole, ref_subs = self._ref_index(referenced)
+        ref_whole, ref_subs = self._referenced()
         if self.data_dir.is_dir():
             report["orphan_dirs"] = sorted(
                 c.name for c in self.data_dir.iterdir()
@@ -3989,6 +3977,13 @@ class SnapTable:
                 continue
             shutil.rmtree(child)
         return len(drop)
+
+    def _referenced(self) -> tuple[set[str], dict[str, set[tuple]]]:
+        """:meth:`_ref_index` of every dir an entry of the main log or of a
+        branch references (branch commits reference dirs main never
+        will)."""
+        entries = self._read_log(self.root / "_log") + self._all_branch_entries()
+        return self._ref_index({d for e in entries for d in self._entry_dirs(e)})
 
     @staticmethod
     def _ref_index(dirs) -> tuple[set[str], dict[str, set[tuple]]]:

@@ -47,7 +47,8 @@ a user can stand up and evolve tables with statements alone:
 
 Types parse from the Spark DDL names the generator emits (BIGINT, INT,
 DOUBLE, FLOAT, STRING, BOOLEAN, DATE, TIMESTAMP/_NTZ, BINARY,
-DECIMAL(p,s), ARRAY<T>) back to the template's Iceberg names. Governance:
+DECIMAL(p,s), ARRAY<T>) back to the template's Iceberg names through the
+one type mapper (``templates/loader.template_type``). Governance:
 readers cannot run DDL; DROP TABLE additionally requires admin
 (destructive — a writer can create and evolve, not erase history).
 """
@@ -55,6 +56,8 @@ readers cannot run DDL; DROP TABLE additionally requires admin
 from __future__ import annotations
 
 import re
+
+from iceberg_quickstart_iac_spark.templates.loader import template_type
 
 #: only the statement shapes this module handles — CREATE TEMP VIEW,
 #: CREATE FUNCTION, etc. fall through to spark.sql untouched
@@ -66,27 +69,6 @@ _DDL_KW = re.compile(
     re.IGNORECASE,
 )
 
-#: Spark DDL type name → template (Iceberg) type name
-_REVERSE_TYPES = {
-    "bigint": "long",
-    "long": "long",
-    "int": "int",
-    "integer": "int",
-    "smallint": "int",
-    "tinyint": "int",
-    "string": "string",
-    "varchar": "string",
-    "double": "double",
-    "float": "float",
-    "real": "float",
-    "boolean": "boolean",
-    "date": "date",
-    "timestamp_ntz": "timestamp",
-    "timestamp": "timestamptz",
-    "binary": "binary",
-    "uuid": "uuid",
-}
-
 #: DDL TBLPROPERTIES key → template property key (reverse of ddl.py's map)
 _REVERSE_PROPS = {
     "write.format.default": "write_format",
@@ -97,19 +79,6 @@ _REVERSE_PROPS = {
 
 def is_ddl(statement: str) -> bool:
     return _DDL_KW.match(statement) is not None
-
-
-def _parse_type(sql_type: str) -> str:
-    t = sql_type.strip().lower()
-    m = re.fullmatch(r"decimal\s*\(\s*(\d+)\s*,\s*(\d+)\s*\)", t)
-    if m:
-        return f"decimal({m.group(1)},{m.group(2)})"
-    m = re.fullmatch(r"array\s*<(.+)>", t)
-    if m:
-        return f"list<{_parse_type(m.group(1))}>"
-    if t in _REVERSE_TYPES:
-        return _REVERSE_TYPES[t]
-    raise ValueError(f"DDL: unsupported column type {sql_type!r}")
 
 
 def _unquote(s: str) -> str:
@@ -129,7 +98,7 @@ def _parse_coldef(item: str) -> dict:
     if not m:
         raise ValueError(f"DDL: unparseable column definition {item!r}")
     name, sql_type, not_null, comment = m.groups()
-    col: dict = {"name": name, "type": _parse_type(sql_type)}
+    col: dict = {"name": name, "type": template_type(sql_type)}
     if not_null:
         col["required"] = True
     if comment:
@@ -290,35 +259,6 @@ _DESCRIBE_RE = re.compile(
 )
 
 
-def _template_type_of(dtype) -> str:
-    """Spark DataType → template (Iceberg) type name, for CTAS schema
-    inference."""
-    from pyspark.sql import types as T
-
-    if isinstance(dtype, T.DecimalType):
-        return f"decimal({dtype.precision},{dtype.scale})"
-    if isinstance(dtype, T.ArrayType):
-        return f"list<{_template_type_of(dtype.elementType)}>"
-    mapping = {
-        T.LongType: "long",
-        T.IntegerType: "int",
-        T.ShortType: "int",
-        T.ByteType: "int",
-        T.StringType: "string",
-        T.DoubleType: "double",
-        T.FloatType: "float",
-        T.BooleanType: "boolean",
-        T.DateType: "date",
-        T.TimestampNTZType: "timestamp",
-        T.TimestampType: "timestamptz",
-        T.BinaryType: "binary",
-    }
-    for cls, name in mapping.items():
-        if isinstance(dtype, cls):
-            return name
-    raise ValueError(f"CTAS: unsupported inferred column type {dtype}")
-
-
 def _retract_session_views(lake, spark, name: str) -> None:
     """A catalog DROP must retract the Spark temp views the lazy
     registration created for ``name`` — purging the registry memo alone
@@ -411,7 +351,7 @@ def execute_ddl(lake, spark, statement: str, access_level: str = "admin"):
             "columns": [
                 {
                     "name": f.name,
-                    "type": _template_type_of(f.dataType),
+                    "type": template_type(f.dataType),
                     **({"required": True} if not f.nullable else {}),
                 }
                 for f in df.schema.fields
@@ -606,9 +546,7 @@ def execute_ddl(lake, spark, statement: str, access_level: str = "admin"):
         am = re.match(r"^alter\s+column\s+(\w+)\s+type\s+(.+)$", a,
                       re.IGNORECASE)
         if am:
-            return t.evolve_widen_column(
-                am.group(1), _parse_type(am.group(2))
-            )
+            return t.evolve_widen_column(am.group(1), template_type(am.group(2)))
         am = re.match(r"^write\s+ordered\s+by\s+(.+)$", a, re.IGNORECASE)
         if am:
             order = []

@@ -20,6 +20,8 @@ from iceberg_quickstart_iac_spark.templates.loader import (
     iceberg_type_to_spark,
     load_table_templates,
     spark_schema,
+    spark_type,
+    template_type,
 )
 
 __all__ = [
@@ -33,4 +35,6 @@ __all__ = [
     "iceberg_type_to_spark",
     "load_table_templates",
     "spark_schema",
+    "spark_type",
+    "template_type",
 ]

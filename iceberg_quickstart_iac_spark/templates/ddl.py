@@ -3,7 +3,9 @@
 Parity target: the reference renders per-table CREATE TABLE DDL into
 Athena named queries (``aws/modules/athena/main.tf:26-45``) and BigQuery
 jobs (``gcp/modules/biglake/main.tf:70-82``). Here the same template
-renders Spark-SQL Iceberg DDL: typed columns with NOT NULL + COMMENT,
+renders Spark-SQL Iceberg DDL: typed columns (the engine's exact mapping,
+``templates/loader.spark_type``: a table's stored ``DECIMAL`` and
+``ARRAY`` columns render as themselves) with NOT NULL + COMMENT,
 transform partitioning (``PARTITIONED BY (days(ts), hours(ts))``),
 ``WRITE ORDERED BY`` for the declared sort order, and TBLPROPERTIES
 mapped to Iceberg property names.
@@ -17,7 +19,7 @@ from __future__ import annotations
 
 import re
 
-from iceberg_quickstart_iac_spark.templates.loader import iceberg_type_to_spark
+from iceberg_quickstart_iac_spark.templates.loader import spark_type
 
 _BUCKET_RE = re.compile(r"^bucket\[(\d+)\]$")
 _TRUNCATE_RE = re.compile(r"^truncate\[(\d+)\]$")
@@ -56,8 +58,7 @@ def create_table_ddl(template: dict, catalog: str = "lakehouse") -> str:
 
     col_lines = []
     for col in template["columns"]:
-        spark_type = iceberg_type_to_spark(col.get("type", "string")).simpleString()
-        line = f"  {col['name']} {spark_type.upper()}"
+        line = f"  {col['name']} {spark_type(col.get('type', 'string')).simpleString().upper()}"
         if col.get("required"):
             line += " NOT NULL"
         if col.get("description"):

@@ -1,26 +1,37 @@
-"""Template loading + Iceberg-type → Spark-type mapping.
+"""Template loading and the engine's one type mapper.
 
-Behavioral parity with the reference loader
-(``dagster/lakehouse/utils/table_loader.py``):
+Every decision about type names lives here: one forward table maps a
+template (Iceberg) type name to a Spark type, and the reverse direction
+is derived from it. Callers: the snapstore (declared column types on its
+read, write, merge and upgrade paths), the SQL DDL front door (CREATE,
+ALTER, CTAS), the DDL renderer (``templates/ddl.py``) and schema drift.
 
-- every ``*.yaml`` in the template dir is loaded, keyed by file stem;
-- empty YAML raises ``ValueError``; a template missing any of
-  ``{name, columns, partition_spec}`` raises ``ValueError`` naming them;
-- ``decimal(p,s)`` demotes to string (reference line 68 and test
-  ``tests/test_table_loader.py:126-128``);
-- ``time`` demotes to string — Spark has no time-of-day type, matching the
-  reference's own Athena/Glue demotion (``aws/modules/athena/locals.tf:9``);
-- ``uuid`` maps to string (as in the reference's Arrow mapping).
+- :func:`spark_type` — the engine mapping: the 12 Iceberg primitives
+  (``time`` and ``uuid`` demote to string: Spark has neither, like the
+  reference's Athena/Glue and Arrow mappings), exact ``decimal(p,s)``, and
+  ``list<T>`` (``array<T>`` accepted). Any other name (``map<string,int>``,
+  ``struct<a:int>``, a typo) raises ``ValueError`` naming it, where the
+  reference falls back to string: a column declared as a map must not
+  silently hold strings.
+- :func:`template_type` — the reverse: a Spark ``DataType`` or a Spark
+  DDL type string (``BIGINT``, ``DECIMAL(18, 6)``, ``ARRAY<INT>`` and the
+  synonyms ``INTEGER``/``SMALLINT``/``TINYINT``/``VARCHAR``/``REAL``) to
+  the template name. ``time`` and ``uuid`` are one-way: they read back as
+  ``string``.
+- :func:`iceberg_type_to_spark` / :func:`spark_schema` — the template
+  compiler, with one parity rule on top of the engine mapping:
+  ``decimal(p,s)`` demotes to string (reference
+  ``dagster/lakehouse/utils/table_loader.py:68`` and test
+  ``tests/test_table_loader.py:126-128``).
 
-Differences (Spark-native, intentional):
-
-- output is ``pyspark.sql.types.StructType``, with ``required: true``
-  becoming ``nullable=False``;
-- any other unknown type name (``map<string,int>``, ``struct<a:int>``, a
-  typo) raises ``ValueError`` naming it, where the reference falls back to
-  string: a column declared as a map must not silently hold strings;
-- no ``lru_cache`` keyed on nothing — caching is per-directory and
-  explicit, so tests can load alternate template dirs freely.
+Template loading keeps the reference loader's behavior: every ``*.yaml``
+in the template dir is loaded, keyed by file stem; empty YAML raises
+``ValueError``; a template missing any of ``{name, columns,
+partition_spec}`` raises ``ValueError`` naming them. Spark-native
+differences: the output is a ``StructType`` with ``required: true``
+becoming ``nullable=False``, and caching is per-directory and explicit
+(no ``lru_cache`` keyed on nothing), so tests can load alternate template
+dirs freely.
 """
 
 from __future__ import annotations
@@ -36,7 +47,8 @@ SPEC_DIR = Path(__file__).resolve().parent / "specs"
 
 REQUIRED_KEYS = frozenset({"name", "columns", "partition_spec"})
 
-_TYPE_MAP: dict[str, T.DataType] = {
+#: template type name → Spark type: the one forward table
+_TYPES: dict[str, T.DataType] = {
     "boolean": T.BooleanType(),
     "int": T.IntegerType(),
     "long": T.LongType(),
@@ -47,9 +59,26 @@ _TYPE_MAP: dict[str, T.DataType] = {
     "timestamp": T.TimestampNTZType(),
     "timestamptz": T.TimestampType(),
     "string": T.StringType(),
-    "uuid": T.StringType(),
+    "uuid": T.StringType(),  # demoted, like the reference's Arrow mapping
     "binary": T.BinaryType(),
 }
+
+#: Spark DDL type name → template type name: each Spark type above by its
+#: own DDL name (the demoted time and uuid read back as string), plus the
+#: DDL synonyms
+_NAMES: dict[str, str] = {
+    **{t.simpleString(): n for n, t in _TYPES.items() if n not in ("time", "uuid")},
+    "long": "long",
+    "integer": "int",
+    "smallint": "int",
+    "tinyint": "int",
+    "varchar": "string",
+    "real": "float",
+    "uuid": "uuid",
+}
+
+_DECIMAL = re.compile(r"decimal\s*\(\s*(\d+)\s*,\s*(\d+)\s*\)", re.IGNORECASE)
+_LIST = re.compile(r"(?:list|array)\s*<(.+)>", re.IGNORECASE)
 
 _cache: dict[Path, dict[str, dict]] = {}
 
@@ -84,21 +113,45 @@ def get_template(name: str, templates_dir: Path | str | None = None) -> dict:
     return templates[name]
 
 
-_DECIMAL = re.compile(r"^decimal\(\s*\d+\s*,\s*\d+\s*\)$")
+def spark_type(type_name: str) -> T.DataType:
+    """The Spark type of a template type name (the engine mapping, exact
+    decimals); an unknown name raises ``ValueError`` naming it."""
+    name = type_name.strip()
+    if name in _TYPES:
+        return _TYPES[name]
+    m = _DECIMAL.fullmatch(name)
+    if m:
+        return T.DecimalType(int(m.group(1)), int(m.group(2)))
+    m = _LIST.fullmatch(name)
+    if m:
+        return T.ArrayType(spark_type(m.group(1)))
+    raise ValueError(
+        f"Unknown Iceberg type {type_name!r}: expected one of "
+        f"{sorted(_TYPES)}, decimal(p,s) or list<type>"
+    )
+
+
+def template_type(spark: T.DataType | str) -> str:
+    """The template type name of a Spark type or a Spark DDL type string;
+    a type the templates cannot declare raises ``ValueError`` naming it."""
+    ddl = spark.simpleString() if isinstance(spark, T.DataType) else spark
+    name = ddl.strip().lower()
+    if name in _NAMES:
+        return _NAMES[name]
+    m = _DECIMAL.fullmatch(name)
+    if m:
+        return f"decimal({m.group(1)},{m.group(2)})"
+    m = _LIST.fullmatch(name)
+    if m:
+        return f"list<{template_type(m.group(1))}>"
+    raise ValueError(f"Unsupported column type {ddl!r}: no template type maps to it")
 
 
 def iceberg_type_to_spark(iceberg_type: str) -> T.DataType:
-    """Map an Iceberg primitive type string to a Spark type;
-    ``decimal(p,s)`` demotes to string (reference parity), any other
-    unknown name raises ``ValueError``."""
-    if iceberg_type in _TYPE_MAP:
-        return _TYPE_MAP[iceberg_type]
-    if _DECIMAL.match(iceberg_type.strip().lower()):
-        return T.StringType()
-    raise ValueError(
-        f"Unknown Iceberg type {iceberg_type!r}: expected one of "
-        f"{sorted(_TYPE_MAP)} or decimal(p,s)"
-    )
+    """:func:`spark_type` with the reference's parity rule: ``decimal(p,s)``
+    demotes to string."""
+    dtype = spark_type(iceberg_type)
+    return T.StringType() if isinstance(dtype, T.DecimalType) else dtype
 
 
 def spark_schema(template: dict) -> T.StructType:

@@ -181,14 +181,22 @@ def test_branch_replay_race_keeps_append(spark, tmp_path):
     _assert_consistent(spark, t, {**BASE, 11: ("b", 11.0), 20: ("b", 20.0), **ADDED})
 
 
-@pytest.mark.parametrize("op", ["compact", "cow-delete"])
+@pytest.mark.parametrize("op", ["compact", "cow-delete", "partition-compact"])
 def test_two_rewrites_conflict_and_winner_stands(spark, tmp_path, op):
     """Two rewrites of the same files: the second to commit removes files
-    that are no longer live, so it raises and the winner's head stands."""
-    t = _table(spark, tmp_path / "t")
-    run = {"compact": _compact, "cow-delete": lambda spark, t: t.delete_where(spark, "k = 0")}
+    that are no longer live, so it raises, deletes the dir it wrote (not
+    the kept leaves of a partition-scoped compaction, which are live
+    dirs' subpaths), and the winner's head stands."""
+    t = _table(spark, tmp_path / "t", partitioned=op == "partition-compact")
+    run = {
+        "compact": _compact,
+        "cow-delete": lambda spark, t: t.delete_where(spark, "k = 0"),
+        "partition-compact": lambda spark, t: t.compact(
+            spark, partition_filter=[("g", "=", "a")]),
+    }
     with pytest.raises(CommitConflictError):
         _race(spark, t, run[op], _compact)
     entries = t._entries()
     assert len(entries) == 2 and entries[-1]["operation"] == "compact"
+    assert t.verify_integrity()["orphan_dirs"] == []
     _assert_consistent(spark, t, BASE)

@@ -91,6 +91,32 @@ def test_drift_ignores_deliberate_demotions():
     assert not diff_schema(live, template, audit=False).has_drift
 
 
+def test_drift_none_on_engine_table_with_decimal_and_list(spark, tmp_path):
+    """An engine table stores exact decimal(p,s) and list<…> columns; its
+    live schema matches its own template."""
+    from iceberg_quickstart_iac_spark.tables import SnapTable
+
+    template = {
+        "name": "priced",
+        "namespace": "ns",
+        "columns": [
+            {"name": "k", "type": "long"},
+            {"name": "price", "type": "decimal(12,2)"},
+            {"name": "embedding", "type": "list<float>"},
+        ],
+        "partition_spec": [],
+    }
+    from decimal import Decimal
+
+    t = SnapTable.create(tmp_path / "priced", template)
+    t.append(spark.createDataFrame(
+        [(1, Decimal("9.99"), [0.5])], "k LONG, price DECIMAL(12,2), embedding ARRAY<FLOAT>"
+    ))
+    live = t.read(spark).schema
+    report = diff_schema(live, template, audit=False)
+    assert not report.has_drift, report.message()
+
+
 def test_audit_rejects_unknown_event():
     import pytest as _pytest
 

@@ -274,3 +274,22 @@ def test_materialize_register_follow_head_tracks_appends(spark, tmp_path):
     t = SnapTable.load(tmp_path / "wh" / "lakehouse" / "reg_fh")
     t.append(df2)
     assert spark.sql("SELECT COUNT(*) AS n FROM reg_fh").first().n == 2
+
+
+@pytest.mark.parametrize("wap", [False, True])
+def test_materialize_refuses_newer_format_table(spark, tmp_path, batch, wap):
+    """Only a missing table is created: a table this engine cannot open (a
+    newer format_version) raises and is left byte-identical."""
+    import json
+
+    from iceberg_quickstart_iac_spark.pipeline import materialize_wap
+    from iceberg_quickstart_iac_spark.tables.snapstore import SnapTable
+
+    t = SnapTable.create(tmp_path / "lakehouse" / "mini_events", TEMPLATE)
+    meta = json.loads((t.root / "table.json").read_text())
+    (t.root / "table.json").write_text(json.dumps({**meta, "format_version": 3}))
+    before = (t.root / "table.json").read_bytes()
+    run = materialize_wap if wap else materialize
+    with pytest.raises(ValueError, match="format_version 3"):
+        run(spark, TEMPLATE, tmp_path, df=batch, checks=CHECKS)
+    assert (t.root / "table.json").read_bytes() == before

@@ -74,6 +74,8 @@ def test_generated_ddl_round_trips(spark, lake):
             {"name": "o_orderdate", "type": "timestamp"},
             {"name": "o_totalprice", "type": "double",
              "description": "gross price"},
+            {"name": "o_discount", "type": "decimal(18,6)"},
+            {"name": "o_partkeys", "type": "list<long>"},
         ],
         "partition_spec": [{"column": "o_orderdate", "transform": "month"}],
         "sort_order": [
@@ -97,6 +99,13 @@ def test_generated_ddl_round_trips(spark, lake):
     assert t.meta["partition_spec"] == template["partition_spec"]
     assert t.meta["sort_order"] == template["sort_order"]
     assert t.meta["properties"]["write_format"] == "parquet"
+    # the stored exact types render back as themselves: SHOW CREATE TABLE
+    # replays into a fresh catalog as the same declared schema
+    ddl = lake.sql(spark, "SHOW CREATE TABLE rt_orders").first().ddl
+    assert "o_discount DECIMAL(18,6)" in ddl and "o_partkeys ARRAY<BIGINT>" in ddl
+    lake2 = Lakehouse(lake.root.parent / "rt_replay")
+    lake2.sql_script(spark, ddl)
+    assert lake2.table("rt_orders").meta["columns"] == t.meta["columns"]
 
 
 def test_alter_table_evolution_statements(spark, lake):

@@ -2625,3 +2625,26 @@ def test_register_serves_mor_view_and_refreshes(spark, mor_table):
     # ...re-registration serves the new head
     t.register(spark, name="mor_reg", metadata_tables=False)
     assert spark.sql("SELECT COUNT(*) AS n FROM mor_reg").first().n == 4
+
+
+@pytest.mark.parametrize("bad", ["map<string,int>", "wat", "list<wat>"])
+def test_create_rejects_undeclarable_type(tmp_path, bad):
+    """A column type the mapper cannot resolve would brick every later read
+    and write: create raises naming it and leaves no directory behind."""
+    root = tmp_path / "bad"
+    with pytest.raises(ValueError, match="wat|map<string,int>"):
+        SnapTable.create(root, {"name": "bad", "columns": [
+            {"name": "k", "type": "long"}, {"name": "x", "type": bad},
+        ]})
+    assert not root.exists()
+
+
+@pytest.mark.parametrize("bad", ["map<string,int>", "wat", "list<wat>"])
+def test_add_column_rejects_undeclarable_type(spark, tmp_path, bad):
+    t = SnapTable.create(tmp_path / "t", {"name": "t", "columns": [{"name": "k", "type": "long"}]})
+    t.append(spark.createDataFrame([(1,)], "k LONG"))
+    before = (t.root / "table.json").read_bytes()
+    with pytest.raises(ValueError, match="wat|map<string,int>"):
+        t.evolve_add_column("x", bad)
+    assert (t.root / "table.json").read_bytes() == before
+    assert [r.k for r in t.read(spark).collect()] == [1]

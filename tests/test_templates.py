@@ -21,7 +21,7 @@ from iceberg_quickstart_iac_spark.templates import (
     spark_schema,
     write_order_ddl,
 )
-from iceberg_quickstart_iac_spark.tables.snapstore import _declared_spark_type
+from iceberg_quickstart_iac_spark.templates.loader import spark_type, template_type
 from iceberg_quickstart_iac_spark.templates.ddl import partition_transform_sql
 
 
@@ -61,7 +61,7 @@ def test_decimal_demotes_to_string():
     # loader (table_loader.py:68) — we keep that contract; snapstore's own
     # declared-type resolution keeps exact decimals.
     assert iceberg_type_to_spark("decimal(10,2)") == T.StringType()
-    assert _declared_spark_type("decimal(10,2)") == T.DecimalType(10, 2)
+    assert spark_type("decimal(10,2)") == T.DecimalType(10, 2)
 
 
 @pytest.mark.parametrize("name", ["map<string,int>", "struct<a:int>", "wat", "list<wat>"])
@@ -70,10 +70,53 @@ def test_unknown_type_raises_naming_it(name):
     strings: both mappers refuse a name they cannot map, and name it."""
     inner = name[5:-1] if name.startswith("list<") else name
     with pytest.raises(ValueError, match=re.escape(repr(inner))):
-        _declared_spark_type(name)
+        spark_type(name)
     if inner == name:
         with pytest.raises(ValueError, match=re.escape(repr(name))):
             iceberg_type_to_spark(name)
+
+
+#: every primitive the mapper accepts, plus exact decimals and lists;
+#: time and uuid are the one-way demotions (they read back as string)
+_ONE_WAY = {"time": "string", "uuid": "string"}
+
+
+@pytest.mark.parametrize(
+    "name",
+    ["boolean", "int", "long", "float", "double", "date", "time", "timestamp",
+     "timestamptz", "string", "uuid", "binary", "decimal(18,6)", "decimal(9,0)",
+     "list<long>", "list<decimal(9,2)>", "list<timestamp>", "list<list<int>>"],
+)
+def test_type_name_round_trips(name):
+    """name → Spark type → name, and name → rendered DDL → parsed name."""
+    from iceberg_quickstart_iac_spark.tables.sql_ddl import _parse_coldef
+
+    back = _ONE_WAY.get(name, name)
+    assert template_type(spark_type(name)) == back
+    ddl = create_table_ddl({"name": "t", "columns": [{"name": "c", "type": name}]})
+    col_line = ddl.splitlines()[1]
+    assert template_type(col_line.split(" ", 3)[3]) == back
+    if "list<list" not in name:  # the column grammar takes one level of <…>
+        assert _parse_coldef(col_line)["type"] == back
+
+
+@pytest.mark.parametrize(
+    ("ddl", "name"),
+    [("BIGINT", "long"), ("LONG", "long"), ("INTEGER", "int"), ("SMALLINT", "int"),
+     ("TINYINT", "int"), ("VARCHAR", "string"), ("REAL", "float"),
+     ("TIMESTAMP_NTZ", "timestamp"), ("TIMESTAMP", "timestamptz"),
+     ("DECIMAL(18, 6)", "decimal(18,6)"), ("ARRAY<BIGINT>", "list<long>")],
+)
+def test_ddl_synonyms_parse(ddl, name):
+    assert template_type(ddl) == name
+
+
+@pytest.mark.parametrize(
+    "spark", [T.MapType(T.StringType(), T.IntegerType()), "map<string,int>", "wat"]
+)
+def test_undeclarable_spark_type_raises(spark):
+    with pytest.raises(ValueError, match="Unsupported column type"):
+        template_type(spark)
 
 
 def test_spark_schema_event_stream():
