@@ -38,6 +38,7 @@ from iceberg_quickstart_iac_spark.tables.snapstore import (
     CommitConflictError,
     SnapTable,
     TableNotFoundError,
+    forget_head_registrations,
 )
 
 _REFS = "_catalog_refs"
@@ -73,9 +74,9 @@ class Lakehouse:
     def __init__(self, root: str | Path):
         self.root = Path(root)
         self.root.mkdir(parents=True, exist_ok=True)
-        # lazy SQL front door: view name -> (scope, access_level,
-        # with_metadata, head_sequence) already registered by sql() in
-        # this process (scope = "main" or a catalog-branch name)
+        # the front door's memo of views it expands itself: time-travel
+        # pins (``name__asof_*``) and catalog-view expansions. Table views
+        # follow the head through the follow-head record in snapstore.
         self._sql_registry: dict[str, tuple] = {}
 
     # -- tables ------------------------------------------------------------
@@ -106,8 +107,11 @@ class Lakehouse:
         """Remove a table — its metadata, commit log, and data files.
         Destructive and unversioned (there is no catalog-level log to
         time-travel a drop); the SQL front door additionally gates it to
-        admin. Registered temp views in other sessions keep serving
-        their already-resolved snapshot until re-registration fails."""
+        admin. Forgets every follow-head record on the dropped table, so
+        no later commit — to a re-created table of the same name — re-
+        resolves one of its views; the temp views themselves keep serving
+        their already-resolved snapshot (SQL ``DROP TABLE`` also drops
+        them from the statement's session)."""
         import shutil
 
         root = self.root / name
@@ -115,6 +119,7 @@ class Lakehouse:
             if if_exists:
                 return False
             raise TableNotFoundError(f"No table {name!r} in {self.root}")
+        forget_head_registrations(root=root)
         shutil.rmtree(root)
         # purge EVERY registry entry derived from this table, not just the
         # base view: memoized pinned `name__asof_*` views would otherwise
@@ -219,9 +224,10 @@ class Lakehouse:
         return True
 
     def _purge_registry(self, name: str) -> None:
-        """Forget every memoized registration derived from ``name`` (base,
-        pinned as-of, and branch-scope entries) so the next statement
-        re-resolves against the new definition/state."""
+        """Forget every memoized view derived from ``name`` (a catalog
+        view's expansion, its branch-scope expansions, and pinned as-of
+        views) so the next statement re-resolves against the new
+        definition/state."""
         stale = [
             k
             for k in self._sql_registry
@@ -532,17 +538,17 @@ class Lakehouse:
         path scans the statement for catalog table names (and their
         ``__snapshots``/``__files``/… metadata views — those register
         only when actually named, so footer-stat builds are never paid
-        unreferenced), registers the hits once with ``follow_head=True``,
-        and memoizes per view name — repeat statements against the same
-        tables re-register nothing. The memo pins each table's head
-        SEQUENCE via a filename-only probe (one directory listing per
-        referenced table per statement). When the head moved, the
-        follow-head registry decides: a commit made in THIS process was
-        already re-registered by its commit-time refresh, which records
-        the head it resolved, so a registration at the probed head counts
-        as current and each commit is registered exactly once. A commit
-        made by ANOTHER process never fires that refresh, so its head
-        matches no registration and the next statement re-registers: this
+        unreferenced), and registers the hits with ``follow_head=True``.
+        What each view serves lives in ONE place, its follow-head record
+        (:meth:`SnapTable.register`), fed by two triggers. A commit made
+        in THIS process re-registers the view at commit time and records
+        the head it resolved. Each statement probes every referenced
+        table's head SEQUENCE (a filename-only probe, one directory
+        listing) and asks :meth:`SnapTable.follows_head_at` whether the
+        record already serves it — so repeat statements re-register
+        nothing and each own-process commit is registered exactly once.
+        A commit made by ANOTHER process never fires the refresh, so no
+        record serves its head and the next statement re-registers: this
         path can never serve a stale head.
 
         Name matching is identifier-token based: a table whose name only
@@ -624,80 +630,31 @@ class Lakehouse:
             statement = self._rewrite_scope_refs(statement, suffix)
         tokens = set(re.findall(r"[A-Za-z_][A-Za-z0-9_]*", statement))
 
-        def ensure_registered(force: bool = False) -> None:
-            for name in self.list_tables():
-                view = name + suffix
-                wants_md = any(view + s in tokens for s in self._MD_SUFFIXES)
-                if view not in tokens and not wants_md:
-                    continue
-                t = accessor(name)
-                # filename-only head probe: follow_head refreshes commits
-                # made IN this process, but a commit from another process
-                # never fires our registry — the probe (one directory
-                # listing, no reads) catches it per statement
-                head = t.head_sequence()
-                if head is None and t.current_snapshot() is not None:
-                    # a branch fork with no branch commits yet: there is
-                    # no branch head SEQUENCE, but the readable head is
-                    # the fork point — register it (sentinel -2 keys the
-                    # memo until the first branch commit moves
-                    # head_sequence to a real int). Without this, a
-                    # branch statement on an untouched table would fall
-                    # into the declared-empty path below and silently
-                    # serve 0 rows where read() serves the fork data.
-                    head = -2
-                prev = self._sql_registry.get(view)
-                with_md = wants_md or (prev[2] if prev else False)
-                # the scope lives in the VIEW NAME (suffix), so main and
-                # branch statements register disjoint views and never
-                # thrash each other; scope stays in the memo tuple purely
-                # as a debugging breadcrumb
-                want = (_scope, str(access_level), with_md, head)
-                if prev == want:
-                    continue
-                if (
-                    head is not None
-                    and not force
-                    and t.follows_head_at(spark, view, head, access_level, with_md)
-                ):
-                    # a commit made in this process: its commit-time
-                    # refresh already re-resolved the view at this head
-                    self._sql_registry[view] = want
-                    continue
-                if head is None:
-                    # created-but-never-committed: serve the DECLARED
-                    # empty schema (governed) rather than silently
-                    # skipping — `SELECT * FROM t` on a fresh table is 0
-                    # typed rows, not an opaque TABLE_OR_VIEW_NOT_FOUND
-                    # after a pointless memo-recovery retry. Metadata
-                    # views need a snapshot; referencing one here is a
-                    # real user error worth a descriptive raise.
-                    if wants_md:
-                        raise TableNotFoundError(
-                            f"Table {name!r} has no commits yet — its "
-                            f"metadata views ({name}__snapshots/…) only "
-                            f"exist after the first commit"
-                        )
-                    from iceberg_quickstart_iac_spark.governance.access import (
-                        read_with_access_level,
-                    )
+        # (table, view, names a metadata view) per referenced catalog table
+        refs = []
+        for name in self.list_tables():
+            view = name + suffix
+            wants_md = any(view + s in tokens for s in self._MD_SUFFIXES)
+            if view in tokens or wants_md:
+                refs.append((name, view, wants_md))
 
-                    df = read_with_access_level(
-                        t._empty_declared(spark),
-                        t.meta,
-                        access_level,
-                        table=t.fq_name,
-                    )
-                    df.createOrReplaceTempView(view)
-                else:
+        def ensure_registered() -> None:
+            for name, view, wants_md in refs:
+                t = accessor(name)
+                # the statement trigger: a filename-only head probe (one
+                # directory listing, no reads) catches a commit whose
+                # commit-time refresh never fired here — one made by
+                # another process — and the view's follow-head record
+                # says whether it already serves that head
+                head = t.head_sequence()
+                if not t.follows_head_at(spark, view, head, access_level, wants_md):
                     t.register(
                         spark,
                         name=view,
                         access_level=access_level,
-                        metadata_tables=with_md,
+                        metadata_tables=wants_md,
                         follow_head=True,
                     )
-                self._sql_registry[view] = want
 
         def ensure_views() -> None:
             # catalog views are versioned SQL text: expand the CURRENT
@@ -753,16 +710,15 @@ class Lakehouse:
         try:
             return spark.sql(statement)
         except AnalysisException:
-            # the memo can go stale if a view was dropped behind our back
-            # (manual unregister / new session): forget it, re-register the
-            # referenced tables once, and let a real error re-raise
+            # a view can be dropped behind the records' back (a manual
+            # dropTempView, a new session): forget what the statement
+            # names, re-register once, and let a real error re-raise
             for name in list(self._sql_registry):
-                if name in tokens or any(
-                    name + s in tokens for s in self._MD_SUFFIXES
-                ):
+                if name in tokens:
                     self._sql_registry.pop(name, None)
+            forget_head_registrations([view for _, view, _ in refs])
             ensure_views()
-            ensure_registered(force=True)
+            ensure_registered()
             return spark.sql(statement)
 
     def sql_script(self, spark, script: str, access_level: str = "admin"):

@@ -295,24 +295,35 @@ def _footer_row_count(files: list[Path]) -> int:
 #: per-read nag)
 _ORC_SKIP_WARNED: set[Path] = set()
 
-#: follow-head SQL registrations: table root -> {view name: registration
-#: spec}. ``_commit`` re-resolves these after every successful commit, so a
-#: ``spark.sql`` statement against the view always reads the table's current
-#: committed state — Athena's contract (a query never pins a snapshot;
-#: ``aws/modules/athena/main.tf:26-67``). Process-local by design: Spark
-#: temp views are session objects, and the registry's job is only to keep
-#: them in step with commits made IN this process.
-_HEAD_REGISTRATIONS: dict[str, dict[str, dict]] = {}
+#: the follow-head record, one per view name: what the view serves (table
+#: handle and resolved root, session, access level, row policies,
+#: metadata-tables flag, a changelog view's anchor, and the head sequence
+#: it was resolved at). Every ``register``/``register_changes`` call writes
+#: or clears its view's record; two triggers re-resolve a recorded view — a
+#: commit made through this process (``_refresh_head_registrations``) and a
+#: ``Lakehouse.sql`` statement whose head probe the record does not serve.
+#: Process-local by design: Spark temp views are session objects.
+_HEAD_REGISTRATIONS: dict[str, dict] = {}
 
 
 def _head_reg_key(root: Path) -> str:
-    """Registry key for a table root: resolved, so two SnapTable handles
-    opened through different path spellings (relative vs absolute, via a
-    symlinked warehouse) refresh each other's registrations."""
+    """A table root's identity in the records: resolved, so two SnapTable
+    handles opened through different path spellings (relative vs absolute,
+    via a symlinked warehouse) refresh each other's registrations."""
     try:
         return str(Path(root).resolve())
     except OSError:
         return str(root)
+
+
+def forget_head_registrations(views=(), root: Path | None = None) -> None:
+    """Forget the follow-head records of ``views`` and every record on the
+    table at ``root``: their views stop following commits, and the next
+    ``Lakehouse.sql`` statement naming one registers it afresh."""
+    key = _head_reg_key(root) if root is not None else None
+    for name, rec in list(_HEAD_REGISTRATIONS.items()):
+        if name in views or rec["root"] == key:
+            del _HEAD_REGISTRATIONS[name]
 
 
 def _row_group_stats(group) -> dict[str, tuple]:
@@ -2307,22 +2318,26 @@ class SnapTable:
         the snapshot resolved at registration time — re-register after
         writes to serve the new head (the scheduled-refresh cadence the
         runbook's view maintenance uses). ``follow_head=True`` matches
-        Athena's actual contract instead: every commit made through this
-        process re-resolves and re-registers the view (the write path
-        funnels through ``_commit``), so ``spark.sql`` always reads the
-        current committed state — including the MoR view after
-        equality-delete commits. Follow-head excludes the time-travel
-        arguments (a pinned snapshot cannot also track the head) and costs
-        one view re-resolution per commit (plus the metadata-table rebuild
-        when those are registered — leave them off on hot write paths).
-        Follow-head is PROCESS-LOCAL: temp views are Spark session objects
-        and the refresh hook fires only for commits made through this
-        process's table handles — for multi-process serving use
-        ``Lakehouse.sql``, which head-probes the commit log per statement
-        (one directory listing) and re-registers on any commit no
-        follow-head refresh has registered yet (the registry records the
-        head each view was resolved at), whoever made it. Returns the base
-        view name.
+        Athena's actual contract instead: the view serves the current
+        committed state — including the MoR view after equality-delete
+        commits — and, before the table's first commit, its declared
+        empty schema (metadata tables need a snapshot and raise).
+        Follow-head excludes the time-travel arguments (a pinned snapshot
+        cannot also track the head) and costs one view re-resolution per
+        commit (plus the metadata-table rebuild when those are registered
+        — leave them off on hot write paths).
+
+        Every call writes or clears the ONE follow-head record of its view
+        name (``_HEAD_REGISTRATIONS``): a follow-head call records the table
+        handle, settings and the head sequence it resolved; a pinned call
+        clears the record, so no later commit, on this table or another,
+        re-resolves a view the caller pinned. Two triggers re-register a
+        recorded view: every commit made through this process (the write
+        path funnels through ``_commit``), and ``Lakehouse.sql``, which
+        head-probes the commit log per statement (one directory listing)
+        and re-registers when the record does not serve the probed head —
+        a commit from another process, whose refresh never fired here.
+        Returns the base view name.
 
         Audit granularity: the underlying ``table_read`` plus a
         ``table_registered`` event log at REGISTRATION time; subsequent
@@ -2353,9 +2368,23 @@ class SnapTable:
         # probed BEFORE the read: a commit landing in between makes the
         # recorded head older than the one served, never newer
         head = self.head_sequence() if follow_head else None
-        df = self.read(
-            spark, snapshot_id=snapshot_id, as_of_ms=as_of_ms, tag=tag
-        )
+        try:
+            df = self.read(
+                spark, snapshot_id=snapshot_id, as_of_ms=as_of_ms, tag=tag
+            )
+        except TableNotFoundError:
+            # no commits yet: a follow-head view serves the DECLARED empty
+            # schema (`SELECT * FROM t` on a fresh table is 0 typed rows)
+            # until the first commit re-resolves it
+            if not follow_head:
+                raise
+            if metadata_tables:
+                raise TableNotFoundError(
+                    f"Table {self.meta['name']!r} has no commits yet — its "
+                    f"metadata views ({base}__snapshots/…) only exist after "
+                    "the first commit"
+                ) from None
+            df = self._empty_declared(spark)
         df = read_with_access_level(
             df, self.meta, access_level, table=self.fq_name
         )
@@ -2381,23 +2410,17 @@ class SnapTable:
                 f"{base}__delete_files"
             )
             self.refs(spark).createOrReplaceTempView(f"{base}__refs")
+        _HEAD_REGISTRATIONS.pop(base, None)
         if follow_head:
-            # a view name tracks exactly ONE table: if another table root
-            # holds a follow-head registration under this name, drop it —
-            # otherwise commits on either table would silently thrash the
-            # view between two tables' heads (last committer wins)
-            own = _head_reg_key(self.root)
-            for root_key, specs in _HEAD_REGISTRATIONS.items():
-                if root_key != own:
-                    specs.pop(base, None)
-            _HEAD_REGISTRATIONS.setdefault(_head_reg_key(self.root), {})[base] = {
+            _HEAD_REGISTRATIONS[base] = {
                 "table": self,
+                "root": _head_reg_key(self.root),
                 "spark": spark,
                 "access_level": access_level,
                 "row_policies": dict(row_policies or {}),
                 "metadata_tables": metadata_tables,
-                # the head sequence the view was resolved at, so the
-                # lazy front door can tell an already-current view
+                # None before the first commit and on an untouched branch
+                # fork (no branch-local log yet)
                 "head": head,
             }
         log_audit_event(
@@ -2421,23 +2444,25 @@ class SnapTable:
         access_level: str,
         metadata_tables: bool,
     ) -> bool:
-        """Whether view ``name`` is a follow-head registration of this
-        table handle, made in ``spark`` with these settings and no row
-        policies, resolved at head sequence ``head`` — i.e. it already
-        serves that head. The commit-time refresh keeps this true after
-        every commit made in this process, so the lazy SQL front door
-        registers each such commit once, not twice."""
-        spec = _HEAD_REGISTRATIONS.get(_head_reg_key(self.root), {}).get(name)
+        """Whether the record of view ``name`` is a follow-head
+        registration of this table (root and branch), made in ``spark`` at
+        ``access_level`` with no row policies (and with metadata tables,
+        if asked), resolved at head sequence ``head`` — i.e. the view
+        already serves that head. The commit-time refresh keeps this true
+        after every commit made in this process, so the lazy SQL front
+        door registers each such commit once, not twice."""
+        rec = _HEAD_REGISTRATIONS.get(name)
         return (
-            spec is not None
-            and spec.get("kind") != "changes"
-            and spec.get("head") == head
-            and spec["spark"] is spark
-            and getattr(spec["table"], "branch_name", None)
+            rec is not None
+            and rec.get("kind") != "changes"
+            and rec["head"] == head
+            and rec["spark"] is spark
+            and rec["root"] == _head_reg_key(self.root)
+            and getattr(rec["table"], "branch_name", None)
             == getattr(self, "branch_name", None)
-            and str(spec["access_level"]) == str(access_level)
-            and not spec["row_policies"]
-            and spec["metadata_tables"] == metadata_tables
+            and str(rec["access_level"]) == str(access_level)
+            and not rec["row_policies"]
+            and (rec["metadata_tables"] or not metadata_tables)
         )
 
     def register_changes(
@@ -2467,8 +2492,9 @@ class SnapTable:
         the current head on every commit made through this process, so
         the view always serves "everything changed since the anchor".
         Follow-head excludes ``to_snapshot_id`` (a pinned end cannot also
-        track the head) and, like :meth:`register`, is process-local —
-        temp views are session objects."""
+        track the head). Like :meth:`register`, every call writes (follow-
+        head) or clears (pinned) the one record of its view name, and the
+        record is process-local — temp views are session objects."""
         from iceberg_quickstart_iac_spark.governance.access import (
             read_with_access_level,
             read_with_row_policies,
@@ -2488,15 +2514,11 @@ class SnapTable:
             df, row_policies or {}, access_level, table=self.fq_name
         )
         df.createOrReplaceTempView(base)
+        _HEAD_REGISTRATIONS.pop(base, None)
         if follow_head:
-            # same name-takeover guard as register(): one view name tracks
-            # exactly one table root
-            own = _head_reg_key(self.root)
-            for root_key, specs in _HEAD_REGISTRATIONS.items():
-                if root_key != own:
-                    specs.pop(base, None)
-            _HEAD_REGISTRATIONS.setdefault(own, {})[base] = {
+            _HEAD_REGISTRATIONS[base] = {
                 "table": self,
+                "root": _head_reg_key(self.root),
                 "spark": spark,
                 "access_level": access_level,
                 "row_policies": dict(row_policies or {}),
@@ -2520,25 +2542,26 @@ class SnapTable:
         return base
 
     def unregister(self, spark: SparkSession, name: str | None = None) -> None:
-        """Drop a registration's views and, if it was follow-head, stop
-        tracking commits for it."""
+        """Drop a registration's views and forget their follow-head
+        records (the head view's and the changelog view's)."""
         base = name or self.meta["name"]
-        specs = _HEAD_REGISTRATIONS.get(_head_reg_key(self.root), {})
-        specs.pop(base, None)
-        specs.pop(base + "__changes", None)  # follow-head changelog spec
+        forget_head_registrations((base, base + "__changes"))
         for suffix in ("", "__snapshots", "__files", "__partitions",
                        "__delete_files", "__refs", "__changes"):
             spark.catalog.dropTempView(base + suffix)
 
     def _refresh_head_registrations(self) -> None:
-        """Re-resolve every follow-head view on this table root against the
-        just-committed state. Uses each registration's OWN table handle (a
-        branch view re-resolves its branch head, the main table its own), so
-        a commit on either never serves the other's rows."""
+        """Re-resolve every follow-head record on this table root against
+        the just-committed state — the commit trigger. Uses each record's
+        OWN table handle (a branch view re-resolves its branch head, the
+        main table its own), so a commit on either never serves the
+        other's rows."""
         import warnings
 
-        specs = _HEAD_REGISTRATIONS.get(_head_reg_key(self.root), {})
-        for base, spec in list(specs.items()):
+        own = _head_reg_key(self.root)
+        for base, spec in list(_HEAD_REGISTRATIONS.items()):
+            if spec["root"] != own:
+                continue
             try:
                 if spec.get("kind") == "changes":
                     # live changelog view: fixed interval start, end
@@ -2563,7 +2586,7 @@ class SnapTable:
             except Exception as exc:  # noqa: BLE001 — the COMMIT landed;
                 # a dead SparkSession in the registry must not make the
                 # write look failed. Drop the registration and warn loudly.
-                specs.pop(base, None)
+                _HEAD_REGISTRATIONS.pop(base, None)
                 warnings.warn(
                     f"follow-head view {base!r} on {self.fq_name} could not "
                     f"be refreshed and was dropped: {exc}",

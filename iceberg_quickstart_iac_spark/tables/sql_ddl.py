@@ -89,13 +89,20 @@ def _unquote(s: str) -> str:
 
 
 def _parse_coldef(item: str) -> dict:
+    # the type's bracket group runs to the NOT NULL / COMMENT trailer and
+    # must balance, so nested types (ARRAY<ARRAY<INT>>) parse
     m = re.match(
-        r"^(\w+)\s+([A-Za-z_]+(?:\s*\(\s*\d+\s*,\s*\d+\s*\)|\s*<[^>]+>)?)"
+        r"^(\w+)\s+([A-Za-z_]+(?:\s*[(<][\w\s,()<>]*?[)>])?)"
         r"(\s+not\s+null)?(?:\s+comment\s+('(?:[^']|'')*'))?\s*$",
         item.strip(),
         re.IGNORECASE,
     )
-    if not m:
+    depth = 0
+    for ch in m.group(2) if m else "":
+        depth += (ch in "(<") - (ch in ")>")
+        if depth < 0:
+            break
+    if not m or depth:
         raise ValueError(f"DDL: unparseable column definition {item!r}")
     name, sql_type, not_null, comment = m.groups()
     col: dict = {"name": name, "type": template_type(sql_type)}
@@ -261,23 +268,14 @@ _DESCRIBE_RE = re.compile(
 
 def _retract_session_views(lake, spark, name: str) -> None:
     """A catalog DROP must retract the Spark temp views the lazy
-    registration created for ``name`` — purging the registry memo alone
-    leaves the session views resolvable, so a post-drop SELECT would
-    silently serve the stale expansion instead of erroring (and a
-    re-created table could serve the dropped one's rows until the next
-    head probe). Drops the base view plus every derived variant: the
-    ``name__asof_*`` time-travel pins, ``name__scope_*`` branch views,
+    registration created for ``name`` — forgetting the memo and the
+    follow-head records (``Lakehouse.drop_table`` / ``drop_view`` do that
+    for every caller) leaves the session views resolvable, so a post-drop
+    SELECT would silently serve the stale expansion instead of erroring.
+    Drops the base view plus every derived variant: the ``name__asof_*``
+    time-travel pins, ``name__scope_*`` branch views,
     ``name__snapshots``/… metadata views, and their combinations — all
-    derived names start with ``name__`` by construction. Also forgets the
-    follow-head refresh specs keyed on the (now deleted) table root, so a
-    later commit to a re-created same-name table never re-resolves a
-    dropped handle."""
-    from iceberg_quickstart_iac_spark.tables.snapstore import (
-        _HEAD_REGISTRATIONS,
-        _head_reg_key,
-    )
-
-    _HEAD_REGISTRATIONS.pop(_head_reg_key(lake.root / name), None)
+    derived names start with ``name__`` by construction."""
     prefix = name + "__"
     for t in spark.catalog.listTables():
         if t.isTemporary and (t.name == name or t.name.startswith(prefix)):

@@ -18,6 +18,19 @@ def _tpl(name):
     }
 
 
+def _count_registers(monkeypatch) -> list:
+    """Record the view name of every ``SnapTable.register`` call."""
+    calls = []
+    real_register = SnapTable.register
+
+    def counting_register(self, *args, **kwargs):
+        calls.append(kwargs.get("name"))
+        return real_register(self, *args, **kwargs)
+
+    monkeypatch.setattr(SnapTable, "register", counting_register)
+    return calls
+
+
 @pytest.fixture()
 def lake(spark, tmp_path):
     lh = Lakehouse(tmp_path / "lake")
@@ -413,8 +426,24 @@ def test_drop_table_purges_pinned_asof_memos(spark, lake):
     ).first().n == 2
 
 
+def test_python_drop_table_forgets_follow_head_records(
+    spark, lake, monkeypatch
+):
+    """``Lakehouse.drop_table`` forgets the dropped table's follow-head
+    records, as SQL DROP does: a commit to a re-created table of the same
+    name re-resolves none of the dropped table's views."""
+    lake.table("a").register(
+        spark, name="fh_a", follow_head=True, metadata_tables=False
+    )
+    lake.drop_table("a")
+    calls = _count_registers(monkeypatch)
+    t = lake.create_table(_tpl("a"))
+    t.append(spark.createDataFrame([(1, "x"), (2, "y")], "k LONG, v STRING"))
+    assert calls == []
+
+
 def test_branch_and_main_scopes_serve_concurrently_without_thrash(
-    spark, lake
+    spark, lake, monkeypatch
 ):
     """Branch statements rewrite to scope-suffixed views, so interleaving
     main and branch statements re-registers NOTHING after the first
@@ -424,11 +453,11 @@ def test_branch_and_main_scopes_serve_concurrently_without_thrash(
     br.sql(spark, "INSERT INTO a VALUES (9, 'branchrow')")
     assert br.sql(spark, "SELECT COUNT(*) AS n FROM a").first().n == 2
     assert lake.sql(spark, "SELECT COUNT(*) AS n FROM a").first().n == 1
-    snapshot = dict(lake._sql_registry)
+    calls = _count_registers(monkeypatch)
     for _ in range(3):
         assert lake.sql(spark, "SELECT COUNT(*) AS n FROM a").first().n == 1
         assert br.sql(spark, "SELECT COUNT(*) AS n FROM a").first().n == 2
-    assert dict(lake._sql_registry) == snapshot
+    assert calls == []
     # both scopes in ONE statement: the suffixed view is a real session
     # view, so a cross-scope audit query (pre-publish diff) just works
     suffix = lake._scope_suffix("branch:live")
@@ -516,3 +545,22 @@ def test_branch_scope_composes_with_time_travel(spark, lake):
     assert sorted(
         r.k for r in lake.sql(spark, "SELECT k FROM a").collect()
     ) == [1, 2]
+
+
+def test_branch_sql_serves_untouched_fork_without_reregistering(
+    spark, lake, monkeypatch
+):
+    """A catalog-branch read of a table with no branch commits serves the
+    fork's data (there is no branch head sequence yet); repeating it
+    registers nothing, and the first branch commit is served next."""
+    br = lake.create_branch("fork")
+    assert br.sql(spark, "SELECT COUNT(*) AS n FROM b").first().n == 1
+    calls = _count_registers(monkeypatch)
+    assert br.sql(spark, "SELECT COUNT(*) AS n FROM b").first().n == 1
+    assert calls == []
+    br.table("b").append(
+        spark.createDataFrame([(2, "branchrow")], "k LONG, v STRING")
+    )
+    rows = br.sql(spark, "SELECT v FROM b ORDER BY k").collect()
+    assert [r.v for r in rows] == ["b", "branchrow"]
+    assert lake.sql(spark, "SELECT COUNT(*) AS n FROM b").first().n == 1

@@ -76,6 +76,7 @@ def test_generated_ddl_round_trips(spark, lake):
              "description": "gross price"},
             {"name": "o_discount", "type": "decimal(18,6)"},
             {"name": "o_partkeys", "type": "list<long>"},
+            {"name": "o_linegroups", "type": "list<list<int>>"},
         ],
         "partition_spec": [{"column": "o_orderdate", "transform": "month"}],
         "sort_order": [
@@ -103,6 +104,7 @@ def test_generated_ddl_round_trips(spark, lake):
     # replays into a fresh catalog as the same declared schema
     ddl = lake.sql(spark, "SHOW CREATE TABLE rt_orders").first().ddl
     assert "o_discount DECIMAL(18,6)" in ddl and "o_partkeys ARRAY<BIGINT>" in ddl
+    assert "o_linegroups ARRAY<ARRAY<INT>>" in ddl
     lake2 = Lakehouse(lake.root.parent / "rt_replay")
     lake2.sql_script(spark, ddl)
     assert lake2.table("rt_orders").meta["columns"] == t.meta["columns"]

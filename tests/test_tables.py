@@ -2381,6 +2381,42 @@ def test_register_follow_head_name_takeover_stops_old_table(spark, tmp_path):
     assert spark.sql("SELECT COUNT(*) AS n FROM fh_shared").first().n == 2
 
 
+def test_register_pinned_after_follow_head_stays_pinned(spark, tmp_path):
+    """Re-registering a follow-head view name PINNED stops it following:
+    a later commit must not re-resolve it to the head."""
+    t = SnapTable.create(
+        tmp_path / "pin_same",
+        {"name": "pin_same", "namespace": "lakehouse",
+         "columns": [{"name": "k", "type": "long"}]},
+    )
+    t.append(spark.createDataFrame([(1,)], "k LONG"))
+    v1 = t.current_snapshot()["snapshot_id"]
+    t.append(spark.createDataFrame([(2,)], "k LONG"))
+    t.register(spark, name="pin_v", follow_head=True, metadata_tables=False)
+    t.register(spark, name="pin_v", snapshot_id=v1, metadata_tables=False)
+    t.append(spark.createDataFrame([(3,)], "k LONG"))
+    assert spark.sql("SELECT COUNT(*) AS n FROM pin_v").first().n == 1
+
+
+def test_register_pinned_takeover_from_other_table_stays_pinned(spark, tmp_path):
+    """A pinned registration of a name another table follows takes the
+    name over: the first table's commits must not re-resolve it."""
+    def mk(n, rows):
+        t = SnapTable.create(
+            tmp_path / n,
+            {"name": n, "namespace": "lakehouse",
+             "columns": [{"name": "k", "type": "long"}]},
+        )
+        t.append(spark.createDataFrame([(i,) for i in range(rows)], "k LONG"))
+        return t
+
+    t1, t2 = mk("pin_p", 2), mk("pin_q", 10)
+    t1.register(spark, name="pin_w", follow_head=True, metadata_tables=False)
+    t2.register(spark, name="pin_w", metadata_tables=False)
+    t1.append(spark.createDataFrame([(7,)], "k LONG"))
+    assert spark.sql("SELECT COUNT(*) AS n FROM pin_w").first().n == 10
+
+
 def test_register_follow_head_on_branch_tracks_branch_head(spark, tmp_path):
     """A branch view registers + follows like any table: branch commits
     surface through it, main commits refresh it without serving main's
