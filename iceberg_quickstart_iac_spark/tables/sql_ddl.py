@@ -266,7 +266,7 @@ _DESCRIBE_RE = re.compile(
 )
 
 
-def _retract_session_views(lake, spark, name: str) -> None:
+def _retract_session_views(spark, name: str) -> None:
     """A catalog DROP must retract the Spark temp views the lazy
     registration created for ``name`` — forgetting the memo and the
     follow-head records (``Lakehouse.drop_table`` / ``drop_view`` do that
@@ -430,7 +430,7 @@ def execute_ddl(lake, spark, statement: str, access_level: str = "admin"):
         name, _ = _table_name(dotted)
         dropped = lake.drop_view(name, if_exists=bool(if_exists))
         if dropped:
-            _retract_session_views(lake, spark, name)
+            _retract_session_views(spark, name)
         return {"operation": "drop_view", "view": name, "dropped": dropped}
 
     if re.match(r"^show\s+views\s*$", s, re.IGNORECASE):
@@ -516,7 +516,7 @@ def execute_ddl(lake, spark, statement: str, access_level: str = "admin"):
         name, _ = _table_name(dotted)
         dropped = lake.drop_table(name, if_exists=bool(if_exists))
         if dropped:
-            _retract_session_views(lake, spark, name)
+            _retract_session_views(spark, name)
         return {"operation": "drop_table", "table": name, "dropped": dropped}
 
     m = _ALTER_RE.match(s)
