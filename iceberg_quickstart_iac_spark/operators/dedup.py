@@ -435,7 +435,7 @@ def admit_batch(
     store_sigs = (
         store.read(spark)
         if store.head_sequence() is not None
-        else store._empty_declared(spark)
+        else store._empty_declared(spark, store.meta)
     )
     # materialize the admission decisions ONCE (bounded by |batch| rows):
     # they drive the admitted-signature append AND the caller's read of

@@ -75,17 +75,18 @@ def mor_partition_debt(table: SnapTable, spark: SparkSession | None = None) -> d
     than a full compact. ``spark`` defaults to the active session."""
     from pathlib import Path
 
-    snap = table.current_snapshot()
+    st = table._state()
+    snap = st.head
     if snap is None:
         return {"attributed": True, "leaves": {}, "debt_row_share": 0.0}
     leaves: dict[str, int] = {}
-    debt = table._delete_debt(spark or SparkSession.getActiveSession(), snap)
+    debt = table._delete_debt(spark or SparkSession.getActiveSession(), st)
     for per_leaf in debt.values():
         for leaf, n in per_leaf.items():
             leaves[leaf] = leaves.get(leaf, 0) + n
     if not leaves:
         return {"attributed": True, "leaves": {}, "debt_row_share": 0.0}
-    dir_epochs = table._dir_epochs()
+    dir_epochs = st.dir_epochs
     total_rows = 0
     debt_rows = 0
     debt_suffixes = list(leaves)

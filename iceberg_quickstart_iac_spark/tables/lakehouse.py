@@ -895,8 +895,10 @@ class CatalogBranch:
         touched = self._touched()
         problems = []
         for tname in touched:
-            t = self.lakehouse.table(tname)
-            problem = t._merge_conflict(self._table_branch, t._entries())
+            st = self.lakehouse.table(tname)._state()
+            problem = SnapTable._merge_conflict(
+                self.table(tname)._state(), st.meta.get("columns", []), st.entries
+            )
             if problem is not None:
                 problems.append(f"{tname}: {problem}")
         if problems:

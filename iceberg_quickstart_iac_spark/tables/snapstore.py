@@ -40,6 +40,7 @@ against the catalogs configured in ``catalog_conf.py``.
 
 from __future__ import annotations
 
+import copy
 import json
 import os
 import random
@@ -49,7 +50,9 @@ import struct
 import time
 import uuid
 from dataclasses import dataclass, field
+from functools import cached_property
 from pathlib import Path
+from typing import Callable
 from urllib.parse import quote, unquote
 
 from datetime import date, datetime, timezone
@@ -305,6 +308,11 @@ _ORC_SKIP_WARNED: set[Path] = set()
 #: Process-local by design: Spark temp views are session objects.
 _HEAD_REGISTRATIONS: dict[str, dict] = {}
 
+#: the metadata views ``register`` adds next to a table's view
+_METADATA_VIEWS = (
+    "__snapshots", "__history", "__files", "__partitions", "__delete_files", "__refs"
+)
+
 
 def _head_reg_key(root: Path) -> str:
     """A table root's identity in the records: resolved, so two SnapTable
@@ -525,6 +533,110 @@ class _Delta:
             "row_count": head["row_count"] + self.rows,
             "file_count": head["file_count"] + self.files,
         }
+
+
+def _txn_holder(entries: list[dict], txn: dict | None) -> dict | None:
+    """The one idempotent-write rule (Delta's ``txnAppId`` check): the
+    newest entry whose ``txn`` names the same app at a version at or above
+    ``txn``'s, i.e. the commit that already applied it; None when ``txn``
+    is None or new."""
+    if txn is None:
+        return None
+    return next((
+        e for e in reversed(entries)
+        if (e.get("txn") or {}).get("app_id") == txn["app_id"]
+        and e["txn"]["version"] >= txn["version"]
+    ), None)
+
+
+@dataclass(frozen=True)
+class _State:
+    """One read of a table's state (ARCHITECTURE.md, "Table state"):
+    ``meta`` is ``table.json`` (with a branch's schema override) as read
+    when the state was taken; the log is read at most once, on first use
+    of ``entries``. An operation takes one state at its start and decides
+    everything from it; nothing mutates it (an evolution writes a modified
+    copy of ``meta``). ``name`` is the audit name (``namespace.table``,
+    plus ``@branch`` on a branch), ``ref`` a branch's ``branch.json``
+    (None on main), and ``read_log`` the log reader, which
+    :meth:`SnapTable._commit` calls afresh on every attempt."""
+
+    meta: dict
+    name: str
+    read_log: Callable[[], list[dict]]
+    ref: dict | None = None
+
+    @cached_property
+    def entries(self) -> list[dict]:
+        return self.read_log()
+
+    @property
+    def head(self) -> dict | None:
+        return self.entries[-1] if self.entries else None
+
+    @property
+    def columns(self) -> list[str]:
+        """The declared column names."""
+        return [c["name"] for c in self.meta.get("columns", [])]
+
+    def snapshot(self, snapshot_id: str | None, as_of_ms: int | None) -> dict:
+        """The snapshot ``snapshot_id`` names, else the newest committed at
+        or before ``as_of_ms``, else the head."""
+        if not self.entries:
+            raise TableNotFoundError(f"Table {self.name} has no snapshots yet")
+        if snapshot_id is not None:
+            for e in self.entries:
+                if e["snapshot_id"] == snapshot_id:
+                    return e
+            raise ValueError(f"No snapshot {snapshot_id!r} in {self.name}")
+        if as_of_ms is not None:
+            eligible = [e for e in self.entries if e["committed_at_ms"] <= as_of_ms]
+            if not eligible:
+                raise ValueError(f"No snapshot at or before {as_of_ms} in {self.name}")
+            return eligible[-1]
+        return self.entries[-1]
+
+    @cached_property
+    def dir_intro_seqs(self) -> dict[str, int]:
+        """Directory (data or delete) → the sequence of the log entry that
+        INTRODUCED it — the commit-sequence ordering Iceberg scopes
+        delete-file applicability by.
+
+        It is the head entry's ``dir_sequences`` map: every commit stamps
+        the full map (its parent's plus the dirs it introduces, pruned to
+        dirs some entry still references), so it covers every snapshot a
+        read can select. A log scan would mis-date a dir once
+        ``expire_snapshots`` drops its introducing entry (the dir then
+        first appears at a surviving carry-forward entry, which can sit
+        AFTER a MoR delete commit and un-apply it — resurrecting deleted
+        rows)."""
+        return dict(self.head["dir_sequences"]) if self.entries else {}
+
+    @cached_property
+    def dir_epochs(self) -> dict[str, dict]:
+        """Data dir → the write epoch (:func:`_epoch_of`) it was WRITTEN
+        under: that of the first log entry referencing the dir.
+
+        Once :meth:`SnapTable.expire_snapshots` drops that entry, the first
+        surviving reference can be a later epoch — after a rename it names
+        the column by its new name and the dir's values would read as NULL
+        — so expiry persists each live dir's epoch in ``table.json``
+        (``dir_epochs``) and that record wins."""
+        seen: dict[str, dict] = {}
+        if self.entries and len(self.entries) != self.entries[-1]["sequence"] + 1:
+            seen.update(self.meta.get("dir_epochs", {}))
+        for e in self.entries:
+            # dir_epoch_overrides: a partition-scoped compact keeps the
+            # unmatched leaves of a split dir as subpath references; those
+            # files were written under the SOURCE dir's epoch, not the
+            # compact commit's — the override pins it (processed before
+            # data_dirs so it wins for the entry that introduces them)
+            for d, ep in (e.get("dir_epoch_overrides") or {}).items():
+                seen.setdefault(d, ep)
+            epoch = _epoch_of(e)
+            for d in e["data_dirs"]:
+                seen.setdefault(d, epoch)
+        return seen
 
 
 #: the on-disk layout this engine reads and writes (``table.json``
@@ -783,7 +895,7 @@ class SnapTable:
             # an epoch by its own footers
             meta["dir_epochs"] = {
                 d: complete(dict(ep or {}), [d], start, meta["columns"])
-                for d, ep in self._dir_epochs().items()
+                for d, ep in self._state().dir_epochs.items()
             }
         meta.setdefault(
             "expired_sequences", [s for s in range(max(seqs, default=0)) if s not in seqs]
@@ -792,14 +904,33 @@ class SnapTable:
         if self.meta.get("format_version", 0) < _FORMAT_VERSION:  # else a concurrent upgrade won
             self._write_meta(meta)
 
+    def _state(self) -> _State:
+        """The table's one state read (:class:`_State`): ``table.json`` now,
+        the log on first use."""
+        meta = json.loads((self.root / "table.json").read_text())
+        return _State(
+            meta, f"{meta['namespace']}.{meta['name']}", lambda: self._read_log(self.log_dir)
+        )
+
+    # accessors for callers outside this module; each takes a state of its
+    # own, so operations never use them
+
     @property
     def meta(self) -> dict:
-        return json.loads((self.root / "table.json").read_text())
+        return self._state().meta
 
     @property
     def fq_name(self) -> str:
-        meta = self.meta
-        return f"{meta['namespace']}.{meta['name']}"
+        return self._state().name
+
+    def _entries(self) -> list[dict]:
+        return self._state().entries
+
+    def current_snapshot(self) -> dict | None:
+        return self._state().head
+
+    def _snapshot_for(self, snapshot_id: str | None, as_of_ms: int | None) -> dict:
+        return self._state().snapshot(snapshot_id, as_of_ms)
 
     # -- log ---------------------------------------------------------------
 
@@ -815,17 +946,10 @@ class SnapTable:
             entries.append(json.loads(path.read_text()))
         return entries
 
-    def _entries(self) -> list[dict]:
-        return self._read_log(self.log_dir)
-
     def _write_meta(self, meta: dict) -> None:
         # concurrent readers (commit retries, verify, reads in other
         # processes) must never observe a torn table.json
         _write_atomic(self.root / "table.json", json.dumps(meta, indent=2))
-
-    def current_snapshot(self) -> dict | None:
-        entries = self._entries()
-        return entries[-1] if entries else None
 
     def head_sequence(self) -> int | None:
         """Sequence of the newest committed entry in THIS log dir — a
@@ -837,18 +961,29 @@ class SnapTable:
         seqs = [int(p.stem) for p in self.log_dir.glob(self._LOG_GLOB)]
         return max(seqs) if seqs else None
 
-    def _commit(self, delta: _Delta, retries: int | None = None) -> dict:
-        """Atomic commit of one write's ``delta``: write a temp file, link
-        it into the next sequence slot.
+    def _commit(self, st: _State, delta: _Delta) -> dict:
+        """Atomic commit of one write's ``delta``, made from state ``st``:
+        write a temp file, link it into the next sequence slot.
 
-        Every attempt applies the delta to the head it finds
-        (:meth:`_Delta.apply`), so commits that landed after the snapshot
-        the write read (``delta.read_at``) keep their dirs and counts: no
-        lost updates. The one conflict rule: a dir the delta removes that
-        is no longer live at the head was rewritten by a concurrent
-        commit, so the commit raises CommitConflictError and leaves that
-        head as it is. Data dirs a rewrite writes from what it read take
-        ``read_at``'s sequence through ``dir_sequence_overrides`` (Iceberg's
+        The table name and ``commit_num_retries`` come from ``st``; the
+        head does not: every attempt reads the log afresh
+        (``st.read_log``), which optimistic concurrency needs, and decides
+        from that head by two rules.
+
+        - The txn rule (:func:`_txn_holder`): when the head's log already
+          holds the delta's ``txn`` app at a version at or above its own,
+          a concurrent commit applied it. The commit drops the dirs it
+          added that no entry references and returns the entry holding the
+          txn, as a replayed write does.
+        - The conflict rule: the delta is applied to the head
+          (:meth:`_Delta.apply`), so commits that landed after the snapshot
+          the write read (``delta.read_at``) keep their dirs and counts: no
+          lost updates. A dir the delta removes that is no longer live at
+          the head was rewritten by a concurrent commit, so the commit
+          raises CommitConflictError and leaves that head as it is.
+
+        Data dirs a rewrite writes from what it read take ``read_at``'s
+        sequence through ``dir_sequence_overrides`` (Iceberg's
         ``RewriteFiles`` data-sequence rule), so a delete committed after
         ``read_at`` still applies to them. A ``replace`` delta
         (``overwrite``, ``rollback_to``) is the whole new state: it checks
@@ -856,8 +991,7 @@ class SnapTable:
         ``os.link`` (EEXIST when another writer won it): optimistic
         concurrency with bounded retry (``commit_num_retries`` parity).
         """
-        if retries is None:
-            retries = int(self.meta.get("properties", {}).get("commit_num_retries", 3))
+        retries = int(st.meta.get("properties", {}).get("commit_num_retries", 3))
         # an operation may pin a NEW dir to an inherited sequence: a
         # rewrite's output to the snapshot it read, a merged delete file
         # to its group's newest source, a kept leaf to its source dir
@@ -866,15 +1000,18 @@ class SnapTable:
             **(delta.extra.get("dir_sequence_overrides") or {}),
         }
         extra = {**delta.extra, **({"dir_sequence_overrides": overrides} if overrides else {})}
-        name = self.fq_name
         # no .json suffix: temp files must never match the log glob
         tmp = self.log_dir / f".tmp-{uuid.uuid4().hex}"
         for attempt in range(retries + 1):
-            entries = self._entries()
+            entries = st.read_log()
             head = entries[-1] if entries else None
             seq = head["sequence"] + 1 if head else 0
+            held = _txn_holder(entries, delta.extra.get("txn"))
+            if held is not None:
+                self._drop_unreferenced(delta.add + delta.add_deletes)
+                return held
             try:
-                applied = delta.apply(head, name)
+                applied = delta.apply(head, st.name)
             except CommitConflictError:
                 self._drop_unreferenced(delta.add + delta.add_deletes)
                 raise
@@ -909,7 +1046,7 @@ class SnapTable:
                     tmp.unlink(missing_ok=True)
                     self._drop_unreferenced(delta.add + delta.add_deletes)
                     raise CommitConflictError(
-                        f"Commit to {name} lost {retries + 1} races (sequence {seq})"
+                        f"Commit to {st.name} lost {retries + 1} races (sequence {seq})"
                     ) from None
                 time.sleep(min(0.05 * 2**attempt, 1.0) * (1 + random.random()))
         raise AssertionError("unreachable")
@@ -925,25 +1062,20 @@ class SnapTable:
             if "/" not in d and d not in whole and d not in subs:
                 shutil.rmtree(self.data_dir / d, ignore_errors=True)
 
-    def _read_head(self, spark: SparkSession) -> tuple[dict, DataFrame]:
-        """The head snapshot and a read of exactly it: a rewrite's
-        ``read_at`` and its input, which no concurrent commit can split."""
-        snap = self._snapshot_for(None, None)
-        return snap, self.read(spark, snapshot_id=snap["snapshot_id"])
-
     def _commit_rewrite(
         self,
+        st: _State,
         operation: str,
-        read_at: dict,
         written: tuple[str, int, int],
         extra: dict | None = None,
     ) -> dict:
         """Commit ``written`` (:meth:`_write_data`'s dir, rows, files),
-        rewritten from every live row of ``read_at``, in place of
-        ``read_at``'s data and delete files."""
+        rewritten from every live row of ``st``'s head, in place of that
+        head's data and delete files."""
         dir_name, rows, files = written
-        return self._commit(_Delta(
-            operation, self._write_epoch(), read_at=read_at,
+        read_at = st.head
+        return self._commit(st, _Delta(
+            operation, self._write_epoch(st.meta), read_at=read_at,
             add=[dir_name], remove=list(read_at["data_dirs"]),
             remove_deletes=list(read_at.get("delete_dirs") or []),
             rows=rows - read_at["row_count"], files=files - read_at["file_count"],
@@ -958,12 +1090,10 @@ class SnapTable:
     #: partitionBy would strip it from the data files)
     _PPREFIX = "__p_"
 
-    def _partition_cols(self, spec: list[dict] | None = None) -> list[tuple[str, dict]]:
-        """(physical partition column name, spec entry) per spec level.
-        ``spec`` defaults to the table's CURRENT spec (the write path); reads
-        pass each data directory's recorded write-time spec instead."""
-        if spec is None:
-            spec = self.meta.get("partition_spec") or []
+    def _partition_cols(self, spec: list[dict]) -> list[tuple[str, dict]]:
+        """(physical partition column name, spec entry) per level of
+        ``spec``: the table's current spec on the write path, each data
+        directory's recorded write-time spec on reads."""
         return [
             (self._PPREFIX + partition_field_name(p["column"], p["transform"]), p)
             for p in spec
@@ -971,6 +1101,7 @@ class SnapTable:
 
     def _write_data(
         self,
+        st: _State,
         df: DataFrame,
         order_override: list | None = None,
         drop_cols: list[str] | None = None,
@@ -978,7 +1109,9 @@ class SnapTable:
     ) -> tuple[str, int, int]:
         """Write one immutable data directory; return (dir, rows, files).
 
-        Applies the template's physical layout: one Hive-style directory
+        Applies the physical layout ``st`` declares (the one the commit's
+        write epoch stamps): columns cast to their declared types, the
+        ``write_format`` property, one Hive-style directory
         level per partition_spec transform (hidden partitioning — reads
         prune on the SOURCE column, see :meth:`read`) and
         ``sortWithinPartitions`` for the declared sort_order (write-time
@@ -1004,9 +1137,7 @@ class SnapTable:
         # requires every file in the epoch to carry exactly those types (a
         # caller passing tz-µs timestamps next to an earlier ntz-ns write
         # would otherwise poison the group).
-        declared_types = {
-            c["name"]: c["type"] for c in self.meta.get("columns", [])
-        }
+        declared_types = {c["name"]: c["type"] for c in st.meta.get("columns", [])}
         if declared_types:
             df = df.select(
                 *[
@@ -1018,7 +1149,10 @@ class SnapTable:
             )
         # spec entries on absent columns only occur with schema enforcement
         # disabled (declared columns cleared); write unpartitioned for those
-        pcols = [(n, p) for n, p in self._partition_cols() if p["column"] in df.columns]
+        pcols = [
+            (n, p) for n, p in self._partition_cols(st.meta.get("partition_spec") or [])
+            if p["column"] in df.columns
+        ]
         wdf = df
         if pcols:
             wdf = wdf.select(
@@ -1049,7 +1183,7 @@ class SnapTable:
                 else:
                     sort_keys = [
                         F.col(o["column"])
-                        for o in (self.meta.get("sort_order") or [])
+                        for o in (st.meta.get("sort_order") or [])
                         if o["column"] in df.columns
                     ]
                 range_cols = [F.col(name) for name, _ in pcols] + sort_keys
@@ -1068,7 +1202,7 @@ class SnapTable:
                 # partition-scoped compactor).
                 wdf = wdf.repartition(*[F.col(name) for name, _ in pcols])
         order = [
-            o for o in (self.meta.get("sort_order") or []) if o["column"] in df.columns
+            o for o in (st.meta.get("sort_order") or []) if o["column"] in df.columns
         ]
         if order_override is not None:
             from pyspark.sql import functions as F
@@ -1101,8 +1235,10 @@ class SnapTable:
             wdf = wdf.sortWithinPartitions(*sort_exprs)
         if drop_cols:
             wdf = wdf.drop(*drop_cols)
-        fmt = self.write_format()
-        writer = wdf.write.format(fmt)
+        # the template's declared data-file format (``write_format``, the
+        # reference's ``write.format.default``; ``_schema.json:97-104``):
+        # parquet (default) or orc, both native Spark writers
+        writer = wdf.write.format(st.meta.get("properties", {}).get("write_format", "parquet"))
         if pcols:
             writer = writer.partitionBy(*[name for name, _ in pcols])
         writer.save(str(out))
@@ -1110,19 +1246,12 @@ class SnapTable:
         rows = _footer_row_count(files)
         return dir_name, rows, len(files)
 
-    def write_format(self) -> str:
-        """The template's declared data-file format (``write_format``
-        property, the reference's ``write.format.default``;
-        ``table-templates/_schema.json:97-104``): parquet (default) or
-        orc — both executed natively by Spark's columnar writers."""
-        return self.meta.get("properties", {}).get("write_format", "parquet")
-
-    def _check_columns(self, df: DataFrame) -> None:
-        declared = [c["name"] for c in self.meta.get("columns", [])]
-        if declared and set(df.columns) != set(declared):
+    @staticmethod
+    def _check_columns(st: _State, df: DataFrame) -> None:
+        if st.columns and set(df.columns) != set(st.columns):
             raise ValueError(
-                f"Schema mismatch on write to {self.fq_name}. "
-                f"Table columns: {sorted(declared)}, Data columns: {sorted(df.columns)}"
+                f"Schema mismatch on write to {st.name}. "
+                f"Table columns: {sorted(st.columns)}, Data columns: {sorted(df.columns)}"
             )
 
     def overwrite(self, df: DataFrame, entry_extra: dict | None = None) -> dict:
@@ -1131,13 +1260,14 @@ class SnapTable:
 
         ``entry_extra`` — extra application fields recorded IN the commit
         entry (atomically with the data), e.g. an IVM watermark."""
-        self._check_columns(df)
-        dir_name, rows, files = self._write_data(df)
-        entry = self._commit(_Delta(
-            "overwrite", self._write_epoch(), add=[dir_name], rows=rows, files=files,
+        st = self._state()
+        self._check_columns(st, df)
+        dir_name, rows, files = self._write_data(st, df)
+        entry = self._commit(st, _Delta(
+            "overwrite", self._write_epoch(st.meta), add=[dir_name], rows=rows, files=files,
             replace=True, extra=entry_extra or {},
         ))
-        log_audit_event("table_write", self.fq_name, details={"row_count": rows, "mode": "overwrite"})
+        log_audit_event("table_write", st.name, details={"row_count": rows, "mode": "overwrite"})
         return entry
 
     def last_txn_version(self, app_id: str) -> int | None:
@@ -1152,23 +1282,10 @@ class SnapTable:
         """
         versions = [
             e["txn"]["version"]
-            for e in self._entries()
+            for e in self._state().entries
             if (e.get("txn") or {}).get("app_id") == app_id
         ]
         return max(versions) if versions else None
-
-    def _txn_already_applied(self, txn: tuple[str, int] | None) -> dict | None:
-        """The current head entry when ``txn`` was already committed
-        (idempotent skip), else None. Called BEFORE any data is written so
-        a replay leaves no orphan directories."""
-        if txn is None:
-            return None
-        app_id, version = txn
-        last = self.last_txn_version(app_id)
-        if last is not None and last >= version:
-            entries = self._entries()
-            return entries[-1] if entries else None
-        return None
 
     @staticmethod
     def _txn_meta(txn: tuple[str, int] | None) -> dict:
@@ -1176,26 +1293,36 @@ class SnapTable:
             return {}
         return {"txn": {"app_id": txn[0], "version": int(txn[1])}}
 
+    def _txn_applied(self, st: _State, txn: tuple[str, int] | None) -> dict | None:
+        """The entry of ``st`` holding ``txn`` (:func:`_txn_holder`), checked
+        BEFORE any data is written so a replay writes nothing; ``_commit``
+        applies the same rule to the head on every attempt."""
+        return _txn_holder(st.entries, self._txn_meta(txn).get("txn")) if txn else None
+
     def append(self, df: DataFrame, txn: tuple[str, int] | None = None) -> dict:
         """Append commit (the event-stream pattern, ``event_stream.yaml:4``).
 
         ``txn=(app_id, version)`` makes the append idempotent: a version
-        at or below the app's last committed version is skipped (the head
-        entry is returned unchanged) — exactly-once sinks for streaming
-        ``foreachBatch`` replays.
+        at or below the app's last committed version is not applied again,
+        and the entry holding it is returned (:func:`_txn_holder`) —
+        exactly-once sinks for streaming ``foreachBatch`` replays. The rule
+        is checked before the write and again on every commit attempt, so
+        of two writers racing the same version one commits and the other
+        drops its dirs and returns the winner's entry.
         """
-        skipped = self._txn_already_applied(txn)
+        st = self._state()
+        skipped = self._txn_applied(st, txn)
         if skipped is not None:
             return skipped
-        self._check_columns(df)
-        dir_name, rows, files = self._write_data(df)
+        self._check_columns(st, df)
+        dir_name, rows, files = self._write_data(st, df)
         # a pure add: live equality-delete files carry forward (they scope
         # to STRICTLY LOWER sequences, so they never erase these rows)
-        entry = self._commit(_Delta(
-            "append", self._write_epoch(), add=[dir_name], rows=rows, files=files,
+        entry = self._commit(st, _Delta(
+            "append", self._write_epoch(st.meta), add=[dir_name], rows=rows, files=files,
             extra=self._txn_meta(txn),
         ))
-        log_audit_event("table_write", self.fq_name, details={"row_count": rows, "mode": "append"})
+        log_audit_event("table_write", st.name, details={"row_count": rows, "mode": "append"})
         return entry
 
     def delete_where(
@@ -1249,6 +1376,7 @@ class SnapTable:
         """
         if mode not in ("cow", "mor"):
             raise ValueError(f"delete_where: mode must be 'cow' or 'mor', got {mode!r}")
+        st = self._state()
         if hard and getattr(self, "branch_name", None) is not None:
             # hard erasure expires history and drops dirs TABLE-WIDE; a
             # branch shares main's data dirs — erase on main, not a ref
@@ -1262,27 +1390,20 @@ class SnapTable:
                     "delete_where: hard erasure requires mode='cow' — a MoR "
                     "delete leaves the bytes in the data files by design"
                 )
-            return self._delete_where_mor(spark, condition)
-        snap, current = self._read_head(spark)
+            return self._delete_where_mor(spark, st, condition)
+        snap = st.snapshot(None, None)
         # SQL DELETE removes rows where the predicate is TRUE — rows where
         # it evaluates NULL (e.g. `region = 'us'` on a NULL region) are
         # KEPT. A bare NOT(cond) filter would silently drop them.
-        kept = current.filter(f"NOT (({condition}) <=> TRUE)")
-        written = self._write_data(kept)
-        entry = self._commit_rewrite("delete", snap, written)
+        kept = self._read_at(spark, st, snap).filter(f"NOT (({condition}) <=> TRUE)")
+        written = self._write_data(st, kept)
+        entry = self._commit_rewrite(st, "delete", written)
         # data-file rows the rewrite dropped: after MoR deletes these
         # include the erased images it materialized
         deleted = snap["row_count"] - written[1]
-        log_audit_event(
-            "table_write",
-            self.fq_name,
-            details={
-                "mode": "delete",
-                "condition": condition,
-                "deleted_count": deleted,
-                "hard": hard,
-            },
-        )
+        log_audit_event("table_write", st.name, details={
+            "mode": "delete", "condition": condition, "deleted_count": deleted, "hard": hard,
+        })
         if hard:
             # expire EVERYTHING but the delete snapshot, then drop the
             # now-unreferenced data dirs immediately (no grace: the point
@@ -1295,7 +1416,7 @@ class SnapTable:
     #: reads pass it instead of inferring it in a Spark job
     _KEY_SCHEMA = "_key_schema.json"
 
-    def _write_delete_keys(self, keys: DataFrame) -> tuple[str, int]:
+    def _write_delete_keys(self, st: _State, keys: DataFrame) -> tuple[str, int]:
         """Write ``keys`` (identifier-column tuples) as one new
         equality-delete dir; return its name and its key count (from the
         written footers). Sidecars next to the data (underscore prefixes
@@ -1310,46 +1431,42 @@ class SnapTable:
         dir_name = f"mordel-{uuid.uuid4().hex}"
         out = self.data_dir / dir_name
         keys.write.parquet(str(out))
-        col_ids = self._column_ids()
+        col_ids = self._column_ids(st.meta)
         (out / "_key_ids.json").write_text(
             json.dumps({c: col_ids[c] for c in keys.columns})
         )
         (out / self._KEY_SCHEMA).write_text(keys.schema.json())
         return dir_name, _footer_row_count(_list_data_files(out))
 
-    def _delete_where_mor(self, spark: SparkSession, condition: str) -> dict:
+    def _delete_where_mor(self, spark: SparkSession, st: _State, condition: str) -> dict:
         """MoR ``delete_where``: one scan of the table, for the condition,
         writes the matched keys as an equality-delete dir; the commit
         references it and leaves the data dirs, ``row_count`` and
         ``file_count`` as they were."""
-        ids = self.meta.get("identifier_fields")
+        ids = st.meta.get("identifier_fields")
         if not ids:
             raise ValueError(
                 "delete_where(mode='mor') needs 'identifier_fields' in the "
-                f"table template of {self.fq_name} — equality deletes are "
+                f"table template of {st.name} — equality deletes are "
                 "keyed on them (Iceberg identifier-field-ids)"
             )
-        declared = [c["name"] for c in self.meta.get("columns", [])]
-        missing = [c for c in ids if c not in declared]
+        missing = [c for c in ids if c not in st.columns]
         if missing:
             raise ValueError(
                 f"delete_where(mode='mor'): identifier fields {missing} "
                 f"not table columns"
             )
         matched = (
-            self.read(spark).filter(f"({condition}) <=> TRUE").select(*ids).dropDuplicates()
+            self._read_at(spark, st, st.snapshot(None, None))
+            .filter(f"({condition}) <=> TRUE").select(*ids).dropDuplicates()
         )
-        dir_name, delete_keys = self._write_delete_keys(matched)
-        entry = self._commit(_Delta("delete", self._write_epoch(), add_deletes=[dir_name]))
-        log_audit_event(
-            "table_write",
-            self.fq_name,
-            details={
-                "mode": "delete_mor",
-                "condition": condition,
-                "delete_keys": delete_keys,
-            },
+        dir_name, delete_keys = self._write_delete_keys(st, matched)
+        entry = self._commit(
+            st, _Delta("delete", self._write_epoch(st.meta), add_deletes=[dir_name])
         )
+        log_audit_event("table_write", st.name, details={
+            "mode": "delete_mor", "condition": condition, "delete_keys": delete_keys,
+        })
         return entry
 
     def update_where(
@@ -1369,11 +1486,11 @@ class SnapTable:
         """
         from pyspark.sql import functions as F
 
-        declared = [c["name"] for c in self.meta.get("columns", [])]
-        unknown = set(set_exprs) - set(declared)
+        st = self._state()
+        unknown = set(set_exprs) - set(st.columns)
         if unknown:
             raise ValueError(f"update_where: unknown columns {sorted(unknown)}")
-        snap, current = self._read_head(spark)
+        current = self._read_at(spark, st, st.snapshot(None, None))
         cond = F.expr(condition)
         updated = current.select(
             *[
@@ -1383,13 +1500,10 @@ class SnapTable:
                 for c in current.columns
             ]
         )
-        entry = self._commit_rewrite("update", snap, self._write_data(updated))
-        log_audit_event(
-            "table_write",
-            self.fq_name,
-            details={"mode": "update", "condition": condition,
-                     "set_columns": sorted(set_exprs)},
-        )
+        entry = self._commit_rewrite(st, "update", self._write_data(st, updated))
+        log_audit_event("table_write", st.name, details={
+            "mode": "update", "condition": condition, "set_columns": sorted(set_exprs),
+        })
         return entry
 
     def merge_into(
@@ -1440,13 +1554,31 @@ class SnapTable:
         are (a source key they share is not matched against them), and a
         concurrent rewrite of the same files raises CommitConflictError.
         """
+        return self._merge_into(
+            spark, self._state(), source, on, when_matched, when_not_matched,
+            when_not_matched_by_source, txn, entry_extra,
+        )
+
+    def _merge_into(
+        self,
+        spark: SparkSession,
+        st: _State,
+        source: DataFrame,
+        on: str,
+        when_matched: list[dict] | None = None,
+        when_not_matched: list[dict] | None = None,
+        when_not_matched_by_source: list[dict] | None = None,
+        txn: tuple[str, int] | None = None,
+        entry_extra: dict | None = None,
+    ) -> dict:
+        """:meth:`merge_into` against state ``st``."""
         from pyspark.sql import functions as F
 
-        skipped = self._txn_already_applied(txn)
+        skipped = self._txn_applied(st, txn)
         if skipped is not None:
             return skipped
-        declared = [c["name"] for c in self.meta.get("columns", [])]
-        types = {c["name"]: c["type"] for c in self.meta.get("columns", [])}
+        declared = st.columns
+        types = {c["name"]: c["type"] for c in st.meta.get("columns", [])}
         when_matched = list(when_matched or [])
         when_not_matched = list(when_not_matched or [])
         when_not_matched_by_source = list(when_not_matched_by_source or [])
@@ -1457,9 +1589,8 @@ class SnapTable:
             declared, when_matched, when_not_matched, when_not_matched_by_source
         )
 
-        snap, target = self._read_head(spark)
         target = (
-            target
+            self._read_at(spark, st, st.snapshot(None, None))
             .withColumn("__sg_t_id", F.monotonically_increasing_id())
             .alias("t")
         )
@@ -1548,8 +1679,8 @@ class SnapTable:
                 ~F.col("__sg_verdict").startswith("d")
                 & (F.col("__sg_verdict") != "skip")
             ).select(*[_out(c) for c in declared])
-            self._check_columns(result)
-            written = self._write_data(result)
+            self._check_columns(st, result)
+            written = self._write_data(st, result)
         finally:
             joined.unpersist()
 
@@ -1559,14 +1690,12 @@ class SnapTable:
             "deleted": sum(n for v, n in stats.items() if v[0] == "d"),
             "unchanged": stats.get("keep", 0),
         }
-        entry = self._commit_rewrite("merge", snap, written, {
+        entry = self._commit_rewrite(st, "merge", written, {
             **(entry_extra or {}), "merge_stats": merge_stats, **self._txn_meta(txn),
         })
-        log_audit_event(
-            "table_write",
-            self.fq_name,
-            details={"mode": "merge", "on": on, **merge_stats},
-        )
+        log_audit_event("table_write", st.name, details={
+            "mode": "merge", "on": on, **merge_stats,
+        })
         return entry
 
     def merge_into_sql(
@@ -1586,9 +1715,9 @@ class SnapTable:
         Same first-match-wins semantics (Spark evaluates MERGE clauses in
         order), same ``"*"`` expansion, same validation.
         """
-        declared = [c["name"] for c in self.meta.get("columns", [])]
+        st = self._state()
         matched, not_matched, by_source = _normalize_merge_clauses(
-            declared,
+            st.columns,
             list(when_matched or []),
             list(when_not_matched or []),
             list(when_not_matched_by_source or []),
@@ -1610,7 +1739,7 @@ class SnapTable:
             return f"{head} THEN INSERT ({cols}) VALUES ({vals})"
 
         lines = [
-            f"MERGE INTO {table_fq or self.fq_name} t",
+            f"MERGE INTO {table_fq or st.name} t",
             f"USING {source_view} s",
             f"ON {on}",
         ]
@@ -1650,7 +1779,8 @@ class SnapTable:
         from pyspark.sql import Window
         from pyspark.sql import functions as F
 
-        declared = [c["name"] for c in self.meta.get("columns", [])]
+        st = self._state()
+        declared = st.columns
         missing = [c for c in key_cols if c not in declared]
         if missing:
             raise ValueError(f"apply_changelog: keys {missing} not table columns")
@@ -1668,13 +1798,12 @@ class SnapTable:
                 .drop("__sg_rn")
             )
         if mode == "mor":
-            return self._apply_changelog_mor(
-                spark, changes, key_cols, op_col, txn
-            )
+            return self._apply_changelog_mor(st, changes, key_cols, op_col, txn)
         on = " AND ".join(f"t.{k} = s.{k}" for k in key_cols)
         data_cols = [c for c in declared if c not in key_cols]
-        return self.merge_into(
+        return self._merge_into(
             spark,
+            st,
             changes,
             on,
             when_matched=[
@@ -1693,7 +1822,7 @@ class SnapTable:
 
     def _apply_changelog_mor(
         self,
-        spark: SparkSession,
+        st: _State,
         changes: DataFrame,
         key_cols: list[str],
         op_col: str,
@@ -1712,37 +1841,30 @@ class SnapTable:
         sequence), so the same commit's new images survive;
         :meth:`compact` folds everything down.
         """
-        skipped = self._txn_already_applied(txn)
+        skipped = self._txn_applied(st, txn)
         if skipped is not None:
             return skipped
-        declared = [c["name"] for c in self.meta.get("columns", [])]
         # two small scans of the batch cost less than caching it, which
         # AQE materializes in a job of its own; every evaluation yields
         # the same key set, and the images come from one of them
         del_dir, delete_keys = self._write_delete_keys(
-            changes.select(*key_cols).dropDuplicates()
+            st, changes.select(*key_cols).dropDuplicates()
         )
         up_dir, up_rows, up_files = self._write_data(
-            changes.filter(f"{op_col} <> 'D'").select(*declared)
+            st, changes.filter(f"{op_col} <> 'D'").select(*st.columns)
         )
 
-        entry = self._commit(_Delta(
-            "merge", self._write_epoch(), add=[up_dir], add_deletes=[del_dir],
+        entry = self._commit(st, _Delta(
+            "merge", self._write_epoch(st.meta), add=[up_dir], add_deletes=[del_dir],
             rows=up_rows, files=up_files,
             extra={
                 "merge_stats": {"upserted": up_rows, "delete_keys": delete_keys, "mode": "mor"},
                 **self._txn_meta(txn),
             },
         ))
-        log_audit_event(
-            "table_write",
-            self.fq_name,
-            details={
-                "mode": "merge_mor",
-                "upserted": up_rows,
-                "delete_keys": delete_keys,
-            },
-        )
+        log_audit_event("table_write", st.name, details={
+            "mode": "merge_mor", "upserted": up_rows, "delete_keys": delete_keys,
+        })
         return entry
 
     def rollback_to(self, snapshot_id: str) -> dict:
@@ -1753,9 +1875,10 @@ class SnapTable:
         rolled back in turn. The intervening snapshots stay
         time-travelable until retention expires them.
         """
-        target = self._snapshot_for(snapshot_id, None)
+        st = self._state()
+        target = st.snapshot(snapshot_id, None)
 
-        entry = self._commit(_Delta(
+        entry = self._commit(st, _Delta(
             # restore the WRITE EPOCH of the target so epoch-grouped reads
             # treat the re-referenced dirs under their original
             # schema/spec, not the current one
@@ -1768,11 +1891,9 @@ class SnapTable:
             # is_current_ancestor=false rows)
             extra={"rollback_of": target["sequence"]},
         ))
-        log_audit_event(
-            "table_write",
-            self.fq_name,
-            details={"mode": "rollback", "to_snapshot": snapshot_id},
-        )
+        log_audit_event("table_write", st.name, details={
+            "mode": "rollback", "to_snapshot": snapshot_id,
+        })
         return entry
 
     def cherrypick_snapshot(self, snapshot_id: str) -> dict:
@@ -1812,14 +1933,15 @@ class SnapTable:
         re-references the dirs and resurrects those rows; deletes are
         not part of an append's re-applicable delta.
         """
-        target = self._snapshot_for(snapshot_id, None)
+        st = self._state()
+        target = st.snapshot(snapshot_id, None)
         if target.get("operation") != "append":
             raise ValueError(
                 f"cherrypick_snapshot: {snapshot_id!r} is a "
                 f"{target.get('operation')!r} snapshot — only append "
                 "snapshots are cherry-pickable"
             )
-        entries = self._entries()
+        entries = st.entries
         idx = next(
             i for i, e in enumerate(entries)
             if e["sequence"] == target["sequence"]
@@ -1861,18 +1983,13 @@ class SnapTable:
         # the delta dirs were written under the TARGET's epoch: carry its
         # schema/spec stamps so epoch-grouped reads project them correctly
         # (same contract as the branch replay)
-        entry = self._commit(_Delta(
+        entry = self._commit(st, _Delta(
             "append", _epoch_of(target), add=new_dirs,
             rows=_footer_row_count(new_files_list), files=len(new_files_list),
         ))
-        log_audit_event(
-            "table_write",
-            self.fq_name,
-            details={
-                "mode": "cherrypick_snapshot",
-                "source_snapshot": snapshot_id,
-            },
-        )
+        log_audit_event("table_write", st.name, details={
+            "mode": "cherrypick_snapshot", "source_snapshot": snapshot_id,
+        })
         return entry
 
     def read_changes(
@@ -1892,31 +2009,17 @@ class SnapTable:
         first and scans only changed files; snapstore's
         directory-granular manifests make the data pass the honest price.
         """
-        old = self.read(spark, snapshot_id=from_snapshot_id)
-        new = self.read(spark, snapshot_id=to_snapshot_id)
         from pyspark.sql import functions as F
+
+        st = self._state()
+        old = self._read_at(spark, st, st.snapshot(from_snapshot_id, None))
+        new = self._read_at(spark, st, st.snapshot(to_snapshot_id, None))
 
         inserts = new.exceptAll(old).withColumn("_change_type", F.lit("insert"))
         deletes = old.exceptAll(new).withColumn("_change_type", F.lit("delete"))
         return inserts.unionByName(deletes)
 
     # -- reads -------------------------------------------------------------
-
-    def _dir_intro_seqs(self) -> dict[str, int]:
-        """Directory (data or delete) → the sequence of the log entry that
-        INTRODUCED it — the commit-sequence ordering Iceberg scopes
-        delete-file applicability by.
-
-        It is the head entry's ``dir_sequences`` map: every commit stamps
-        the full map (its parent's plus the dirs it introduces, pruned to
-        dirs some entry still references), so it covers every snapshot a
-        read can select. A log scan would mis-date a dir once
-        ``expire_snapshots`` drops its introducing entry (the dir then
-        first appears at a surviving carry-forward entry, which can sit
-        AFTER a MoR delete commit and un-apply it — resurrecting deleted
-        rows)."""
-        entries = self._entries()
-        return dict(entries[-1]["dir_sequences"]) if entries else {}
 
     @staticmethod
     def _entry_dirs(e: dict) -> list[str]:
@@ -1925,28 +2028,14 @@ class SnapTable:
         protect both."""
         return list(e.get("data_dirs", [])) + list(e.get("delete_dirs") or [])
 
-    def _snapshot_for(self, snapshot_id: str | None, as_of_ms: int | None) -> dict:
-        entries = self._entries()
-        if not entries:
-            raise TableNotFoundError(f"Table {self.fq_name} has no snapshots yet")
-        if snapshot_id is not None:
-            for e in entries:
-                if e["snapshot_id"] == snapshot_id:
-                    return e
-            raise ValueError(f"No snapshot {snapshot_id!r} in {self.fq_name}")
-        if as_of_ms is not None:
-            eligible = [e for e in entries if e["committed_at_ms"] <= as_of_ms]
-            if not eligible:
-                raise ValueError(f"No snapshot at or before {as_of_ms} in {self.fq_name}")
-            return eligible[-1]
-        return entries[-1]
-
-    def _column_ids(self, meta: dict | None = None) -> dict[str, int]:
+    @staticmethod
+    def _column_ids(meta: dict) -> dict[str, int]:
         """Declared column name → field id (every declared column has
         one)."""
-        return {c["name"]: c["id"] for c in (meta or self.meta).get("columns", [])}
+        return {c["name"]: c["id"] for c in meta.get("columns", [])}
 
-    def _write_epoch(self, meta: dict | None = None) -> dict:
+    @classmethod
+    def _write_epoch(cls, meta: dict) -> dict:
         """The write-time metadata stamped on every commit entry, so reads
         can reconstruct how each data directory was PHYSICALLY written long
         after the declared schema/layout has evolved:
@@ -1961,9 +2050,8 @@ class SnapTable:
           partition-spec evolution means new writes use the new layout
           while old dirs keep (and are pruned by) their own.
         """
-        meta = meta or self.meta
         return {
-            "column_ids": self._column_ids(meta),
+            "column_ids": cls._column_ids(meta),
             "column_types": {c["name"]: c["type"] for c in meta.get("columns", [])},
             "partition_spec": meta.get("partition_spec") or [],
             # the file format the dir was physically written in — reads
@@ -1971,34 +2059,8 @@ class SnapTable:
             "write_format": meta.get("properties", {}).get("write_format", "parquet"),
         }
 
-    def _dir_epochs(self) -> dict[str, dict]:
-        """Data dir → the write epoch (:func:`_epoch_of`) it was WRITTEN
-        under: that of the first log entry referencing the dir.
-
-        Once :meth:`expire_snapshots` drops that entry, the first surviving
-        reference can be a later epoch — after a rename it names the column
-        by its new name and the dir's values would read as NULL — so expiry
-        persists each live dir's epoch in ``table.json`` (``dir_epochs``)
-        and that record wins. A log without sequence gaps never expired an
-        entry and skips the ``table.json`` read."""
-        entries = self._entries()
-        seen: dict[str, dict] = {}
-        if entries and len(entries) != entries[-1]["sequence"] + 1:
-            seen.update(self.meta.get("dir_epochs", {}))
-        for e in entries:
-            # dir_epoch_overrides: a partition-scoped compact keeps the
-            # unmatched leaves of a split dir as subpath references; those
-            # files were written under the SOURCE dir's epoch, not the
-            # compact commit's — the override pins it (processed before
-            # data_dirs so it wins for the entry that introduces them)
-            for d, ep in (e.get("dir_epoch_overrides") or {}).items():
-                seen.setdefault(d, ep)
-            epoch = _epoch_of(e)
-            for d in e["data_dirs"]:
-                seen.setdefault(d, epoch)
-        return seen
-
-    def _project_declared(self, df: DataFrame, written_ids: dict) -> DataFrame:
+    @staticmethod
+    def _project_declared(st: _State, df: DataFrame, written_ids: dict) -> DataFrame:
         """Project a frame of raw data files to the declared table schema:
         declared names, declared order, cast to declared types.
 
@@ -2012,7 +2074,7 @@ class SnapTable:
         the file was written under the SAME field id; otherwise it reads as
         typed NULL.
         """
-        declared = self.meta.get("columns", [])
+        declared = st.meta.get("columns", [])
         if not declared:
             return df
         from pyspark.sql import functions as F
@@ -2037,7 +2099,7 @@ class SnapTable:
         self,
         roots: list[Path],
         filters: list[tuple] | None,
-        spec: list[dict] | None = None,
+        spec: list[dict],
     ) -> list[str]:
         """Enumerate data directories under ``roots``, pruning partition
         levels that cannot match ``filters``.
@@ -2051,7 +2113,7 @@ class SnapTable:
         whole day-partition holding X); the residual row filter restores
         exactness. Listing is driver-side and O(partition dirs) — the same
         metadata-only role Iceberg gives manifest pruning. ``spec`` is the
-        layout the dirs were written under (defaults to the current spec).
+        layout the dirs were written under.
         """
         pcols = self._partition_cols(spec)
         if not pcols:
@@ -2146,14 +2208,12 @@ class SnapTable:
                 descend(root, level)
         return leaves
 
-    def _empty_declared(self, spark: SparkSession) -> DataFrame:
+    @staticmethod
+    def _empty_declared(spark: SparkSession, meta: dict) -> DataFrame:
         from pyspark.sql import types as T
 
         schema = T.StructType(
-            [
-                T.StructField(c["name"], spark_type(c["type"]))
-                for c in self.meta.get("columns", [])
-            ]
+            [T.StructField(c["name"], spark_type(c["type"])) for c in meta.get("columns", [])]
         )
         return spark.createDataFrame([], schema)
 
@@ -2212,22 +2272,29 @@ class SnapTable:
             if snapshot_id is not None or as_of_ms is not None:
                 raise ValueError("read: pass at most one of tag/snapshot_id/as_of_ms")
             snapshot_id = self.tag(tag)["snapshot_id"]
-        snap = self._snapshot_for(snapshot_id, as_of_ms)
-        log_audit_event(
-            "table_read", self.fq_name, details={"snapshot_id": snap["snapshot_id"]}
-        )
+        st = self._state()
+        return self._read_at(spark, st, st.snapshot(snapshot_id, as_of_ms), filters)
+
+    def _read_at(
+        self, spark: SparkSession, st: _State, snap: dict, filters: list[tuple] | None = None
+    ) -> DataFrame:
+        """:meth:`read` of snapshot ``snap`` of state ``st``: also a
+        rewrite's input, which therefore is exactly the head it commits
+        against (``read_at``)."""
+        log_audit_event("table_read", st.name, details={"snapshot_id": snap["snapshot_id"]})
         if not snap["data_dirs"]:
             # a committed snapshot CAN be legitimately empty (delete-all
             # then compact materializes to zero files): DELETE FROM t;
             # SELECT * must serve 0 typed rows, not an error
-            return self._apply_row_filters(self._empty_declared(spark), filters)
+            return self._apply_row_filters(self._empty_declared(spark, st.meta), filters)
         return self._read_mor(
-            spark, snap["data_dirs"], snap.get("delete_dirs") or [], filters
+            spark, st, snap["data_dirs"], snap.get("delete_dirs") or [], filters
         )
 
     def _read_mor(
         self,
         spark: SparkSession,
+        st: _State,
         dirs: list[str],
         ddirs: list[str],
         filters: list[tuple] | None,
@@ -2247,23 +2314,23 @@ class SnapTable:
         ``keys equal AND del_seq > data_seq`` — flat in the number of
         delete files. Delete files no data dir sits below are dropped
         before planning; with none left the plan is the plain scan."""
-        intro = self._dir_intro_seqs() if ddirs else {}
+        intro = st.dir_intro_seqs if ddirs else {}
         floor = min((intro.get(d, -1) for d in dirs), default=-1)
         ddirs = [dd for dd in ddirs if intro.get(dd, -1) > floor]
         if not ddirs:
-            return self._read_dirs(spark, dirs, filters, leaves=leaves)
-        data = self._read_dirs(spark, dirs, filters, seqs=intro, leaves=leaves)
-        keys, _, cond = self._scoped_delete_keys(spark, ddirs, intro)
+            return self._read_dirs(spark, st, dirs, filters, leaves=leaves)
+        data = self._read_dirs(spark, st, dirs, filters, seqs=intro, leaves=leaves)
+        keys, _, cond = self._scoped_delete_keys(spark, st, ddirs)
         return data.join(keys, cond, "left_anti").drop(_DATA_SEQ)
 
-    def _scoped_delete_keys(self, spark: SparkSession, ddirs: list[str], intro: dict[str, int]):
+    def _scoped_delete_keys(self, spark: SparkSession, st: _State, ddirs: list[str]):
         """The delete keys of ``ddirs`` as the build side of a
         sequence-scoped join with data rows tagged ``__sg_data_seq``:
         ``(keys, key column names, join condition)`` — keys equal AND the
         key's delete sequence above the row's data sequence."""
         from pyspark.sql import functions as F
 
-        keys = self._read_delete_keys(spark, ddirs, seqs=intro)
+        keys = self._read_delete_keys(spark, st, ddirs, seqs=st.dir_intro_seqs)
         kcols = [c for c in keys.columns if c != _DEL_SEQ]
         keys = keys.select(
             *[F.col(c).alias(f"__sg_key{i}") for i, c in enumerate(kcols)], _DEL_SEQ
@@ -2364,14 +2431,15 @@ class SnapTable:
                 "register(follow_head=True) tracks the current head — it "
                 "cannot combine with snapshot_id/as_of_ms/tag pinning"
             )
-        base = name or self.meta["name"]
-        # probed BEFORE the read: a commit landing in between makes the
-        # recorded head older than the one served, never newer
+        # probed BEFORE the state read: a commit landing in between makes
+        # the recorded head older than the one served, never newer
         head = self.head_sequence() if follow_head else None
+        st = self._state()
+        base = name or st.meta["name"]
         try:
-            df = self.read(
-                spark, snapshot_id=snapshot_id, as_of_ms=as_of_ms, tag=tag
-            )
+            # the rows come through the public read, the one entry point a
+            # read trace instruments; it takes a state of its own
+            df = self.read(spark, snapshot_id=snapshot_id, as_of_ms=as_of_ms, tag=tag)
         except TableNotFoundError:
             # no commits yet: a follow-head view serves the DECLARED empty
             # schema (`SELECT * FROM t` on a fresh table is 0 typed rows)
@@ -2380,21 +2448,18 @@ class SnapTable:
                 raise
             if metadata_tables:
                 raise TableNotFoundError(
-                    f"Table {self.meta['name']!r} has no commits yet — its "
+                    f"Table {st.meta['name']!r} has no commits yet — its "
                     f"metadata views ({base}__snapshots/…) only exist after "
                     "the first commit"
                 ) from None
-            df = self._empty_declared(spark)
-        df = read_with_access_level(
-            df, self.meta, access_level, table=self.fq_name
-        )
-        df = read_with_row_policies(
-            df, row_policies or {}, access_level, table=self.fq_name
-        )
+            df = self._empty_declared(spark, st.meta)
+        df = read_with_access_level(df, st.meta, access_level, table=st.name)
+        df = read_with_row_policies(df, row_policies or {}, access_level, table=st.name)
         df.createOrReplaceTempView(base)
         if metadata_tables:
+            # each metadata table is a read of its own
             redact = (
-                set(get_restricted_columns(self.meta))
+                set(get_restricted_columns(st.meta))
                 if level is AccessLevel.READER
                 else None
             )
@@ -2423,17 +2488,10 @@ class SnapTable:
                 # fork (no branch-local log yet)
                 "head": head,
             }
-        log_audit_event(
-            "table_registered",
-            self.fq_name,
-            details={
-                "view": base,
-                "access_level": str(access_level),
-                "metadata_tables": metadata_tables,
-                "time_travel": bool(snapshot_id or as_of_ms or tag),
-                "follow_head": follow_head,
-            },
-        )
+        log_audit_event("table_registered", st.name, details={
+            "view": base, "access_level": str(access_level), "metadata_tables": metadata_tables,
+            "time_travel": bool(snapshot_id or as_of_ms or tag), "follow_head": follow_head,
+        })
         return base
 
     def follows_head_at(
@@ -2505,14 +2563,11 @@ class SnapTable:
                 "register_changes(follow_head=True) tracks the head as the "
                 "interval end — it cannot combine with to_snapshot_id"
             )
-        base = (name or self.meta["name"]) + "__changes"
         df = self.read_changes(spark, from_snapshot_id, to_snapshot_id)
-        df = read_with_access_level(
-            df, self.meta, access_level, table=self.fq_name
-        )
-        df = read_with_row_policies(
-            df, row_policies or {}, access_level, table=self.fq_name
-        )
+        st = self._state()
+        base = (name or st.meta["name"]) + "__changes"
+        df = read_with_access_level(df, st.meta, access_level, table=st.name)
+        df = read_with_row_policies(df, row_policies or {}, access_level, table=st.name)
         df.createOrReplaceTempView(base)
         _HEAD_REGISTRATIONS.pop(base, None)
         if follow_head:
@@ -2526,28 +2581,20 @@ class SnapTable:
                 "from_snapshot_id": from_snapshot_id,
                 # strip the suffix: the refresh passes name= back in and
                 # register_changes re-appends __changes
-                "name": (name or self.meta["name"]),
+                "name": (name or st.meta["name"]),
             }
-        log_audit_event(
-            "table_registered",
-            self.fq_name,
-            details={
-                "view": base,
-                "access_level": str(access_level),
-                "changelog": True,
-                "from_snapshot": from_snapshot_id,
-                "to_snapshot": to_snapshot_id,
-            },
-        )
+        log_audit_event("table_registered", st.name, details={
+            "view": base, "access_level": str(access_level), "changelog": True,
+            "from_snapshot": from_snapshot_id, "to_snapshot": to_snapshot_id,
+        })
         return base
 
     def unregister(self, spark: SparkSession, name: str | None = None) -> None:
         """Drop a registration's views and forget their follow-head
         records (the head view's and the changelog view's)."""
-        base = name or self.meta["name"]
+        base = name or self._state().meta["name"]
         forget_head_registrations((base, base + "__changes"))
-        for suffix in ("", "__snapshots", "__files", "__partitions",
-                       "__delete_files", "__refs", "__changes"):
+        for suffix in ("", *_METADATA_VIEWS, "__changes"):
             spark.catalog.dropTempView(base + suffix)
 
     def _refresh_head_registrations(self) -> None:
@@ -2588,7 +2635,7 @@ class SnapTable:
                 # write look failed. Drop the registration and warn loudly.
                 _HEAD_REGISTRATIONS.pop(base, None)
                 warnings.warn(
-                    f"follow-head view {base!r} on {self.fq_name} could not "
+                    f"follow-head view {base!r} on {self.root} could not "
                     f"be refreshed and was dropped: {exc}",
                     stacklevel=2,
                 )
@@ -2596,6 +2643,7 @@ class SnapTable:
     def _read_delete_keys(
         self,
         spark: SparkSession,
+        st: _State,
         ddirs: list[str],
         seqs: dict[str, int] | None = None,
     ) -> DataFrame:
@@ -2618,7 +2666,7 @@ class SnapTable:
         from pyspark.sql import functions as F
         from pyspark.sql import types as T
 
-        id_to_name = {fid: name for name, fid in self._column_ids().items()}
+        id_to_name = {fid: name for name, fid in self._column_ids(st.meta).items()}
         groups: dict[tuple, tuple[dict, str, list[str]]] = {}
         for dd in ddirs:
             schema = (self.data_dir / dd / self._KEY_SCHEMA).read_text()
@@ -2628,7 +2676,7 @@ class SnapTable:
             ).items():
                 if fid not in id_to_name:
                     raise ValueError(
-                        f"MoR delete file {dd} on {self.fq_name} is keyed "
+                        f"MoR delete file {dd} on {st.name} is keyed "
                         f"on field id {fid} ({written!r} at write time), "
                         "which is no longer a declared column"
                     )
@@ -2653,7 +2701,7 @@ class SnapTable:
         return out
 
     def _translate_filters(
-        self, filters: list[tuple], written_ids: dict
+        self, st: _State, filters: list[tuple], written_ids: dict
     ) -> list[tuple] | None:
         """Rewrite filter column names into one dir epoch's WRITTEN names
         by field id, the rules of :meth:`_project_declared` (a filter on a
@@ -2661,7 +2709,7 @@ class SnapTable:
         pre-rename dirs; a name the table does not declare passes through).
         None = some filtered column does not exist in this epoch — it reads
         as typed NULL, no comparison can hold, the whole epoch is prunable."""
-        ids = self._column_ids()
+        ids = self._column_ids(st.meta)
         out = []
         for col, op, value in filters:
             wname = col if col not in ids else next(
@@ -2675,6 +2723,7 @@ class SnapTable:
     def _read_dirs(
         self,
         spark: SparkSession,
+        st: _State,
         dirs: list[str],
         filters: list[tuple] | None,
         seqs: dict[str, int] | None = None,
@@ -2707,10 +2756,9 @@ class SnapTable:
         top_seqs: dict[str, set[int]] = {}
         for d in dirs if seqs is not None else ():
             top_seqs.setdefault(top(d), set()).add(seqs.get(d, -1))
-        dir_epochs = self._dir_epochs()
         groups: dict[tuple, tuple[dict, list[str]]] = {}
         for d in dirs:
-            epoch = dir_epochs[d]
+            epoch = st.dir_epochs[d]
             apart = d if len(top_seqs.get(top(d), ())) > 1 else None
             key = (json.dumps(epoch, sort_keys=True), apart)
             groups.setdefault(key, (epoch, []))[1].append(d)
@@ -2719,7 +2767,7 @@ class SnapTable:
             ids = epoch["column_ids"]
             gfilters = filters or []
             if filters:
-                gfilters = self._translate_filters(filters, ids)
+                gfilters = self._translate_filters(st, filters, ids)
                 if gfilters is None:
                     # a filtered column absent from this epoch's files reads
                     # as NULL — no comparison predicate can hold, skip
@@ -2752,7 +2800,7 @@ class SnapTable:
                 if self.root not in _ORC_SKIP_WARNED:
                     _ORC_SKIP_WARNED.add(self.root)
                     warnings.warn(
-                        f"Filtered read on ORC table {self.fq_name}: "
+                        f"Filtered read on ORC table {st.name}: "
                         "file-level min/max skipping is parquet-only "
                         "(pyarrow exposes no ORC stripe statistic values) "
                         "— every file in the pruned partitions will be "
@@ -2786,9 +2834,9 @@ class SnapTable:
                     _DATA_SEQ, _seq_by_path({top(d): seqs.get(d, -1) for d in gdirs})
                 )
             df = self._apply_row_filters(df, gfilters)
-            parts.append(self._project_declared(df, ids))
+            parts.append(self._project_declared(st, df, ids))
         if not parts:
-            out = self._apply_row_filters(self._empty_declared(spark), filters)
+            out = self._apply_row_filters(self._empty_declared(spark, st.meta), filters)
             if seqs is not None:
                 out = out.withColumn(_DATA_SEQ, F.lit(-1).cast("long"))
             return out
@@ -2826,7 +2874,7 @@ class SnapTable:
         in the snapshot's data files (Iceberg's ``total-records``): with
         outstanding merge-on-read deletes it includes the erased images,
         and the live count is ``read(spark, snapshot_id=…).count()``."""
-        entries = self._entries()
+        entries = self._state().entries
         return spark.createDataFrame(
             [
                 (
@@ -2859,7 +2907,7 @@ class SnapTable:
         (every commit ancestral — the pre-upgrade behavior, conservative).
         Metadata-only: reads the commit log, never data files.
         """
-        entries = self._entries()
+        entries = self._state().entries
         seq_to_idx = {e["sequence"]: i for i, e in enumerate(entries)}
         ancestors: set[int] = set()
         i = len(entries) - 1
@@ -2914,7 +2962,7 @@ class SnapTable:
         publish them for restricted columns (Lake Formation redacts file
         stats the same way for cell-filtered tables).
         """
-        snap = self._snapshot_for(snapshot_id, None)
+        snap = self._state().snapshot(snapshot_id, None)
         redact = redact_columns or set()
 
         def _partition_key_redacted(key: str) -> bool:
@@ -2988,8 +3036,9 @@ class SnapTable:
         data files it applies to — the read-amplification audit for MoR
         tables (big counts here = time to :meth:`compact`). Metadata-only:
         footers + paths, no data scan."""
-        snap = self._snapshot_for(snapshot_id, None)
-        intro = self._dir_intro_seqs()
+        st = self._state()
+        snap = st.snapshot(snapshot_id, None)
+        intro = st.dir_intro_seqs
         rows = []
         for d in snap.get("delete_dirs") or []:
             base = self.data_dir / d
@@ -3035,6 +3084,19 @@ class SnapTable:
 
     # -- schema evolution --------------------------------------------------
 
+    def _evolve(self, st: _State, meta: dict, details: dict) -> dict:
+        """Write ``meta``, a modified copy of ``st.meta``, and audit the
+        change. On a branch only the schema lands, in its ref
+        (copy-on-evolve: "readers on main see the old schema",
+        deep-dive.md:267-272)."""
+        if st.ref is None:
+            self._write_meta(meta)
+        else:
+            ref = {**st.ref, "columns": meta["columns"], "next_field_id": meta["next_field_id"]}
+            _write_atomic(self._broot / "branch.json", json.dumps(ref, indent=2))
+        log_audit_event("schema_evolution", st.name, details=details)
+        return meta
+
     def evolve_add_column(self, name: str, col_type: str, doc: str = "") -> dict:
         """ADD COLUMN (Iceberg schema evolution, the capability the
         reference advertises via the table format, ``docs/architecture.md:
@@ -3046,38 +3108,29 @@ class SnapTable:
         (the write-side schema check enforces it).
         """
         spark_type(col_type)  # an undeclarable type raises before any write
-        meta = self.meta
-        cols = meta.get("columns", [])
-        if any(c["name"] == name for c in cols):
-            raise ValueError(f"Column {name!r} already exists on {self.fq_name}")
+        st = self._state()
+        if name in st.columns:
+            raise ValueError(f"Column {name!r} already exists on {st.name}")
+        meta = copy.deepcopy(st.meta)
         fid = meta["next_field_id"]
-        cols.append({"name": name, "type": col_type, "doc": doc, "id": fid})
-        meta["columns"] = cols
+        meta["columns"] = meta.get("columns", []) + [
+            {"name": name, "type": col_type, "doc": doc, "id": fid}
+        ]
         meta["next_field_id"] = fid + 1
-        self._write_meta(meta)
-        log_audit_event(
-            "schema_evolution",
-            self.fq_name,
-            details={"change": "add_column", "column": name, "type": col_type},
+        return self._evolve(
+            st, meta, {"change": "add_column", "column": name, "type": col_type}
         )
-        return meta
 
     def evolve_drop_column(self, name: str) -> dict:
         """DROP COLUMN — metadata-only, like Iceberg: data files keep the
         bytes, reads project the declared schema so the column vanishes,
         and the write-side check stops accepting it."""
-        meta = self.meta
-        cols = meta.get("columns", [])
-        if not any(c["name"] == name for c in cols):
-            raise ValueError(f"Column {name!r} does not exist on {self.fq_name}")
-        meta["columns"] = [c for c in cols if c["name"] != name]
-        self._write_meta(meta)
-        log_audit_event(
-            "schema_evolution",
-            self.fq_name,
-            details={"change": "drop_column", "column": name},
-        )
-        return meta
+        st = self._state()
+        if name not in st.columns:
+            raise ValueError(f"Column {name!r} does not exist on {st.name}")
+        meta = copy.deepcopy(st.meta)
+        meta["columns"] = [c for c in meta["columns"] if c["name"] != name]
+        return self._evolve(st, meta, {"change": "drop_column", "column": name})
 
     #: Iceberg-safe type promotions (spec §Schema Evolution): widening only,
     #: so every already-written value remains exactly representable
@@ -3093,65 +3146,50 @@ class SnapTable:
         column (Iceberg rename semantics — no rewrite, no data loss,
         unlike Hive-style name-based tables where a rename orphans every
         old file's values)."""
-        meta = self.meta
-        cols = meta.get("columns", [])
-        if not any(c["name"] == old for c in cols):
-            raise ValueError(f"Column {old!r} does not exist on {self.fq_name}")
-        if any(c["name"] == new for c in cols):
-            raise ValueError(f"Column {new!r} already exists on {self.fq_name}")
-        for c in cols:
-            if c["name"] == old:
-                c["name"] = new
-        meta["columns"] = cols
+        st = self._state()
+        if old not in st.columns:
+            raise ValueError(f"Column {old!r} does not exist on {st.name}")
+        if new in st.columns:
+            raise ValueError(f"Column {new!r} already exists on {st.name}")
+        meta = copy.deepcopy(st.meta)
         # partition_spec / sort_order entries are keyed by NAME here (unlike
         # Iceberg's id-based specs) — rename them too, or subsequent writes
         # silently become unpartitioned/unsorted (the spec filter drops
         # entries whose column is absent from the frame)
-        for p in meta.get("partition_spec") or []:
-            if p.get("column") == old:
-                p["column"] = new
-        for o in meta.get("sort_order") or []:
-            if o.get("column") == old:
-                o["column"] = new
+        for c in meta["columns"]:
+            if c["name"] == old:
+                c["name"] = new
+        for entry in [*(meta.get("partition_spec") or []), *(meta.get("sort_order") or [])]:
+            if entry.get("column") == old:
+                entry["column"] = new
         # identifier_fields too — or the next MoR delete/upsert on a
         # renamed key column fails its declared-column validation
         if meta.get("identifier_fields"):
             meta["identifier_fields"] = [
                 new if f == old else f for f in meta["identifier_fields"]
             ]
-        self._write_meta(meta)
-        log_audit_event(
-            "schema_evolution",
-            self.fq_name,
-            details={"change": "rename_column", "from": old, "to": new},
-        )
-        return meta
+        return self._evolve(st, meta, {"change": "rename_column", "from": old, "to": new})
 
     def evolve_widen_column(self, name: str, new_type: str) -> dict:
         """Widen a column's type (int→long, float→double) — the promotions
         the Iceberg spec allows because every written value stays exactly
         representable. Metadata-only: the declared-schema projection casts
         old files up on read. Narrowing or cross-family changes raise."""
-        meta = self.meta
-        cols = meta.get("columns", [])
-        target = next((c for c in cols if c["name"] == name), None)
+        st = self._state()
+        meta = copy.deepcopy(st.meta)
+        target = next((c for c in meta.get("columns", []) if c["name"] == name), None)
         if target is None:
-            raise ValueError(f"Column {name!r} does not exist on {self.fq_name}")
+            raise ValueError(f"Column {name!r} does not exist on {st.name}")
         if (target["type"], new_type) not in self._SAFE_PROMOTIONS:
             raise ValueError(
                 f"Unsafe type change {target['type']!r} -> {new_type!r} on "
-                f"{self.fq_name}.{name}: only widening promotions "
+                f"{st.name}.{name}: only widening promotions "
                 f"{sorted(self._SAFE_PROMOTIONS)} preserve written values"
             )
         target["type"] = new_type
-        meta["columns"] = cols
-        self._write_meta(meta)
-        log_audit_event(
-            "schema_evolution",
-            self.fq_name,
-            details={"change": "widen_column", "column": name, "type": new_type},
+        return self._evolve(
+            st, meta, {"change": "widen_column", "column": name, "type": new_type}
         )
-        return meta
 
     _TRANSFORM_RE = re.compile(
         r"^(identity|year|month|day|hour|bucket\[\d+\]|truncate\[\d+\])$"
@@ -3164,12 +3202,12 @@ class SnapTable:
         compactions cluster by the new order. Entries are
         ``{"column", "direction" (asc|desc), "null_order"
         (nulls_first|nulls_last)}`` — the template's sort_order shape."""
-        declared = {c["name"] for c in self.meta.get("columns", [])}
+        st = self._state()
         for o in order:
-            if o.get("column") not in declared:
+            if o.get("column") not in st.columns:
                 raise ValueError(
                     f"evolve_sort_order: unknown column {o.get('column')!r} "
-                    f"on {self.fq_name}"
+                    f"on {st.name}"
                 )
             if o.get("direction", "asc") not in ("asc", "desc"):
                 raise ValueError(f"evolve_sort_order: bad direction in {o}")
@@ -3177,15 +3215,8 @@ class SnapTable:
                 "nulls_first", "nulls_last"
             ):
                 raise ValueError(f"evolve_sort_order: bad null_order in {o}")
-        meta = self.meta
-        meta["sort_order"] = [dict(o) for o in order]
-        self._write_meta(meta)
-        log_audit_event(
-            "schema_evolution",
-            self.fq_name,
-            details={"change": "sort_order", "order": order},
-        )
-        return meta
+        meta = {**st.meta, "sort_order": [dict(o) for o in order]}
+        return self._evolve(st, meta, {"change": "sort_order", "order": order})
 
     def evolve_partition_spec(self, new_spec: list[dict]) -> dict:
         """Change how the table is partitioned WITHOUT rewriting any data —
@@ -3201,87 +3232,63 @@ class SnapTable:
         and falls back to scan-plus-row-filter on the old ones — exactly
         Iceberg's split-planning across specs.
         """
-        declared = {c["name"] for c in self.meta.get("columns", [])}
+        st = self._state()
         for p in new_spec:
             if "column" not in p or "transform" not in p:
                 raise ValueError(
                     f"Partition spec entries need 'column' and 'transform': {p!r}"
                 )
-            if declared and p["column"] not in declared:
+            if st.columns and p["column"] not in st.columns:
                 raise ValueError(
-                    f"Partition column {p['column']!r} is not declared on {self.fq_name}"
+                    f"Partition column {p['column']!r} is not declared on {st.name}"
                 )
             if not self._TRANSFORM_RE.match(p["transform"]):
                 raise ValueError(f"Unknown partition transform: {p['transform']!r}")
-        meta = self.meta
-        old_spec = meta.get("partition_spec") or []
-        meta["partition_spec"] = list(new_spec)
-        self._write_meta(meta)
-        log_audit_event(
-            "schema_evolution",
-            self.fq_name,
-            details={"change": "partition_spec", "from": old_spec, "to": new_spec},
-        )
-        return meta
+        meta = {**st.meta, "partition_spec": list(new_spec)}
+        return self._evolve(st, meta, {
+            "change": "partition_spec",
+            "from": st.meta.get("partition_spec") or [], "to": new_spec,
+        })
 
     def set_properties(self, props: dict) -> dict:
         """Merge table properties (Iceberg's ``ALTER TABLE … SET
         TBLPROPERTIES``). Metadata-only; keys overwrite, others keep."""
-        meta = self.meta
-        old = dict(meta.get("properties", {}))
-        meta.setdefault("properties", {}).update(
-            {str(k): str(v) for k, v in props.items()}
-        )
-        self._write_meta(meta)
-        log_audit_event(
-            "schema_evolution",
-            self.fq_name,
-            details={"change": "set_properties", "from": old,
-                     "to": meta["properties"]},
-        )
-        return meta
+        st = self._state()
+        old = st.meta.get("properties", {})
+        meta = {**st.meta, "properties": {**old, **{str(k): str(v) for k, v in props.items()}}}
+        return self._evolve(st, meta, {
+            "change": "set_properties", "from": old, "to": meta["properties"],
+        })
 
     def unset_properties(self, keys: list[str]) -> dict:
         """Remove table properties (``ALTER TABLE … UNSET TBLPROPERTIES``).
         Unknown keys are ignored, like Iceberg's IF EXISTS behavior."""
-        meta = self.meta
-        old = dict(meta.get("properties", {}))
-        for k in keys:
-            meta.get("properties", {}).pop(str(k), None)
-        self._write_meta(meta)
-        log_audit_event(
-            "schema_evolution",
-            self.fq_name,
-            details={"change": "unset_properties", "from": old,
-                     "to": meta.get("properties", {})},
-        )
-        return meta
+        st = self._state()
+        old = st.meta.get("properties", {})
+        drop = {str(k) for k in keys}
+        meta = {**st.meta, "properties": {k: v for k, v in old.items() if k not in drop}}
+        return self._evolve(st, meta, {
+            "change": "unset_properties", "from": old, "to": meta["properties"],
+        })
 
     def set_identifier_fields(self, fields: list[str]) -> dict:
         """Declare the row-identity columns (Iceberg's ``ALTER TABLE …
         SET IDENTIFIER FIELDS`` — the fields MoR equality deletes key
         on). Fields must be declared columns; an empty list clears."""
-        meta = self.meta
-        declared = {c["name"] for c in meta.get("columns", [])}
+        st = self._state()
         for f in fields:
-            if f not in declared:
+            if f not in st.columns:
                 raise ValueError(
                     f"Identifier field {f!r} is not a declared column of "
-                    f"{self.fq_name}"
+                    f"{st.name}"
                 )
-        old = meta.get("identifier_fields")
+        meta = {k: v for k, v in st.meta.items() if k != "identifier_fields"}
         if fields:
             meta["identifier_fields"] = list(fields)
-        else:
-            meta.pop("identifier_fields", None)
-        self._write_meta(meta)
-        log_audit_event(
-            "schema_evolution",
-            self.fq_name,
-            details={"change": "identifier_fields", "from": old,
-                     "to": fields or None},
-        )
-        return meta
+        return self._evolve(st, meta, {
+            "change": "identifier_fields",
+            "from": st.meta.get("identifier_fields"), "to": fields or None,
+        })
 
     # -- incremental reads -------------------------------------------------
 
@@ -3311,44 +3318,43 @@ class SnapTable:
         (a dropped column stays dropped; appends that predate an
         ``evolve_add_column`` carry the new column as typed NULLs).
         """
-        entries = self._entries()
+        st = self._state()
+        entries = st.entries
         ids = [e["snapshot_id"] for e in entries]
         if from_snapshot_id not in ids:
-            raise ValueError(f"No snapshot {from_snapshot_id!r} in {self.fq_name}")
+            raise ValueError(f"No snapshot {from_snapshot_id!r} in {st.name}")
         start = ids.index(from_snapshot_id)
         if to_snapshot_id is not None:
             if to_snapshot_id not in ids:
                 raise ValueError(
-                    f"No snapshot {to_snapshot_id!r} in {self.fq_name}"
+                    f"No snapshot {to_snapshot_id!r} in {st.name}"
                 )
             end = ids.index(to_snapshot_id)
             if end < start:
                 raise ValueError(
                     f"read_incremental: to_snapshot_id {to_snapshot_id!r} "
                     f"predates from_snapshot_id {from_snapshot_id!r} on "
-                    f"{self.fq_name}"
+                    f"{st.name}"
                 )
             newer = entries[start + 1 : end + 1]
         else:
             newer = entries[start + 1 :]
         if not newer:
-            return self.read(spark).limit(0)
+            return self._read_at(spark, st, entries[-1]).limit(0)
         non_append = [e["operation"] for e in newer if e["operation"] != "append"]
         if non_append:
             raise ValueError(
                 f"Incremental read invalid across {non_append} snapshots on "
-                f"{self.fq_name}; re-baseline with a full read"
+                f"{st.name}; re-baseline with a full read"
             )
         base_dirs = set(entries[start]["data_dirs"])
         new_dirs = [d for d in newer[-1]["data_dirs"] if d not in base_dirs]
-        log_audit_event(
-            "table_read",
-            self.fq_name,
-            details={"incremental_from": from_snapshot_id, "new_dirs": len(new_dirs)},
-        )
+        log_audit_event("table_read", st.name, details={
+            "incremental_from": from_snapshot_id, "new_dirs": len(new_dirs),
+        })
         if not new_dirs:
-            return self.read(spark).limit(0)
-        return self._read_dirs(spark, new_dirs, filters)
+            return self._read_at(spark, st, entries[-1]).limit(0)
+        return self._read_dirs(spark, st, new_dirs, filters)
 
     # -- maintenance -------------------------------------------------------
 
@@ -3395,6 +3401,7 @@ class SnapTable:
         rewrote a dir or delete file this compaction replaces, it raises
         CommitConflictError and that commit's head stands; re-run it.
         """
+        st = self._state()
         if partition_filter is not None or partition_leaves is not None:
             if target_files is not None:
                 raise ValueError(
@@ -3402,51 +3409,25 @@ class SnapTable:
                     "target_files (file count follows the scoped slice)"
                 )
             return self._compact_partitions(
-                spark, partition_filter, partition_leaves, zorder
+                spark, st, partition_filter, partition_leaves, zorder
             )
-        current, df = self._read_head(spark)
-        from pyspark.sql import functions as F
-
-        if zorder:
-            from iceberg_quickstart_iac_spark.operators.zorder import (
-                column_ranges,
-                zorder_key,
-            )
-
-            ranges = column_ranges(df, zorder)
-            df = df.withColumn(
-                "__z", zorder_key(zorder, [ranges[c] for c in zorder])
-            )
-            if not self._partition_cols():
-                # unpartitioned: the z-curve IS the file layout — range
-                # partition on the key so each file owns a curve segment
-                n_files = (
-                    target_files or df.sparkSession.sparkContext.defaultParallelism
-                )
-                df = df.repartitionByRange(n_files, F.col("__z"))
-            # partitioned tables z-sort WITHIN each partition dir (the
-            # hash repartition in _write_data keeps dir co-location)
-            written = self._write_data(
-                df, order_override=[F.col("__z")], drop_cols=["__z"]
-            )
-        else:
-            if target_files is not None:
-                df = df.coalesce(target_files)
-            # through _write_data so the compacted copy keeps the declared
-            # physical layout (partition dirs + within-partition sort order)
-            written = self._write_data(df)
+        current = st.snapshot(None, None)
+        df = self._read_at(spark, st, current)
+        if target_files is not None and not zorder:
+            df = df.coalesce(target_files)
+        written = self._write_compacted(
+            st, df, zorder, target_files or spark.sparkContext.defaultParallelism
+        )
         dir_name, _, files = written
         # lineage: which directories this rewrite ABSORBED — a later
         # cherrypick_snapshot must treat an absorbed dir's rows as already
         # present wherever this dir is referenced
         entry = self._commit_rewrite(
-            "compact", current, written, {"absorbed_dirs": {dir_name: sorted(current["data_dirs"])}}
+            st, "compact", written, {"absorbed_dirs": {dir_name: sorted(current["data_dirs"])}}
         )
-        log_audit_event(
-            "table_write",
-            self.fq_name,
-            details={"mode": "compact", "file_count": files, "zorder": zorder or []},
-        )
+        log_audit_event("table_write", st.name, details={
+            "mode": "compact", "file_count": files, "zorder": zorder or [],
+        })
         # procedure-output counts (Iceberg's rewrite_data_files reports the
         # files it touched, not table totals) — returned on a COPY, never
         # persisted to the commit log; a full compact rewrites every file
@@ -3455,6 +3436,34 @@ class SnapTable:
             "rewritten_files": int(current["file_count"]),
             "added_files": int(files),
         }
+
+    def _write_compacted(
+        self,
+        st: _State,
+        df: DataFrame,
+        zorder: list[str] | None,
+        n_files: int,
+        distribution: str = "hash",
+    ) -> tuple[str, int, int]:
+        """A compaction's write of ``df`` through :meth:`_write_data`, so the
+        copy keeps ``st``'s physical layout (partition dirs, within-partition
+        sort order). ``zorder=[col, …]`` replaces the sort with a Morton key
+        over those columns: an unpartitioned table's z-curve IS its file
+        layout, range-partitioned into ``n_files`` segments; a partitioned
+        table z-sorts WITHIN each partition dir."""
+        if not zorder:
+            return self._write_data(st, df, distribution=distribution)
+        from pyspark.sql import functions as F
+
+        from iceberg_quickstart_iac_spark.operators.zorder import column_ranges, zorder_key
+
+        ranges = column_ranges(df, zorder)
+        df = df.withColumn("__z", zorder_key(zorder, [ranges[c] for c in zorder]))
+        if not st.meta.get("partition_spec"):
+            df = df.repartitionByRange(n_files, F.col("__z"))
+        return self._write_data(
+            st, df, order_override=[F.col("__z")], drop_cols=["__z"], distribution=distribution
+        )
 
     def _leaf_suffix(self, top_dir: str, leaf: str) -> str:
         """A leaf dir's partition suffix relative to its TOP-LEVEL data
@@ -3488,9 +3497,9 @@ class SnapTable:
                 return False  # same level, different value — disjoint
         return True  # one is a directory-prefix of the other
 
-    def _delete_debt(self, spark: SparkSession, snap: dict) -> dict[str, dict[str, int]]:
-        """Each delete dir of ``snap`` → {partition-leaf suffix: rows of
-        ``snap``'s data files it erases}. One query: the data files' keys
+    def _delete_debt(self, spark: SparkSession, st: _State) -> dict[str, dict[str, int]]:
+        """Each delete dir of ``st``'s head → {partition-leaf suffix: rows
+        of the head's data files it erases}. One query: the data files' keys
         and partition columns joined to the delete keys under the
         sequence-scoping rule of :meth:`_read_mor`, grouped by (delete
         sequence, leaf). It scans the table's key and partition columns,
@@ -3499,15 +3508,19 @@ class SnapTable:
         handle. A leaf suffix renders the CURRENT spec's physical levels
         unescaped (``__p_day=2024-01-15``, nested with ``/``; ``""`` for an
         unpartitioned table)."""
+        snap = st.head
         if self._debt_memo is not None and self._debt_memo[0] == snap["snapshot_id"]:
             return self._debt_memo[1]
         ddirs = list(snap.get("delete_dirs") or [])
         debt: dict[str, dict[str, int]] = {dd: {} for dd in ddirs}
         if ddirs and snap["data_dirs"]:
-            intro = self._dir_intro_seqs()
-            keys, kcols, cond = self._scoped_delete_keys(spark, ddirs, intro)
-            data = self._read_dirs(spark, snap["data_dirs"], None, seqs=intro)
-            pcols = [(n, p) for n, p in self._partition_cols() if p["column"] in data.columns]
+            intro = st.dir_intro_seqs
+            keys, kcols, cond = self._scoped_delete_keys(spark, st, ddirs)
+            data = self._read_dirs(spark, st, snap["data_dirs"], None, seqs=intro)
+            pcols = [
+                (n, p) for n, p in self._partition_cols(st.meta.get("partition_spec") or [])
+                if p["column"] in data.columns
+            ]
             data = data.select(
                 *kcols,
                 _DATA_SEQ,
@@ -3533,6 +3546,7 @@ class SnapTable:
     def _compact_partitions(
         self,
         spark: SparkSession,
+        st: _State,
         partition_filter: list[tuple] | None,
         partition_leaves: list[str] | None,
         zorder: list[str] | None = None,
@@ -3542,11 +3556,9 @@ class SnapTable:
         ``strategy => 'sort', sort_order => 'zorder(…)'`` WITH a filter) —
         hot partitions get multi-column file bounding boxes while cold
         data is untouched."""
-        from pyspark.sql import functions as F
-
-        current = self._snapshot_for(None, None)
-        dir_epochs = self._dir_epochs()
-        intro = self._dir_intro_seqs()
+        current = st.snapshot(None, None)
+        dir_epochs = st.dir_epochs
+        intro = st.dir_intro_seqs
         ddirs = list(current.get("delete_dirs") or [])
         targets = set(partition_leaves or [])
 
@@ -3567,7 +3579,7 @@ class SnapTable:
                     )
                 ]
             else:
-                gf = self._translate_filters(partition_filter, epoch["column_ids"])
+                gf = self._translate_filters(st, partition_filter, epoch["column_ids"])
                 matched = (
                     self._leaf_dirs([root], gf, epoch["partition_spec"])
                     if gf is not None
@@ -3596,37 +3608,17 @@ class SnapTable:
             f for leaves in rewrite.values() for l in leaves for f in _list_data_files(Path(l))
         ]
         matched_files, matched_rows = len(old_files), _footer_row_count(old_files)
-        slice_df = self._read_mor(spark, list(rewrite), ddirs, None, leaves=rewrite)
+        slice_df = self._read_mor(spark, st, list(rewrite), ddirs, None, leaves=rewrite)
         # the range-distributed write samples its input before shuffling,
         # which would re-execute the scan + delete anti-join — persist so
         # the slice materializes once (unpersisted right after the write;
         # cached keeps the handle so derived frames don't orphan it)
         cached = slice_df.persist()
-        slice_df = cached
-        if zorder:
-            from iceberg_quickstart_iac_spark.operators.zorder import (
-                column_ranges,
-                zorder_key,
-            )
-
-            ranges = column_ranges(slice_df, zorder)
-            slice_df = slice_df.withColumn(
-                "__z", zorder_key(zorder, [ranges[c] for c in zorder])
-            )
-            if not self._partition_cols():
-                slice_df = slice_df.repartitionByRange(
-                    spark.sparkContext.defaultParallelism, F.col("__z")
-                )
-            new_dir, new_rows, new_files = self._write_data(
-                slice_df, order_override=[F.col("__z")], drop_cols=["__z"],
-                distribution="range",
-            )
-        else:
-            # range distribution: the slice is typically ONE hot partition,
-            # which hash mode would write on a single core
-            new_dir, new_rows, new_files = self._write_data(
-                slice_df, distribution="range"
-            )
+        # range distribution: the slice is typically ONE hot partition,
+        # which hash mode would write on a single core
+        new_dir, new_rows, new_files = self._write_compacted(
+            st, cached, zorder, spark.sparkContext.defaultParallelism, distribution="range"
+        )
         cached.unpersist()
         if new_rows == 0:
             # every row in the matched partitions was MoR-deleted: the
@@ -3642,7 +3634,7 @@ class SnapTable:
         # was rewritten in EVERY data dir it applies to (a suffix is
         # uncovered in a dir iff a SURVIVING leaf of that dir can
         # intersect it)
-        debt = self._delete_debt(spark, current)
+        debt = self._delete_debt(spark, st)
         retired: set[str] = set()
         for dd in ddirs:
             applies_to = [
@@ -3683,23 +3675,17 @@ class SnapTable:
         # images the rewrite materialized. The rewritten dir is written
         # under the CURRENT declared state (kept subpaths carry their own
         # epoch overrides).
-        entry = self._commit(_Delta(
-            "compact", self._write_epoch(), read_at=current,
+        entry = self._commit(st, _Delta(
+            "compact", self._write_epoch(st.meta), read_at=current,
             add=kept_dirs + ([new_dir] if new_dir is not None else []), remove=list(rewrite),
             remove_deletes=sorted(retired),
             rows=new_rows - matched_rows, files=new_files - matched_files, extra=extra,
         ))
-        log_audit_event(
-            "table_write",
-            self.fq_name,
-            details={
-                "mode": "compact_partitions",
-                "rewritten_dirs": len(rewrite),
-                "rewritten_files": matched_files,
-                "new_files": new_files,
-                "retired_delete_files": len(retired),
-            },
-        )
+        log_audit_event("table_write", st.name, details={
+            "mode": "compact_partitions", "rewritten_dirs": len(rewrite),
+            "rewritten_files": matched_files, "new_files": new_files,
+            "retired_delete_files": len(retired),
+        })
         # scoped procedure output: only the files the rewrite touched —
         # table-wide totals would misreport a where-scoped rewrite
         return {
@@ -3733,11 +3719,12 @@ class SnapTable:
         """
         import bisect
 
-        snap = self._snapshot_for(None, None)
+        st = self._state()
+        snap = st.snapshot(None, None)
         ddirs = list(snap.get("delete_dirs") or [])
         if len(ddirs) < 2:
             return snap
-        intro = self._dir_intro_seqs()
+        intro = st.dir_intro_seqs
         data_seqs = sorted(intro.get(d, -1) for d in snap["data_dirs"])
         groups: dict[int, list[str]] = {}
         for dd in ddirs:
@@ -3749,23 +3736,18 @@ class SnapTable:
         overrides: dict[str, int] = {}
         for dds in sources:
             new_dir, _ = self._write_delete_keys(
-                self._read_delete_keys(spark, sorted(dds)).dropDuplicates()
+                st, self._read_delete_keys(spark, st, sorted(dds)).dropDuplicates()
             )
             overrides[new_dir] = max(intro[dd] for dd in dds)
-        entry = self._commit(_Delta(
-            "rewrite_deletes", self._write_epoch(), read_at=snap,
+        entry = self._commit(st, _Delta(
+            "rewrite_deletes", self._write_epoch(st.meta), read_at=snap,
             add_deletes=list(overrides), remove_deletes=[dd for dds in sources for dd in dds],
             extra={"dir_sequence_overrides": overrides},
         ))
-        log_audit_event(
-            "table_write",
-            self.fq_name,
-            details={
-                "mode": "rewrite_deletes",
-                "delete_files_before": len(ddirs),
-                "delete_files_after": len(entry["delete_dirs"]),
-            },
-        )
+        log_audit_event("table_write", st.name, details={
+            "mode": "rewrite_deletes", "delete_files_before": len(ddirs),
+            "delete_files_after": len(entry["delete_dirs"]),
+        })
         return entry
 
     def remove_orphan_files(
@@ -3840,8 +3822,9 @@ class SnapTable:
         it) and per-category findings; raises nothing, so it is safe to
         run against a half-restored table.
         """
+        st = self._state()
         report: dict = {
-            "table": self.fq_name,
+            "table": st.name,
             "ok": True,
             "missing_dirs": [],
             "empty_dirs": [],
@@ -3851,12 +3834,12 @@ class SnapTable:
             "retention_gaps": [],
             "orphan_dirs": [],
         }
-        entries = self._entries()
+        entries = st.entries
         if not entries:
             report["log_errors"].append("no snapshots")
             report["ok"] = False
             return report
-        expired_seqs = set(self.meta["expired_sequences"])
+        expired_seqs = set(st.meta["expired_sequences"])
         for prev, e in zip(entries, entries[1:]):
             if e["sequence"] == prev["sequence"] + 1:
                 # adjacent survivors: the parent chain must hold exactly
@@ -3884,7 +3867,7 @@ class SnapTable:
                     report["retention_gaps"].append(
                         (prev["sequence"], e["sequence"])
                     )
-        snap = self._snapshot_for(snapshot_id, None)
+        snap = st.snapshot(snapshot_id, None)
         total_rows = 0
         total_files = 0
         for d in snap["data_dirs"]:
@@ -3934,16 +3917,17 @@ class SnapTable:
         ``history_expire_max_snapshot_age_ms``. The current snapshot always
         survives. Returns the number of snapshots removed.
         """
+        st = self._state()
         if older_than_ms is None:
             if max_age_ms is None:
                 max_age_ms = int(
-                    self.meta.get("properties", {}).get(
+                    st.meta.get("properties", {}).get(
                         "history_expire_max_snapshot_age_ms", 7 * 86400 * 1000
                     )
                 )
             older_than_ms = _now_ms() - max_age_ms
 
-        entries = self._entries()
+        entries = st.entries
         if not entries:
             return 0
         keep = [e for e in entries if e["committed_at_ms"] > older_than_ms]
@@ -3976,16 +3960,14 @@ class SnapTable:
             # Tombstone the dropped sequences in table metadata so
             # verify() can tell legitimate retention gaps from log entries
             # lost to a partial restore (which have no tombstone).
-            meta = self.meta
-            tomb = set(meta["expired_sequences"])
-            tomb.update(e["sequence"] for e in drop)
-            meta["expired_sequences"] = sorted(tomb)
-            # the entries that dated each dir's write epoch may be among
-            # the dropped: keep the epochs of the dirs that stay live
-            meta["dir_epochs"] = {
-                d: ep for d, ep in self._dir_epochs().items() if d in referenced
-            }
-            self._write_meta(meta)
+            tomb = set(st.meta["expired_sequences"]) | {e["sequence"] for e in drop}
+            self._write_meta({
+                **st.meta,
+                "expired_sequences": sorted(tomb),
+                # the entries that dated each dir's write epoch may be among
+                # the dropped: keep the epochs of the dirs that stay live
+                "dir_epochs": {d: ep for d, ep in st.dir_epochs.items() if d in referenced},
+            })
         for e in drop:
             (self.log_dir / f"{e['sequence']:012d}.json").unlink(missing_ok=True)
         ref_whole, ref_subs = self._ref_index(referenced)
@@ -4064,10 +4046,11 @@ class SnapTable:
     ) -> dict:
         """Tag the current (or given) snapshot. Metadata-only; immutable —
         re-tagging an existing name raises (delete first, like Iceberg)."""
+        st = self._state()
         path = self._tag_path(name)
         if path.exists():
-            raise ValueError(f"Tag {name!r} already exists on {self.fq_name}")
-        snap = self._snapshot_for(snapshot_id, None)
+            raise ValueError(f"Tag {name!r} already exists on {st.name}")
+        snap = st.snapshot(snapshot_id, None)
         path.parent.mkdir(parents=True, exist_ok=True)
         ref = {
             "name": name,
@@ -4081,18 +4064,12 @@ class SnapTable:
         try:
             os.link(tmp, path)
         except FileExistsError:
-            raise ValueError(f"Tag {name!r} already exists on {self.fq_name}")
+            raise ValueError(f"Tag {name!r} already exists on {st.name}")
         finally:
             tmp.unlink(missing_ok=True)
-        log_audit_event(
-            "schema_evolution",
-            self.fq_name,
-            details={
-                "change": "create_tag",
-                "tag": name,
-                "snapshot_id": snap["snapshot_id"],
-            },
-        )
+        log_audit_event("schema_evolution", st.name, details={
+            "change": "create_tag", "tag": name, "snapshot_id": snap["snapshot_id"],
+        })
         return ref
 
     def tag(self, name: str) -> dict:
@@ -4119,20 +4096,11 @@ class SnapTable:
         """The named-refs metadata table, like Iceberg's ``t.refs``: one
         row per branch/tag with the snapshot it points at. Driver-side
         metadata only — O(refs), no data scan."""
-        main_entries = self._entries()
-        rows = [
-            (
-                "main",
-                "BRANCH",
-                main_entries[-1]["snapshot_id"] if main_entries else None,
-                None,
-            )
+        heads = [("main", self._state().head)] + [
+            (b["name"], _BranchView(self.root, b["name"])._state().head)
+            for b in self.list_branches()
         ]
-        for b in self.list_branches():
-            bv = _BranchView(self.root, b["name"])
-            entries = bv._entries()
-            head = entries[-1]["snapshot_id"] if entries else None
-            rows.append((b["name"], "BRANCH", head, None))
+        rows = [(name, "BRANCH", head and head["snapshot_id"], None) for name, head in heads]
         for ref in self.list_tags():
             rows.append(
                 (ref["name"], "TAG", ref["snapshot_id"], ref.get("max_ref_age_ms"))
@@ -4185,20 +4153,20 @@ class SnapTable:
         branch view — a full SnapTable interface whose writes, schema
         evolutions, time-travel, and snapshot listing are isolated from
         main. Data directories are shared (refs are metadata-only)."""
+        st = self._state()
         broot = self._branch_root(name)
         if (broot / "branch.json").exists():
-            raise ValueError(f"Branch {name!r} already exists on {self.fq_name}")
-        entries = self._entries()
+            raise ValueError(f"Branch {name!r} already exists on {st.name}")
         if at_snapshot_id is None:
-            fork_seq = entries[-1]["sequence"] if entries else -1
+            fork_seq = st.head["sequence"] if st.head else -1
         else:
-            fork_seq = self._snapshot_for(at_snapshot_id, None)["sequence"]
+            fork_seq = st.snapshot(at_snapshot_id, None)["sequence"]
         (broot / "_log").mkdir(parents=True, exist_ok=True)
         ref = {
             "name": name,
             "fork_sequence": fork_seq,
             # schema at fork time, for merge conflict detection
-            "base_columns": self.meta.get("columns", []),
+            "base_columns": st.meta.get("columns", []),
             "created_at_ms": _now_ms(),
         }
         (broot / "branch.json").write_text(json.dumps(ref, indent=2))
@@ -4210,30 +4178,46 @@ class SnapTable:
         return _BranchView(self.root, name)
 
     def delete_branch(self, name: str) -> None:
+        """Delete branch ``name``: its ref and log (the data dirs it shares
+        are main's to expire), and the follow-head records of its views —
+        each such temp view is dropped from the session that registered it,
+        so no later commit tries to re-resolve a branch that is gone. A
+        catalog-branch publish (``CatalogBranch.merge``) and abandon
+        (``CatalogBranch.delete``) both end here."""
         broot = self._branch_root(name)
         if not (broot / "branch.json").exists():
             raise ValueError(f"No branch {name!r} on {self.fq_name}")
+        own = _head_reg_key(self.root)
+        for view, rec in list(_HEAD_REGISTRATIONS.items()):
+            if rec["root"] == own and getattr(rec["table"], "branch_name", None) == name:
+                del _HEAD_REGISTRATIONS[view]
+                for suffix in ("", *(_METADATA_VIEWS if rec.get("metadata_tables") else ())):
+                    rec["spark"].catalog.dropTempView(view + suffix)
         shutil.rmtree(broot)
 
-    def _merge_conflict(self, name: str, main_entries: list[dict]) -> str | None:
-        """Why branch ``name`` cannot merge into main at ``main_entries``
-        (main's log), or None: the one mergeability rule
-        :meth:`merge_branch` enforces and a catalog publish validates every
-        table with before it merges any. A branch schema change needs main
-        still at the fork with the schema it forked from; on a moved main
-        only appends on both sides commute (rewrites do not)."""
-        bv = _BranchView(self.root, name)
-        ref = bv._ref
-        head = main_entries[-1]["sequence"] if main_entries else -1
-        moved = head != ref["fork_sequence"]
-        if "columns" in ref and (moved or self.meta.get("columns", []) != ref["base_columns"]):
+    @staticmethod
+    def _merge_conflict(
+        branch: _State, columns: list[dict], main_entries: list[dict]
+    ) -> str | None:
+        """Why the branch in state ``branch`` cannot merge into a main that
+        declares ``columns`` and logs ``main_entries``, or None: the one
+        mergeability rule :meth:`merge_branch` enforces and a catalog
+        publish validates every table with before it merges any. A branch
+        schema change needs main still at the fork with the schema it
+        forked from; on a moved main only appends on both sides commute
+        (rewrites do not)."""
+        fork = branch.ref["fork_sequence"]
+        moved = (main_entries[-1]["sequence"] if main_entries else -1) != fork
+        if "columns" in branch.ref and (moved or columns != branch.ref["base_columns"]):
             return (
                 "it evolved the schema but main moved or changed its schema since "
                 "the fork — manual resolution required"
             )
-        advanced = [e for e in main_entries if e["sequence"] > ref["fork_sequence"]]
+        # main's commits after the fork, then the branch's own
         if moved and any(
-            e["operation"] != "append" for e in advanced + self._read_log(bv.log_dir)
+            e["operation"] != "append"
+            for e in main_entries + branch.entries
+            if e["sequence"] > fork
         ):
             return "non-append commits on a diverged history (appends commute; rewrites do not)"
         return None
@@ -4253,12 +4237,15 @@ class SnapTable:
         successful merge the branch ref fast-forwards to the new main head
         and keeps working.
         """
+        st = self._state()
         bv = _BranchView(self.root, name)
-        ref = bv._ref
+        bst = bv._state()
+        ref = bst.ref
         fork = ref["fork_sequence"]
-        branch_entries = self._read_log(bv.log_dir)
-        main_entries = self._entries()
-        problem = self._merge_conflict(name, main_entries)
+        branch_entries = [e for e in bst.entries if e["sequence"] > fork]
+        main_entries = st.entries
+        columns = st.meta.get("columns", [])
+        problem = self._merge_conflict(bst, columns, main_entries)
         if problem is not None:
             raise CommitConflictError(f"Cannot merge branch {name!r}: {problem}")
         at_fork = [e for e in main_entries if e["sequence"] <= fork]
@@ -4271,7 +4258,7 @@ class SnapTable:
             last = None
             for e in entries_to_replay:
                 prev_dirs = prev_view["data_dirs"] if prev_view else []
-                last = self._commit(_Delta(
+                last = self._commit(st, _Delta(
                     "append", _epoch_of(e),
                     add=[d for d in e["data_dirs"] if d not in prev_dirs],
                     rows=e["row_count"] - (prev_view["row_count"] if prev_view else 0),
@@ -4316,15 +4303,17 @@ class SnapTable:
                     )
                 last = replay_appends(remaining, last)
             if "columns" in ref:
-                # main's schema can change without a commit: the rule again,
-                # against main as it stood at the fork
-                problem = self._merge_conflict(name, at_fork)
+                # main's schema can change without a commit: read it again
+                # for this write, and apply the rule against main as it
+                # stood at the fork
+                meta = self._state().meta
+                problem = self._merge_conflict(bst, meta.get("columns", []), at_fork)
                 if problem is not None:
                     raise CommitConflictError(f"Cannot merge branch {name!r}: {problem}")
-                meta = self.meta
-                meta["columns"] = ref["columns"]
-                meta["next_field_id"] = ref["next_field_id"]
-                self._write_meta(meta)
+                columns = ref["columns"]
+                self._write_meta(
+                    {**meta, "columns": columns, "next_field_id": ref["next_field_id"]}
+                )
         else:
             last = replay_appends(branch_entries, at_fork[-1] if at_fork else None)
             if last is None:
@@ -4337,15 +4326,13 @@ class SnapTable:
         new_ref = {
             "name": name,
             "fork_sequence": new_head,
-            "base_columns": self.meta.get("columns", []),
+            "base_columns": columns,
             "created_at_ms": ref["created_at_ms"],
         }
         (self._branch_root(name) / "branch.json").write_text(json.dumps(new_ref, indent=2))
-        log_audit_event(
-            "table_write",
-            self.fq_name,
-            details={"mode": "merge_branch", "branch": name, "head_sequence": new_head},
-        )
+        log_audit_event("table_write", st.name, details={
+            "mode": "merge_branch", "branch": name, "head_sequence": new_head,
+        })
         # merge mutates the committed head outside _commit (fast-forward
         # links entries directly; the branch ref rewinds) — follow-head
         # views must re-resolve or they'd keep serving the pre-merge state
@@ -4357,9 +4344,9 @@ class _BranchView(SnapTable):
     """A branch of a :class:`SnapTable` — the full table interface with the
     commit log and (after an evolution) the schema scoped to the branch.
     Inherits reads, writes, time-travel, snapshot listing, incremental
-    scans, and schema evolution; only the log location, the merged entry
-    view, and the meta source differ. Table-wide maintenance
-    (expire/orphan removal) stays on the main table."""
+    scans, and schema evolution; only the log location and the state read
+    (:meth:`_state`) differ. Table-wide maintenance (expire/orphan
+    removal) stays on the main table."""
 
     def __init__(self, root: str | Path, name: str):
         super().__init__(root)
@@ -4367,43 +4354,27 @@ class _BranchView(SnapTable):
         self._broot = self._branch_root(name)
         self.log_dir = self._broot / "_log"
 
-    @property
-    def _ref(self) -> dict:
-        return json.loads((self._broot / "branch.json").read_text())
+    def _state(self) -> _State:
+        """Main's ``table.json`` with the schema override of the branch
+        ref (``branch.json``), and a log of main's entries up to the fork
+        followed by the branch's own."""
+        main = super()._state()
+        ref = json.loads((self._broot / "branch.json").read_text())
+        meta = {**main.meta, **{k: ref[k] for k in ("columns", "next_field_id") if k in ref}}
+        fork = ref["fork_sequence"]
 
-    @property
-    def meta(self) -> dict:
-        main = json.loads((self.root / "table.json").read_text())
-        ref = self._ref
-        if "columns" in ref:
-            main["columns"] = ref["columns"]
-            main["next_field_id"] = ref["next_field_id"]
-        return main
+        def read_log() -> list[dict]:
+            return [
+                e for e in self._read_log(self.root / "_log") if e["sequence"] <= fork
+            ] + self._read_log(self.log_dir)
 
-    def _write_meta(self, meta: dict) -> None:
-        # copy-on-evolve: schema changes land in the branch ref only —
-        # "readers on main see the old schema" (deep-dive.md:267-272)
-        ref = self._ref
-        ref["columns"] = meta.get("columns", [])
-        ref["next_field_id"] = meta.get("next_field_id")
-        (self._broot / "branch.json").write_text(json.dumps(ref, indent=2))
-
-    @property
-    def fq_name(self) -> str:
-        return f"{super().fq_name}@{self.branch_name}"
-
-    def _entries(self) -> list[dict]:
-        fork = self._ref["fork_sequence"]
-        main = [
-            e for e in self._read_log(self.root / "_log") if e["sequence"] <= fork
-        ]
-        return main + self._read_log(self.log_dir)
+        return _State(meta, f"{main.name}@{self.branch_name}", read_log, ref)
 
     def reset(self, snapshot_id: str) -> None:
         """Move the branch pointer back to ``snapshot_id`` (rolling back bad
         changes by resetting the ref — deep-dive.md:279). Branch commits
         after the target are discarded; main is untouched."""
-        target = self._snapshot_for(snapshot_id, None)
+        target = self._state().snapshot(snapshot_id, None)
         for p in self.log_dir.glob(self._LOG_GLOB):
             if int(p.stem) > target["sequence"]:
                 p.unlink()
@@ -4440,35 +4411,27 @@ class _BranchView(SnapTable):
             f"branch {self.branch_name!r}"
         )
 
-    def evolve_partition_spec(self, new_spec: list[dict]) -> dict:
-        # branch refs carry only a columns override; a branch-scoped layout
-        # change would be silently dropped at merge — require it on main
+    # a branch ref carries only a columns override: a branch-scoped
+    # layout, property or identity change would be silently dropped at
+    # merge, so these run on main only
+
+    def _table_wide(self, what: str):
         raise RuntimeError(
-            "Partition-spec evolution is table-wide metadata — run it on the "
-            f"main table, not branch {self.branch_name!r}"
+            f"{what} is table-wide metadata — change it on the main table, "
+            f"not branch {self.branch_name!r}"
         )
+
+    def evolve_partition_spec(self, new_spec: list[dict]) -> dict:
+        self._table_wide("Partition-spec evolution")
 
     def evolve_sort_order(self, order: list[dict]) -> dict:
-        # same reason: the branch ref carries only a columns override
-        raise RuntimeError(
-            "Sort-order evolution is table-wide metadata — run it on the "
-            f"main table, not branch {self.branch_name!r}"
-        )
+        self._table_wide("Sort-order evolution")
 
     def set_properties(self, props: dict) -> dict:
-        raise RuntimeError(
-            "Table properties are table-wide metadata — set them on the "
-            f"main table, not branch {self.branch_name!r}"
-        )
+        self._table_wide("A table property")
 
     def unset_properties(self, keys: list[str]) -> dict:
-        raise RuntimeError(
-            "Table properties are table-wide metadata — unset them on the "
-            f"main table, not branch {self.branch_name!r}"
-        )
+        self._table_wide("A table property")
 
     def set_identifier_fields(self, fields: list[str]) -> dict:
-        raise RuntimeError(
-            "Identifier fields are table-wide metadata — set them on the "
-            f"main table, not branch {self.branch_name!r}"
-        )
+        self._table_wide("The identifier-field set")

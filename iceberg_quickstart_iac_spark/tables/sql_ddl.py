@@ -382,7 +382,7 @@ def execute_ddl(lake, spark, statement: str, access_level: str = "admin"):
         # one metadata commit with zero data files — history (and
         # time-travel to the pre-truncate state) is preserved, matching
         # Iceberg TRUNCATE semantics rather than a destructive rm
-        commit = t.overwrite(t._empty_declared(spark))
+        commit = t.overwrite(t._empty_declared(spark, t.meta))
         return {
             "operation": "truncate_table",
             "table": name,

@@ -64,20 +64,22 @@ WORKER = textwrap.dedent(
     own = []
     for i in range(n_commits):
         d = write([wid * 1000 + i])
-        t._commit(_Delta("append", t._write_epoch(), add=[d], rows=1, files=1))
+        st = t._state()
+        t._commit(st, _Delta("append", t._write_epoch(st.meta), add=[d], rows=1, files=1))
         own.append(d)
         if rewrite and len(own) == 2:
             # merge two of this worker's own dirs into one: a rewrite delta
             # against the snapshot it read them at, committed while the
             # other workers append and rewrite theirs
-            read_at = t.current_snapshot()
+            st = t._state()
+            read_at = st.head
             keys = [
                 k for o in own
                 for k in pq.read_table(t.data_dir / o).column("k").to_pylist()
             ]
             merged = write(keys)
-            t._commit(_Delta(
-                "compact", t._write_epoch(), read_at=read_at,
+            t._commit(st, _Delta(
+                "compact", t._write_epoch(st.meta), read_at=read_at,
                 add=[merged], remove=own, files=-1,
             ))
             own = [merged]

@@ -200,3 +200,35 @@ def test_two_rewrites_conflict_and_winner_stands(spark, tmp_path, op):
     assert len(entries) == 2 and entries[-1]["operation"] == "compact"
     assert t.verify_integrity()["orphan_dirs"] == []
     _assert_consistent(spark, t, BASE)
+
+
+#: id -> (write stamping ``txn``, expected rows): the batch applied once
+TXN_RACES = {
+    "append": (lambda spark, t, txn: t.append(_rows(spark, ADDED), txn=txn), {**BASE, **ADDED}),
+    "merge-into": (
+        lambda spark, t, txn: t.merge_into(
+            spark, _cdc(spark).drop("op"), "t.k = s.k",
+            when_matched=[{"action": "update", "set": "*"}], txn=txn),
+        {**BASE, **UPDATED}),
+    "mor-changelog": (
+        lambda spark, t, txn: t.apply_changelog(spark, _cdc(spark), ["k"], mode="mor", txn=txn),
+        {**BASE, **UPDATED}),
+}
+
+
+@pytest.mark.parametrize("case", list(TXN_RACES))
+def test_same_txn_race_applies_once(spark, tmp_path, case):
+    """Two writers stamping the same ``txn`` both pass the check before
+    their write; the second to commit finds the version held at the head,
+    deletes the dirs it wrote and returns the winner's entry. One entry
+    holds the version and the rows are the batch applied once."""
+    op, expected = TXN_RACES[case]
+    t = _table(spark, tmp_path / "t")
+    returned = []
+    _race(spark, t, lambda spark, t: returned.append(op(spark, t, ("app", 1))),
+          lambda spark, other: op(spark, other, ("app", 1)))
+    holders = [e for e in t._entries() if (e.get("txn") or {}).get("app_id") == "app"]
+    assert [e["txn"]["version"] for e in holders] == [1]
+    assert returned == holders
+    assert t.verify_integrity()["orphan_dirs"] == []
+    _assert_consistent(spark, t, expected)

@@ -564,3 +564,29 @@ def test_branch_sql_serves_untouched_fork_without_reregistering(
     rows = br.sql(spark, "SELECT v FROM b ORDER BY k").collect()
     assert [r.v for r in rows] == ["b", "branchrow"]
     assert lake.sql(spark, "SELECT COUNT(*) AS n FROM b").first().n == 1
+
+
+@pytest.mark.parametrize("end", ["merge", "delete"])
+def test_catalog_branch_end_forgets_branch_view_records(spark, lake, end):
+    """Publishing or abandoning a catalog branch deletes its per-table
+    branches, and with them the follow-head records of the branch views
+    its statements registered: the next main commit refreshes none of
+    them (a refresh would warn and fail to read the deleted branch ref),
+    and the branch's temp view leaves the session."""
+    import warnings
+
+    from iceberg_quickstart_iac_spark.tables.snapstore import _HEAD_REGISTRATIONS
+
+    br = lake.create_branch(f"end_{end}")
+    br.sql(spark, "INSERT INTO a VALUES (9, 'staged')")
+    assert br.sql(spark, "SELECT COUNT(*) AS n FROM a").first().n == 2
+    view = "a" + lake._scope_suffix(f"branch:end_{end}")
+    assert view in _HEAD_REGISTRATIONS
+    getattr(br, end)()
+    assert view not in _HEAD_REGISTRATIONS
+    assert not spark.catalog.tableExists(view)
+    with warnings.catch_warnings():
+        warnings.simplefilter("error")
+        lake.table("a").append(spark.createDataFrame([(5, "main")], "k LONG, v STRING"))
+    expected = 3 if end == "merge" else 2
+    assert lake.sql(spark, "SELECT COUNT(*) AS n FROM a").first().n == expected

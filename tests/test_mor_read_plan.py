@@ -239,17 +239,17 @@ def test_mor_apply_never_reads_the_target(spark, tmp_path, monkeypatch):
     """A MoR changelog apply is O(changes): it writes the batch's keys and
     new images and reads nothing of the table it applies to."""
     t, model = _mor_table(spark, tmp_path / "noread")
-    real_read = SnapTable.read
+    real_read = SnapTable._read_at
 
     def guarded_read(self, *args, **kwargs):
         if self.root == t.root:
             raise AssertionError("apply_changelog(mode='mor') read its target")
         return real_read(self, *args, **kwargs)
 
-    monkeypatch.setattr(SnapTable, "read", guarded_read)
+    monkeypatch.setattr(SnapTable, "_read_at", guarded_read)
     _apply(spark, t, model, [(3, "a", 3.5, "U"), (4, None, None, "D"),
                              (50, "c", 5.0, "I")])
-    monkeypatch.setattr(SnapTable, "read", real_read)
+    monkeypatch.setattr(SnapTable, "_read_at", real_read)
     assert _state(spark, t) == model
 
 
@@ -265,14 +265,14 @@ def test_mor_delete_scans_the_table_once(spark, tmp_path, monkeypatch):
         return True
 
     count_rows = F.udf(seen, "boolean").asNondeterministic()
-    real_read = SnapTable.read
+    real_read = SnapTable._read_at
 
     def counting_read(self, *args, **kwargs):
         return real_read(self, *args, **kwargs).filter(count_rows(F.col("k")))
 
-    monkeypatch.setattr(SnapTable, "read", counting_read)
+    monkeypatch.setattr(SnapTable, "_read_at", counting_read)
     t.delete_where(spark, "g = 'a'", mode="mor")
-    monkeypatch.setattr(SnapTable, "read", real_read)
+    monkeypatch.setattr(SnapTable, "_read_at", real_read)
     assert scanned.value == 30
     assert sorted(r.k for r in t.read(spark).collect()) == [
         i for i in range(30) if i % 3

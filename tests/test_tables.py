@@ -1861,7 +1861,7 @@ def test_legacy_log_commit_does_not_resurrect_mor_deletes(spark, mor_table):
     assert got == [1, 3, 5, 7, 9, 100], got
     # and the persisted map now dates the original data dir BEFORE the
     # delete dir, not at the append's own sequence
-    intro = t._dir_intro_seqs()
+    intro = t._state().dir_intro_seqs
     e = t._entries()[-1]
     data_intro = min(intro[d] for d in e["data_dirs"])
     del_intro = min(intro[d] for d in e["delete_dirs"])
@@ -2684,3 +2684,139 @@ def test_add_column_rejects_undeclarable_type(spark, tmp_path, bad):
         t.evolve_add_column("x", bad)
     assert (t.root / "table.json").read_bytes() == before
     assert [r.k for r in t.read(spark).collect()] == [1]
+
+
+# --- one table-state read per operation ------------------------------------
+
+_STATE_SCHEMA = "k LONG, g STRING, v DOUBLE"
+
+
+def _state_table(spark, root):
+    t = SnapTable.create(root, {
+        "name": root.name, "namespace": "lakehouse",
+        "columns": [{"name": "k", "type": "long"}, {"name": "g", "type": "string"},
+                    {"name": "v", "type": "double"}],
+        "identifier_fields": ["k"],
+    })
+    t.append(_state_rows(spark, range(10)))
+    return t
+
+
+def _state_rows(spark, keys):
+    return spark.createDataFrame([(k, "ab"[k % 2], float(k)) for k in keys], _STATE_SCHEMA)
+
+
+def _after_write_data(t, change):
+    """Run ``change(second handle)`` right after ``t._write_data`` returns:
+    a concurrent metadata change between an operation's write and its
+    commit."""
+    real = t._write_data
+
+    def write_then_change(*args, **kwargs):
+        out = real(*args, **kwargs)
+        change(SnapTable.load(t.root))
+        return out
+
+    t._write_data = write_then_change
+
+
+def test_write_epoch_keeps_the_format_the_write_used(spark, tmp_path):
+    """A ``write_format`` change landing between an append's write and its
+    commit does not re-stamp the entry: it names the format its files
+    were written in, and every row stays readable."""
+    t = _state_table(spark, tmp_path / "t")
+    _after_write_data(t, lambda other: other.set_properties({"write_format": "orc"}))
+    t.append(_state_rows(spark, [10]))
+    assert t.current_snapshot()["write_format"] == "parquet"
+    assert t.read(spark).count() == 11
+
+
+def test_write_epoch_keeps_the_spec_the_write_used(spark, tmp_path):
+    """A partition-spec change landing between an append's write and its
+    commit leaves the entry stamped with the spec the files were laid out
+    under (none)."""
+    t = _state_table(spark, tmp_path / "t")
+    _after_write_data(
+        t, lambda other: other.evolve_partition_spec([{"column": "g", "transform": "identity"}])
+    )
+    t.append(_state_rows(spark, [10]))
+    assert t.current_snapshot()["partition_spec"] == []
+    assert t.read(spark).count() == 11
+
+
+def _two_mor_deletes(spark, t):
+    for k in (0, 1):
+        t.delete_where(spark, f"k = {k}", mode="mor")
+
+
+#: op -> (setup, operation, allowed on a branch)
+_STATE_OPS = {
+    "append": (None, lambda spark, t: t.append(_state_rows(spark, [10])), True),
+    "overwrite": (None, lambda spark, t: t.overwrite(_state_rows(spark, [10])), True),
+    "cow-delete": (None, lambda spark, t: t.delete_where(spark, "k = 0"), True),
+    "mor-delete": (None, lambda spark, t: t.delete_where(spark, "k = 0", mode="mor"), True),
+    "update": (None, lambda spark, t: t.update_where(spark, "k = 0", {"v": "-1.0"}), True),
+    "merge-into": (None, lambda spark, t: t.merge_into(
+        spark, _state_rows(spark, [1, 10]), "t.k = s.k",
+        when_matched=[{"action": "update", "set": "*"}],
+        when_not_matched=[{"action": "insert", "values": "*"}]), True),
+    "mor-changelog": (None, lambda spark, t: t.apply_changelog(
+        spark, _state_rows(spark, [1, 10]).withColumn("op", F.lit("U")), ["k"], mode="mor"),
+        True),
+    "compact": (_two_mor_deletes, lambda spark, t: t.compact(spark), True),
+    "rewrite-deletes": (_two_mor_deletes, lambda spark, t: t.rewrite_delete_files(spark), True),
+    "read": (_two_mor_deletes, lambda spark, t: t.read(spark, filters=[("k", ">", 2)]).collect(),
+             True),
+    "add-column": (None, lambda spark, t: t.evolve_add_column("w", "string"), True),
+    "set-properties": (None, lambda spark, t: t.set_properties({"x": "1"}), False),
+}
+
+
+_STATE_CASES = [(op, False) for op in _STATE_OPS] + [
+    (op, True) for op, (_, _, branch_ok) in _STATE_OPS.items() if branch_ok
+]
+
+
+@pytest.mark.parametrize("op,on_branch", _STATE_CASES, ids=[
+    f"{op}-{'branch' if on_branch else 'main'}" for op, on_branch in _STATE_CASES
+])
+def test_operation_reads_table_state_once(spark, tmp_path, monkeypatch, op, on_branch):
+    """Each operation reads ``table.json`` once (plus ``branch.json`` once
+    on a branch) and the log at most once for its state, plus once per
+    commit attempt, which must see the head; a branch's log read is main's
+    log and the branch's own."""
+    from pathlib import Path
+
+    setup, run, _ = _STATE_OPS[op]
+    t = _state_table(spark, tmp_path / "t")
+    if on_branch:
+        t = t.create_branch("b")
+    if setup is not None:
+        setup(spark, t)
+    root = str(t.root)
+    counts = {"table.json": 0, "branch.json": 0, "log": 0, "commits": 0}
+    real_read_text, real_read_log, real_commit = (
+        Path.read_text, SnapTable.__dict__["_read_log"].__func__, SnapTable._commit
+    )
+
+    def read_text(path, *args, **kwargs):
+        if path.name in counts and str(path).startswith(root):
+            counts[path.name] += 1
+        return real_read_text(path, *args, **kwargs)
+
+    def read_log(cls, log_dir):
+        counts["log"] += 1
+        return real_read_log(cls, log_dir)
+
+    def commit(self, *args, **kwargs):
+        counts["commits"] += 1
+        return real_commit(self, *args, **kwargs)
+
+    monkeypatch.setattr(Path, "read_text", read_text)
+    monkeypatch.setattr(SnapTable, "_read_log", classmethod(read_log))
+    monkeypatch.setattr(SnapTable, "_commit", commit)
+    run(spark, t)
+    logs = 2 if on_branch else 1
+    assert counts["table.json"] == 1, counts
+    assert counts["branch.json"] == (1 if on_branch else 0), counts
+    assert counts["log"] <= logs * (1 + counts["commits"]), counts
