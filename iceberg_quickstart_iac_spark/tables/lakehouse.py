@@ -31,6 +31,7 @@ O(tables) on the driver, the same contract a real catalog serves.
 from __future__ import annotations
 
 import json
+import re
 import time
 from pathlib import Path
 
@@ -40,8 +41,26 @@ from iceberg_quickstart_iac_spark.tables.snapstore import (
     TableNotFoundError,
     forget_head_registrations,
 )
+from iceberg_quickstart_iac_spark.tables.sql_text import (
+    STRING,
+    identifiers,
+    normalize,
+    split_top_level,
+    sub_code,
+    timestamp_ms,
+    unquote,
+)
 
 _REFS = "_catalog_refs"
+
+#: Spark/Iceberg time-travel clause: <table> FOR [SYSTEM_]VERSION|
+#: [SYSTEM_]TIME|TIMESTAMP AS OF <string-literal | integer>
+_ASOF_RE = re.compile(
+    r"\b(\w+)\s+FOR\s+(?:SYSTEM_)?(VERSION|TIMESTAMP|TIME)"
+    rf"\s+AS\s+OF\s+({STRING}|\d+)",
+    re.IGNORECASE,
+)
+_WORD_RE = re.compile(r"\w+")
 
 
 class _DmlScope:
@@ -78,6 +97,7 @@ class Lakehouse:
         # pins (``name__asof_*``) and catalog-view expansions. Table views
         # follow the head through the follow-head record in snapstore.
         self._sql_registry: dict[str, tuple] = {}
+        self._view_stack: set[str] = set()  # views mid-expansion
 
     # -- tables ------------------------------------------------------------
 
@@ -263,10 +283,6 @@ class Lakehouse:
             )
         return out
 
-    #: Spark/Iceberg time-travel clause: <table> FOR [SYSTEM_]VERSION|
-    #: [SYSTEM_]TIME|TIMESTAMP AS OF <string-literal | integer>
-    _ASOF_RE = None  # compiled lazily (class body keeps import-light)
-
     def _rewrite_time_travel(
         self,
         spark,
@@ -285,14 +301,7 @@ class Lakehouse:
         milliseconds. Pinned views are immutable, so each (table, clause)
         registers once per session and memoizes."""
         import hashlib
-        import re
 
-        if Lakehouse._ASOF_RE is None:
-            Lakehouse._ASOF_RE = re.compile(
-                r"\b(\w+)\s+FOR\s+(?:SYSTEM_)?(VERSION|TIMESTAMP|TIME)"
-                r"\s+AS\s+OF\s+('(?:[^']|'')*'|\d+)",
-                re.IGNORECASE,
-            )
         tables: set[str] | None = None
 
         def sub(m: "re.Match[str]") -> str:
@@ -307,19 +316,19 @@ class Lakehouse:
                         accessor or self.table, scope,
                     )
                 return m.group(0)  # not ours — let Spark error naturally
-            value = (
-                raw[1:-1].replace("''", "'") if raw.startswith("'") else raw
-            )
+            value = unquote(raw)
+            # keyed on the clause as written: VERSION AS OF '1' (a tag or
+            # snapshot id) and VERSION AS OF 1 (a sequence) pin apart
             view = (
                 f"{name}__asof_"
-                + hashlib.md5(f"{scope}|{kind}|{value}".encode()).hexdigest()[:8]
+                + hashlib.md5(f"{scope}|{kind}|{raw}".encode()).hexdigest()[:8]
             )
             want = (scope, str(access_level), False, -1)
             if self._sql_registry.get(view) != want:
                 t = (accessor or self.table)(name)
                 kwargs: dict = {}
                 if kind == "VERSION":
-                    if raw.startswith("'"):
+                    if not raw.isdigit():
                         try:
                             t._snapshot_for(value, None)
                             kwargs["snapshot_id"] = value
@@ -339,15 +348,7 @@ class Lakehouse:
                             )
                         kwargs["snapshot_id"] = entry["snapshot_id"]
                 else:  # TIMESTAMP / TIME
-                    if raw.startswith("'"):
-                        from datetime import datetime, timezone
-
-                        dt = datetime.fromisoformat(value)
-                        if dt.tzinfo is None:
-                            dt = dt.replace(tzinfo=timezone.utc)
-                        kwargs["as_of_ms"] = int(dt.timestamp() * 1000)
-                    else:
-                        kwargs["as_of_ms"] = int(value)
+                    kwargs["as_of_ms"] = timestamp_ms(raw)
                 t.register(
                     spark,
                     name=view,
@@ -358,7 +359,7 @@ class Lakehouse:
                 self._sql_registry[view] = want
             return view
 
-        return Lakehouse._ASOF_RE.sub(sub, statement)
+        return sub_code(_ASOF_RE, sub, statement)
 
     def _pin_view_version(
         self,
@@ -381,7 +382,7 @@ class Lakehouse:
 
         doc = self.view(name)
         if kind == "VERSION":
-            if raw.startswith("'"):
+            if not raw.isdigit():
                 raise ValueError(
                     f"FOR VERSION AS OF on view {name!r} takes an integer "
                     "view version (views have no snapshot ids or tags)"
@@ -397,15 +398,7 @@ class Lakehouse:
                     f"versions 0..{doc['current_version']}"
                 )
         else:
-            if raw.startswith("'"):
-                from datetime import datetime, timezone
-
-                dt = datetime.fromisoformat(raw[1:-1].replace("''", "'"))
-                if dt.tzinfo is None:
-                    dt = dt.replace(tzinfo=timezone.utc)
-                ts = int(dt.timestamp() * 1000)
-            else:
-                ts = int(raw)
+            ts = timestamp_ms(raw)
             candidates = [
                 v for v in doc["versions"] if v["created_at_ms"] <= ts
             ]
@@ -421,16 +414,38 @@ class Lakehouse:
                 f"{scope}|VIEWV|{entry['version']}".encode()
             ).hexdigest()[:8]
         )
+        self._expand_view(
+            spark, view, name, entry, access_level, accessor, scope
+        )
+        return view
+
+    def _expand_view(
+        self, spark, view, name, entry, access_level, accessor, scope
+    ) -> None:
+        """Register ``view`` as version ``entry`` of catalog view ``name``:
+        its SQL text expanded through this same front door (invoker's
+        access level, same scope). The memo key carries the view version
+        AND the head sequence of every table the definition
+        (transitively) references, so a commit to an underlying table —
+        or a CREATE OR REPLACE of the view — re-expands on the next
+        statement; otherwise the expansion is free. Cycles raise instead
+        of recursing."""
         heads = self._view_head_key(entry["sql"], accessor, {name})
         want = ("view", scope, str(access_level), entry["version"], heads)
-        if self._sql_registry.get(view) != want:
+        if self._sql_registry.get(view) == want:
+            return
+        if name in self._view_stack:
+            raise ValueError(f"View cycle detected through {name!r}")
+        self._view_stack.add(name)
+        try:
             df = self.sql(
                 spark, entry["sql"], access_level, _scope=scope,
                 _accessor=None if accessor == self.table else accessor,
             )
-            df.createOrReplaceTempView(view)
-            self._sql_registry[view] = want
-        return view
+        finally:
+            self._view_stack.discard(name)
+        df.createOrReplaceTempView(view)
+        self._sql_registry[view] = want
 
     def _view_head_key(
         self, view_sql: str, accessor, seen: set
@@ -440,9 +455,7 @@ class Lakehouse:
         (transitively, through nested views) references. One cheap
         filename-only head probe per referenced table — the same probe
         the lazy table registration pays per statement."""
-        import re
-
-        tokens = set(re.findall(r"[A-Za-z_][A-Za-z0-9_]*", view_sql))
+        tokens = identifiers(view_sql)
         heads: list[tuple] = []
         for tname in self.list_tables():
             if tname in tokens or any(
@@ -476,49 +489,26 @@ class Lakehouse:
 
     def _rewrite_scope_refs(self, statement: str, suffix: str) -> str:
         """Rewrite catalog-table identifier tokens (and their metadata-view
-        tokens ``name__snapshots``/…) to their scope-suffixed view names,
-        outside single-quoted string literals — the same string-safe
-        whole-token pattern the time-travel rewriter uses. Non-catalog
-        identifiers (session temp views, columns, aliases) never match;
-        a COLUMN that shares its name with a catalog table would — same
-        word-shaped-identifier caveat as the main-scope lazy
-        registration, which already binds such a token to the table."""
-        import re
+        tokens ``name__snapshots``/…) and catalog-view tokens to their
+        scope-suffixed view names, in code and backtick identifiers only
+        (never inside a literal or comment) — the same lexer the
+        time-travel rewriter uses. Non-catalog identifiers (session temp
+        views, columns, aliases) never match; a COLUMN that shares its
+        name with a catalog table would — same word-shaped-identifier
+        caveat as the main-scope lazy registration, which already binds
+        such a token to the table."""
+        tables, views = set(self.list_tables()), set(self.list_views())
 
-        names = self.list_tables()
-        views = self.list_views()
-        if not names and not views:
-            return statement
-        # the alternation spans every table name × metadata suffix —
-        # O(catalog) to BUILD, so the compiled pattern memoizes on the
-        # (names, suffix) pair and a 1000-table catalog pays the compile
-        # once per catalog change, not once per branch statement
-        cache_key = (tuple(names), tuple(views), suffix)
-        cached = getattr(self, "_scope_pat_cache", None)
-        if cached is None:
-            cached = self._scope_pat_cache = {}
-        if cache_key in cached:
-            pat, mapping = cached[cache_key]
-        else:
-            mapping = {}
-            for n in names:
-                mapping[n] = n + suffix
-                for s in self._MD_SUFFIXES:
-                    mapping[n + s] = n + suffix + s
-            for v in views:
-                mapping[v] = v + suffix
-            alts = "|".join(
-                re.escape(k) for k in sorted(mapping, key=len, reverse=True)
-            )
-            pat = re.compile(rf"\b({alts})\b")
-            cached.clear()  # one live catalog shape per lakehouse handle
-            cached[cache_key] = (pat, mapping)
-        out = []
-        for i, chunk in enumerate(re.split(r"('(?:[^']|'')*')", statement)):
-            if i % 2 == 0:
-                chunk = pat.sub(lambda m: mapping[m.group(1)], chunk)
-            out.append(chunk)
-        return "".join(out)
+        def scoped(m: "re.Match[str]") -> str:
+            w = m.group()
+            if w in tables or w in views:
+                return w + suffix
+            for s in self._MD_SUFFIXES:
+                if w.endswith(s) and w[: -len(s)] in tables:
+                    return w[: -len(s)] + suffix + s
+            return w
+
+        return sub_code(_WORD_RE, scoped, statement)
 
     def sql(
         self,
@@ -551,10 +541,14 @@ class Lakehouse:
         record serves its head and the next statement re-registers: this
         path can never serve a stale head.
 
-        Name matching is identifier-token based: a table whose name only
-        appears inside a string literal registers harmlessly; a table
-        referenced through a quoted identifier with special characters
-        is not supported (snapstore names are word-shaped).
+        Name matching is identifier-token based, through the front
+        door's one lexer (:mod:`tables.sql_text`): a table or view whose
+        name appears only inside a string literal or a comment registers
+        nothing; a name in backticks registers like a bare one. Statements are routed on their text with comments
+        removed, so a leading comment never hides a DDL, DML or CALL
+        statement; a statement that goes to ``spark.sql`` keeps its text
+        (comments and ``/*+ hint */``s included) apart from the scope and
+        time-travel rewrites.
 
         DML goes through the same front door: ``INSERT INTO`` /
         ``DELETE FROM`` / ``UPDATE`` / ``MERGE INTO`` statements are
@@ -581,8 +575,6 @@ class Lakehouse:
         dialect ``templates/ddl.py`` GENERATES — the repo's own rendered
         DDL round-trips through this method (pinned by test).
         """
-        import re
-
         from iceberg_quickstart_iac_spark.tables.sql_ddl import (
             execute_ddl,
             is_ddl,
@@ -628,7 +620,7 @@ class Lakehouse:
         suffix = self._scope_suffix(_scope)
         if suffix:
             statement = self._rewrite_scope_refs(statement, suffix)
-        tokens = set(re.findall(r"[A-Za-z_][A-Za-z0-9_]*", statement))
+        tokens = identifiers(statement)
 
         # (table, view, names a metadata view) per referenced catalog table
         refs = []
@@ -657,46 +649,16 @@ class Lakehouse:
                     )
 
         def ensure_views() -> None:
-            # catalog views are versioned SQL text: expand the CURRENT
-            # version through this same front door (invoker's access
-            # level, same scope) and register the result. The memo key
-            # carries the view version AND the head sequence of every
-            # table the definition (transitively) references, so a
-            # commit to an underlying table — or a CREATE OR REPLACE of
-            # the view — re-expands on the next statement; otherwise the
-            # expansion is free. Cycles raise instead of recursing.
+            # catalog views are versioned SQL text: the CURRENT version
+            # expands through this same front door
             for vname in self.list_views():
-                view = vname + suffix
-                if view not in tokens:
-                    continue
-                doc = self.view(vname)
-                cur = doc["versions"][doc["current_version"]]
-                heads = self._view_head_key(
-                    cur["sql"], accessor, {vname}
-                )
-                want = (
-                    "view", _scope, str(access_level),
-                    doc["current_version"], heads,
-                )
-                if self._sql_registry.get(view) == want:
-                    continue
-                stack = getattr(self, "_view_stack", None)
-                if stack is None:
-                    stack = self._view_stack = set()
-                if vname in stack:
-                    raise ValueError(
-                        f"View cycle detected through {vname!r}"
+                if vname + suffix in tokens:
+                    doc = self.view(vname)
+                    self._expand_view(
+                        spark, vname + suffix, vname,
+                        doc["versions"][doc["current_version"]],
+                        access_level, accessor, _scope,
                     )
-                stack.add(vname)
-                try:
-                    df = self.sql(
-                        spark, cur["sql"], access_level,
-                        _scope=_scope, _accessor=_accessor,
-                    )
-                finally:
-                    stack.discard(vname)
-                df.createOrReplaceTempView(view)
-                self._sql_registry[view] = want
 
         from pyspark.errors import AnalysisException
 
@@ -725,18 +687,19 @@ class Lakehouse:
         """Run a ``;``-separated statement script through :meth:`sql` in
         order (the runbook shape — the reference's operational docs are
         sequences of SQL statements submitted to the warehouse one after
-        another). The split respects string literals and parentheses, so
-        semicolons inside a quoted value never break a statement.
+        another). The split respects string literals, quoted identifiers,
+        comments and parentheses, so a semicolon inside any of them never
+        breaks a statement; a piece that holds only comments is dropped.
         Returns the LAST statement's result (DataFrame for a read, commit
         entry dict for DML); earlier DML statements commit as they run —
         like any warehouse session, a failing statement leaves the
         preceding ones committed (surface the error, never roll back
-        silently)."""
-        from iceberg_quickstart_iac_spark.tables.sql_dml import (
-            _split_top_level,
-        )
-
-        statements = _split_top_level(script, sep=";")
+        silently). :class:`CatalogBranch` runs this same body through its
+        branch-scoped :meth:`CatalogBranch.sql` — the WAP runbook."""
+        statements = [
+            stmt for stmt in split_top_level(script, sep=";")
+            if normalize(stmt)
+        ]
         if not statements:
             raise ValueError("sql_script: no statements in script")
         result = None
@@ -861,19 +824,7 @@ class CatalogBranch:
             _accessor=self.table,
         )
 
-    def sql_script(self, spark, script: str, access_level: str = "admin"):
-        """Branch-scoped :meth:`Lakehouse.sql_script` — the WAP runbook."""
-        from iceberg_quickstart_iac_spark.tables.sql_dml import (
-            _split_top_level,
-        )
-
-        statements = _split_top_level(script, sep=";")
-        if not statements:
-            raise ValueError("sql_script: no statements in script")
-        result = None
-        for stmt in statements:
-            result = self.sql(spark, stmt, access_level=access_level)
-        return result
+    sql_script = Lakehouse.sql_script
 
     def merge(self) -> dict:
         """Publish the branch: merge every touched table into main.

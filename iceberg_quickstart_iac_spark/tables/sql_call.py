@@ -69,8 +69,17 @@ from __future__ import annotations
 
 import re
 
+from iceberg_quickstart_iac_spark.tables.sql_text import (
+    STRING,
+    find_keyword,
+    normalize,
+    split_top_level,
+    timestamp_ms,
+    unquote,
+)
+
 _CALL_RE = re.compile(
-    r"^\s*call\s+((?:[\w.]+\.)?system)\s*\.\s*(\w+)\s*\((.*)\)\s*$",
+    r"^call\s+((?:[\w.]+\.)?system)\s*\.\s*(\w+)\s*\((.*)\)\s*$",
     re.IGNORECASE | re.DOTALL,
 )
 
@@ -106,7 +115,7 @@ _PROC_POSITIONAL = {
 
 
 def is_call(statement: str) -> bool:
-    return bool(re.match(r"^\s*call\b", statement, re.IGNORECASE))
+    return bool(re.match(r"^call\b", normalize(statement), re.IGNORECASE))
 
 
 def _parse_value(raw: str):
@@ -114,19 +123,11 @@ def _parse_value(raw: str):
     type (snapshot ids are strings); TIMESTAMP literals become epoch-ms;
     bare numerics become int; true/false become bool."""
     v = raw.strip()
-    m = re.fullmatch(
-        r"timestamp\s+('(?:[^']|'')*')", v, re.IGNORECASE
-    )
+    m = re.fullmatch(rf"timestamp\s+({STRING})", v, re.IGNORECASE)
     if m:
-        from datetime import datetime, timezone
-
-        iso = m.group(1)[1:-1].replace("''", "'")
-        dt = datetime.fromisoformat(iso)
-        if dt.tzinfo is None:
-            dt = dt.replace(tzinfo=timezone.utc)
-        return int(dt.timestamp() * 1000)
-    if v.startswith("'") and v.endswith("'"):
-        return v[1:-1].replace("''", "'")
+        return timestamp_ms(m.group(1))
+    if re.fullmatch(STRING, v):
+        return unquote(v)
     if v.lower() in ("true", "false"):
         return v.lower() == "true"
     if re.fullmatch(r"-?\d+", v):
@@ -138,10 +139,7 @@ def parse_call(statement: str) -> tuple[str, dict]:
     """``(procedure, {arg: value})`` from a CALL statement. Raises
     ValueError for unknown procedures, malformed argument lists, or
     positional-after-named mixing."""
-    from iceberg_quickstart_iac_spark.tables.sql_dml import _split_top_level
-
-    s = statement.strip().rstrip(";").strip()
-    m = _CALL_RE.match(s)
+    m = _CALL_RE.match(normalize(statement))
     if not m:
         raise ValueError(
             f"CALL: unparseable statement {statement!r} — expected "
@@ -157,7 +155,7 @@ def parse_call(statement: str) -> tuple[str, dict]:
     args: dict = {}
     positional = _PROC_POSITIONAL[proc]
     seen_named = False
-    items = [a for a in _split_top_level(argsql) if a.strip()]
+    items = split_top_level(argsql)
     for i, item in enumerate(items):
         nm = re.match(r"^\s*(\w+)\s*=>\s*(.+)$", item, re.DOTALL)
         if nm:
@@ -184,7 +182,10 @@ def execute_call(lake, spark, statement: str, access_level: str = "admin"):
     DataFrame. Raises PermissionError below the procedure's access bar."""
     from iceberg_quickstart_iac_spark.governance.access import AccessLevel
     from iceberg_quickstart_iac_spark.tables.sql_ddl import _table_name
-    from iceberg_quickstart_iac_spark.tables.sql_dml import _audit_statement
+    from iceberg_quickstart_iac_spark.tables.sql_dml import (
+        _audit_statement,
+        _resolve_table,
+    )
 
     proc, args = parse_call(statement)
     level = AccessLevel(access_level)
@@ -196,14 +197,9 @@ def execute_call(lake, spark, statement: str, access_level: str = "admin"):
         )
     _audit_statement("call", statement.strip(), access_level)
 
-    name, namespace = _table_name(str(args.pop("table")))
-    t = lake.table(name)
-    declared_ns = t.meta.get("namespace")
-    if namespace and declared_ns and namespace != declared_ns:
-        raise ValueError(
-            f"CALL {proc}: table {name!r} is in namespace "
-            f"{declared_ns!r}, not {namespace!r}"
-        )
+    dotted = str(args.pop("table"))
+    name = _table_name(dotted)[0]
+    t = _resolve_table(lake, dotted)
 
     if proc == "expire_snapshots":
         kwargs = {}
@@ -236,9 +232,7 @@ def execute_call(lake, spark, statement: str, access_level: str = "admin"):
                 r"\s*zorder\s*\(([^)]*)\)\s*", str(sort_order), re.IGNORECASE
             )
             if zm:
-                kwargs["zorder"] = [
-                    c.strip() for c in zm.group(1).split(",") if c.strip()
-                ]
+                kwargs["zorder"] = split_top_level(zm.group(1))
             # a linear sort_order re-sorts on the table's declared write
             # order during the rewrite — the declared order IS the sort
         elif strategy not in ("binpack", "sort"):
@@ -274,26 +268,18 @@ def execute_call(lake, spark, statement: str, access_level: str = "admin"):
             "added_delete_files_count BIGINT",
         )
 
-    if proc in ("rollback_to_snapshot", "set_current_snapshot"):
-        sid = args.pop("snapshot_id", None)
-        if sid is None:
-            raise ValueError(f"CALL {proc}: missing snapshot_id")
+    if proc in (
+        "rollback_to_snapshot", "set_current_snapshot", "rollback_to_timestamp"
+    ):
+        key = "timestamp" if proc == "rollback_to_timestamp" else "snapshot_id"
+        target = args.pop(key, None)
+        if target is None:
+            raise ValueError(f"CALL {proc}: missing {key}")
         _reject_extra(proc, args)
+        if key == "timestamp":
+            target = t._snapshot_for(None, int(target))["snapshot_id"]
         prev = t.current_snapshot()
-        entry = t.rollback_to(str(sid))
-        return spark.createDataFrame(
-            [(prev["snapshot_id"], entry["snapshot_id"])],
-            "previous_snapshot_id STRING, current_snapshot_id STRING",
-        )
-
-    if proc == "rollback_to_timestamp":
-        ts = args.pop("timestamp", None)
-        if ts is None:
-            raise ValueError("CALL rollback_to_timestamp: missing timestamp")
-        _reject_extra(proc, args)
-        prev = t.current_snapshot()
-        target = t._snapshot_for(None, int(ts))
-        entry = t.rollback_to(target["snapshot_id"])
+        entry = t.rollback_to(str(target))
         return spark.createDataFrame(
             [(prev["snapshot_id"], entry["snapshot_id"])],
             "previous_snapshot_id STRING, current_snapshot_id STRING",
@@ -393,7 +379,9 @@ def _parse_where_filters(where: str) -> list[tuple]:
     (=, <, <=, >, >=) — the shape partition-scoped maintenance uses;
     anything else is a loud reject, never a silent full-table rewrite."""
     filters: list[tuple] = []
-    for clause in re.split(r"\s+and\s+", where.strip(), flags=re.IGNORECASE):
+    ands = find_keyword(where, "and", all_hits=True)
+    for a, b in zip([0] + [i + 3 for i in ands], ands + [len(where)]):
+        clause = where[a:b]
         m = re.fullmatch(
             r"\s*(\w+)\s*(=|<=|>=|<|>)\s*(.+?)\s*", clause, re.DOTALL
         )

@@ -57,12 +57,19 @@ from __future__ import annotations
 
 import re
 
+from iceberg_quickstart_iac_spark.tables.sql_text import (
+    STRING,
+    normalize,
+    paren_group,
+    split_top_level,
+    unquote,
+)
 from iceberg_quickstart_iac_spark.templates.loader import template_type
 
 #: only the statement shapes this module handles — CREATE TEMP VIEW,
 #: CREATE FUNCTION, etc. fall through to spark.sql untouched
 _DDL_KW = re.compile(
-    r"^\s*(?:create\s+(?:table|namespace)|drop\s+table|alter\s+table"
+    r"^(?:create\s+(?:table|namespace)|drop\s+table|alter\s+table"
     r"|truncate\s+table|show\s+tables|show\s+create\s+table"
     r"|describe\b|desc\s+table"
     r"|create\s+(?:or\s+replace\s+)?view|drop\s+view|show\s+views)\b",
@@ -78,14 +85,7 @@ _REVERSE_PROPS = {
 
 
 def is_ddl(statement: str) -> bool:
-    return _DDL_KW.match(statement) is not None
-
-
-def _unquote(s: str) -> str:
-    s = s.strip()
-    if s.startswith("'") and s.endswith("'"):
-        return s[1:-1].replace("''", "'")
-    return s
+    return _DDL_KW.match(normalize(statement)) is not None
 
 
 def _parse_coldef(item: str) -> dict:
@@ -93,23 +93,20 @@ def _parse_coldef(item: str) -> dict:
     # must balance, so nested types (ARRAY<ARRAY<INT>>) parse
     m = re.match(
         r"^(\w+)\s+([A-Za-z_]+(?:\s*[(<][\w\s,()<>]*?[)>])?)"
-        r"(\s+not\s+null)?(?:\s+comment\s+('(?:[^']|'')*'))?\s*$",
+        rf"(\s+not\s+null)?(?:\s+comment\s+({STRING}))?\s*$",
         item.strip(),
         re.IGNORECASE,
     )
-    depth = 0
-    for ch in m.group(2) if m else "":
-        depth += (ch in "(<") - (ch in ")>")
-        if depth < 0:
-            break
-    if not m or depth:
+    if not m or sum(map(m.group(2).count, "(<")) != sum(
+        map(m.group(2).count, ")>")
+    ):
         raise ValueError(f"DDL: unparseable column definition {item!r}")
     name, sql_type, not_null, comment = m.groups()
     col: dict = {"name": name, "type": template_type(sql_type)}
     if not_null:
         col["required"] = True
     if comment:
-        col["description"] = _unquote(comment)
+        col["description"] = unquote(comment)
     return col
 
 
@@ -150,46 +147,50 @@ _CREATE_TABLE_HEAD_RE = re.compile(
 )
 
 
-def _scan_paren_group(s: str, open_idx: int) -> tuple[str, int]:
-    """Content of the balanced paren group opening at ``open_idx`` and
-    the index just past its closing paren (string-literal aware) — column
-    lists and PARTITIONED BY clauses nest parens (DECIMAL(18,6),
-    days(ts)), which a regex can't balance."""
-    depth, in_str = 0, False
-    i = open_idx
-    while i < len(s):
-        c = s[i]
-        if in_str:
-            if c == "'":
-                if i + 1 < len(s) and s[i + 1] == "'":
-                    i += 1
-                else:
-                    in_str = False
-        elif c == "'":
-            in_str = True
-        elif c == "(":
-            depth += 1
-        elif c == ")":
-            depth -= 1
-            if depth == 0:
-                return s[open_idx + 1 : i], i + 1
-        i += 1
-    raise ValueError("DDL: unbalanced parentheses")
-
-
 def _parse_props(props_sql: str) -> dict:
     """``TBLPROPERTIES('k'='v', …)`` body → template properties dict
     (public Iceberg property names mapped back to template keys)."""
-    from iceberg_quickstart_iac_spark.tables.sql_dml import _split_top_level
-
     props = {}
-    for pair in _split_top_level(props_sql):
+    for pair in split_top_level(props_sql):
         k, eq, v = pair.partition("=")
         if not eq:
             raise ValueError(f"DDL: malformed property {pair!r}")
-        key = _unquote(k)
-        props[_REVERSE_PROPS.get(key, key)] = _unquote(v)
+        key = unquote(k)
+        props[_REVERSE_PROPS.get(key, key)] = unquote(v)
     return props
+
+
+def _create_clauses(tail: str) -> tuple[str | None, str | None, str]:
+    """(part_sql, props_sql, rest) from the ``[USING fmt] [PARTITIONED BY
+    (…)] [TBLPROPERTIES (…)]`` clauses that open a CREATE TABLE tail, in
+    Spark SQL's clause order. Clause bodies nest parens (``days(ts)``), so
+    they parse with the balanced scan, not a regex."""
+    tail = re.sub(r"^using\s+\w+\s*", "", tail.strip(), flags=re.IGNORECASE)
+    bodies = []
+    for clause in (r"partitioned\s+by", "tblproperties"):
+        m = re.match(rf"^{clause}\s*\(", tail, re.IGNORECASE)
+        body = None
+        if m:
+            body, pos = paren_group(tail, m.end() - 1)
+            tail = tail[pos:].strip()
+        bodies.append(body)
+    return bodies[0], bodies[1], tail
+
+
+def _template(name, namespace, columns, part_sql, props_sql) -> dict:
+    """The template a CREATE TABLE [AS] statement declares."""
+    template: dict = {
+        "name": name,
+        "namespace": namespace or "default",
+        "columns": columns,
+    }
+    if part_sql:
+        template["partition_spec"] = [
+            _parse_transform(p) for p in split_top_level(part_sql)
+        ]
+    if props_sql:
+        template["properties"] = _parse_props(props_sql)
+    return template
 
 
 def _parse_create_table(s: str):
@@ -199,20 +200,8 @@ def _parse_create_table(s: str):
     if not m:
         return None
     if_not_exists, dotted = m.groups()
-    cols_sql, pos = _scan_paren_group(s, m.end() - 1)
-    tail = s[pos:].strip()
-    um = re.match(r"^using\s+\w+\s*", tail, re.IGNORECASE)
-    if um:
-        tail = tail[um.end():].strip()
-    part_sql = props_sql = None
-    pm = re.match(r"^partitioned\s+by\s*\(", tail, re.IGNORECASE)
-    if pm:
-        part_sql, pos = _scan_paren_group(tail, pm.end() - 1)
-        tail = tail[pos:].strip()
-    tm = re.match(r"^tblproperties\s*\(", tail, re.IGNORECASE)
-    if tm:
-        props_sql, pos = _scan_paren_group(tail, tm.end() - 1)
-        tail = tail[pos:].strip()
+    cols_sql, pos = paren_group(s, m.end() - 1)
+    part_sql, props_sql, tail = _create_clauses(s[pos:])
     if tail:
         raise ValueError(f"DDL: unparseable CREATE TABLE trailer {tail!r}")
     return if_not_exists, dotted, cols_sql, part_sql, props_sql
@@ -232,28 +221,14 @@ def _parse_ctas(s: str):
     """(if_not_exists, dotted_name, part_sql, props_sql, query) for a
     ``CREATE TABLE … [USING fmt] [PARTITIONED BY (…)] [TBLPROPERTIES (…)]
     AS <query>`` statement, or None if the shape doesn't match. Clause
-    order follows Spark SQL. Parsed with the same balanced-paren scan as
-    plain CREATE TABLE — ``PARTITIONED BY (days(ts))`` nests parens a
-    regex can't balance. Tried only AFTER ``_parse_create_table`` (whose
-    head requires ``(`` right after the name), so a column-list CREATE
-    never lands here."""
+    order follows Spark SQL; the clauses parse as in plain CREATE TABLE.
+    Tried only AFTER ``_parse_create_table`` (whose head requires ``(``
+    right after the name), so a column-list CREATE never lands here."""
     m = _CTAS_HEAD_RE.match(s)
     if not m:
         return None
     if_not_exists, dotted = m.groups()
-    tail = s[m.end():].strip()
-    um = re.match(r"^using\s+\w+\s+", tail, re.IGNORECASE)
-    if um:
-        tail = tail[um.end():].strip()
-    part_sql = props_sql = None
-    pm = re.match(r"^partitioned\s+by\s*\(", tail, re.IGNORECASE)
-    if pm:
-        part_sql, pos = _scan_paren_group(tail, pm.end() - 1)
-        tail = tail[pos:].strip()
-    tm = re.match(r"^tblproperties\s*\(", tail, re.IGNORECASE)
-    if tm:
-        props_sql, pos = _scan_paren_group(tail, tm.end() - 1)
-        tail = tail[pos:].strip()
+    part_sql, props_sql, tail = _create_clauses(s[m.end():])
     am = re.match(r"^as\s+(.+)$", tail, re.IGNORECASE | re.DOTALL)
     if not am:
         return None
@@ -264,6 +239,11 @@ _TRUNCATE_RE = re.compile(
 _DESCRIBE_RE = re.compile(
     r"^(?:describe|desc)\s+(?:table\s+)?([\w.]+)\s*$", re.IGNORECASE
 )
+
+
+def _ref_exists(t, kind: str, ref: str) -> bool:
+    refs = t.list_tags() if kind == "tag" else t.list_branches()
+    return any(r["name"] == ref for r in refs)
 
 
 def _retract_session_views(spark, name: str) -> None:
@@ -286,7 +266,6 @@ def execute_ddl(lake, spark, statement: str, access_level: str = "admin"):
     """Parse and run a DDL statement; returns a result dict. Raises for
     reader sessions, non-admin DROP, or unparseable statements."""
     from iceberg_quickstart_iac_spark.governance.access import AccessLevel
-    from iceberg_quickstart_iac_spark.tables.sql_dml import _split_top_level
 
     level = AccessLevel(access_level)
     if level is AccessLevel.READER:
@@ -294,7 +273,7 @@ def execute_ddl(lake, spark, statement: str, access_level: str = "admin"):
             "reader sessions cannot execute DDL — writes and schema "
             "changes need writer/admin"
         )
-    s = statement.strip().rstrip(";").strip()
+    s = normalize(statement)
     from iceberg_quickstart_iac_spark.tables.sql_dml import _audit_statement
 
     _audit_statement(s.split(None, 1)[0].lower(), s, access_level)
@@ -308,20 +287,10 @@ def execute_ddl(lake, spark, statement: str, access_level: str = "admin"):
                 return {"operation": "create_table", "table": name,
                         "created": False}
             raise ValueError(f"Table {name!r} already exists")
-        template: dict = {
-            "name": name,
-            "namespace": namespace or "default",
-            "columns": [
-                _parse_coldef(c) for c in _split_top_level(cols_sql)
-            ],
-        }
-        if part_sql:
-            template["partition_spec"] = [
-                _parse_transform(p) for p in _split_top_level(part_sql)
-            ]
-        if props_sql:
-            template["properties"] = _parse_props(props_sql)
-        lake.create_table(template)
+        columns = [_parse_coldef(c) for c in split_top_level(cols_sql)]
+        lake.create_table(
+            _template(name, namespace, columns, part_sql, props_sql)
+        )
         return {"operation": "create_table", "table": name, "created": True}
 
     parsed = _parse_ctas(s)
@@ -343,25 +312,17 @@ def execute_ddl(lake, spark, statement: str, access_level: str = "admin"):
                         "created": False}
             raise ValueError(f"Table {name!r} already exists")
         df = lake.sql(spark, query, access_level=access_level)
-        template = {
-            "name": name,
-            "namespace": namespace or "default",
-            "columns": [
-                {
-                    "name": f.name,
-                    "type": template_type(f.dataType),
-                    **({"required": True} if not f.nullable else {}),
-                }
-                for f in df.schema.fields
-            ],
-        }
-        if part_sql:
-            template["partition_spec"] = [
-                _parse_transform(p) for p in _split_top_level(part_sql)
-            ]
-        if props_sql:
-            template["properties"] = _parse_props(props_sql)
-        t = lake.create_table(template)
+        columns = [
+            {
+                "name": f.name,
+                "type": template_type(f.dataType),
+                **({"required": True} if not f.nullable else {}),
+            }
+            for f in df.schema.fields
+        ]
+        t = lake.create_table(
+            _template(name, namespace, columns, part_sql, props_sql)
+        )
         commit = t.append(df)
         return {
             "operation": "create_table_as",
@@ -401,12 +362,12 @@ def execute_ddl(lake, spark, statement: str, access_level: str = "admin"):
         rest = rest.strip()
         comment = None
         cm = re.match(
-            r"^comment\s+('(?:[^']|'')*')\s+(.*)$",
+            rf"^comment\s+({STRING})\s+(.*)$",
             rest,
             re.IGNORECASE | re.DOTALL,
         )
         if cm:
-            comment = _unquote(cm.group(1))
+            comment = unquote(cm.group(1))
             rest = cm.group(2).strip()
         am = re.match(r"^as\s+(.+)$", rest, re.IGNORECASE | re.DOTALL)
         if not am:
@@ -548,7 +509,7 @@ def execute_ddl(lake, spark, statement: str, access_level: str = "admin"):
         am = re.match(r"^write\s+ordered\s+by\s+(.+)$", a, re.IGNORECASE)
         if am:
             order = []
-            for item in _split_top_level(am.group(1)):
+            for item in split_top_level(am.group(1)):
                 om = re.fullmatch(
                     r"(\w+)(?:\s+(asc|desc))?(?:\s+nulls\s+(first|last))?",
                     item.strip(), re.IGNORECASE,
@@ -614,14 +575,7 @@ def execute_ddl(lake, spark, statement: str, access_level: str = "admin"):
             re.IGNORECASE | re.DOTALL,
         )
         if am:
-            props = {}
-            for pair in _split_top_level(am.group(1)):
-                k, eq, v = pair.partition("=")
-                if not eq:
-                    raise ValueError(f"DDL: malformed property {pair!r}")
-                key = _unquote(k)
-                props[_REVERSE_PROPS.get(key, key)] = _unquote(v)
-            return t.set_properties(props)
+            return t.set_properties(_parse_props(am.group(1)))
         am = re.match(
             r"^unset\s+tblproperties\s*(?:if\s+exists\s*)?\((.+)\)\s*$",
             a,
@@ -629,8 +583,8 @@ def execute_ddl(lake, spark, statement: str, access_level: str = "admin"):
         )
         if am:
             keys = [
-                _REVERSE_PROPS.get(_unquote(k), _unquote(k))
-                for k in _split_top_level(am.group(1))
+                _REVERSE_PROPS.get(unquote(k), unquote(k))
+                for k in split_top_level(am.group(1))
             ]
             return t.unset_properties(keys)
         # identifier fields (the MoR equality-delete key declaration)
@@ -638,10 +592,7 @@ def execute_ddl(lake, spark, statement: str, access_level: str = "admin"):
             r"^set\s+identifier\s+fields\s+(.+)$", a, re.IGNORECASE
         )
         if am:
-            fields = [
-                f.strip() for f in am.group(1).split(",") if f.strip()
-            ]
-            return t.set_identifier_fields(fields)
+            return t.set_identifier_fields(split_top_level(am.group(1)))
         if re.match(r"^drop\s+identifier\s+fields\s*$", a, re.IGNORECASE):
             return t.set_identifier_fields([])
         # Iceberg ref DDL (the public branching-and-tagging SQL surface):
@@ -671,11 +622,7 @@ def execute_ddl(lake, spark, statement: str, access_level: str = "admin"):
                         f"sequence on {name!r}"
                     )
                 snapshot_id = entry["snapshot_id"]
-            exists = (
-                any(r["name"] == ref for r in t.list_tags())
-                if kind == "tag"
-                else any(b["name"] == ref for b in t.list_branches())
-            )
+            exists = _ref_exists(t, kind, ref)
             if verb == "replace":
                 if kind != "tag":
                     raise ValueError(
@@ -722,12 +669,7 @@ def execute_ddl(lake, spark, statement: str, access_level: str = "admin"):
         if am:
             kind, if_exists, ref = am.groups()
             kind = kind.lower()
-            exists = (
-                any(r["name"] == ref for r in t.list_tags())
-                if kind == "tag"
-                else any(b["name"] == ref for b in t.list_branches())
-            )
-            if not exists:
+            if not _ref_exists(t, kind, ref):
                 if if_exists:
                     return {"operation": f"drop_{kind}", "table": name,
                             "ref": ref, "dropped": False}

@@ -25,10 +25,11 @@ Spark SQL accepts in a WHERE/SET/ON position works here), and delegates:
 
 MERGE accepts arbitrary target/source aliases and rewrites them to the
 executor's fixed ``t``/``s`` prefixes (word-boundary ``alias.`` matching,
-applied outside string literals). Clause grammar follows Spark's own
-MERGE surface: WHEN MATCHED [AND c] THEN UPDATE SET …|DELETE, WHEN NOT
-MATCHED [BY TARGET] [AND c] THEN INSERT (cols) VALUES (exprs)|INSERT *,
-WHEN NOT MATCHED BY SOURCE [AND c] THEN UPDATE SET …|DELETE.
+applied in code only, never in a literal or comment). Clause grammar
+follows Spark's own MERGE surface: WHEN MATCHED [AND c] THEN UPDATE SET
+…|DELETE, WHEN NOT MATCHED [BY TARGET] [AND c] THEN INSERT (cols) VALUES
+(exprs)|INSERT *, WHEN NOT MATCHED BY SOURCE [AND c] THEN UPDATE SET
+…|DELETE.
 
 Governance: DML requires writer/admin — a reader session raises before
 any parse (column/row policies govern what a reader SEES; writes are a
@@ -40,106 +41,23 @@ from __future__ import annotations
 
 import re
 
-_DML_KW = re.compile(r"^\s*(insert|delete|update|merge)\b", re.IGNORECASE)
+from iceberg_quickstart_iac_spark.tables.sql_text import (
+    find_keyword,
+    normalize,
+    split_top_level,
+    sub_code,
+)
+
+_DML_KW = re.compile(r"^(insert|delete|update|merge)\b", re.IGNORECASE)
 
 
 def is_dml(statement: str) -> bool:
-    return _DML_KW.match(statement) is not None
-
-
-def _strip(statement: str) -> str:
-    return statement.strip().rstrip(";").strip()
-
-
-def _split_top_level(s: str, sep: str = ",") -> list[str]:
-    """Split on ``sep`` outside parentheses and single-quoted strings."""
-    parts, depth, in_str, last = [], 0, False, 0
-    i = 0
-    while i < len(s):
-        c = s[i]
-        if in_str:
-            if c == "'":
-                # '' is an escaped quote inside a SQL string literal
-                if i + 1 < len(s) and s[i + 1] == "'":
-                    i += 1
-                else:
-                    in_str = False
-        elif c == "'":
-            in_str = True
-        elif c == "(":
-            depth += 1
-        elif c == ")":
-            depth -= 1
-        elif c == sep and depth == 0:
-            parts.append(s[last:i])
-            last = i + 1
-        i += 1
-    parts.append(s[last:])
-    return [p.strip() for p in parts if p.strip()]
-
-
-def _find_keyword_top_level(
-    s: str, word: str, start: int = 0, all_hits: bool = False
-):
-    """Index of the first (or, with ``all_hits``, every) occurrence of
-    ``word`` at TOP LEVEL: outside parentheses, outside single-quoted
-    string literals, outside a ``CASE … END`` expression, and
-    word-bounded on both sides. Case-insensitive. Returns -1 / [] when
-    absent. This is what splits MERGE/UPDATE statements at their
-    ON/WHEN/WHERE keywords — a regex split would be fooled by the same
-    words inside literals (``note = 'x where y'``) or by ``CASE WHEN``
-    in a condition."""
-
-    def bounded(i: int, n: int) -> bool:
-        if i > 0 and (s[i - 1].isalnum() or s[i - 1] == "_"):
-            return False
-        j = i + n
-        return j >= len(s) or not (s[j].isalnum() or s[j] == "_")
-
-    upper, w, n = s.upper(), word.upper(), len(word)
-    hits: list[int] = []
-    depth, case_depth, in_str = 0, 0, False
-    i = start
-    while i < len(s):
-        c = s[i]
-        if in_str:
-            if c == "'":
-                if i + 1 < len(s) and s[i + 1] == "'":
-                    i += 1
-                else:
-                    in_str = False
-        elif c == "'":
-            in_str = True
-        elif c == "(":
-            depth += 1
-        elif c == ")":
-            depth -= 1
-        elif depth == 0:
-            if upper.startswith("CASE", i) and bounded(i, 4):
-                case_depth += 1
-                i += 4
-                continue
-            if case_depth and upper.startswith("END", i) and bounded(i, 3):
-                case_depth -= 1
-                i += 3
-                continue
-            if (
-                case_depth == 0
-                and upper.startswith(w, i)
-                and bounded(i, n)
-            ):
-                if not all_hits:
-                    return i
-                hits.append(i)
-                i += n
-                continue
-        i += 1
-    return hits if all_hits else -1
+    return _DML_KW.match(normalize(statement)) is not None
 
 
 def _rewrite_alias(expr: str, mapping: dict[str, str]) -> str:
     """Rewrite ``alias.`` column prefixes to the executor's fixed prefixes,
-    outside single-quoted string literals.
+    in code only (never inside a literal or comment).
 
     All aliases rewrite in ONE pass (a single regex alternation with a
     lookup callback): sequential per-alias substitution would let a later
@@ -155,19 +73,12 @@ def _rewrite_alias(expr: str, mapping: dict[str, str]) -> str:
         re.escape(a) for a in sorted(mapping, key=len, reverse=True)
     )
     pat = re.compile(rf"\b({alts})\s*\.", re.IGNORECASE)
-    out = []
-    for i, chunk in enumerate(re.split(r"('(?:[^']|'')*')", expr)):
-        if i % 2 == 0:  # outside a string literal
-            chunk = pat.sub(
-                lambda m: lookup[m.group(1).lower()] + ".", chunk
-            )
-        out.append(chunk)
-    return "".join(out)
+    return sub_code(pat, lambda m: lookup[m.group(1).lower()] + ".", expr)
 
 
 def _parse_set_list(set_sql: str, alias_map: dict[str, str]) -> dict[str, str]:
     exprs: dict[str, str] = {}
-    for item in _split_top_level(set_sql):
+    for item in split_top_level(set_sql):
         col, eq, rhs = item.partition("=")
         if not eq:
             raise ValueError(f"DML: malformed SET item {item!r}")
@@ -187,9 +98,12 @@ def _parse_set_list(set_sql: str, alias_map: dict[str, str]) -> dict[str, str]:
 
 # table-name groups accept the qualified `[cat.][ns.]table` form the DDL
 # side (and the reference's namespace.table named queries) use —
-# `_resolve_table` strips the qualifier and validates the namespace
+# `_resolve_table` strips the qualifier and validates the namespace.
+# An INSERT column list holds bare names only, so a PARENTHESIZED source
+# query (`INSERT INTO t (SELECT …)`) is read as the source
 _INSERT_RE = re.compile(
-    r"^insert\s+(into|overwrite)\s+(?:table\s+)?([\w.]+)\s*(?:\(([^)]*)\)\s*)?(.+)$",
+    r"^insert\s+(into|overwrite)\s+(?:table\s+)?([\w.]+)\s*"
+    r"(?:\((\s*\w+(?:\s*,\s*\w+)*\s*)\)\s*)?(.+)$",
     re.IGNORECASE | re.DOTALL,
 )
 _DELETE_RE = re.compile(
@@ -215,7 +129,7 @@ def _parse_update(s: str):
     if not m:
         return None
     table, tail = m.group(1), m.group(2)
-    wi = _find_keyword_top_level(tail, "where")
+    wi = find_keyword(tail, "where")
     if wi < 0:
         return table, tail.strip(), None
     return table, tail[:wi].strip(), tail[wi + 5 :].strip()
@@ -231,12 +145,12 @@ def _parse_merge_head(s: str):
     if not m:
         return None
     table, t_alias, rest = m.groups()
-    oi = _find_keyword_top_level(rest, "on")
+    oi = find_keyword(rest, "on")
     if oi < 0:
         return None
     src_sql = rest[:oi].strip()
     after = rest[oi + 2 :]
-    wi = _find_keyword_top_level(after, "when")
+    wi = find_keyword(after, "when")
     if wi <= 0:
         return None
     return table, t_alias, src_sql, after[:wi].strip(), after[wi:].strip()
@@ -249,8 +163,8 @@ def _resolve_table(lake, dotted: str):
     """Resolve a possibly `cat.ns.table`-qualified DML name to the
     SnapTable, rejecting a namespace that contradicts the template —
     the reference's named queries address `namespace.table`
-    (dagster/lakehouse/resources/iceberg.py:54-57), so the DML surface
-    must accept the same qualified form the DDL side already does."""
+    (dagster/lakehouse/resources/iceberg.py:54-57), so the DML and CALL
+    surfaces accept the same qualified form the DDL side already does."""
     from iceberg_quickstart_iac_spark.tables.sql_ddl import _table_name
 
     name, namespace = _table_name(dotted)
@@ -259,7 +173,7 @@ def _resolve_table(lake, dotted: str):
         declared = str(t.meta.get("namespace", "default"))
         if namespace != declared:
             raise ValueError(
-                f"DML: table {name!r} belongs to namespace {declared!r}, "
+                f"table {name!r} belongs to namespace {declared!r}, "
                 f"not {namespace!r} (statement addressed {dotted!r})"
             )
     return t
@@ -271,7 +185,7 @@ def _parse_merge_clauses(tail: str, alias_map: dict[str, str]) -> dict:
     string literals, or a CASE … END — so a CASE WHEN in a clause
     condition or SET expression, or an identifier like ``when_created``,
     never splits a clause)."""
-    starts = _find_keyword_top_level(tail, "when", all_hits=True)
+    starts = find_keyword(tail, "when", all_hits=True)
     if starts[:1] != [0]:
         starts = [0] + starts
     pieces = [
@@ -294,7 +208,7 @@ def _parse_merge_clauses(tail: str, alias_map: dict[str, str]) -> dict:
         # with the scanner, so a CASE … THEN … END (or a literal
         # containing ' then ') inside the AND condition never splits it
         remainder = piece[hm.end():]
-        ti = _find_keyword_top_level(remainder, "then")
+        ti = find_keyword(remainder, "then")
         if ti < 0:
             raise ValueError(f"MERGE: clause missing THEN {piece!r}")
         cond_part = remainder[:ti].strip()
@@ -341,8 +255,8 @@ def _parse_merge_clauses(tail: str, alias_map: dict[str, str]) -> dict:
                                  re.IGNORECASE | re.DOTALL)
                 if not ins_m:
                     raise ValueError(f"MERGE: malformed INSERT in {piece!r}")
-                cols = [c.strip() for c in ins_m.group(1).split(",")]
-                vals = _split_top_level(ins_m.group(2))
+                cols = split_top_level(ins_m.group(1))
+                vals = split_top_level(ins_m.group(2))
                 if len(cols) != len(vals):
                     raise ValueError(
                         f"MERGE: INSERT column/value count mismatch in {piece!r}"
@@ -397,7 +311,7 @@ def execute_dml(lake, spark, statement: str, access_level: str = "admin"):
             "reader sessions cannot execute DML — column/row policies "
             "govern what a reader sees; writes need writer/admin"
         )
-    s = _strip(statement)
+    s = normalize(statement)
     kw = s.split(None, 1)[0].lower()
     _audit_statement(kw, s, access_level)
 
@@ -406,23 +320,11 @@ def execute_dml(lake, spark, statement: str, access_level: str = "admin"):
         if not m:
             raise ValueError(f"DML: unparseable INSERT {statement!r}")
         mode, table, cols_sql, source_sql = m.groups()
-        if cols_sql is not None and not all(
-            re.fullmatch(r"\w+", c.strip()) for c in cols_sql.split(",")
-        ):
-            # not a column list — a PARENTHESIZED source query
-            # (`INSERT INTO t (SELECT …)`): re-read everything after the
-            # table name as the source
-            m2 = re.match(
-                r"^insert\s+(?:into|overwrite)\s+(?:table\s+)?[\w.]+\s*(.+)$",
-                s,
-                re.IGNORECASE | re.DOTALL,
-            )
-            cols_sql, source_sql = None, m2.group(1)
         t = _resolve_table(lake, table)
         declared = [c["name"] for c in t.meta.get("columns", [])]
         df = spark.sql(source_sql.strip())
         if cols_sql:
-            cols = [c.strip() for c in cols_sql.split(",")]
+            cols = split_top_level(cols_sql)
             unknown = set(cols) - set(declared)
             if unknown:
                 raise ValueError(f"INSERT: unknown columns {sorted(unknown)}")

@@ -404,6 +404,21 @@ def test_sql_time_travel_clause_rewrites_to_pinned_views(spark, lake):
         lake.sql(spark, "SELECT * FROM not_ours FOR VERSION AS OF 1")
 
 
+def test_sql_time_travel_string_and_integer_versions_pin_apart(spark, lake):
+    """FOR VERSION AS OF '1' reads the tag named '1'; FOR VERSION AS OF 1
+    reads commit sequence 1 — two pins, never one memo for both."""
+    t = lake.table("a")
+    first = t.current_snapshot()["snapshot_id"]
+    t.append(spark.createDataFrame([(5, "later")], "k LONG, v STRING"))
+    t.create_tag("1", snapshot_id=first)
+    n_tag, n_seq = (
+        lake.sql(spark, f"SELECT COUNT(*) AS n FROM a FOR VERSION AS OF {v}")
+        .first().n
+        for v in ("'1'", "1")
+    )
+    assert (n_tag, n_seq) == (1, 2)
+
+
 def test_drop_table_purges_pinned_asof_memos(spark, lake):
     """DROP + CREATE of the same name must not let a repeated
     FOR TIMESTAMP AS OF '<same literal>' hit the registry memo and

@@ -692,22 +692,25 @@ def test_header_expressions_survive_garbage_batch(spark):
         st.text(
             alphabet=st.characters(
                 min_codepoint=32, max_codepoint=126,
-                exclude_characters="',()",
+                exclude_characters="',()\"`",
             ),
             min_size=0, max_size=12,
-        ),
+        ).filter(lambda p: "--" not in p and "/*" not in p),
         min_size=1, max_size=6,
     ),
-    st.lists(st.sampled_from(["(a, b)", "'x,y'", "f(1, '2,3')", "''"]),
+    st.lists(st.sampled_from(["(a, b)", "'x,y'", "f(1, '2,3')", "''",
+                              '"x,y"', "`a,b`", "/* c, d */"]),
              max_size=3),
 )
 @settings(max_examples=200, deadline=None)
 def test_split_top_level_roundtrips(parts, decorations):
     """The SQL front door's comma splitter must treat commas inside
-    parens and string literals as content: joining parts (each possibly
-    decorated with a nested-comma fragment) and splitting again yields
-    the same non-empty parts."""
-    from iceberg_quickstart_iac_spark.tables.sql_dml import _split_top_level
+    parens, string literals, quoted identifiers and comments as content:
+    joining parts (each possibly decorated with a nested-comma fragment)
+    and splitting again yields the same non-empty parts. Parts themselves
+    carry no quote or comment opener — those start a literal or comment
+    that runs on past the next comma."""
+    from iceberg_quickstart_iac_spark.tables.sql_text import split_top_level
 
     decorated = []
     for i, p in enumerate(parts):
@@ -715,7 +718,7 @@ def test_split_top_level_roundtrips(parts, decorations):
         decorated.append((p + " " + frag).strip())
     joined = ", ".join(d for d in decorated if d)
     expect = [d for d in decorated if d]
-    assert _split_top_level(joined) == expect
+    assert split_top_level(joined) == expect
 
 
 @given(st.text(
@@ -825,17 +828,22 @@ def test_update_statement_fuzz_case_when_and_literals(payload, payload2):
 @given(payload=_SQL_PAYLOAD)
 @settings(max_examples=200, deadline=None)
 def test_sql_script_split_keeps_semicolons_in_literals(payload):
-    """The runbook splitter: a ';' inside a string literal never breaks a
-    statement; real separators do."""
-    from iceberg_quickstart_iac_spark.tables.sql_dml import _split_top_level
+    """The runbook splitter: a ';' inside a string literal — '…' or
+    "…" — or inside a comment never breaks a statement; real separators
+    do."""
+    from iceberg_quickstart_iac_spark.tables.sql_text import split_top_level
 
     lit = _sql_lit(payload)
+    dq_lit = '"' + payload.replace('"', '""') + '"'
     stmts = [
         f"insert into t values (1, {lit})",
         f"select {lit} as x from t",
+        f"select {dq_lit} as y -- {payload}\nfrom t",
         "delete from t",
     ]
-    assert _split_top_level(" ; ".join(stmts), sep=";") == stmts
+    if "*/" not in payload and "/*" not in payload:  # comments nest
+        stmts.append(f"select /* {payload} */ 1")
+    assert split_top_level(" ; ".join(stmts), sep=";") == stmts
 
 
 @given(payload=_SQL_PAYLOAD)

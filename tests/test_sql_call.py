@@ -61,6 +61,19 @@ def test_parse_rejects_unknown_procedure_and_shapes():
     assert args["where"] == "k >= 5 AND k < 7"
 
 
+def test_where_filters_split_on_top_level_and_only():
+    from iceberg_quickstart_iac_spark.tables.sql_call import (
+        _parse_where_filters,
+    )
+
+    assert _parse_where_filters("region = 'a and b'") == [
+        ("region", "=", "a and b")
+    ]
+    assert _parse_where_filters("k >= 5 AND region = 'x AND y'") == [
+        ("k", ">=", 5), ("region", "=", "x AND y"),
+    ]
+
+
 # ------------------------------------------------------------- procedures
 
 

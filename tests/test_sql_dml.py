@@ -314,3 +314,44 @@ def test_explain_passes_through_and_merge_cardinality_surfaces(spark, lake):
             MERGE INTO accounts USING dup_src AS d ON accounts.id = d.id
             WHEN MATCHED THEN UPDATE SET *
         """)
+
+
+@pytest.mark.parametrize("statement, n_rows", [
+    ("-- cleanup\nDELETE FROM accounts WHERE id = 1", 2),
+    ("/* load */ INSERT INTO accounts VALUES (4, 'x', 1.0)", 4),
+], ids=["delete", "insert"])
+def test_leading_comment_keeps_dml_routing(spark, lake, statement, n_rows):
+    lake.sql(spark, statement)
+    assert len(_rows(spark, lake)) == n_rows
+
+
+def test_leading_comment_keeps_ddl_and_call_routing(spark, lake):
+    # a comment must not carry DDL past the front door's reader check
+    # and into Spark's own catalog
+    with pytest.raises(PermissionError):
+        lake.sql(spark, "-- new\nCREATE TABLE sneaky (a INT)", "reader")
+    assert lake.list_tables() == ["accounts"]
+    assert "sneaky" not in {t.name for t in spark.catalog.listTables()}
+    out = lake.sql(spark, "-- lineage\nCALL system.ancestors_of('accounts')")
+    assert out.count() == 1
+
+
+@pytest.mark.parametrize("script, v", [
+    ("-- don't forget\nINSERT INTO accounts VALUES (4, 'open', 40.0);\n"
+     "SELECT count(*) AS v FROM accounts", 4),
+    ("SELECT 1 AS v; -- next; one\nSELECT 2 AS v", 2),
+    ('SELECT 1 AS v; SELECT "a;b" AS v', "a;b"),
+    ("SELECT 1 AS v; SELECT `it;s` AS v FROM (SELECT 7 AS `it;s`)", 7),
+    ("SELECT 3 AS v; -- done", 3),
+    ("SELECT 3 AS v; /* done; really */", 3),
+    ('UPDATE accounts SET status = "a where b" WHERE id = 1;'
+     "SELECT collect_list(id) AS v FROM accounts WHERE status = 'a where b'",
+     [1]),
+], ids=["apostrophe-in-comment", "semicolon-in-comment", "double-quoted",
+        "backtick", "trailing-line-comment", "trailing-block-comment",
+        "update-double-quoted-where"])
+def test_sql_script_follows_spark_quotes_and_comments(spark, lake, script, v):
+    """Splits and keyword searches skip Spark's comments, double-quoted
+    strings and backtick identifiers; a piece that holds only a comment
+    is dropped, never sent to Spark."""
+    assert lake.sql_script(spark, script).collect()[0]["v"] == v
