@@ -30,6 +30,7 @@ O(tables) on the driver, the same contract a real catalog serves.
 
 from __future__ import annotations
 
+import hashlib
 import json
 import re
 import time
@@ -61,6 +62,11 @@ _ASOF_RE = re.compile(
     re.IGNORECASE,
 )
 _WORD_RE = re.compile(r"\w+")
+
+
+def _digest(text: str) -> str:
+    """Eight hex digits naming a derived view (scope and as-of pins)."""
+    return hashlib.md5(text.encode()).hexdigest()[:8]
 
 
 class _DmlScope:
@@ -300,7 +306,9 @@ class Lakehouse:
         TIMESTAMP accepts an ISO-8601 string (naive = UTC) or epoch
         milliseconds. Pinned views are immutable, so each (table, clause)
         registers once per session and memoizes."""
-        import hashlib
+        from iceberg_quickstart_iac_spark.tables.sql_ddl import (
+            _sequence_snapshot,
+        )
 
         tables: set[str] | None = None
 
@@ -319,10 +327,7 @@ class Lakehouse:
             value = unquote(raw)
             # keyed on the clause as written: VERSION AS OF '1' (a tag or
             # snapshot id) and VERSION AS OF 1 (a sequence) pin apart
-            view = (
-                f"{name}__asof_"
-                + hashlib.md5(f"{scope}|{kind}|{raw}".encode()).hexdigest()[:8]
-            )
+            view = f"{name}__asof_" + _digest(f"{scope}|{kind}|{raw}")
             want = (scope, str(access_level), False, -1)
             if self._sql_registry.get(view) != want:
                 t = (accessor or self.table)(name)
@@ -336,17 +341,9 @@ class Lakehouse:
                             # not a snapshot id — resolve as a tag name
                             kwargs["tag"] = value
                     else:
-                        seq = int(value)
-                        entry = next(
-                            (e for e in t._entries() if e["sequence"] == seq),
-                            None,
+                        kwargs["snapshot_id"] = _sequence_snapshot(
+                            t, int(raw), "FOR VERSION AS OF", name
                         )
-                        if entry is None:
-                            raise ValueError(
-                                f"FOR VERSION AS OF {seq}: no commit with "
-                                f"that sequence on {name!r}"
-                            )
-                        kwargs["snapshot_id"] = entry["snapshot_id"]
                 else:  # TIMESTAMP / TIME
                     kwargs["as_of_ms"] = timestamp_ms(raw)
                 t.register(
@@ -378,8 +375,6 @@ class Lakehouse:
         newest version created at or before the instant. The registered
         pin re-expands when underlying heads move (heads are in the memo
         key) — a pinned definition still serves live data."""
-        import hashlib
-
         doc = self.view(name)
         if kind == "VERSION":
             if not raw.isdigit():
@@ -408,12 +403,7 @@ class Lakehouse:
                     "exist yet"
                 )
             entry = candidates[-1]
-        view = (
-            f"{name}__asof_"
-            + hashlib.md5(
-                f"{scope}|VIEWV|{entry['version']}".encode()
-            ).hexdigest()[:8]
-        )
+        view = f"{name}__asof_" + _digest(f"{scope}|VIEWV|{entry['version']}")
         self._expand_view(
             spark, view, name, entry, access_level, accessor, scope
         )
@@ -481,11 +471,7 @@ class Lakehouse:
         table references to suffixed views, so one Spark session serves
         main AND any number of branches concurrently — no per-statement
         re-registration when consecutive statements switch scopes."""
-        if scope == "main":
-            return ""
-        import hashlib
-
-        return "__scope_" + hashlib.md5(scope.encode()).hexdigest()[:8]
+        return "" if scope == "main" else "__scope_" + _digest(scope)
 
     def _rewrite_scope_refs(self, statement: str, suffix: str) -> str:
         """Rewrite catalog-table identifier tokens (and their metadata-view
@@ -544,11 +530,12 @@ class Lakehouse:
         Name matching is identifier-token based, through the front
         door's one lexer (:mod:`tables.sql_text`): a table or view whose
         name appears only inside a string literal or a comment registers
-        nothing; a name in backticks registers like a bare one. Statements are routed on their text with comments
-        removed, so a leading comment never hides a DDL, DML or CALL
-        statement; a statement that goes to ``spark.sql`` keeps its text
-        (comments and ``/*+ hint */``s included) apart from the scope and
-        time-travel rewrites.
+        nothing; a name in backticks registers like a bare one.
+        Statements are routed on their text with comments removed, so a
+        leading comment never hides a DDL, DML or CALL statement; a
+        statement that goes to ``spark.sql`` keeps its text (comments and
+        ``/*+ hint */``s included) apart from the scope and time-travel
+        rewrites.
 
         DML goes through the same front door: ``INSERT INTO`` /
         ``DELETE FROM`` / ``UPDATE`` / ``MERGE INTO`` statements are

@@ -272,9 +272,7 @@ def execute_call(lake, spark, statement: str, access_level: str = "admin"):
         "rollback_to_snapshot", "set_current_snapshot", "rollback_to_timestamp"
     ):
         key = "timestamp" if proc == "rollback_to_timestamp" else "snapshot_id"
-        target = args.pop(key, None)
-        if target is None:
-            raise ValueError(f"CALL {proc}: missing {key}")
+        target = _required(proc, args, key)
         _reject_extra(proc, args)
         if key == "timestamp":
             target = t._snapshot_for(None, int(target))["snapshot_id"]
@@ -303,9 +301,7 @@ def execute_call(lake, spark, statement: str, access_level: str = "admin"):
         )
 
     if proc == "cherrypick_snapshot":
-        sid = args.pop("snapshot_id", None)
-        if sid is None:
-            raise ValueError("CALL cherrypick_snapshot: missing snapshot_id")
+        sid = _required(proc, args, "snapshot_id")
         _reject_extra(proc, args)
         entry = t.cherrypick_snapshot(str(sid))
         return spark.createDataFrame(
@@ -321,10 +317,7 @@ def execute_call(lake, spark, statement: str, access_level: str = "admin"):
         # as a procedure. merge_branch validates first and rebases
         # append-only histories; conflicts raise (Nessie's model).
         branch = str(args.pop("branch", "main"))
-        to = args.pop("to", None)
-        if to is None:
-            raise ValueError("CALL fast_forward: missing 'to' (the branch "
-                             "to publish)")
+        to = _required(proc, args, "to")  # the branch to publish
         _reject_extra(proc, args)
         if branch != "main":
             raise ValueError(
@@ -344,12 +337,9 @@ def execute_call(lake, spark, statement: str, access_level: str = "admin"):
         )
 
     if proc == "create_changelog_view":
-        frm = args.pop("from_snapshot_id", None)
-        if frm is None:
-            raise ValueError(
-                "CALL create_changelog_view: missing from_snapshot_id"
-            )
-        kwargs = {"from_snapshot_id": str(frm)}
+        kwargs = {
+            "from_snapshot_id": str(_required(proc, args, "from_snapshot_id"))
+        }
         if "to_snapshot_id" in args:
             kwargs["to_snapshot_id"] = str(args.pop("to_snapshot_id"))
         if args.pop("follow_head", False):
@@ -364,6 +354,13 @@ def execute_call(lake, spark, statement: str, access_level: str = "admin"):
         )
 
     raise AssertionError(f"unrouted procedure {proc}")  # pragma: no cover
+
+
+def _required(proc: str, args: dict, key: str):
+    """Pop required argument ``key``; raises when it is absent."""
+    if args.get(key) is None:
+        raise ValueError(f"CALL {proc}: missing required argument {key!r}")
+    return args.pop(key)
 
 
 def _reject_extra(proc: str, args: dict) -> None:

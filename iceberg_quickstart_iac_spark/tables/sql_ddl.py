@@ -141,9 +141,20 @@ def _table_name(dotted: str) -> tuple[str, str | None]:
     return parts[-1], parts[-2]
 
 
-_CREATE_TABLE_HEAD_RE = re.compile(
-    r"^create\s+table\s+(if\s+not\s+exists\s+)?([\w.]+)\s*\(",
-    re.IGNORECASE,
+_CREATE_TABLE_RE = re.compile(
+    r"^create\s+table\s+(if\s+not\s+exists\s+)?([\w.]+)\s*", re.IGNORECASE
+)
+_TRUNCATE_RE = re.compile(
+    r"^truncate\s+table\s+([\w.]+)\s*$", re.IGNORECASE
+)
+_DESCRIBE_RE = re.compile(
+    r"^(?:describe|desc)\s+(?:table\s+)?([\w.]+)\s*$", re.IGNORECASE
+)
+_DROP_RE = re.compile(
+    r"^drop\s+(table|view)\s+(if\s+exists\s+)?([\w.]+)\s*$", re.IGNORECASE
+)
+_ALTER_RE = re.compile(
+    r"^alter\s+table\s+([\w.]+)\s+(.+)$", re.IGNORECASE | re.DOTALL
 )
 
 
@@ -160,90 +171,62 @@ def _parse_props(props_sql: str) -> dict:
     return props
 
 
-def _create_clauses(tail: str) -> tuple[str | None, str | None, str]:
-    """(part_sql, props_sql, rest) from the ``[USING fmt] [PARTITIONED BY
-    (…)] [TBLPROPERTIES (…)]`` clauses that open a CREATE TABLE tail, in
-    Spark SQL's clause order. Clause bodies nest parens (``days(ts)``), so
-    they parse with the balanced scan, not a regex."""
-    tail = re.sub(r"^using\s+\w+\s*", "", tail.strip(), flags=re.IGNORECASE)
-    bodies = []
-    for clause in (r"partitioned\s+by", "tblproperties"):
-        m = re.match(rf"^{clause}\s*\(", tail, re.IGNORECASE)
-        body = None
-        if m:
-            body, pos = paren_group(tail, m.end() - 1)
-            tail = tail[pos:].strip()
-        bodies.append(body)
-    return bodies[0], bodies[1], tail
-
-
-def _template(name, namespace, columns, part_sql, props_sql) -> dict:
-    """The template a CREATE TABLE [AS] statement declares."""
-    template: dict = {
-        "name": name,
-        "namespace": namespace or "default",
-        "columns": columns,
-    }
-    if part_sql:
-        template["partition_spec"] = [
-            _parse_transform(p) for p in split_top_level(part_sql)
-        ]
-    if props_sql:
-        template["properties"] = _parse_props(props_sql)
-    return template
-
-
-def _parse_create_table(s: str):
-    """(if_not_exists, dotted_name, cols_sql, part_sql, props_sql) for a
-    CREATE TABLE statement, or None if the head doesn't match."""
-    m = _CREATE_TABLE_HEAD_RE.match(s)
+def _parse_create(s: str):
+    """(if_not_exists, dotted_name, cols_sql, part_sql, props_sql, query)
+    for ``CREATE TABLE t (cols) <clauses>`` (query None) or ``CREATE TABLE
+    t <clauses> AS <query>`` (cols_sql None), or None for neither shape.
+    The clauses are ``[USING fmt] [PARTITIONED BY (…)] [TBLPROPERTIES
+    (…)]`` in Spark SQL's order; their bodies nest parens (``days(ts)``),
+    so they parse with the balanced scan, not a regex."""
+    m = _CREATE_TABLE_RE.match(s)
     if not m:
         return None
     if_not_exists, dotted = m.groups()
-    cols_sql, pos = paren_group(s, m.end() - 1)
-    part_sql, props_sql, tail = _create_clauses(s[pos:])
-    if tail:
-        raise ValueError(f"DDL: unparseable CREATE TABLE trailer {tail!r}")
-    return if_not_exists, dotted, cols_sql, part_sql, props_sql
-_DROP_TABLE_RE = re.compile(
-    r"^drop\s+table\s+(if\s+exists\s+)?([\w.]+)\s*$", re.IGNORECASE
-)
-_ALTER_RE = re.compile(
-    r"^alter\s+table\s+([\w.]+)\s+(.+)$", re.IGNORECASE | re.DOTALL
-)
-_CTAS_HEAD_RE = re.compile(
-    r"^create\s+table\s+(if\s+not\s+exists\s+)?([\w.]+)\s+",
-    re.IGNORECASE,
-)
+    tail, cols_sql = s[m.end() :], None
+    if tail.startswith("("):
+        cols_sql, pos = paren_group(s, m.end())
+        tail = s[pos:].strip()
+    tail = re.sub(r"^using\s+\w+\s*", "", tail, flags=re.IGNORECASE)
+    bodies = []
+    for clause in (r"partitioned\s+by", "tblproperties"):
+        cm = re.match(rf"^{clause}\s*\(", tail, re.IGNORECASE)
+        body = None
+        if cm:
+            body, pos = paren_group(tail, cm.end() - 1)
+            tail = tail[pos:].strip()
+        bodies.append(body)
+    if cols_sql is not None:
+        if tail:
+            raise ValueError(f"DDL: unparseable CREATE TABLE trailer {tail!r}")
+        return if_not_exists, dotted, cols_sql, *bodies, None
+    am = re.match(r"^as\s+(.+)$", tail, re.IGNORECASE | re.DOTALL)
+    if not am:
+        return None
+    return if_not_exists, dotted, None, *bodies, am.group(1).strip()
 
 
 def _parse_ctas(s: str):
     """(if_not_exists, dotted_name, part_sql, props_sql, query) for a
-    ``CREATE TABLE … [USING fmt] [PARTITIONED BY (…)] [TBLPROPERTIES (…)]
-    AS <query>`` statement, or None if the shape doesn't match. Clause
-    order follows Spark SQL; the clauses parse as in plain CREATE TABLE.
-    Tried only AFTER ``_parse_create_table`` (whose head requires ``(``
-    right after the name), so a column-list CREATE never lands here."""
-    m = _CTAS_HEAD_RE.match(s)
-    if not m:
+    ``CREATE TABLE … AS <query>`` statement, or None."""
+    parsed = _parse_create(s)
+    if not parsed or parsed[-1] is None:
         return None
-    if_not_exists, dotted = m.groups()
-    part_sql, props_sql, tail = _create_clauses(s[m.end():])
-    am = re.match(r"^as\s+(.+)$", tail, re.IGNORECASE | re.DOTALL)
-    if not am:
-        return None
-    return if_not_exists, dotted, part_sql, props_sql, am.group(1).strip()
-_TRUNCATE_RE = re.compile(
-    r"^truncate\s+table\s+([\w.]+)\s*$", re.IGNORECASE
-)
-_DESCRIBE_RE = re.compile(
-    r"^(?:describe|desc)\s+(?:table\s+)?([\w.]+)\s*$", re.IGNORECASE
-)
+    if_not_exists, dotted, _, part_sql, props_sql, query = parsed
+    return if_not_exists, dotted, part_sql, props_sql, query
 
 
 def _ref_exists(t, kind: str, ref: str) -> bool:
     refs = t.list_tags() if kind == "tag" else t.list_branches()
     return any(r["name"] == ref for r in refs)
+
+
+def _sequence_snapshot(t, seq: int, clause: str, name: str) -> str:
+    """Snapshot id of ``t``'s commit with sequence ``seq`` — the number
+    ``AS OF VERSION`` and ``FOR VERSION AS OF`` take."""
+    for e in t._entries():
+        if e["sequence"] == seq:
+            return e["snapshot_id"]
+    raise ValueError(f"{clause} {seq}: no commit with that sequence on {name!r}")
 
 
 def _retract_session_views(spark, name: str) -> None:
@@ -278,24 +261,10 @@ def execute_ddl(lake, spark, statement: str, access_level: str = "admin"):
 
     _audit_statement(s.split(None, 1)[0].lower(), s, access_level)
 
-    parsed = _parse_create_table(s)
+    parsed = _parse_create(s)
     if parsed:
-        if_not_exists, dotted, cols_sql, part_sql, props_sql = parsed
-        name, namespace = _table_name(dotted)
-        if (lake.root / name / "table.json").exists():
-            if if_not_exists:
-                return {"operation": "create_table", "table": name,
-                        "created": False}
-            raise ValueError(f"Table {name!r} already exists")
-        columns = [_parse_coldef(c) for c in split_top_level(cols_sql)]
-        lake.create_table(
-            _template(name, namespace, columns, part_sql, props_sql)
-        )
-        return {"operation": "create_table", "table": name, "created": True}
-
-    parsed = _parse_ctas(s)
-    if parsed:
-        # CREATE TABLE … AS <query>: the schema is INFERRED from the
+        # a column list declares the schema; CREATE TABLE … AS <query>
+        # INFERS it from the
         # query result (Spark dtypes → template types; a non-nullable
         # query column becomes a required/NOT NULL template column) and
         # the result populates the new table in the same statement —
@@ -304,32 +273,41 @@ def execute_ddl(lake, spark, statement: str, access_level: str = "admin"):
         # goes back through the front door (lake.sql), so it reads
         # catalog tables with the same lazy governed registration any
         # SELECT gets.
-        if_not_exists, dotted, part_sql, props_sql, query = parsed
+        if_not_exists, dotted, cols_sql, part_sql, props_sql, query = parsed
+        op = "create_table" if query is None else "create_table_as"
         name, namespace = _table_name(dotted)
         if (lake.root / name / "table.json").exists():
             if if_not_exists:
-                return {"operation": "create_table_as", "table": name,
-                        "created": False}
+                return {"operation": op, "table": name, "created": False}
             raise ValueError(f"Table {name!r} already exists")
-        df = lake.sql(spark, query, access_level=access_level)
-        columns = [
-            {
-                "name": f.name,
-                "type": template_type(f.dataType),
-                **({"required": True} if not f.nullable else {}),
-            }
-            for f in df.schema.fields
-        ]
-        t = lake.create_table(
-            _template(name, namespace, columns, part_sql, props_sql)
-        )
-        commit = t.append(df)
-        return {
-            "operation": "create_table_as",
-            "table": name,
-            "created": True,
-            "row_count": commit["row_count"],
+        if query is None:
+            columns = [_parse_coldef(c) for c in split_top_level(cols_sql)]
+        else:
+            df = lake.sql(spark, query, access_level=access_level)
+            columns = [
+                {
+                    "name": f.name,
+                    "type": template_type(f.dataType),
+                    **({"required": True} if not f.nullable else {}),
+                }
+                for f in df.schema.fields
+            ]
+        template: dict = {
+            "name": name,
+            "namespace": namespace or "default",
+            "columns": columns,
         }
+        if part_sql:
+            template["partition_spec"] = [
+                _parse_transform(p) for p in split_top_level(part_sql)
+            ]
+        if props_sql:
+            template["properties"] = _parse_props(props_sql)
+        t = lake.create_table(template)
+        result = {"operation": op, "table": name, "created": True}
+        if query is not None:
+            result["row_count"] = t.append(df)["row_count"]
+        return result
 
     if re.match(r"^create\s+namespace\b", s, re.IGNORECASE):
         # namespaces are template metadata on snapstore tables — the
@@ -383,16 +361,20 @@ def execute_ddl(lake, spark, statement: str, access_level: str = "admin"):
             namespace=namespace or "default",
         )
 
-    m = re.match(
-        r"^drop\s+view\s+(if\s+exists\s+)?([\w.]+)\s*$", s, re.IGNORECASE
-    )
+    m = _DROP_RE.match(s)
     if m:
-        if_exists, dotted = m.groups()
+        kind, if_exists, dotted = m.groups()
+        kind = kind.lower()
+        if kind == "table" and level is not AccessLevel.ADMIN:
+            raise PermissionError(
+                "DROP TABLE erases committed history — admin only"
+            )
         name, _ = _table_name(dotted)
-        dropped = lake.drop_view(name, if_exists=bool(if_exists))
+        drop = lake.drop_table if kind == "table" else lake.drop_view
+        dropped = drop(name, if_exists=bool(if_exists))
         if dropped:
             _retract_session_views(spark, name)
-        return {"operation": "drop_view", "view": name, "dropped": dropped}
+        return {"operation": f"drop_{kind}", kind: name, "dropped": dropped}
 
     if re.match(r"^show\s+views\s*$", s, re.IGNORECASE):
         rows = []
@@ -467,19 +449,6 @@ def execute_ddl(lake, spark, statement: str, access_level: str = "admin"):
             "comment STRING",
         )
 
-    m = _DROP_TABLE_RE.match(s)
-    if m:
-        if level is not AccessLevel.ADMIN:
-            raise PermissionError(
-                "DROP TABLE erases committed history — admin only"
-            )
-        if_exists, dotted = m.groups()
-        name, _ = _table_name(dotted)
-        dropped = lake.drop_table(name, if_exists=bool(if_exists))
-        if dropped:
-            _retract_session_views(spark, name)
-        return {"operation": "drop_table", "table": name, "dropped": dropped}
-
     m = _ALTER_RE.match(s)
     if m:
         dotted, action = m.groups()
@@ -526,47 +495,33 @@ def execute_ddl(lake, spark, statement: str, access_level: str = "admin"):
         # partition evolution (Iceberg's ALTER TABLE partition-field SQL;
         # metadata-only — old data keeps its recorded spec)
         am = re.match(
-            r"^add\s+partition\s+field\s+(.+)$", a, re.IGNORECASE
-        )
-        if am:
-            entry = _parse_transform(am.group(1))
-            spec = list(t.meta.get("partition_spec") or [])
-            if entry in spec:
-                raise ValueError(
-                    f"DDL: partition field {am.group(1).strip()!r} is "
-                    f"already on {name!r}"
-                )
-            return t.evolve_partition_spec(spec + [entry])
-        am = re.match(
-            r"^drop\s+partition\s+field\s+(.+)$", a, re.IGNORECASE
-        )
-        if am:
-            entry = _parse_transform(am.group(1))
-            spec = list(t.meta.get("partition_spec") or [])
-            if entry not in spec:
-                raise ValueError(
-                    f"DDL: no partition field {am.group(1).strip()!r} on "
-                    f"{name!r} (current: {spec})"
-                )
-            return t.evolve_partition_spec(
-                [p for p in spec if p != entry]
-            )
-        am = re.match(
-            r"^replace\s+partition\s+field\s+(.+?)\s+with\s+(.+)$",
+            r"^(add|drop|replace)\s+partition\s+field\s+(.+?)"
+            r"(?:\s+with\s+(.+))?$",
             a,
             re.IGNORECASE,
         )
-        if am:
-            old_e = _parse_transform(am.group(1))
-            new_e = _parse_transform(am.group(2))
+        # WITH <new field> belongs to REPLACE, and only to it
+        if am and (am.group(1).lower() == "replace") == bool(am.group(3)):
+            verb, field, new_field = am.groups()
+            verb, entry = verb.lower(), _parse_transform(field)
             spec = list(t.meta.get("partition_spec") or [])
-            if old_e not in spec:
+            if verb == "add":
+                if entry in spec:
+                    raise ValueError(
+                        f"DDL: partition field {field.strip()!r} is "
+                        f"already on {name!r}"
+                    )
+                return t.evolve_partition_spec(spec + [entry])
+            if entry not in spec:
                 raise ValueError(
-                    f"DDL: no partition field {am.group(1).strip()!r} on "
+                    f"DDL: no partition field {field.strip()!r} on "
                     f"{name!r} (current: {spec})"
                 )
+            if verb == "drop":
+                return t.evolve_partition_spec([p for p in spec if p != entry])
+            new_entry = _parse_transform(new_field)
             return t.evolve_partition_spec(
-                [new_e if p == old_e else p for p in spec]
+                [new_entry if p == entry else p for p in spec]
             )
         # table properties
         am = re.match(
@@ -612,16 +567,9 @@ def execute_ddl(lake, spark, statement: str, access_level: str = "admin"):
             verb, kind = verb.lower(), kind.lower()
             snapshot_id = None
             if seq is not None:
-                entry = next(
-                    (e for e in t._entries() if e["sequence"] == int(seq)),
-                    None,
+                snapshot_id = _sequence_snapshot(
+                    t, int(seq), "DDL: AS OF VERSION", name
                 )
-                if entry is None:
-                    raise ValueError(
-                        f"DDL: AS OF VERSION {seq}: no commit with that "
-                        f"sequence on {name!r}"
-                    )
-                snapshot_id = entry["snapshot_id"]
             exists = _ref_exists(t, kind, ref)
             if verb == "replace":
                 if kind != "tag":

@@ -118,6 +118,9 @@ _MERGE_HEAD_RE = re.compile(
     r"^merge\s+into\s+([\w.]+)(?:\s+(?:as\s+)?(\w+))?\s+using\s+(.+)$",
     re.IGNORECASE | re.DOTALL,
 )
+_MERGE_SRC_RE = re.compile(
+    r"^(\(.*\)|\w+)(?:\s+(?:as\s+)?(\w+))?$", re.IGNORECASE | re.DOTALL
+)
 
 
 def _parse_update(s: str):
@@ -154,9 +157,6 @@ def _parse_merge_head(s: str):
     if wi <= 0:
         return None
     return table, t_alias, src_sql, after[:wi].strip(), after[wi:].strip()
-_MERGE_SRC_RE = re.compile(
-    r"^(\(.*\)|\w+)(?:\s+(?:as\s+)?(\w+))?$", re.IGNORECASE | re.DOTALL
-)
 
 
 def _resolve_table(lake, dotted: str):

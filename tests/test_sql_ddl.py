@@ -459,6 +459,14 @@ def test_alter_partition_field_evolution_sql(spark, lake):
     ]
     with pytest.raises(ValueError, match="no partition field"):
         lake.sql(spark, "ALTER TABLE pev DROP PARTITION FIELD bucket(4, k)")
+    # WITH <field> belongs to REPLACE alone, and REPLACE needs it
+    for action in ("ADD PARTITION FIELD days(ts) WITH months(ts)",
+                   "REPLACE PARTITION FIELD months(ts)"):
+        with pytest.raises(ValueError, match="unsupported ALTER"):
+            lake.sql(spark, f"ALTER TABLE pev {action}")
+    assert lake.table("pev").meta["partition_spec"] == [
+        {"column": "ts", "transform": "month"}
+    ]
 
 
 def test_alter_tblproperties_sql(spark, lake):
