@@ -4,11 +4,12 @@ Parity target: the reference's SodaCL check files
 (``dagster/lakehouse/quality/soda_checks/*.yaml``) executed via a Soda
 subprocess over DuckDB (``quality/runner.py:37-50``). Here the same four
 check primitives — ``row_count``, ``missing_count``, ``duplicate_count``,
-``freshness`` — compile into ONE single-pass DataFrame aggregation: no
-subprocess, no second engine, one job per table regardless of how many
-checks it declares. At 100 TB that is one scan with map-side partial
-aggregation; ``duplicate_count`` is the only check that shuffles (exact
-COUNT DISTINCT), and an ``approx`` flag trades it for a sketch.
+``freshness`` — compile into ONE aggregation per table, whatever the
+number of checks: no subprocess, no second engine. It is one scan with
+map-side partial aggregation; ``duplicate_count`` is the only check that
+shuffles (exact COUNT DISTINCT, which with AQE runs as 3 jobs), and an
+``approx`` flag trades it for a sketch. :func:`observe_checks` computes
+the same metrics inside the query that writes the data.
 
 Improvement over the reference (SURVEY §5 notes the latent bug): check
 columns are validated against the table schema up front — the reference
@@ -20,8 +21,9 @@ from __future__ import annotations
 
 import re
 from dataclasses import dataclass, field
+from typing import Callable
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
 _AGE_RE = re.compile(r"^(\d+)([dhms])$")
@@ -99,6 +101,13 @@ class QualityReport:
 
     def failures(self) -> list[CheckResult]:
         return [r for r in self.results if not r.passed]
+
+
+class QualityGateError(RuntimeError):
+    def __init__(self, report: QualityReport):
+        self.report = report
+        failures = "; ".join(r.label for r in report.failures())
+        super().__init__(f"Quality gate failed for {report.table}: {failures}")
 
 
 #: SodaCL check expression: kind, optional (column), operator, value
@@ -217,6 +226,41 @@ def _metric_expr(check: Check, idx: int, as_of: Column, approx: bool) -> Column:
     raise ValueError(f"Unknown check kind: {check.kind!r}")
 
 
+def _passes(check: Check, value):
+    """The one verdict rule, for a Python value and a Column alike. A NULL
+    freshness age (no rows: nothing to be fresh) fails; other NULLs read 0."""
+    if check.kind == "freshness":
+        return value < parse_age(check.max_age)
+    return _OPS[check.op](value, check.threshold)
+
+
+def _report(checks: list[Check], metrics, table: str) -> QualityReport:
+    """The report of ``checks`` from their metrics (``m<i>`` per check)."""
+    report = QualityReport(table=table)
+    for i, check in enumerate(checks):
+        value = metrics[f"m{i}"]
+        if check.kind != "freshness":
+            value = 0 if value is None else value
+            detail = f"value {value} {check.op} {check.threshold}"
+        elif value is None:
+            value, detail = float("inf"), f"no rows / all-null {check.column}: nothing to be fresh"
+        else:
+            detail = f"age {value}s vs limit {parse_age(check.max_age)}s"
+        report.results.append(
+            CheckResult(check=check, value=value, passed=_passes(check, value), detail=detail)
+        )
+    return report
+
+
+def _metrics(df: DataFrame, checks: list[Check], as_of: Column | None, approx: bool) -> list:
+    """The metric expressions of ``checks``, valid on ``df`` (else ValueError)."""
+    errors = validate_checks(checks, df.columns)
+    if errors:
+        raise ValueError("Invalid checks: " + "; ".join(errors))
+    as_of = as_of if as_of is not None else F.current_timestamp()
+    return [_metric_expr(c, i, as_of, approx) for i, c in enumerate(checks)]
+
+
 def run_checks(
     df: DataFrame,
     checks: list[Check],
@@ -225,50 +269,42 @@ def run_checks(
     approx: bool = False,
     strict: bool = True,
 ) -> QualityReport:
-    """Evaluate every check in ONE aggregation pass over ``df``.
+    """Evaluate every check in ONE aggregation over ``df`` (one collect).
 
     ``as_of`` pins the freshness reference instant (default: now) — tests
     and backfills pass a literal for determinism. ``approx=True`` swaps the
     exact COUNT DISTINCT in duplicate_count for HLL (no exact-distinct
     shuffle — the 100 TB mode). ``strict`` raises on invalid check specs.
     """
-    errors = validate_checks(checks, df.columns)
-    if errors and strict:
-        raise ValueError("Invalid checks: " + "; ".join(errors))
-
-    as_of = as_of if as_of is not None else F.current_timestamp()
-    valid = [c for c in checks if not validate_checks([c], df.columns)]
-    exprs = [_metric_expr(c, i, as_of, approx) for i, c in enumerate(valid)]
+    valid = checks if strict else [c for c in checks if not validate_checks([c], df.columns)]
+    exprs = _metrics(df, valid, as_of, approx)
     if not exprs:
         return QualityReport(table=table)
+    return _report(valid, df.agg(*exprs).collect()[0], table)
 
-    row = df.agg(*exprs).collect()[0]
 
-    report = QualityReport(table=table)
-    for i, check in enumerate(valid):
-        value = row[f"m{i}"]
-        if check.kind == "freshness":
-            limit = parse_age(check.max_age)
-            if value is None:
-                # MAX(ts) is NULL ⇔ zero rows (or all-null ts): no data is
-                # NOT fresh — coercing to age 0 would pass a never-loaded table
-                report.results.append(
-                    CheckResult(
-                        check=check,
-                        value=float("inf"),
-                        passed=False,
-                        detail=f"no rows / all-null {check.column}: nothing to be fresh",
-                    )
-                )
-                continue
-            passed = value < limit
-            detail = f"age {value}s vs limit {limit}s"
-        else:
-            value = 0 if value is None else value
-            passed = _OPS[check.op](value, check.threshold)
-            detail = f"value {value} {check.op} {check.threshold}"
-        report.results.append(CheckResult(check=check, value=value, passed=passed, detail=detail))
-    return report
+def observe_checks(
+    df: DataFrame, checks: list[Check], table: str = "", as_of: Column | None = None
+) -> tuple[DataFrame, Callable[[], QualityReport]]:
+    """``df`` carrying the metrics of ``checks`` as observed metrics
+    (``DataFrame.observe``) of the query that consumes it, and a function
+    returning :func:`run_checks`' report from them once that query ran (it
+    waits for them). Observed metrics take no DISTINCT, so
+    ``duplicate_count`` counts the non-null rows a ``row_number`` over the
+    column marks as repeats, a shuffle inside the consuming query."""
+    exprs = _metrics(df, checks, as_of, approx=False)
+    marks: dict[str, str] = {}
+    for i, check in enumerate(checks):
+        if check.kind == "duplicate_count":
+            mark = marks.setdefault(check.column, f"__sg_dup{len(marks)}")
+            exprs[i] = F.count(F.when(F.col(mark) > 1, F.col(check.column))).alias(f"m{i}")
+    for column, mark in marks.items():
+        df = df.withColumn(
+            mark, F.row_number().over(Window.partitionBy(column).orderBy(F.lit(0)))
+        )
+    obs = Observation()
+    observed = df.observe(obs, *exprs).drop(*marks.values())
+    return observed, lambda: _report(checks, obs.get, table)
 
 
 def checks_report_df(
@@ -279,37 +315,21 @@ def checks_report_df(
 ) -> DataFrame:
     """The DataFrame twin of :func:`run_checks`: one row per check with
     (check_name, value, passed) — everything stays JVM-side (one
-    aggregation job, then a literal explode of the metric row), so the
+    aggregation, then a literal explode of the metric row), so the
     report composes into larger plans and driver oracles.
 
     Freshness value is the age in whole seconds at ``as_of``; a NULL metric
     (zero rows / all-null column) fails freshness and reads value NULL.
     """
-    errors = validate_checks(checks, df.columns)
-    if errors:
-        raise ValueError("Invalid checks: " + "; ".join(errors))
-    as_of = as_of if as_of is not None else F.current_timestamp()
-    exprs = [_metric_expr(c, i, as_of, approx) for i, c in enumerate(checks)]
-    row_df = df.agg(*exprs)
-
-    col_ops = {
-        ">": lambda v, t: v > t,
-        ">=": lambda v, t: v >= t,
-        "=": lambda v, t: v == t,
-        "==": lambda v, t: v == t,
-        "<=": lambda v, t: v <= t,
-        "<": lambda v, t: v < t,
-    }
+    row_df = df.agg(*_metrics(df, checks, as_of, approx))
     structs = []
     for i, check in enumerate(checks):
         v = F.col(f"m{i}").cast("long")
         if check.kind == "freshness":
-            passed = F.when(v.isNull(), F.lit(False)).otherwise(
-                v < F.lit(parse_age(check.max_age))
-            )
+            passed = F.when(v.isNull(), F.lit(False)).otherwise(_passes(check, v))
         else:
             v = F.coalesce(v, F.lit(0)).cast("long")
-            passed = col_ops[check.op](v, F.lit(check.threshold))
+            passed = _passes(check, v)
         structs.append(
             F.struct(
                 F.lit(check.label()).alias("check_name"),

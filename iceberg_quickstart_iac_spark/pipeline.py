@@ -9,17 +9,16 @@ auto-ingest (``build_source_assets``, ``source_assets.py:116-126``):
 2. read the declared source (parquet/csv/json, validated path) — or accept
    a caller-supplied DataFrame (the "custom Python asset" extension point);
 3. enforce the declared schema (projection/cast);
-4. run the table's quality checks (single-pass aggregation) — failures
-   BLOCK the write by default, mirroring Soda's gate in the reference
-   (``quality/runner.py:60-71``);
-5. commit atomically to the snapshot-log table (full refresh by default,
-   append for event-stream patterns);
-6. emit ``source_ingest`` / ``table_write`` audit events and return a
-   materialization summary (row/column counts — the reference's asset
-   output metadata).
+4. write the batch as a staged dir (full refresh by default, append for
+   event-stream patterns), its quality checks observed by the write query;
+5. failed checks BLOCK the commit by default and drop the dir, mirroring
+   Soda's gate in the reference (``quality/runner.py:60-71``);
+6. commit atomically, emit ``source_ingest`` / ``table_write`` audit
+   events and return a materialization summary (row/column counts — the
+   reference's asset output metadata).
 
 Everything data-plane is executors-only; the driver does template
-resolution, one aggregate collect (checks), and one JSON commit.
+resolution, reads the observed check metrics, and makes one JSON commit.
 """
 
 from __future__ import annotations
@@ -34,20 +33,15 @@ from iceberg_quickstart_iac_spark.governance.audit import log_audit_event
 from iceberg_quickstart_iac_spark.operators.quality import (
     DEFAULT_CHECKS,
     Check,
+    QualityGateError,
     QualityReport,
+    observe_checks,
     run_checks,
 )
 from iceberg_quickstart_iac_spark.sources.readers import ALLOWED_SCHEMES, read_source
 from iceberg_quickstart_iac_spark.tables.snapstore import SnapTable, TableNotFoundError
 from iceberg_quickstart_iac_spark.templates.loader import spark_schema
 from iceberg_quickstart_iac_spark.sources.readers import project_to_schema
-
-
-class QualityGateError(RuntimeError):
-    def __init__(self, report: QualityReport):
-        self.report = report
-        failures = "; ".join(r.label for r in report.failures())
-        super().__init__(f"Quality gate failed for {report.table}: {failures}")
 
 
 @dataclass
@@ -72,6 +66,62 @@ def _load_or_create(warehouse_root: str | Path, template: dict) -> SnapTable:
         return SnapTable.create(root, template)
 
 
+def _gated_write(
+    spark: SparkSession,
+    template: dict,
+    warehouse_root: str | Path,
+    df: DataFrame | None,
+    mode: str,
+    checks: list[Check] | None,
+    wap: bool,
+    enforce: bool = True,
+    allowed_schemes: tuple[str, ...] = ALLOWED_SCHEMES,
+) -> tuple[SnapTable, Materialization]:
+    """The one gated write of :func:`materialize` and :func:`materialize_wap`:
+    the batch (``df`` or the template's source, in the declared schema)
+    goes through the table's staged-write hook (:meth:`SnapTable.append`),
+    whose audit reports ``checks`` on the batch (observed metrics of the
+    write) or, with ``wap``, on the staged table state. A failing report
+    blocks the commit when ``enforce``."""
+    name = template["name"]
+    fq = f"{template.get('namespace', 'default')}.{name}"
+    schema = spark_schema(template)
+    if df is None:
+        source = template.get("source")
+        if not source:
+            raise ValueError(f"Template '{name}' has no source block and no DataFrame was given")
+        df = read_source(spark, source, schema, allowed_schemes)
+        log_audit_event(
+            "source_ingest",
+            fq,
+            details={"source_path": source["path"], "format": source.get("format", "parquet")},
+        )
+    else:
+        df = project_to_schema(df, schema)
+    checks = DEFAULT_CHECKS.get(name, []) if checks is None else checks
+    if checks and not wap:
+        df, observed = observe_checks(df, checks, table=fq)
+    report = None
+
+    def audit(staged) -> None:
+        nonlocal report
+        report = run_checks(staged(), checks, table=fq) if wap else observed()
+        if enforce and not report.passed:
+            raise QualityGateError(report)
+
+    table = _load_or_create(warehouse_root, template)
+    write = table.append if mode == "append" else table.overwrite
+    entry = write(df, audit=audit if checks else None)
+    return table, Materialization(
+        table=fq,
+        operation=entry["operation"],
+        snapshot_id=entry["snapshot_id"],
+        num_rows=entry["row_count"],
+        num_columns=len(df.columns),
+        quality=report,
+    )
+
+
 def materialize(
     spark: SparkSession,
     template: dict,
@@ -92,7 +142,8 @@ def materialize(
     ``df=None`` requires a ``source`` block in the template (declarative
     ingest); passing a DataFrame is the custom-asset path. ``mode`` is
     'overwrite' (reference's full-refresh model) or 'append' (event-stream
-    pattern). ``checks`` default to the template's registered set. A
+    pattern). ``checks`` default to the template's registered set and gate
+    the batch inside its own write query (:func:`observe_checks`). A
     ``team`` (tenancy matrix) gates the write up front: only
     writer/admin teams may materialize the table.
 
@@ -103,57 +154,26 @@ def materialize(
     ``register_access_level`` (reader by default, so downstream
     ``spark.sql`` consumers never see restricted columns).
     """
-    name = template["name"]
     if team is not None:
         from iceberg_quickstart_iac_spark.governance.tenancy import authorize_write
 
-        authorize_write(team, name)
-    fq = f"{template.get('namespace', 'default')}.{name}"
-    schema = spark_schema(template)
-
-    if df is None:
-        source = template.get("source")
-        if not source:
-            raise ValueError(f"Template '{name}' has no source block and no DataFrame was given")
-        df = read_source(spark, source, schema, allowed_schemes)
-        log_audit_event(
-            "source_ingest",
-            fq,
-            details={"source_path": source["path"], "format": source.get("format", "parquet")},
-        )
-    else:
-        df = project_to_schema(df, schema)
-
-    if checks is None:
-        checks = DEFAULT_CHECKS.get(name, [])
-    report = run_checks(df, checks, table=fq) if checks else None
-    if report is not None and enforce_quality and not report.passed:
-        raise QualityGateError(report)
-
-    table = _load_or_create(warehouse_root, template)
-
-    entry = table.append(df) if mode == "append" else table.overwrite(df)
-
+        authorize_write(team, template["name"])
+    table, result = _gated_write(
+        spark, template, warehouse_root, df, mode, checks, wap=False,
+        enforce=enforce_quality, allowed_schemes=allowed_schemes,
+    )
     if register_view:
         # follow_head keeps the view current across LATER commits too
         # (incremental appends after this run) — without it the view pins
         # this materialization's snapshot until the next register
         table.register(
             spark,
-            name=name,
+            name=template["name"],
             access_level=register_access_level,
             metadata_tables=register_metadata_tables,
             follow_head=register_follow_head,
         )
-
-    return Materialization(
-        table=fq,
-        operation=entry["operation"],
-        snapshot_id=entry["snapshot_id"],
-        num_rows=entry["row_count"],
-        num_columns=len(df.columns),
-        quality=report,
-    )
+    return result
 
 
 def materialize_wap(
@@ -163,76 +183,18 @@ def materialize_wap(
     df: DataFrame | None = None,
     mode: str = "overwrite",
     checks: list[Check] | None = None,
-    audit_branch_prefix: str = "audit",
 ) -> Materialization:
-    """Write-Audit-Publish: the Iceberg staging pattern, built on the
-    snapstore's Nessie-style branches.
-
-    The plain :func:`materialize` gate audits the INPUT frame before the
-    write; WAP audits the COMMITTED data as consumers would read it — the
-    staged commit lands on an isolated branch, the checks run against the
-    branch READ-BACK (catching write-path defects a pre-write gate cannot
-    see: casts, declared-schema projection, partition layout), and only a
-    passing audit merges the branch into main. A failing audit deletes the
-    branch; main never referenced the bad data. Branch mechanics are
-    metadata-only (the data is written once, directories are shared), so
-    WAP costs one extra read-side aggregation — not a second write — at
-    any scale.
+    """Write-Audit-Publish, the Iceberg staging pattern: the plain
+    :func:`materialize` gate audits the written BATCH; WAP audits the
+    staged TABLE STATE as consumers would read it once published (the
+    head's rows plus the staged dir for an append, the dir alone for an
+    overwrite), read back through the table's read path, so it catches
+    write-path defects a batch gate cannot see: casts, declared-schema
+    projection, partition layout. Only a passing audit commits; a failing
+    one drops the staged dir. The data is written once; the audit is one
+    check aggregation over the staged state.
     """
-    import uuid as _uuid
-
-    name = template["name"]
-    fq = f"{template.get('namespace', 'default')}.{name}"
-    schema = spark_schema(template)
-
-    if df is None:
-        source = template.get("source")
-        if not source:
-            raise ValueError(f"Template '{name}' has no source block and no DataFrame was given")
-        df = read_source(spark, source, schema)
-        log_audit_event(
-            "source_ingest",
-            fq,
-            details={"source_path": source["path"], "format": source.get("format", "parquet")},
-        )
-    else:
-        df = project_to_schema(df, schema)
-
-    table = _load_or_create(warehouse_root, template)
-
-    branch_name = f"{audit_branch_prefix}-{_uuid.uuid4().hex[:8]}"
-    br = table.create_branch(branch_name)
-    try:
-        br.append(df) if mode == "append" else br.overwrite(df)
-
-        if checks is None:
-            checks = DEFAULT_CHECKS.get(name, [])
-        report = (
-            run_checks(br.read(spark), checks, table=f"{fq}@{branch_name}")
-            if checks
-            else None
-        )
-        if report is not None and not report.passed:
-            raise QualityGateError(report)
-    except Exception:
-        # blocked or failed before publish: main never saw the data, drop it
-        table.delete_branch(branch_name)
-        raise
-    # publish; the staging branch is deleted only after a FULLY successful
-    # merge — on a merge conflict it survives, still holding the complete
-    # unmerged history for manual resolution (no partial publish is lost)
-    merged = table.merge_branch(branch_name)
-    table.delete_branch(branch_name)
-
-    return Materialization(
-        table=fq,
-        operation=merged["operation"],
-        snapshot_id=merged["snapshot_id"],
-        num_rows=merged["row_count"],
-        num_columns=len(df.columns),
-        quality=report,
-        details={"wap_branch": branch_name},
-    )
+    return _gated_write(spark, template, warehouse_root, df, mode, checks, wap=True)[1]
 
 
 def read_table(

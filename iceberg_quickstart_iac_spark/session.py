@@ -68,6 +68,14 @@ def get_spark(
         # simhash bit-sums per group) out of generated code into the
         # interpreted path — measured ~20% on the minhash signature stage
         .config("spark.sql.codegen.maxFields", "250")
+        # PySpark's per-call origin capture wraps every functions.* and
+        # Column call in gateway round trips (active session, origin
+        # lookup, conf read, set, clear) plus an IPython import probe:
+        # building (col("a") + lit(1)).alias("b") took 38 round trips
+        # with it, 8 without. The trade-off: an AnalysisException no
+        # longer names the Python call site of the failing expression.
+        # A static conf: it takes effect only on a session built here.
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

@@ -94,48 +94,32 @@ def incremental_wap_ingest(
     available_now: bool = True,
     on_blocked=None,
 ) -> StreamingQuery:
-    """Streaming write-audit-publish: every micro-batch stages on an
-    isolated snapstore branch, the quality checks run against the staged
-    READ-BACK, and only a passing audit merges into main — a bad
-    micro-batch is quarantined (branch deleted, main untouched,
-    ``on_blocked(batch_id, report)`` notified) instead of poisoning the
-    table. Continuous ingest keeps exactly-once file tracking via the
-    checkpoint; a blocked batch does not advance main, and the staged
-    debris is ``remove_orphan_files`` territory.
-
-    At scale this is the standard Iceberg WAP cadence for streams: the
-    audit is one aggregation over the staged state per micro-batch; data
-    is written once (branches are refs, not copies).
+    """Streaming write-audit-publish: every micro-batch is a staged
+    append (:meth:`SnapTable.append`'s audit hook) whose quality checks
+    run on the staged TABLE STATE (the head's rows plus the batch); only a
+    passing audit commits. A bad micro-batch is quarantined (its dir
+    dropped, the table untouched, ``on_blocked(batch_id, report)``
+    notified) instead of poisoning the table. Exactly-once file tracking
+    stays with the checkpoint. Per micro-batch the data is written once
+    and audited with one aggregation: the Iceberg WAP cadence for streams.
     """
-    import uuid
-
-    from iceberg_quickstart_iac_spark.operators.quality import run_checks
+    from iceberg_quickstart_iac_spark.operators.quality import QualityGateError, run_checks
 
     stream = read_file_stream(spark, source_path, schema, fmt)
+
+    def audit(staged) -> None:
+        report = run_checks(staged(), checks, table=table.fq_name)
+        if not report.passed:
+            raise QualityGateError(report)
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
-        branch_name = f"audit-{batch_id}-{uuid.uuid4().hex[:6]}"
-        br = table.create_branch(branch_name)
         try:
-            br.append(batch_df)
-            if checks:
-                report = run_checks(
-                    br.read(spark), checks, table=f"{table.fq_name}@{branch_name}"
-                )
-                if not report.passed:
-                    if on_blocked is not None:
-                        on_blocked(batch_id, report)
-                    table.delete_branch(branch_name)
-                    return  # quarantine: branch dropped, main untouched
-        except Exception:
-            table.delete_branch(branch_name)
-            raise
-        # delete only after a fully successful merge — a conflicted merge
-        # leaves the branch holding the complete unmerged batch
-        table.merge_branch(branch_name)
-        table.delete_branch(branch_name)
+            table.append(batch_df, audit=audit if checks else None)
+        except QualityGateError as blocked:
+            if on_blocked is not None:
+                on_blocked(batch_id, blocked.report)  # quarantined: nothing committed
 
     writer = stream.writeStream.foreachBatch(sink).option("checkpointLocation", checkpoint_dir)
     if available_now:

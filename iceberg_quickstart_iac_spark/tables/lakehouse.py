@@ -572,7 +572,8 @@ class Lakehouse:
         )
 
         accessor = _accessor or self.table
-        if is_ddl(statement):
+        routed = normalize(statement)  # the one text every router reads
+        if is_ddl(routed):
             if _scope != "main":
                 raise RuntimeError(
                     "Catalog DDL is table-wide metadata — run it on the "
@@ -586,7 +587,7 @@ class Lakehouse:
             is_call,
         )
 
-        if is_call(statement):
+        if is_call(routed):
             # Iceberg-style stored procedures (CALL system.expire_snapshots
             # etc. — tables/sql_call.py). Maintenance rewrites main-catalog
             # state; a branch runs reads and DML only.
@@ -651,7 +652,7 @@ class Lakehouse:
 
         ensure_views()
         ensure_registered()
-        if is_dml(statement):
+        if is_dml(routed):
             return execute_dml(
                 _DmlScope(accessor, suffix) if _accessor else self,
                 spark, statement, access_level,

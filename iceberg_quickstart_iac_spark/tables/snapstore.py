@@ -403,6 +403,15 @@ def _footer_bounds(f: Path) -> dict[str, list]:
     return out
 
 
+def _as_utc(bound):
+    """A datetime bound (or a list of them) as aware UTC, to compare with a
+    ``timestamptz`` column's statistics; a naive one is local time, as
+    PySpark reads it."""
+    if isinstance(bound, (list, tuple)):
+        return [_as_utc(b) for b in bound]
+    return bound.astimezone(timezone.utc) if isinstance(bound, datetime) else bound
+
+
 def _range_matches(stats: dict[str, tuple], filters: list[tuple]) -> bool:
     for col, op, bound in filters:
         if col not in stats:
@@ -410,6 +419,8 @@ def _range_matches(stats: dict[str, tuple], filters: list[tuple]) -> bool:
         mn, mx = stats[col]
         if mn is None or mx is None:
             continue
+        if isinstance(mn, datetime) and mn.tzinfo is not None:
+            bound = _as_utc(bound)
         try:
             if op == "=":
                 ok = mn <= bound <= mx
@@ -992,48 +1003,20 @@ class SnapTable:
         concurrency with bounded retry (``commit_num_retries`` parity).
         """
         retries = int(st.meta.get("properties", {}).get("commit_num_retries", 3))
-        # an operation may pin a NEW dir to an inherited sequence: a
-        # rewrite's output to the snapshot it read, a merged delete file
-        # to its group's newest source, a kept leaf to its source dir
-        overrides = {
-            **{d: delta.read_at["sequence"] for d in (delta.add if delta.read_at else [])},
-            **(delta.extra.get("dir_sequence_overrides") or {}),
-        }
-        extra = {**delta.extra, **({"dir_sequence_overrides": overrides} if overrides else {})}
         # no .json suffix: temp files must never match the log glob
         tmp = self.log_dir / f".tmp-{uuid.uuid4().hex}"
         for attempt in range(retries + 1):
             entries = st.read_log()
-            head = entries[-1] if entries else None
-            seq = head["sequence"] + 1 if head else 0
             held = _txn_holder(entries, delta.extra.get("txn"))
             if held is not None:
                 self._drop_unreferenced(delta.add + delta.add_deletes)
                 return held
             try:
-                applied = delta.apply(head, st.name)
+                full = self._next_entry(st.name, entries, delta)
             except CommitConflictError:
                 self._drop_unreferenced(delta.add + delta.add_deletes)
                 raise
-            full = {
-                **extra,
-                "operation": delta.operation,
-                **applied,
-                **delta.epoch,
-                "sequence": seq,
-                "snapshot_id": uuid.uuid4().hex[:16],
-                "parent_id": head["snapshot_id"] if head else None,
-                "committed_at_ms": _now_ms(),
-            }
-            # each dir's INTRO sequence (Iceberg's data_sequence_number, at
-            # dir granularity; see _dir_intro_seqs): the parent's map plus
-            # this commit's dirs, pruned to dirs a surviving entry references
-            dir_seqs = dict(head["dir_sequences"] if head else {})
-            for d in self._entry_dirs(full):
-                dir_seqs.setdefault(d, overrides.get(d, seq))
-            live = {d for e in entries for d in self._entry_dirs(e)}
-            live |= set(self._entry_dirs(full))
-            full["dir_sequences"] = {d: s for d, s in dir_seqs.items() if d in live}
+            seq = full["sequence"]
             tmp.write_text(json.dumps(full))
             target = self.log_dir / f"{seq:012d}.json"
             try:
@@ -1050,6 +1033,39 @@ class SnapTable:
                     ) from None
                 time.sleep(min(0.05 * 2**attempt, 1.0) * (1 + random.random()))
         raise AssertionError("unreachable")
+
+    def _next_entry(self, name: str, entries: list[dict], delta: _Delta) -> dict:
+        """The log entry committing ``delta`` on ``entries`` (:meth:`_commit`)."""
+        head = entries[-1] if entries else None
+        seq = head["sequence"] + 1 if head else 0
+        # an operation may pin a NEW dir to an inherited sequence: a
+        # rewrite's output to the snapshot it read, a merged delete file
+        # to its group's newest source, a kept leaf to its source dir
+        overrides = {
+            **{d: delta.read_at["sequence"] for d in (delta.add if delta.read_at else [])},
+            **(delta.extra.get("dir_sequence_overrides") or {}),
+        }
+        full = {
+            **delta.extra,
+            **({"dir_sequence_overrides": overrides} if overrides else {}),
+            "operation": delta.operation,
+            **delta.apply(head, name),
+            **delta.epoch,
+            "sequence": seq,
+            "snapshot_id": uuid.uuid4().hex[:16],
+            "parent_id": head["snapshot_id"] if head else None,
+            "committed_at_ms": _now_ms(),
+        }
+        # each dir's INTRO sequence (Iceberg's data_sequence_number, at
+        # dir granularity; see _dir_intro_seqs): the parent's map plus
+        # this commit's dirs, pruned to dirs a surviving entry references
+        dir_seqs = dict(head["dir_sequences"] if head else {})
+        for d in self._entry_dirs(full):
+            dir_seqs.setdefault(d, overrides.get(d, seq))
+        live = {d for e in entries for d in self._entry_dirs(e)}
+        live |= set(self._entry_dirs(full))
+        full["dir_sequences"] = {d: s for d, s in dir_seqs.items() if d in live}
+        return full
 
     def _drop_unreferenced(self, dirs: list[str]) -> None:
         """Delete the dirs among ``dirs`` that no entry references: what a
@@ -1238,7 +1254,14 @@ class SnapTable:
         # the template's declared data-file format (``write_format``, the
         # reference's ``write.format.default``; ``_schema.json:97-104``):
         # parquet (default) or orc, both native Spark writers
-        writer = wdf.write.format(st.meta.get("properties", {}).get("write_format", "parquet"))
+        fmt = st.meta.get("properties", {}).get("write_format", "parquet")
+        if fmt == "parquet":
+            # timestamptz as INT64 TIMESTAMP_MICROS, Iceberg's physical type,
+            # which carries footer min/max (Spark's default INT96 carries
+            # none); a session-wide setting, so every write sets it. INT96
+            # dirs written before read in the same scan.
+            wdf.sparkSession.conf.set("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
+        writer = wdf.write.format(fmt)
         if pcols:
             writer = writer.partitionBy(*[name for name, _ in pcols])
         writer.save(str(out))
@@ -1254,21 +1277,48 @@ class SnapTable:
                 f"Table columns: {sorted(st.columns)}, Data columns: {sorted(df.columns)}"
             )
 
-    def overwrite(self, df: DataFrame, entry_extra: dict | None = None) -> dict:
+    def _staged_write(
+        self, st: _State, df: DataFrame, audit: Callable | None, operation: str, **delta
+    ) -> dict:
+        """The one staged write of :meth:`append` and :meth:`overwrite`:
+        write ``df`` as one dir, call ``audit(staged)``, then commit.
+        ``staged()`` reads the state the commit would make from ``st`` (the
+        head's rows plus the dir for an append, the dir alone for an
+        overwrite), which no reader sees before ``_commit``. An audit that
+        raises drops the dir (:meth:`_drop_unreferenced`, the
+        losing-rewrite path) and re-raises: nothing commits or stays."""
+        self._check_columns(st, df)
+        dir_name, rows, files = self._write_data(st, df)
+        d = _Delta(
+            operation, self._write_epoch(st.meta), add=[dir_name], rows=rows, files=files, **delta
+        )
+        if audit is not None:
+            def staged() -> DataFrame:
+                entry = self._next_entry(st.name, st.entries, d)
+                view = _State(st.meta, st.name, lambda: [*st.entries, entry], st.ref)
+                return self._read_at(df.sparkSession, view, entry)
+
+            try:
+                audit(staged)
+            except BaseException:
+                self._drop_unreferenced([dir_name])
+                raise
+        entry = self._commit(st, d)
+        log_audit_event("table_write", st.name, details={"row_count": rows, "mode": operation})
+        return entry
+
+    def overwrite(
+        self, df: DataFrame, entry_extra: dict | None = None, audit: Callable | None = None
+    ) -> dict:
         """Atomic full-refresh replace (the reference's write model,
         ``resources/iceberg.py:78``, ``docs/bring-your-own-data.md:220-224``).
 
         ``entry_extra`` — extra application fields recorded IN the commit
-        entry (atomically with the data), e.g. an IVM watermark."""
-        st = self._state()
-        self._check_columns(st, df)
-        dir_name, rows, files = self._write_data(st, df)
-        entry = self._commit(st, _Delta(
-            "overwrite", self._write_epoch(st.meta), add=[dir_name], rows=rows, files=files,
-            replace=True, extra=entry_extra or {},
-        ))
-        log_audit_event("table_write", st.name, details={"row_count": rows, "mode": "overwrite"})
-        return entry
+        entry (atomically with the data), e.g. an IVM watermark. ``audit``
+        gates the commit (:meth:`_staged_write`)."""
+        return self._staged_write(
+            self._state(), df, audit, "overwrite", replace=True, extra=entry_extra or {}
+        )
 
     def last_txn_version(self, app_id: str) -> int | None:
         """Highest committed transaction version for ``app_id``, or None.
@@ -1299,7 +1349,9 @@ class SnapTable:
         applies the same rule to the head on every attempt."""
         return _txn_holder(st.entries, self._txn_meta(txn).get("txn")) if txn else None
 
-    def append(self, df: DataFrame, txn: tuple[str, int] | None = None) -> dict:
+    def append(
+        self, df: DataFrame, txn: tuple[str, int] | None = None, audit: Callable | None = None
+    ) -> dict:
         """Append commit (the event-stream pattern, ``event_stream.yaml:4``).
 
         ``txn=(app_id, version)`` makes the append idempotent: a version
@@ -1308,22 +1360,17 @@ class SnapTable:
         exactly-once sinks for streaming ``foreachBatch`` replays. The rule
         is checked before the write and again on every commit attempt, so
         of two writers racing the same version one commits and the other
-        drops its dirs and returns the winner's entry.
+        drops its dirs and returns the winner's entry. ``audit`` gates the
+        commit (:meth:`_staged_write`); a replay writes nothing and runs no
+        audit.
         """
         st = self._state()
         skipped = self._txn_applied(st, txn)
         if skipped is not None:
             return skipped
-        self._check_columns(st, df)
-        dir_name, rows, files = self._write_data(st, df)
         # a pure add: live equality-delete files carry forward (they scope
         # to STRICTLY LOWER sequences, so they never erase these rows)
-        entry = self._commit(st, _Delta(
-            "append", self._write_epoch(st.meta), add=[dir_name], rows=rows, files=files,
-            extra=self._txn_meta(txn),
-        ))
-        log_audit_event("table_write", st.name, details={"row_count": rows, "mode": "append"})
-        return entry
+        return self._staged_write(st, df, audit, "append", extra=self._txn_meta(txn))
 
     def delete_where(
         self,
@@ -1840,16 +1887,32 @@ class SnapTable:
         the delete file erases OLD images only (strictly lower commit
         sequence), so the same commit's new images survive;
         :meth:`compact` folds everything down.
+
+        A key repeated in the batch is the cardinality violation the COW
+        path raises on: the batch's row count, observed on the delete-key
+        write, must equal that write's distinct key count.
         """
+        from pyspark.sql import Observation
+        from pyspark.sql import functions as F
+
         skipped = self._txn_applied(st, txn)
         if skipped is not None:
             return skipped
         # two small scans of the batch cost less than caching it, which
         # AQE materializes in a job of its own; every evaluation yields
         # the same key set, and the images come from one of them
+        batch = Observation()
         del_dir, delete_keys = self._write_delete_keys(
-            st, changes.select(*key_cols).dropDuplicates()
+            st, changes.select(*key_cols).observe(batch, F.count(F.lit(1)).alias("n"))
+            .dropDuplicates()
         )
+        if batch.get["n"] != delete_keys:
+            self._drop_unreferenced([del_dir])
+            raise ValueError(
+                "apply_changelog: MERGE cardinality violation — a key appears "
+                "more than once in the batch; pass seq_col or reduce the batch "
+                "to one row per key first"
+            )
         up_dir, up_rows, up_files = self._write_data(
             st, changes.filter(f"{op_col} <> 'D'").select(*st.columns)
         )

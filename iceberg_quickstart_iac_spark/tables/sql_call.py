@@ -114,8 +114,9 @@ _PROC_POSITIONAL = {
 }
 
 
-def is_call(statement: str) -> bool:
-    return bool(re.match(r"^call\b", normalize(statement), re.IGNORECASE))
+def is_call(text: str) -> bool:
+    """Whether ``text``, a statement through :func:`normalize`, is a CALL."""
+    return bool(re.match(r"^call\b", text, re.IGNORECASE))
 
 
 def _parse_value(raw: str):

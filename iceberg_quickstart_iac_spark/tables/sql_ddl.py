@@ -84,8 +84,9 @@ _REVERSE_PROPS = {
 }
 
 
-def is_ddl(statement: str) -> bool:
-    return _DDL_KW.match(normalize(statement)) is not None
+def is_ddl(text: str) -> bool:
+    """Whether ``text``, a statement through :func:`normalize`, is DDL."""
+    return _DDL_KW.match(text) is not None
 
 
 def _parse_coldef(item: str) -> dict:

@@ -51,8 +51,9 @@ from iceberg_quickstart_iac_spark.tables.sql_text import (
 _DML_KW = re.compile(r"^(insert|delete|update|merge)\b", re.IGNORECASE)
 
 
-def is_dml(statement: str) -> bool:
-    return _DML_KW.match(normalize(statement)) is not None
+def is_dml(text: str) -> bool:
+    """Whether ``text``, a statement through :func:`normalize`, is DML."""
+    return _DML_KW.match(text) is not None
 
 
 def _rewrite_alias(expr: str, mapping: dict[str, str]) -> str:

@@ -605,3 +605,16 @@ def test_catalog_branch_end_forgets_branch_view_records(spark, lake, end):
         lake.table("a").append(spark.createDataFrame([(5, "main")], "k LONG, v STRING"))
     expected = 3 if end == "merge" else 2
     assert lake.sql(spark, "SELECT COUNT(*) AS n FROM a").first().n == expected
+
+
+def test_select_is_lexed_once_for_routing(spark, lake, monkeypatch):
+    """A main-scope SELECT is scanned twice: once for the text the DDL,
+    CALL and DML routers all read, once for its identifiers."""
+    from iceberg_quickstart_iac_spark.tables import sql_text
+
+    scans = []
+    scan = sql_text.scan
+    monkeypatch.setattr(sql_text, "scan", lambda sql: scans.append(sql) or scan(sql))
+    df = lake.sql(spark, "SELECT v, count(*) AS n FROM a GROUP BY v")
+    assert len(scans) == 2
+    assert [tuple(r) for r in df.collect()] == [("a", 1)]

@@ -352,3 +352,22 @@ def test_mor_changelog_txn_replay_skipped(spark, tmp_path):
     n = len(t._entries())
     e2 = t.apply_changelog(spark, ch, key_cols=["k"], mode="mor", txn=("w", 3))
     assert e2["snapshot_id"] == e1["snapshot_id"] and len(t._entries()) == n
+
+
+def test_mor_changelog_without_seq_raises_on_dup_key(spark, tmp_path):
+    """A MoR batch that repeats a key is the COW cardinality violation: it
+    raises, commits nothing and leaves no dir (it used to commit two live
+    rows for the key)."""
+    import os
+
+    t = _mor_fixture(spark, tmp_path, "dup_mor")
+    head, dirs = t.current_snapshot(), sorted(os.listdir(t.data_dir))
+    ch = spark.createDataFrame(
+        [(1, "a", 1.0, "U"), (1, "b", 2.0, "U"), (2, "c", 3.0, "U")],
+        "k LONG, v STRING, p DOUBLE, op STRING",
+    )
+    with pytest.raises(ValueError, match="cardinality"):
+        t.apply_changelog(spark, ch, key_cols=["k"], mode="mor")
+    assert t.current_snapshot() == head
+    assert sorted(os.listdir(t.data_dir)) == dirs
+    assert t.read(spark).filter("k = 1").count() == 1

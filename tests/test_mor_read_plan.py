@@ -476,3 +476,57 @@ def test_cow_changelog_and_merge_on_timestamptz(spark, tmp_path):
         when_matched=[{"action": "update", "set": {"at": "s.at"}}],
     )
     assert {r.k: r.at for r in t.read(spark).collect()} == {1: t1, 3: t0}
+
+
+# -- timestamptz footer statistics ------------------------------------------
+
+
+def test_timestamptz_footer_stats_skip_files_and_int96_dirs_still_read(spark, tmp_path):
+    """``timestamptz`` is written as INT64 TIMESTAMP_MICROS (Iceberg's
+    physical type), which carries footer min/max, so a filter on it skips
+    files. A dir written as INT96 before (Spark's default, no statistics)
+    reads in the same epoch scan as the new ones."""
+    import pyarrow.parquet as pq
+
+    t = SnapTable.create(
+        tmp_path / "tzs",
+        {
+            "name": "tzs", "namespace": "lakehouse",
+            "columns": [{"name": "k", "type": "long"}, {"name": "at", "type": "timestamptz"}],
+        },
+    )
+
+    def batch(day0):
+        return spark.createDataFrame(
+            [(day0 + i, datetime(2024, 1, day0 + i, 12)) for i in range(3)], "k LONG, at TIMESTAMP"
+        ).coalesce(1)
+
+    spark.conf.set("spark.sql.parquet.outputTimestampType", "INT96")
+    old = batch(1)
+    old.write.parquet(str(tmp_path / "int96"))  # the dir an earlier engine wrote
+    t.append(batch(1))
+    old_dir = t.current_snapshot()["data_dirs"][0]
+    for f in _list_data_files(t.data_dir / old_dir):
+        f.unlink()
+    for f in _list_data_files(tmp_path / "int96"):
+        f.rename(t.data_dir / old_dir / f.name)
+    t.append(batch(5))
+    new_dir = t.current_snapshot()["data_dirs"][1]
+
+    def column(d):
+        [f] = _list_data_files(t.data_dir / d)
+        return pq.ParquetFile(str(f)).metadata.row_group(0).column(1)
+
+    assert column(old_dir).physical_type == "INT96" and not column(old_dir).is_stats_set
+    assert column(new_dir).physical_type == "INT64" and column(new_dir).is_stats_set
+
+    full = t.read(spark)
+    assert full._jdf.queryExecution().executedPlan().toString().count("FileScan") == 1
+    assert sorted((r.k, r.at) for r in full.collect()) == [
+        (d, datetime(2024, 1, d, 12)) for d in (1, 2, 3, 5, 6, 7)
+    ]
+    early = t.read(spark, filters=[("at", "<", datetime(2024, 1, 4))])
+    assert len(early.inputFiles()) == 1  # the INT96 file: no stats, kept
+    assert sorted(r.k for r in early.collect()) == [1, 2, 3]
+    late = t.read(spark, filters=[("at", ">=", datetime(2024, 1, 6))])
+    assert len(late.inputFiles()) == 2 and sorted(r.k for r in late.collect()) == [6, 7]

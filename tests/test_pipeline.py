@@ -113,10 +113,9 @@ def test_wap_publishes_on_passing_audit(spark, tmp_path, batch):
 
     m = materialize_wap(spark, TEMPLATE, tmp_path, df=batch, checks=CHECKS)
     assert m.num_rows == 2 and m.quality.passed
-    assert m.details["wap_branch"].startswith("audit-")
     out = read_table(spark, TEMPLATE, tmp_path)
     assert out.count() == 2
-    # transient staging branch is gone after publish
+    # the write stages in place: no staging branch is made
     t = SnapTable.load(tmp_path / "lakehouse" / "mini_events")
     assert t.list_branches() == []
 
@@ -130,14 +129,14 @@ def test_wap_blocks_and_leaves_main_untouched(spark, tmp_path, batch):
     with pytest.raises(QualityGateError):
         materialize_wap(spark, TEMPLATE, tmp_path, df=dup, checks=CHECKS)
     t = SnapTable.load(tmp_path / "lakehouse" / "mini_events")
-    # main never referenced the bad commit; staging branch cleaned up
+    # main never referenced the bad commit and no staging branch was made
     assert read_table(spark, TEMPLATE, tmp_path).count() == 2
     assert t.list_branches() == []
-    # the staged-but-unpublished data dir is debris remove_orphan_files owns
+    # the blocked write dropped its staged dir: no orphan is left behind
     import time as _t
 
     removed = t.remove_orphan_files(older_than_ms=int(_t.time() * 1000) + 1000)
-    assert len(removed) == 1
+    assert removed == []
     assert read_table(spark, TEMPLATE, tmp_path).count() == 2
 
 
@@ -293,3 +292,73 @@ def test_materialize_refuses_newer_format_table(spark, tmp_path, batch, wap):
     with pytest.raises(ValueError, match="format_version 3"):
         run(spark, TEMPLATE, tmp_path, df=batch, checks=CHECKS)
     assert (t.root / "table.json").read_bytes() == before
+
+
+# --- the staged write: gate, audit, commit ---------------------------------
+
+
+def _table_files(root):
+    """(head snapshot id, log file names, data dir names) of the table."""
+    import os
+
+    from iceberg_quickstart_iac_spark.tables.snapstore import SnapTable
+
+    t = SnapTable.load(root)
+    head = t.current_snapshot()
+    return (
+        head and head["snapshot_id"],
+        sorted(os.listdir(t.log_dir)),
+        sorted(os.listdir(t.data_dir)) if t.data_dir.exists() else [],
+    )
+
+
+@pytest.mark.parametrize("wap", [False, True])
+@pytest.mark.parametrize("mode", ["append", "overwrite"])
+def test_blocked_write_leaves_table_unchanged(spark, tmp_path, batch, wap, mode):
+    """A blocked gated write commits nothing and leaves no dir behind: the
+    head, the log and the data listing are as they were."""
+    from iceberg_quickstart_iac_spark.pipeline import materialize_wap
+
+    run = materialize_wap if wap else materialize
+    root = tmp_path / "lakehouse" / "mini_events"
+    run(spark, TEMPLATE, tmp_path, df=batch, checks=CHECKS)
+    before = _table_files(root)
+    with pytest.raises(QualityGateError, match="duplicate"):
+        run(spark, TEMPLATE, tmp_path, df=batch.union(batch), mode=mode, checks=CHECKS)
+    assert _table_files(root) == before
+    assert read_table(spark, TEMPLATE, tmp_path).count() == 2
+
+
+def test_blocked_first_write_leaves_no_data(spark, tmp_path, batch):
+    with pytest.raises(QualityGateError):
+        materialize(spark, TEMPLATE, tmp_path, df=batch.union(batch), checks=CHECKS)
+    assert _table_files(tmp_path / "lakehouse" / "mini_events") == (None, [], [])
+
+
+def test_gate_adds_no_job_beyond_the_write(spark, tmp_path, batch):
+    """The batch gate is observed metrics of the write's own query: row,
+    missing and freshness checks add no Spark job to a gated append. A
+    duplicate_count check adds its marker's shuffle, which AQE runs as one
+    job of that same query; no check aggregates the input apart from the
+    write (an exact COUNT DISTINCT alone runs 3 jobs)."""
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    no_dup = [
+        Check("row_count", op=">", threshold=0),
+        Check("missing_count", "event_id"),
+        Check("freshness", "event_timestamp", max_age="36500d"),
+    ]
+    materialize(spark, TEMPLATE, tmp_path, df=batch, checks=[])
+
+    def jobs(group, checks):
+        more = batch.withColumn("event_id", F.concat(F.col("event_id"), F.lit(group)))
+        sc.setJobGroup(group, group)
+        try:
+            materialize(spark, TEMPLATE, tmp_path, df=more, mode="append", checks=checks)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return len(tracker.getJobIdsForGroup(group))
+
+    ungated = jobs("gate-none", [])
+    assert jobs("gate-nodup", no_dup) == ungated
+    assert jobs("gate-all", no_dup + [Check("duplicate_count", "event_id")]) == ungated + 1

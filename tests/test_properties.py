@@ -11,7 +11,7 @@ import datetime
 import numpy as np
 import pandas as pd
 import pytest
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 
 from iceberg_quickstart_iac_spark.functions.transforms import (
@@ -166,6 +166,59 @@ def test_quality_metric_identities(spark, rows):
     assert by["row_count"] == len(data)
     assert by["missing_count"] == len(data) - len(present_vals)
     assert by["duplicate_count"] == len(present_vals) - len(set(present_vals))
+
+
+_GATE_TS = [
+    None,
+    datetime.datetime(2023, 12, 31, 23, 0),
+    datetime.datetime(2024, 1, 1, 10, 0),
+    datetime.datetime(2024, 1, 2, 0, 30),
+]
+
+
+@given(
+    st.lists(
+        st.tuples(st.one_of(st.none(), st.integers(0, 4)), st.sampled_from(_GATE_TS)),
+        max_size=12,
+    )
+)
+@example([])  # an empty batch
+@example([(None, None), (None, None), (1, None)])  # duplicate nulls, all-null timestamps
+@settings(**SETTINGS)
+def test_gated_write_report_equals_run_checks(spark, tmp_path, rows):
+    """The gate a staged write computes from its own query's observed
+    metrics reports exactly what ``run_checks`` reports on the same input,
+    for all four check kinds."""
+    import uuid
+
+    from pyspark.sql import functions as F
+
+    from iceberg_quickstart_iac_spark.operators.quality import (
+        Check,
+        observe_checks,
+        run_checks,
+    )
+    from iceberg_quickstart_iac_spark.tables import SnapTable
+
+    df = spark.createDataFrame(
+        [(None if k is None else f"k{k}", ts) for k, ts in rows], "k STRING, ts TIMESTAMP"
+    )
+    checks = [
+        Check("row_count", op=">", threshold=0),
+        Check("missing_count", "k"),
+        Check("duplicate_count", "k"),
+        Check("freshness", "ts", max_age="1d"),
+    ]
+    as_of = F.lit("2024-01-02 12:00:00").cast("timestamp")
+    t = SnapTable.create(
+        tmp_path / uuid.uuid4().hex,
+        {"name": "g", "namespace": "p", "partition_spec": [],
+         "columns": [{"name": "k", "type": "string"}, {"name": "ts", "type": "timestamptz"}]},
+    )
+    observed, report = observe_checks(df, checks, table="g", as_of=as_of)
+    gated = []
+    t.append(observed, audit=lambda _staged: gated.append(report()))
+    assert gated == [run_checks(df, checks, table="g", as_of=as_of)]
 
 
 def test_compaction_preserves_data_and_history(spark, tmp_path):

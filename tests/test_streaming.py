@@ -215,6 +215,13 @@ def test_streaming_wap_quarantines_bad_batches(spark, tmp_path):
     assert table.read(spark).count() == 10 and blocked == []
 
     # next batch takes the staged state to 30 -> audit fails -> quarantined
+    import os
+
+    def listing():
+        head = table.current_snapshot()["snapshot_id"]
+        return head, sorted(os.listdir(table.log_dir)), sorted(os.listdir(table.data_dir))
+
+    before = listing()
     _write_batch(spark, src, 100, 20)
     q = incremental_wap_ingest(
         spark, src, SCHEMA, table, ckpt, checks=checks,
@@ -223,7 +230,8 @@ def test_streaming_wap_quarantines_bad_batches(spark, tmp_path):
     q.awaitTermination(120)
     assert table.read(spark).count() == 10    # main untouched by the bad batch
     assert len(blocked) == 1
-    assert table.list_branches() == []        # staging branch cleaned up
+    assert listing() == before                # no commit, no orphan dir
+    assert table.list_branches() == []        # no staging branch is made
     # a small good batch (10 + 4 = 14 < 15) publishes
     _write_batch(spark, src, 500, 4)
     q = incremental_wap_ingest(

@@ -110,6 +110,51 @@ def test_append_accumulates(spark, table, events_df):
     assert e2["file_count"] == e1["file_count"] * 2 > 0
 
 
+def test_audit_sees_the_staged_state_before_the_commit(spark, table, events_df):
+    """``audit(staged)`` runs between the write and the commit: ``staged()``
+    reads the head's rows plus the new dir for an append and the new dir
+    alone for an overwrite, while the table still serves the old head."""
+    table.append(events_df)
+    seen = {}
+
+    def audit(op):
+        def run(staged):
+            seen[op] = (staged().count(), table.read(spark).count())
+        return run
+
+    table.append(events_df.limit(2), audit=audit("append"))
+    table.overwrite(events_df.limit(1), audit=audit("overwrite"))
+    assert seen == {"append": (5, 3), "overwrite": (1, 5)}
+    assert table.read(spark).count() == 1
+
+
+@pytest.mark.parametrize("mode", ["append", "overwrite"])
+def test_failed_audit_commits_nothing_and_drops_its_dir(spark, table, events_df, mode):
+    import os
+
+    table.append(events_df)
+    head, log, dirs = table.current_snapshot(), os.listdir(table.log_dir), os.listdir(table.data_dir)
+
+    def audit(staged):
+        assert len(os.listdir(table.data_dir)) == len(dirs) + 1  # the staged dir
+        raise RuntimeError("audit failed")
+
+    with pytest.raises(RuntimeError, match="audit failed"):
+        getattr(table, mode)(events_df, audit=audit)
+    assert table.current_snapshot() == head
+    assert os.listdir(table.log_dir) == log
+    assert sorted(os.listdir(table.data_dir)) == sorted(dirs)
+
+
+def test_replayed_txn_runs_no_audit(spark, table, events_df):
+    """A replayed txn writes nothing, so its audit, which may wait on the
+    write's observed metrics, never runs."""
+    calls = []
+    first = table.append(events_df, txn=("app", 0), audit=calls.append)
+    again = table.append(events_df, txn=("app", 0), audit=calls.append)
+    assert len(calls) == 1 and again["snapshot_id"] == first["snapshot_id"]
+
+
 def test_schema_mismatch_rejected(spark, table):
     bad = spark.createDataFrame([(1, "x", "extra")], "event_id LONG, event_type STRING, oops STRING")
     with pytest.raises(ValueError, match="Schema mismatch"):
